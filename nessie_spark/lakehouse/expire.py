@@ -5,10 +5,13 @@ snapshot DAG with orphan-file GC".
 
 - The DAG walk runs on the driver: snapshots are metadata (thousands at
   most), never data.
-- File reachability is computed distributed: manifests of retained
-  snapshots are parquet read by Spark; the keep-set is a LEFT SEMI and the
-  delete-set a LEFT ANTI join (SURVEY.md §2.6) — at 10^12-image scale the
-  file inventory is far too big for the driver.
+- File reachability (``_unreferenced``) is sized from the manifest lists'
+  ``n_entries`` before any manifest is read. Up to
+  ``scan.PLAN_DISTRIBUTED_ENTRIES`` entries it is a set difference on the
+  driver over pyarrow reads of the manifests' ``file_path`` column: a
+  Spark job would cost more than the work. Above it the manifests are
+  read by Spark and the delete-set is a LEFT ANTI join (SURVEY.md §2.6) —
+  at 10^12-image scale the file inventory is far too big for the driver.
 - ``dry_run`` reports without deleting (golden DAG fixtures, FIXTURES.md §3).
 """
 
@@ -17,9 +20,10 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
+from nessie_spark.lakehouse import scan as _scan
 from nessie_spark.lakehouse.table import Table
 
 
@@ -52,29 +56,96 @@ def reachable_snapshots(table: Table, heads: list[int]) -> set[int]:
     return seen
 
 
-def _live_paths_df(spark: SparkSession, table: Table, snapshot_ids: set[int]):
+def _unreferenced(
+    spark: SparkSession,
+    table: Table,
+    keep_ids: set[int],
+    lists: dict[int, list[dict]],
+    paths: list[str] | None = None,
+) -> list[str]:
+    """Which of ``paths`` (relative to the table root) does no snapshot in
+    ``keep_ids`` reference? With ``paths=None`` the candidates are every
+    file referenced by the table's snapshots outside ``keep_ids``: the
+    files expiry may delete. Returned sorted.
+
+    A snapshot references the data files its manifests list plus its
+    merge-on-read delete files (deletes.py), so expiry deletes a delete
+    file only when no retained snapshot still needs it and gc_orphans
+    never sees a live one as an orphan.
+
+    ``lists`` maps snapshot id -> manifest-list rows. Every snapshot of
+    ``table`` missing from it is read into it here, so each manifest list
+    is read once per caller, who reuses ``lists`` for manifest-level
+    reachability. The manifests' ``n_entries`` total picks the driver or
+    the Spark path, as ``scan.plan_files`` does."""
     by_id = {s["snapshot_id"]: s for s in table.meta["snapshots"]}
-    paths = []
-    # merge-on-read delete files (deletes.py) are snapshot-referenced data:
-    # they join the reachable set exactly like manifest-listed files, so
-    # expiry deletes them only when NO retained snapshot still needs them
-    # and gc_orphans never sees a live one as an orphan
-    dpaths = sorted({
-        d["file_path"]
-        for sid in snapshot_ids
-        for d in (by_id.get(sid, {}).get("delete_files") or [])
-    })
-    for sid in snapshot_ids:
-        paths.extend(table.manifest_paths(sid))
-    ddf = (
-        spark.createDataFrame([(p,) for p in dpaths], "file_path string")
-        if dpaths
-        else None
+    for sid, snap in by_id.items():
+        if sid not in lists:
+            lists[sid] = pq.read_table(
+                os.path.join(table.root, snap["manifest_list"])
+            ).to_pylist()
+    if paths is not None and not paths:
+        return []
+    drop_ids = set() if paths is not None else by_id.keys() - keep_ids
+
+    def manifests(ids) -> dict[str, int]:
+        return {
+            m["manifest_path"]: m["n_entries"] or 0 for sid in ids for m in lists[sid]
+        }
+
+    def deletes(ids) -> set[str]:
+        return {
+            d["file_path"]
+            for sid in ids
+            for d in (by_id.get(sid, {}).get("delete_files") or [])
+        }
+
+    keep_m, drop_m = manifests(keep_ids), manifests(drop_ids)
+    if sum({**drop_m, **keep_m}.values()) <= _scan.PLAN_DISTRIBUTED_ENTRIES:
+        def files(mans) -> set[str]:
+            out: set[str] = set()
+            for m in mans:
+                col = pq.read_table(
+                    os.path.join(table.root, m), columns=["file_path"]
+                ).column("file_path")
+                out.update(col.to_pylist())
+            return out
+
+        keep = files(keep_m) | deletes(keep_ids)
+        # a manifest shared with a kept snapshot holds only kept files
+        cand = set(paths) if paths is not None else (
+            files(drop_m.keys() - keep_m.keys()) | deletes(drop_ids)
+        )
+        return sorted(cand - keep)
+
+    def paths_df(mans, dpaths):
+        ddf = (
+            spark.createDataFrame([(p,) for p in sorted(dpaths)], "file_path string")
+            if dpaths
+            else None
+        )
+        if not mans:
+            return ddf or spark.createDataFrame([], "file_path string")
+        mdf = spark.read.parquet(
+            *sorted(os.path.join(table.root, m) for m in mans)
+        ).select("file_path")
+        return (mdf.unionByName(ddf) if ddf is not None else mdf).distinct()
+
+    keep_df = paths_df(keep_m, deletes(keep_ids))
+    cand_df = (
+        spark.createDataFrame([(p,) for p in paths], "file_path string")
+        if paths is not None
+        else paths_df(drop_m, deletes(drop_ids))
     )
-    if not paths:
-        return ddf or spark.createDataFrame([], "file_path string")
-    mdf = spark.read.parquet(*sorted(set(paths))).select("file_path")
-    return (mdf.unionByName(ddf) if ddf is not None else mdf).distinct()
+    return sorted(
+        r.file_path for r in cand_df.join(keep_df, "file_path", "left_anti").collect()
+    )
+
+
+def _manifest_files(table: Table, lists: dict[int, list[dict]], ids) -> set[str]:
+    return {
+        os.path.join(table.root, m["manifest_path"]) for sid in ids for m in lists[sid]
+    }
 
 
 def _retained_with_policy(
@@ -130,7 +201,7 @@ def expire_snapshots(
     ``older_than_millis`` only snapshots committed at/after the cutoff
     stay (heads always survive; when both are given a snapshot must fail
     both to expire). Files still live in a retained snapshot are never
-    deleted — the keep-set anti-join is unchanged. Incremental reads whose
+    deleted — the keep-set subtraction is unchanged. Incremental reads whose
     range crosses a trimmed snapshot raise (scan.py), never silently skip.
     With neither knob set, all ancestors are retained (pure
     abandoned-branch expiry — the pre-policy behavior).
@@ -156,13 +227,9 @@ def expire_snapshots(
     all_ids = {s["snapshot_id"] for s in table.meta["snapshots"]}
     expired = sorted(all_ids - retained)
 
-    keep_df = _live_paths_df(spark, table, retained)
-    drop_df = _live_paths_df(spark, table, set(expired))
     # files referenced by an expired snapshot but by NO retained snapshot
-    doomed = [
-        r.file_path
-        for r in drop_df.join(keep_df, "file_path", "left_anti").collect()
-    ]
+    lists: dict[int, list[dict]] = {}
+    doomed = _unreferenced(spark, table, retained, lists)
 
     report = ExpiryReport(sorted(retained), expired, doomed, [], dry_run)
     if not dry_run:
@@ -171,12 +238,8 @@ def expire_snapshots(
         # them forever — gc_orphans only scans data/). Computed BEFORE the
         # metadata write (expired snapshots are unreadable after it);
         # retry rescues below only ever SHRINK the doomed sets.
-        kept_manifests: set[str] = set()
-        for sid in retained:
-            kept_manifests.update(table.manifest_paths(sid))
-        doomed_manifests: set[str] = set()
-        for sid in expired:
-            doomed_manifests.update(table.manifest_paths(sid))
+        kept_manifests = _manifest_files(table, lists, retained)
+        doomed_manifests = _manifest_files(table, lists, expired)
 
         # metadata update FIRST, through the same optimistic-retry
         # discipline as Table.commit — a concurrent commit between our load
@@ -237,16 +300,8 @@ def expire_snapshots(
             # keep its files and manifests: subtract everything the FINAL
             # retained set can reach. Rescued snapshots live in the kept
             # metadata, so the reads below resolve post-write.
-            keep_df = _live_paths_df(spark, table, retained)
-            doomed_df = spark.createDataFrame(
-                [(p,) for p in doomed], "file_path string"
-            )
-            doomed = [
-                r.file_path
-                for r in doomed_df.join(keep_df, "file_path", "left_anti").collect()
-            ]
-            for sid in retained:
-                kept_manifests.update(table.manifest_paths(sid))
+            doomed = _unreferenced(spark, table, retained, lists, doomed)
+            kept_manifests |= _manifest_files(table, lists, retained)
             report = ExpiryReport(
                 sorted(retained),
                 sorted(all_ids - retained),
@@ -281,9 +336,10 @@ def gc_orphans(
 ) -> list[str]:
     """Delete data AND metadata files not referenced by ANY snapshot.
 
-    Filesystem listing LEFT ANTI JOIN reachable-file set. The listing is
-    produced driver-side here (local fs); on object storage this becomes a
-    distributed listing DataFrame — the join shape is unchanged.
+    Filesystem listing minus the reachable-file set (``_unreferenced``: a
+    driver set difference for small metadata, else a LEFT ANTI JOIN). The
+    listing is produced driver-side here (local fs); on object storage this
+    becomes a distributed listing DataFrame — the join shape is unchanged.
 
     Metadata orphans exist by design: a commit attempt that loses the
     optimistic race leaves its freshly-written manifest and manifest-list
@@ -337,26 +393,15 @@ def gc_orphans(
                     continue
                 for u in _lineage.read_phase(table.root, job, phase).to_pylist():
                     pending.update(u["output_files"])
-    orphans: list[str] = []
-    if listing:
-        all_ids = {s["snapshot_id"] for s in table.meta["snapshots"]}
-        reachable = _live_paths_df(spark, table, all_ids)
-        listing_df = spark.createDataFrame([(p,) for p in listing], "file_path string")
-        orphans += [
-            r.file_path
-            for r in listing_df.join(reachable, "file_path", "left_anti")
-            .where(~F.col("file_path").contains(".tmp-"))
-            .collect()
-            if r.file_path not in pending
-        ]
+    lists: dict[int, list[dict]] = {}
+    orphans = _unreferenced(
+        spark, table, {s["snapshot_id"] for s in table.meta["snapshots"]}, lists,
+        [p for p in listing if ".tmp-" not in p and p not in pending],
+    )
     if meta_listing:
-        reachable_meta = set()
-        for s in table.meta["snapshots"]:
-            reachable_meta.add(s["manifest_list"])
-            reachable_meta.update(
-                os.path.relpath(p, table.root)
-                for p in table.manifest_paths(s["snapshot_id"])
-            )
+        reachable_meta = {s["manifest_list"] for s in table.meta["snapshots"]} | {
+            m["manifest_path"] for ms in lists.values() for m in ms
+        }
         orphans += [p for p in meta_listing if p not in reachable_meta]
     if not dry_run:
         for rel in orphans:

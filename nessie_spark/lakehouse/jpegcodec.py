@@ -521,6 +521,10 @@ def _decode_segment(
     # real symbols drain from the accumulator); the p > dn+8 guard below
     # catches a truncated/corrupt scan BEFORE a short slice can
     # desynchronize the bit reader (ADVICE r5 #3).
+    if not d:
+        # adjacent RSTn markers: every segment holds at least one MCU and
+        # every MCU at least one code bit, so an empty segment is corrupt
+        raise ValueError("corrupt JPEG segment (empty restart segment)")
     dn = len(d) + 8
     d = d + b"\xff" * 16
     acc = 0
@@ -617,7 +621,13 @@ def decode_jpeg_real(data: bytes) -> np.ndarray:
     Tables are read from the stream's DQT/DHT segments; restart intervals
     (DRI + RSTn) are honored with DC-predictor reset and byte realignment
     per segment. Progressive SOF2, arithmetic coding, and subsampled
-    streams raise NotImplementedError."""
+    streams raise NotImplementedError.
+
+    The decoder is strict T.81: each restart segment (or the whole scan)
+    must end with 0-7 bits of 1-fill padding (F.1.2.3), so a stream whose
+    padding bits are not all 1 raises "corrupt JPEG segment" even though
+    libjpeg, which ignores padding content, accepts it. Every stream this
+    package writes is 1-filled; an externally encoded JPEG may not be."""
     meta = _parse_stream(data)
     qt, comps, scan_comps = meta["qt"], meta["comps"], meta["scan_comps"]
     h, w, nc = meta["sof"]

@@ -504,13 +504,15 @@ def _decode_cohort(datas, metas, idxs, results) -> None:
         # 0-7 bits of 1-fill to its segment's byte boundary. Violating
         # lanes fall back to the scalar decoder, which raises the
         # canonical "corrupt JPEG segment" error.
+        # An empty segment (adjacent RSTn markers) is never valid, and its
+        # "last byte" would be the previous lane's: the index is clamped
+        # into the lane and (lens > 0) gates the padding test.
         rem = (lens << 3) - end_bitpos
         clipped = np.clip(rem, 0, 7)
         mask = (np.int64(1) << clipped) - 1
-        last = D2[np.arange(L, dtype=np.int64) * stride + lens - 1].astype(np.int64)
-        pad_bad = (end_bitpos >= 0) & (
-            (rem < 0) | (rem >= 8) | ((last & mask) != mask)
-        )
+        last = D2[lane_off + np.maximum(lens - 1, 0)].astype(np.int64)
+        pad_ok = (lens > 0) & (rem >= 0) & (rem < 8) & ((last & mask) == mask)
+        pad_bad = (end_bitpos >= 0) & ~pad_ok
         if pad_bad.any():
             for l in np.flatnonzero(pad_bad):
                 bad_imgs.add(lane_img[int(l)])

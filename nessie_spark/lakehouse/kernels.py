@@ -12,7 +12,8 @@ implemented here from the public specs:
 - ``jpeg`` — a REAL baseline JFIF codec (jpegcodec.py: ITU-T T.81 baseline
   sequential DCT, 4:4:4, Annex-K tables, quality 98 → PSNR ≈ 43 dB, above
   the 40 dB gate). ``decode_jpeg`` dispatches on the stream magic: FFD8 →
-  the real decoder; the legacy "njpg" stand-in magic from pre-r5 tables is
+  the real decoder, which is strict T.81 and rejects non-1 padding bits
+  that libjpeg accepts; the legacy "njpg" stand-in magic from pre-r5 tables is
   still decodable (clearly marked below); anything else (progressive,
   subsampled, non-JPEG) raises NotImplementedError.
 

@@ -417,7 +417,7 @@ def run_staged(
     # coarse in the scaling pair (2 vs 8 cores both run the identical
     # data-dominated plan — the clean-ratio property). Caveat: on tables
     # smaller than cores×64 MB the floor engages and the two levels plan
-    # DIFFERENT group counts — the engagement is logged to stderr so a
+    # DIFFERENT group counts. PLAN.json records n_groups and sbins, so a
     # scaling measurement can tell plan-shape effects from wave-count
     # scaling.
     try:
@@ -432,16 +432,6 @@ def run_staged(
         1,
         min(n_files, max(data_groups, spark.sparkContext.defaultParallelism)),
     )
-    if n_groups > max(1, min(n_files, data_groups)):
-        import sys as _sys
-
-        print(
-            f"[zorder] gather min-parallelism floor engaged: data-sized "
-            f"groups={data_groups} -> n_groups={n_groups} — plan shape now "
-            f"depends on cluster width (scaling ratios across widths are "
-            f"not plan-identical on this table)",
-            file=_sys.stderr,
-        )
     stage_dir = os.path.join(root, "_stage", job_id)
     bounds_arr = list(bounds)
 
@@ -523,14 +513,6 @@ def run_staged(
             2 * DEFAULT_TARGET,
             min(8 * DEFAULT_TARGET, total_bytes // par),
         )
-        if sbin_bytes < 8 * DEFAULT_TARGET:
-            import sys as _sys
-
-            print(
-                f"[zorder] scatter min-parallelism floor engaged: "
-                f"bin_bytes={sbin_bytes} (width {par})",
-                file=_sys.stderr,
-            )
         sbins = _pack_scatter_bins(entries, sbin_bytes)
         os.makedirs(stage_dir, exist_ok=True)
         tmp = plan_path + ".tmp"

@@ -187,3 +187,18 @@ def test_segment_padding_validation_catches_structural_flips():
         assert (px == J.decode_jpeg_real(bytes(r["bytes"]))).all()
     except ValueError as e:
         assert "corrupt JPEG segment" in str(e)
+
+
+def test_adjacent_restart_markers_raise_corrupt_segment():
+    """Two adjacent RSTn markers make an empty restart segment. Both
+    decoders raise the canonical error; the batch decoder must not read
+    the previous lane's last byte as the empty lane's padding."""
+    d = J.encode_jpeg_real(_images(1, lo=32, hi=32)[0], 98, restart_mcu=1)
+    meta = J._parse_stream(d)
+    rst = d.find(b"\xff\xd0", d.find(meta["scan_data"][:32]))
+    assert rst > 0
+    bad = d[: rst + 2] + b"\xff\xd1" + d[rst + 2 :]
+    with pytest.raises(ValueError, match="corrupt JPEG segment"):
+        J.decode_jpeg_real(bad)
+    with pytest.raises(ValueError, match="corrupt JPEG segment"):
+        V.decode_batch([bad])

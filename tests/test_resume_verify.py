@@ -6,6 +6,7 @@ import pytest
 
 from nessie_spark import synth
 from nessie_spark.lakehouse import compact, lineage, verify, zorder
+from nessie_spark.lakehouse import kernels as K
 from nessie_spark.lakehouse.scan import scan
 from tests.conftest import make_table
 
@@ -106,7 +107,27 @@ def test_corruption_flag_rate_matches_p(spark):
     # restart_mcu=1 confining damage to one MCU it sits below the
     # perceptual hash's sensitivity. Pin that single known miss so any
     # NEW miss (a detection regression) still fails this test.
+    _assert_undetectable_flip(100)
     assert expected - flagged_ids == {"img_000000000100"}
+
+
+def _assert_undetectable_flip(i: int) -> None:
+    """The pinned miss must still be a flip no detector can see: the
+    corrupted stream decodes and keeps the stored phash. If this fails,
+    the fixture drifted (synth or corrupt_bytes changed); if it holds and
+    the pinned set still differs, the detector regressed."""
+    r = synth.row_for(42, i, hot_pct=0)
+    corrupt = synth.corrupt_bytes(bytes(r["bytes"]), seed=9, i=i)
+    assert corrupt != bytes(r["bytes"]), f"fixture drift: row {i} is not corrupted"
+    try:
+        px = K.decode(corrupt, r["fmt"])
+    except (ValueError, NotImplementedError) as e:
+        raise AssertionError(
+            f"fixture drift: row {i}'s flip is now structural ({e})"
+        ) from e
+    assert int(K.phash64(px)) == int(r["phash"]), (
+        f"fixture drift: row {i}'s flip now changes the phash"
+    )
 
 
 def test_duplicate_phash_flags(spark):

@@ -440,7 +440,10 @@ def purge_deletes(
                 F.col("image_id").alias("_k")
             ).distinct()
             matched = {
-                r.file_path for r in matched_files_df(src_keys, stats_df).collect()
+                r.file_path
+                for r in matched_files_df(
+                    src_keys, stats_df, n_files=len(entries)
+                ).collect()
             }
         # drop files NO equality delete applies to (added at/after every sid)
         cand_set = {

@@ -64,7 +64,8 @@ def _bucket_udf(bounds: list):
 
 
 def matched_files_df(
-    src_keys: DataFrame, stats_df: DataFrame, n_buckets: int = STATS_BUCKETS
+    src_keys: DataFrame, stats_df: DataFrame, n_files: int,
+    n_buckets: int = STATS_BUCKETS,
 ) -> DataFrame:
     """Files whose ``[min_key, max_key]`` stats interval may contain a
     source key — the MERGE matched-files interval join (graft of the
@@ -79,9 +80,9 @@ def matched_files_df(
     bucket id with the interval check as residual. On a clustered table
     file ranges are narrow (≈1 bucket per file), so the explode is ~|files|
     rows; a key compares against only its bucket's files instead of all of
-    them. Returns distinct ``file_path`` rows.
+    them. ``n_files``: the row count of ``stats_df``, which callers build
+    from a list they hold. Returns distinct ``file_path`` rows.
     """
-    n_files = stats_df.count()
     cond = (F.col("_k") >= F.col("min_key")) & (F.col("_k") <= F.col("max_key"))
     if n_files < BUCKETED_STATS_THRESHOLD:
         return (
@@ -208,7 +209,8 @@ def merge_into(
     )
     src_keys = source.select(F.col(key).alias("_k")).distinct()
     matched_paths = [
-        r.file_path for r in matched_files_df(src_keys, stats_df).collect()
+        r.file_path
+        for r in matched_files_df(src_keys, stats_df, n_files=len(entries)).collect()
     ]
     matched_set = set(matched_paths)
 

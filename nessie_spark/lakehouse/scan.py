@@ -7,14 +7,26 @@ Two pruning layers (SURVEY.md §4.2):
 2. *row-group-level* (free): the same predicate is re-applied to the
    DataFrame, so Parquet footer min/max prunes row groups and the scan shows
    ``PushedFilters`` in ``.explain``.
+
+Two readers serve the planned files. Small plans — planned data files
+totalling at most ``spark.sql.execution.arrow.localRelationThreshold``,
+without ``with_pos`` — are read on the driver with pyarrow
+(``_read_partition_table``, the same per-file reader the ``format("nessie")``
+source runs in its tasks) and handed to Spark as a ``LocalRelation``, so a
+point lookup's ``collect()`` starts no Spark job. Everything else is one
+Spark parquet scan (``_read_data_files``) with the delete subtraction as
+joins.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import InputPartition
 
 from nessie_spark.lakehouse.table import Table
 
@@ -365,6 +377,186 @@ def _read_data_files(
     return out
 
 
+@dataclass
+class FilePartition(InputPartition):
+    """One data file: everything a reader needs, self-contained — the
+    format("nessie") source ships it to a task; scan() reads it on the
+    driver."""
+
+    root: str
+    rel_path: str
+    # field-id projection rows: (physical_name|None, stored_type|None,
+    # current_name, target_type) — fields.projection()
+    proj: list
+    eq_dels: list = field(default_factory=list)  # [(rel_path, min_key, max_key)]
+    pos_dels: list = field(default_factory=list)  # [rel_path]
+    # pushed predicates as (current_name, op, value) pyarrow filter tuples —
+    # row-group/page skipping INSIDE the file, on top of file pruning.
+    # Applied only when no positional delete names the file (pre-filtering
+    # would break the row-position mapping); callers re-apply every filter
+    # row-wise regardless, so this is purely an IO reduction.
+    arrow_filters: list = field(default_factory=list)
+
+
+def _read_partition_table(p: FilePartition, mor: bool = True) -> pa.Table:
+    """Read one data file projected onto the target schema by field id,
+    with merge-on-read delete subtraction (the pyarrow twin of the joins
+    in scan() and of deletes._purge_unit's read path)."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from nessie_spark.lakehouse import fields as FM
+    from nessie_spark.lakehouse.writer import _DDL_ARROW
+
+    phys_cols = [ph for ph, _s, _c, _t in p.proj if ph is not None]
+    read_filters = None
+    if p.arrow_filters and not p.pos_dels:
+        # translate pushed predicates to the file's PHYSICAL names; a
+        # comparison on a field this file predates can never hold (the
+        # column reads as NULL) — skip the file outright
+        phys_of = {cur: ph for ph, _s, cur, _t in p.proj}
+        read_filters = []
+        for cur, op, val in p.arrow_filters:
+            if cur not in phys_of:
+                continue  # not a projected column; re-applied row-wise anyway
+            ph = phys_of[cur]
+            if ph is None:
+                return FM.remap_arrow(pa.table({}), p.proj, _DDL_ARROW)
+            read_filters.append((ph, op, val))
+        read_filters = read_filters or None
+    tbl = pq.read_table(
+        os.path.join(p.root, p.rel_path), columns=phys_cols,
+        filters=read_filters,
+    )
+    # field-id projection: rename/NULL-fill/widen — the ONE shared
+    # implementation (fields.remap_arrow), so rename/drop safety rules
+    # never drift between the Spark read and this reader
+    out = FM.remap_arrow(tbl, p.proj, _DDL_ARROW)
+    if not mor:
+        return out
+    # positional deletes FIRST: positions index the file's row order,
+    # which the projection above preserves and the equality filter below
+    # would destroy. Pos files are sorted by file_path → footer pruning.
+    pos_list: list[int] = []
+    for dp in p.pos_dels:
+        ptb = pq.read_table(
+            os.path.join(p.root, dp),
+            filters=[("file_path", "==", p.rel_path)],
+            columns=["pos"],
+        )
+        if ptb.num_rows:
+            pos_list.extend(ptb.column("pos").to_pylist())
+    if pos_list:
+        keep = np.ones(out.num_rows, dtype=bool)
+        keep[np.asarray(pos_list, dtype=np.int64)] = False
+        out = out.filter(pa.array(keep))
+    if p.eq_dels and out.num_rows:
+        mn = pc.min(out.column("image_id")).as_py()
+        mx = pc.max(out.column("image_id")).as_py()
+        chunks = []
+        for dp, dmn, dmx in p.eq_dels:
+            if dmx < mn or dmn > mx:
+                continue  # key ranges disjoint — skip the read entirely
+            kt = pq.read_table(
+                os.path.join(p.root, dp),
+                filters=[("image_id", ">=", mn), ("image_id", "<=", mx)],
+            )
+            if kt.num_rows:
+                chunks.append(kt.column("image_id").combine_chunks())
+        if chunks:
+            keys = pa.concat_arrays(
+                [c.chunk(0) if isinstance(c, pa.ChunkedArray) else c for c in chunks]
+            )
+            out = out.filter(
+                pc.invert(pc.is_in(out.column("image_id"), value_set=keys))
+            )
+    return out
+
+
+def _partitions_for_entries(
+    table: Table, entries: list[dict], snapshot_id: int | None, ddl: str,
+    mor: bool = True, columns: set | None = None, arrow_filters: list | None = None,
+) -> list[FilePartition]:
+    """Per-entry field-id projection + the delete files applicable to each
+    entry. ``columns``: project only these target names (the rest of the
+    file is never read)."""
+    from nessie_spark.lakehouse import fields as FM
+    from nessie_spark.lakehouse.deletes import split_delete_kinds
+
+    tfields = _target_fields(table, snapshot_id, ddl)
+    if columns is not None:
+        tfields = [f for f in tfields if f["name"] in columns]
+    snap_sids = FM.sid_by_snapshot(table.meta)
+    projs: dict[int, list] = {}
+    eq_dels, pos_dels = ([], [])
+    if mor:
+        eq, pos = split_delete_kinds(table.delete_files(snapshot_id))
+        eq_dels = [(d["file_path"], d["min_key"], d["max_key"], d["snapshot_id"]) for d in eq]
+        # a pos-delete file's min/max_key record its min/max TARGET data
+        # file path (deletes.py) — prune per data file here so a reader
+        # opens only the delete files that can name it, not all of them
+        pos_dels = [(d["file_path"], d["min_key"], d["max_key"]) for d in pos]
+    parts = []
+    for e in entries:
+        sid = FM.entry_schema_id(e, snap_sids)
+        if sid not in projs:
+            projs[sid] = FM.projection(table.meta, sid, tfields)
+        added = int(e.get("added_snapshot_id") or 0)
+        e_mn, e_mx = e.get("min_key"), e.get("max_key")
+        parts.append(
+            FilePartition(
+                root=table.root,
+                rel_path=e["file_path"],
+                proj=projs[sid],
+                # equality deletes apply to files added BEFORE the delete
+                # (a key re-inserted afterwards stays visible); key-range-
+                # disjoint delete files are dropped when the entry carries
+                # stats (streaming entries may not)
+                eq_dels=[
+                    (dp, mn, mx)
+                    for dp, mn, mx, dsid in eq_dels
+                    if added < dsid
+                    and (e_mn is None or e_mx is None or (mn <= e_mx and mx >= e_mn))
+                ],
+                pos_dels=[
+                    dp
+                    for dp, pmn, pmx in pos_dels
+                    if pmn <= e["file_path"] <= pmx
+                ],
+                arrow_filters=list(arrow_filters or []),
+            )
+        )
+    return parts
+
+
+def _read_on_driver(
+    spark: SparkSession,
+    table: Table,
+    entries: list[dict],
+    snapshot_id: int | None,
+    ddl: str,
+    columns: set | None,
+    arrow_filters: list,
+) -> DataFrame:
+    """Read the planned files with pyarrow in this process and hand the
+    rows to Spark as one ``LocalRelation`` (the data stays below
+    ``localRelationThreshold``): filters and projections fold into it, and
+    ``collect()`` starts no Spark job."""
+    parts = _partitions_for_entries(
+        table, entries, snapshot_id, ddl, columns=columns,
+        arrow_filters=arrow_filters,
+    )
+    tbls = [_read_partition_table(p) for p in parts]
+    # drop empty record batches: createDataFrame stops reading the Arrow
+    # stream at an empty batch that follows rows, silently losing the rest
+    tbl = pa.Table.from_batches(
+        [b for t in tbls for b in t.to_batches() if b.num_rows], schema=tbls[0].schema
+    )
+    schema = ", ".join(f"{cur} {typ}" for _ph, _st, cur, typ in parts[0].proj)
+    return spark.createDataFrame(tbl, schema)
+
+
 def ancestry_between(
     table: Table, from_snapshot_id: int | None, to_snapshot_id: int | None
 ) -> list[dict]:
@@ -505,10 +697,22 @@ def scan(
 ) -> DataFrame:
     """Read a pinned snapshot as a DataFrame, pruning files on stats.
 
+    Reader: when the planned data files total at most Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by
+    default; set it to 0 to force the Spark read) and ``with_pos`` is
+    false, the files are read on the driver with pyarrow — field-id
+    projection, merge-on-read subtraction, the key/phash/partition
+    predicates as row filters, and with ``columns`` only the columns the
+    result and the predicates need — and the result is a ``LocalRelation``:
+    a lookup's ``collect()`` starts no Spark job. Otherwise one Spark
+    parquet scan reads them. The row-wise predicates and the ``columns``
+    select below apply on both paths.
+
     ``with_pos``: keep the row-provenance columns ``__fp`` (table-relative
     data-file path) and ``__pos`` (row position within it) on the result —
     the address a positional delete records (deletes.delete_positions_where
-    is the main consumer). Mutually additive with ``columns``.
+    is the main consumer). Mutually additive with ``columns``. Always read
+    by Spark: the columns come from its parquet reader's ``_metadata``.
 
     ``file_paths``: restrict the read to these table-relative data files
     (post-plan intersection). Callers that already know exactly which
@@ -554,14 +758,41 @@ def scan(
     if not entries:
         # keep the with_pos contract on the empty plan — callers
         # (deletes.delete_positions_where) select __fp/__pos unconditionally
-        empty_ddl = ddl + ", __fp string, __pos bigint" if with_pos else ddl
-        return spark.createDataFrame([], empty_ddl)
+        # (an Arrow table, so the result is a LocalRelation: a lookup that
+        # misses starts no Spark job either)
+        from nessie_spark.lakehouse.writer import arrow_schema_from_ddl
 
-    tfields = _target_fields(table, snapshot_id, ddl)
+        empty_ddl = ddl + ", __fp string, __pos bigint" if with_pos else ddl
+        return spark.createDataFrame(
+            arrow_schema_from_ddl(empty_ddl).empty_table(), empty_ddl
+        )
+
     dels = table.delete_files(snapshot_id)
-    if not dels and not with_pos:
-        df = _read_data_files(spark, table, entries, ddl, tfields)
+    if not with_pos and sum(e["file_size_bytes"] for e in entries) <= (
+        spark._jconf.arrowLocalRelationThreshold()
+    ):
+        # small plan: pyarrow on the driver. A column subset reads the
+        # asked-for columns, the ones the row-wise predicates below need,
+        # and image_id, which the equality-delete subtraction keys on
+        names = None
+        if columns:
+            names = {*columns, "image_id", *(source_eq or ())}
+            names |= {"phash"} if phash_range else set()
+            names |= {"w", "h"} if wh_range else set()
+        filters = [("image_id", "==", key_eq)] if key_eq is not None else []
+        for col, rng in (("image_id", key_range), ("phash", phash_range)):
+            if rng:
+                filters += [(col, ">=", rng[0]), (col, "<=", rng[1])]
+        filters += [
+            (c, "==", v) for c, v in sorted((source_eq or {}).items()) if v is not None
+        ]
+        df = _read_on_driver(spark, table, entries, snapshot_id, ddl, names, filters)
+    elif not dels and not with_pos:
+        df = _read_data_files(
+            spark, table, entries, ddl, _target_fields(table, snapshot_id, ddl)
+        )
     else:
+        tfields = _target_fields(table, snapshot_id, ddl)
         # merge-on-read: subtract equality-delete keys and positional
         # (file, pos) pairs (deletes.py). Files group by WHICH equality
         # deletes apply (added_snapshot_id < delete sid — a key re-inserted

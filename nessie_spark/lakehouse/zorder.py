@@ -420,14 +420,7 @@ def run_staged(
     # DIFFERENT group counts. PLAN.json records n_groups and sbins, so a
     # scaling measurement can tell plan-shape effects from wave-count
     # scaling.
-    try:
-        gmult = max(1, int(os.environ.get("NESSIE_ZORDER_GROUP_MULT", "8")))
-    except ValueError as exc:  # a mistyped knob must fail with its cause
-        raise ValueError(
-            "NESSIE_ZORDER_GROUP_MULT must be a positive integer "
-            f"(got {os.environ.get('NESSIE_ZORDER_GROUP_MULT')!r})"
-        ) from exc
-    data_groups = -(-total_bytes // (gmult * DEFAULT_TARGET))
+    data_groups = -(-total_bytes // (8 * DEFAULT_TARGET))
     n_groups = max(
         1,
         min(n_files, max(data_groups, spark.sparkContext.defaultParallelism)),
@@ -1216,14 +1209,14 @@ def cluster(
 
     key = zorder_key(strategy)
 
-    # One file listing serves both passes (the DataFrame is reused; Catalyst
-    # prunes the sample plan down to the three int columns on its own —
-    # verified via PushedFilters/ReadSchema in tests/test_plan_shapes.py).
-    base = (
-        scan(spark, table)
-        .withColumn("zkey", key(F.col("phash"), F.col("w"), F.col("h")))
-        .withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
-    )
+    def keyed(df):
+        return df.withColumn(
+            "zkey", key(F.col("phash"), F.col("w"), F.col("h"))
+        ).withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
+
+    # The sample scan names its three int columns: a small table is read on
+    # the driver into a LocalRelation, which Catalyst does not column-prune,
+    # so a full-row scan would pull every image's bytes through the driver.
 
     # pass 1: weighted equi-depth boundaries from a seeded sample of the
     # pruned scan (ints only, no bytes); row count comes from the manifest,
@@ -1249,7 +1242,10 @@ def cluster(
         bounds = [int(x) for x in pinned["bounds"]]
         n_files = int(pinned["n_files"])
     else:
-        bounds = equi_depth_bounds(base.select("zkey", "wh"), n_files, total_rows)
+        bounds = equi_depth_bounds(
+            keyed(scan(spark, table, columns=["phash", "w", "h"])), n_files,
+            total_rows,
+        )
     t1 = _time.time()
 
     # pass 2: move every row to its zkey bucket — staged (two-phase
@@ -1264,7 +1260,9 @@ def cluster(
         from nessie_spark.lakehouse.scan import IMAGES_DDL
         from nessie_spark.lakehouse.writer import ddl_columns
 
-        df = base.withColumn("pid", _bucket_udf(bounds)(F.col("zkey")))
+        df = keyed(scan(spark, table)).withColumn(
+            "pid", _bucket_udf(bounds)(F.col("zkey"))
+        )
         stats = write_zorder_buckets(
             spark, df, root, job_id, strategy, n_files, reencode=reencode,
             data_columns=ddl_columns(table.meta.get("schema", IMAGES_DDL)),

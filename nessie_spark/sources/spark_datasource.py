@@ -22,7 +22,9 @@ engine's guarantees:
   (equality AND positional, Iceberg v2 semantics — deletes.py) are
   subtracted per file inside the task with the same applicability rules
   as the native scan: an equality delete applies to files added BEFORE
-  it; a positional delete self-scopes to its named file.
+  it; a positional delete self-scopes to its named file. The per-file
+  reader lives in ``lakehouse/scan.py``, which runs it on the driver for
+  small scans.
 - **Batch write** is an append-only sink speaking the manifest commit
   protocol: executors write parquet data files + per-file stats entries
   (min/max/bloom — the same ``stats_entry_for`` every engine writer
@@ -69,7 +71,7 @@ from __future__ import annotations
 
 import os
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterator
 
 import pyarrow as pa
@@ -84,10 +86,15 @@ from pyspark.sql.datasource import (
     Filter,
     GreaterThan,
     GreaterThanOrEqual,
-    InputPartition,
     LessThan,
     LessThanOrEqual,
     WriterCommitMessage,
+)
+
+from nessie_spark.lakehouse.scan import (
+    FilePartition,
+    _partitions_for_entries,
+    _read_partition_table,
 )
 
 FORMAT_NAME = "nessie"
@@ -109,27 +116,6 @@ def _opt(options: dict, name: str, default=None):
 
 
 @dataclass
-class FilePartition(InputPartition):
-    """One data file: everything a task needs, self-contained."""
-
-    root: str
-    rel_path: str
-    added_sid: int
-    # field-id projection rows: (physical_name|None, stored_type|None,
-    # current_name, target_type) — fields.projection()
-    proj: list
-    ddl: str
-    eq_dels: list = field(default_factory=list)  # [(rel_path, min_key, max_key)]
-    pos_dels: list = field(default_factory=list)  # [rel_path]
-    # pushed predicates as (current_name, op, value) pyarrow filter tuples —
-    # row-group/page skipping INSIDE the file, on top of file pruning.
-    # Applied only when no positional delete names the file (pre-filtering
-    # would break the row-position mapping); Spark re-applies every filter
-    # row-wise regardless, so this is purely an IO reduction.
-    arrow_filters: list = field(default_factory=list)
-
-
-@dataclass
 class _CommitMsg(WriterCommitMessage):
     entries: list  # stats_entry_for dicts
 
@@ -138,136 +124,6 @@ def _arrow_schema(ddl: str) -> pa.Schema:
     from nessie_spark.lakehouse.writer import arrow_schema_from_ddl
 
     return arrow_schema_from_ddl(ddl)
-
-
-def _read_partition_table(p: FilePartition, mor: bool = True) -> pa.Table:
-    """Read one data file projected onto the target schema by field id,
-    with merge-on-read delete subtraction (the task-side twin of
-    deletes._purge_unit's read path)."""
-    import numpy as np
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from nessie_spark.lakehouse import fields as FM
-    from nessie_spark.lakehouse.writer import _DDL_ARROW
-
-    phys_cols = [ph for ph, _s, _c, _t in p.proj if ph is not None]
-    read_filters = None
-    if p.arrow_filters and not p.pos_dels:
-        # translate pushed predicates to the file's PHYSICAL names; a
-        # comparison on a field this file predates can never hold (the
-        # column reads as NULL) — skip the file outright
-        phys_of = {cur: ph for ph, _s, cur, _t in p.proj}
-        read_filters = []
-        for cur, op, val in p.arrow_filters:
-            if cur not in phys_of:
-                continue  # not a projected column; Spark re-applies anyway
-            ph = phys_of[cur]
-            if ph is None:
-                return _arrow_schema(p.ddl).empty_table()
-            read_filters.append((ph, op, val))
-        read_filters = read_filters or None
-    tbl = pq.read_table(
-        os.path.join(p.root, p.rel_path), columns=phys_cols,
-        filters=read_filters,
-    )
-    # field-id projection: rename/NULL-fill/widen — the ONE shared
-    # implementation (fields.remap_arrow), so rename/drop safety rules
-    # never drift between the engine scan and this reader
-    out = FM.remap_arrow(tbl, p.proj, _DDL_ARROW)
-    if not mor:
-        return out
-    # positional deletes FIRST: positions index the file's row order,
-    # which the projection above preserves and the equality filter below
-    # would destroy. Pos files are sorted by file_path → footer pruning.
-    pos_list: list[int] = []
-    for dp in p.pos_dels:
-        ptb = pq.read_table(
-            os.path.join(p.root, dp),
-            filters=[("file_path", "==", p.rel_path)],
-            columns=["pos"],
-        )
-        if ptb.num_rows:
-            pos_list.extend(ptb.column("pos").to_pylist())
-    if pos_list:
-        keep = np.ones(out.num_rows, dtype=bool)
-        keep[np.asarray(pos_list, dtype=np.int64)] = False
-        out = out.filter(pa.array(keep))
-    if p.eq_dels and out.num_rows:
-        mn = pc.min(out.column("image_id")).as_py()
-        mx = pc.max(out.column("image_id")).as_py()
-        chunks = []
-        for dp, dmn, dmx in p.eq_dels:
-            if dmx < mn or dmn > mx:
-                continue  # key ranges disjoint — skip the read entirely
-            kt = pq.read_table(
-                os.path.join(p.root, dp),
-                filters=[("image_id", ">=", mn), ("image_id", "<=", mx)],
-            )
-            if kt.num_rows:
-                chunks.append(kt.column("image_id").combine_chunks())
-        if chunks:
-            keys = pa.concat_arrays(
-                [c.chunk(0) if isinstance(c, pa.ChunkedArray) else c for c in chunks]
-            )
-            out = out.filter(
-                pc.invert(pc.is_in(out.column("image_id"), value_set=keys))
-            )
-    return out
-
-
-def _partitions_for_entries(
-    table, entries: list[dict], snapshot_id, ddl: str, mor: bool = True
-) -> list[FilePartition]:
-    """Driver-side partition planning: per-entry field-id projection +
-    the delete files applicable to each entry."""
-    from nessie_spark.lakehouse import fields as FM
-    from nessie_spark.lakehouse.deletes import split_delete_kinds
-    from nessie_spark.lakehouse.scan import _target_fields
-
-    tfields = _target_fields(table, snapshot_id, ddl)
-    snap_sids = FM.sid_by_snapshot(table.meta)
-    projs: dict[int, list] = {}
-    eq_dels, pos_dels = ([], [])
-    if mor:
-        eq, pos = split_delete_kinds(table.delete_files(snapshot_id))
-        eq_dels = [(d["file_path"], d["min_key"], d["max_key"], d["snapshot_id"]) for d in eq]
-        # a pos-delete file's min/max_key record its min/max TARGET data
-        # file path (deletes.py) — prune per data file here so a task
-        # opens only the delete files that can name it, not all of them
-        pos_dels = [(d["file_path"], d["min_key"], d["max_key"]) for d in pos]
-    parts = []
-    for e in entries:
-        sid = FM.entry_schema_id(e, snap_sids)
-        if sid not in projs:
-            projs[sid] = FM.projection(table.meta, sid, tfields)
-        added = int(e.get("added_snapshot_id") or 0)
-        e_mn, e_mx = e.get("min_key"), e.get("max_key")
-        parts.append(
-            FilePartition(
-                root=table.root,
-                rel_path=e["file_path"],
-                added_sid=added,
-                proj=projs[sid],
-                ddl=ddl,
-                # equality deletes apply to files added BEFORE the delete
-                # (a key re-inserted afterwards stays visible — scan.py);
-                # key-range-disjoint delete files are dropped when the
-                # entry carries stats (streaming entries may not)
-                eq_dels=[
-                    (dp, mn, mx)
-                    for dp, mn, mx, dsid in eq_dels
-                    if added < dsid
-                    and (e_mn is None or e_mx is None or (mn <= e_mx and mx >= e_mn))
-                ],
-                pos_dels=[
-                    dp
-                    for dp, pmn, pmx in pos_dels
-                    if pmn <= e["file_path"] <= pmx
-                ],
-            )
-        )
-    return parts
 
 
 class NessieBatchReader(DataSourceReader):
@@ -355,10 +211,9 @@ class NessieBatchReader(DataSourceReader):
 
     def partitions(self) -> list[FilePartition]:
         t, entries, sid, ddl = self._plan()
-        parts = _partitions_for_entries(t, entries, sid, ddl, mor=True)
-        for p in parts:
-            p.arrow_filters = list(self._arrow_filters)
-        return parts
+        return _partitions_for_entries(
+            t, entries, sid, ddl, mor=True, arrow_filters=self._arrow_filters
+        )
 
     def read(self, partition: FilePartition) -> Iterator[pa.RecordBatch]:
         if partition is None:

@@ -7,6 +7,7 @@ Mirrors the reference's fixture discipline (seed 42, smoke scales;
 from __future__ import annotations
 
 import shutil
+from contextlib import contextmanager
 
 import pytest
 
@@ -44,3 +45,29 @@ def make_table(spark, root: str, n: int = SMOKE_N, mean_rows: int = 24):
 def table_small(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("tbl") / "images")
     return make_table(spark, root)
+
+
+@contextmanager
+def spark_jobs(spark, group: str):
+    """Collect the ids of the Spark jobs started inside the block."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextmanager
+def spark_read(spark):
+    """Send every ``scan()`` inside the block to the Spark parquet read: with
+    a local-relation threshold of 0 no plan is small enough for the driver
+    read."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    spark.conf.set(key, "0")
+    try:
+        yield
+    finally:
+        spark.conf.unset(key)

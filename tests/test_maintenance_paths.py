@@ -14,7 +14,6 @@ import json
 import os
 import shutil
 from collections import Counter
-from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -25,6 +24,7 @@ from nessie_spark.lakehouse.expire import expire_snapshots, gc_orphans
 from nessie_spark.lakehouse.jobs import create_images_table
 from nessie_spark.lakehouse.manifest import rewrite_manifests
 from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA, Table
+from tests.conftest import spark_jobs
 
 
 def _touch(root: str, rel: str) -> str:
@@ -86,19 +86,6 @@ def template(tmp_path_factory):
     return root
 
 
-@contextmanager
-def _spark_jobs(spark, group: str):
-    """Collect the ids of the Spark jobs started inside the block."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    ids: list[int] = []
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _files(root: str) -> set[str]:
     return {
         os.path.relpath(os.path.join(d, f), root)
@@ -117,7 +104,7 @@ def _run_both(spark, template, tmp_path, monkeypatch, name, op):
         with monkeypatch.context() as m:
             if path == "spark":
                 m.setattr(scan, "PLAN_DISTRIBUTED_ENTRIES", 0)
-            with _spark_jobs(spark, f"{name}-{path}-{id(tmp_path)}") as jobs:
+            with spark_jobs(spark, f"{name}-{path}-{id(tmp_path)}") as jobs:
                 res = op(Table.load(root))
         out.append((res, root, jobs))
     (_, _, drv_jobs), (_, _, spk_jobs) = out

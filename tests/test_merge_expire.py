@@ -250,7 +250,7 @@ def test_matched_files_bucketed_no_bnlj(spark):
     )
     keys = [f"k{i:08d}" for i in range(0, n_files * 10, 997)]
     src_keys = spark.createDataFrame([(k,) for k in keys], "_k string")
-    out = merge.matched_files_df(src_keys, stats_df)
+    out = merge.matched_files_df(src_keys, stats_df, n_files=n_files)
     plan = _plan(out)
     assert "BroadcastNestedLoopJoin" not in plan
     got = sorted(r.file_path for r in out.collect())

@@ -13,7 +13,7 @@ import pytest
 from nessie_spark import synth
 from nessie_spark.lakehouse import compact, deletes, expire, jobs, merge, zorder
 from nessie_spark.lakehouse.scan import scan, scan_incremental
-from tests.conftest import make_table
+from tests.conftest import make_table, spark_jobs, spark_read
 
 
 def _ids(df):
@@ -35,13 +35,20 @@ def test_delete_where_is_metadata_only_and_scan_subtracts(spark, tmp_path):
     assert scan(spark, t).count() == 256 - 50
     assert min(_ids(scan(spark, t))) == "img_000000000050"
     assert scan(spark, t, snapshot_id=snap0).count() == 256
-    # predicate pushdown survives the anti-join (filters below the join)
+    # predicate pushdown survives the anti-join (filters below the join) on
+    # the Spark read; the table is small enough for the driver read, so
+    # force the Spark one
+    rng = ("img_000000000100", "img_000000000200")
     buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        scan(spark, t, key_range=("img_000000000100", "img_000000000200")).explain(
-            "formatted"
-        )
+    with spark_read(spark), contextlib.redirect_stdout(buf):
+        scan(spark, t, key_range=rng).explain("formatted")
+        spark_rows = sorted(scan(spark, t, key_range=rng).collect())
     assert "PushedFilters" in buf.getvalue()
+    # the driver read returns the same rows and its collect starts no job
+    with spark_jobs(spark, f"mor-driver-{id(tmp_path)}") as job_ids:
+        driver_rows = sorted(scan(spark, t, key_range=rng).collect())
+    assert job_ids == []
+    assert driver_rows == spark_rows and len(driver_rows) == 101
 
 
 def test_empty_match_delete_is_a_noop(spark, tmp_path):

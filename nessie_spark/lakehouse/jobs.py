@@ -1,8 +1,17 @@
 """Table lifecycle jobs: create + append (the ingest path).
 
-Appends are distributed writes (writer.py); only the per-file stats rows
-(manifest entries) travel to the driver for the atomic commit — O(#files),
-never O(#rows).
+An append writes its rows with the engine's one Arrow slice writer
+(writer.write_slices) in one of two places:
+
+- **on the driver**, when ``df.isLocal()`` (a bare ``LocalRelation``: Arrow
+  or pandas data that PySpark kept in the plan, up to
+  ``spark.sql.execution.arrow.localRelationThreshold``), no
+  ``file_boundaries`` layout is asked for and no write sort order applies.
+  The rows are already in the driver, ``collect()`` on them starts no
+  Spark job, and the append writes one file per hidden-partition value.
+- **in Spark tasks** otherwise: one file per Spark partition, and only
+  the per-file stats rows (manifest entries) travel to the driver for the
+  atomic commit — O(#files), never O(#rows).
 """
 
 from __future__ import annotations
@@ -10,18 +19,39 @@ from __future__ import annotations
 import uuid
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from nessie_spark.lakehouse import lineage
+from nessie_spark.lakehouse.partition import PVAL_COL, stamp_pval, table_spec
 from nessie_spark.lakehouse.scan import IMAGES_DDL
-from nessie_spark.lakehouse.table import Table
-from nessie_spark.lakehouse.writer import write_grouped_files, write_partition_files
+from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA, Table
+from nessie_spark.lakehouse.writer import (
+    DATA_COLUMNS,
+    collect_grouped_stats,
+    ddl_columns,
+    write_grouped_files,
+    write_partition_files,
+    write_slices,
+)
 
 
 def create_images_table(root: str, properties: dict | None = None) -> Table:
     return Table.create(root, IMAGES_DDL, properties)
+
+
+def _local_arrow(df: DataFrame) -> pa.Table:
+    """The rows of a local DataFrame as an Arrow table. ``collect()`` on a
+    ``LocalRelation`` reads the rows held in the plan and starts no Spark
+    job."""
+    schema = to_arrow_schema(df.schema)
+    cols = list(zip(*df.collect())) or [[] for _ in schema]
+    return pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(cols, schema)], schema=schema
+    )
 
 
 def append(
@@ -36,6 +66,15 @@ def append(
     to_ref: str | None = None,
 ) -> int:
     """Append ``df`` (images schema) as a new snapshot.
+
+    Where the rows are written: a local ``df`` (``df.isLocal()`` — e.g.
+    ``createDataFrame`` of a pandas frame or Arrow table under the local
+    relation threshold, with no transformation on top) with no
+    ``file_boundaries`` and no sort order is written on the driver, one
+    file per hidden-partition value, without a Spark job. Any other input
+    is written by Spark tasks, one file per partition. Both take the same
+    guards, stats, commit and lineage unit; ``.repartition(n)`` on a local
+    frame asks for the Spark layout explicitly.
 
     ``stage_only``: write-audit-publish staging — the appended files and
     snapshot are durable but the current pointer does not move until
@@ -62,8 +101,6 @@ def append(
     prior = lineage.committed_snapshot(table.root, job_id)
     if prior is not None:
         return prior
-    from nessie_spark.lakehouse.writer import ddl_columns
-
     table_cols = ddl_columns(table.meta.get("schema", IMAGES_DDL))
     extra = [c for c in df.columns if c not in table_cols and c != "zkey"]
     if extra:
@@ -71,9 +108,9 @@ def append(
             f"append columns {extra} not in table schema; evolve first "
             "(lakehouse.evolve.add_column)"
         )
+    spec = table_spec(table)
+    order = sort_order or (table.meta.get("properties") or {}).get("write.sort-order")
     if file_boundaries is not None:
-        from nessie_spark.lakehouse.writer import DATA_COLUMNS
-
         evolved_in_df = [c for c in df.columns if c in table_cols and c not in DATA_COLUMNS]
         if evolved_in_df:
             # write_grouped_files is the fixed-layout fixture writer (base
@@ -94,14 +131,16 @@ def append(
 
         dfg = df.withColumn("file_id", file_id_of(df[id_col]))
         stats = write_grouped_files(dfg, table.root, job_id, "append")
-        from nessie_spark.lakehouse.writer import collect_grouped_stats
-
         entries = collect_grouped_stats(spark, stats)
+    elif not order and df.isLocal():
+        entries = pa.Table.from_pylist(
+            write_slices(
+                _local_arrow(df), table.root, f"{job_id}-append-p00000",
+                spec=spec, columns=table_cols,
+            ),
+            schema=FILE_ENTRY_SCHEMA,
+        )
     else:
-        from nessie_spark.lakehouse.partition import PVAL_COL, stamp_pval, table_spec
-
-        spec = table_spec(table)
-        order = sort_order or (table.meta.get("properties") or {}).get("write.sort-order")
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         if order:
             from nessie_spark.lakehouse.zorder import zorder_key

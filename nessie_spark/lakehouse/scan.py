@@ -409,26 +409,28 @@ def _read_partition_table(p: FilePartition, mor: bool = True) -> pa.Table:
     from nessie_spark.lakehouse import fields as FM
     from nessie_spark.lakehouse.writer import _DDL_ARROW
 
-    phys_cols = [ph for ph, _s, _c, _t in p.proj if ph is not None]
+    path = os.path.join(p.root, p.rel_path)
+    # a file written from a frame that lacked an added column does not
+    # store it although its schema version has it: read what the file
+    # holds, and remap_arrow NULL-fills the rest
+    stored = set(pq.read_schema(path).names)
+    phys_cols = [ph for ph, _s, _c, _t in p.proj if ph in stored]
     read_filters = None
     if p.arrow_filters and not p.pos_dels:
         # translate pushed predicates to the file's PHYSICAL names; a
-        # comparison on a field this file predates can never hold (the
-        # column reads as NULL) — skip the file outright
+        # comparison on a field this file does not store can never hold
+        # (the column reads as NULL) — skip the file outright
         phys_of = {cur: ph for ph, _s, cur, _t in p.proj}
         read_filters = []
         for cur, op, val in p.arrow_filters:
             if cur not in phys_of:
                 continue  # not a projected column; re-applied row-wise anyway
             ph = phys_of[cur]
-            if ph is None:
+            if ph not in stored:
                 return FM.remap_arrow(pa.table({}), p.proj, _DDL_ARROW)
             read_filters.append((ph, op, val))
         read_filters = read_filters or None
-    tbl = pq.read_table(
-        os.path.join(p.root, p.rel_path), columns=phys_cols,
-        filters=read_filters,
-    )
+    tbl = pq.read_table(path, columns=phys_cols, filters=read_filters)
     # field-id projection: rename/NULL-fill/widen — the ONE shared
     # implementation (fields.remap_arrow), so rename/drop safety rules
     # never drift between the Spark read and this reader

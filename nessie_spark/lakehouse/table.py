@@ -897,8 +897,15 @@ class Table:
         ``added``: new file entries (one new manifest is written).
         ``deleted_paths``: data-file paths removed from the live set; any
         carried-forward manifest containing one is rewritten without them.
+        On the default carry path every one of them must be live in the
+        parent each attempt commits over: if a concurrent commit already
+        removed one (a merge or compaction rewrote the same file), the
+        attempt raises CommitConflict instead of re-adding the rewrite's
+        copy of rows the other commit replaced — the caller re-plans.
         ``carried_manifest_summaries``: pre-built manifest summaries (used by
         the manifest-rewrite job); default = parent's manifests, filtered.
+        A commit that deletes nothing (an append) carries the parent's
+        manifest-list rows as they are and opens no manifest.
         ``new_delete_entries``: merge-on-read equality-delete files added by
         this commit (deletes.py); each is stamped with THIS snapshot's id —
         the applicability boundary (the delete applies to data files with
@@ -976,13 +983,23 @@ class Table:
             manifests: list[dict] = []
             if carried_manifest_summaries is not None:
                 manifests.extend(carried_manifest_summaries)
+            elif parent is not None and not deleted_paths:
+                # nothing to filter out: the parent's manifests carry
+                # forward as they are, unopened
+                manifests.extend(
+                    pq.read_table(
+                        os.path.join(t.root, parent["manifest_list"])
+                    ).to_pylist()
+                )
             elif parent is not None:
                 prior = pq.read_table(os.path.join(t.root, parent["manifest_list"]))
+                found: set[str] = set()
                 for row in prior.to_pylist():
                     mpath = os.path.join(t.root, row["manifest_path"])
                     entries = pq.read_table(mpath, schema=FILE_ENTRY_SCHEMA)
                     paths_in = set(entries.column("file_path").to_pylist())
                     hit = paths_in & deleted_paths
+                    found |= hit
                     if not hit:
                         manifests.append(row)
                         continue
@@ -996,6 +1013,18 @@ class Table:
                     if keep.num_rows:
                         _, msum = t.write_manifest(keep, tag=f"s{snapshot_id}-rw")
                         manifests.append(msum)
+                gone = deleted_paths - found
+                if gone:
+                    # a concurrent commit already removed a file this one
+                    # rewrites: carrying on would re-add its rows beside
+                    # that commit's version of them. Retrying cannot help,
+                    # the caller re-plans on the current snapshot
+                    raise CommitConflict(
+                        f"{operation} deletes {len(gone)} file(s) no longer "
+                        f"live at snapshot {parent['snapshot_id']} (e.g. "
+                        f"{sorted(gone)[0]}); re-plan against the current "
+                        "snapshot"
+                    )
 
             if added is not None and added.num_rows:
                 added = added.set_column(

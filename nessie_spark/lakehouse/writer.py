@@ -1,11 +1,18 @@
-"""Distributed data-file writer.
+"""Data-file writer: one Arrow slice writer, run in Spark tasks or on the
+driver.
 
-One parquet data file per Spark partition, written *inside* the task with
-pyarrow (``mapInArrow`` — Arrow batches end-to-end, no row-at-a-time Python).
-The task emits exactly one manifest-entry stats row per written file; the
-driver only ever sees the (tiny) stats, never pixel bytes.
+``write_slices`` writes an Arrow table as parquet data files with pyarrow,
+one file per hidden-partition value, and returns one manifest-entry stats
+row per file. It has three callers:
 
-Determinism/resumability: file names are pure functions of
+- ``write_partition_files``: one file per Spark partition, written *inside*
+  the task (``mapInArrow`` — Arrow batches end-to-end, no row-at-a-time
+  Python). The driver only ever sees the (tiny) stats, never pixel bytes.
+- the ``format("nessie")`` sink's task writer (sources/spark_datasource.py).
+- ``jobs.append`` for a local DataFrame (``df.isLocal()``): the rows are
+  already on the driver, so the driver writes them and no Spark job runs.
+
+Determinism/resumability: the engine's file names are pure functions of
 ``(job_id, phase, partition_id)`` and writes go to a temp name + atomic
 ``os.replace`` — task retries and job re-runs land byte-stable on the same
 paths (pairs with lineage.py skip logic).
@@ -28,6 +35,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from nessie_spark.lakehouse.bloom import bloom_from_keys
+from nessie_spark.lakehouse.partition import PVAL_COL, segment_name, transform_py
 from nessie_spark.lakehouse import kernels as _kernels_preload  # noqa: F401
 # Module-level so the per-worker writer preload (bench warm-up) also pulls
 # in the image codec stack (kernels -> jpegvec LUTs) outside any timed task.
@@ -130,6 +138,82 @@ def write_table_file(tbl: pa.Table, abs_path: str) -> int:
     return os.path.getsize(abs_path)
 
 
+def _partition_slices(
+    tbl: pa.Table, spec: list | None = None
+) -> list[tuple[str, pa.Table]]:
+    """Split ``tbl`` into one ``(partition value, rows)`` slice per hidden
+    partition value, in value order: a data file never spans values.
+
+    The value comes from the staged ``PVAL_COL`` when the Spark write
+    stamped one (``partition.stamp_pval``), else from ``spec`` through the
+    driver-side transform twin (``partition.transform_py``); with neither
+    the whole table is one unpartitioned ("") slice. An empty table has no
+    slices."""
+    if tbl.num_rows == 0:
+        return []
+    if PVAL_COL in tbl.schema.names:
+        pvals = tbl.column(PVAL_COL)
+    elif spec:
+        seg_cols = [
+            [
+                f"{segment_name(f)}={transform_py(f, v)}"
+                for v in tbl.column(f["source"]).to_pylist()
+            ]
+            for f in spec
+        ]
+        pvals = pa.array(["/".join(parts) for parts in zip(*seg_cols)])
+    else:
+        return [("", tbl)]
+    return [
+        (g, tbl.filter(pc.equal(pvals, g)))
+        for g in sorted(pc.unique(pvals).to_pylist())
+    ]
+
+
+def write_slices(
+    tbl: pa.Table,
+    table_root: str,
+    stem: str,
+    spec: list | None = None,
+    columns: list[str] | None = None,
+    reencode: bool = False,
+) -> list[dict]:
+    """Write one Arrow table as data files and return their manifest-entry
+    stats: one file per hidden-partition slice (``_partition_slices``),
+    named ``data/{stem}[-k].parquet``. The Spark task writer, the
+    ``format("nessie")`` sink and the driver-side append all write
+    through here.
+
+    ``columns``: the written column set (those absent from ``tbl`` are
+    not written; readers NULL-backfill); None writes every column.
+    Staging columns (``zkey``, the partition value) feed the stats only.
+    ``reencode``: the north-star pixel path (decode → re-encode in the
+    stored format → PSNR-verify) applied per slice."""
+    slices = _partition_slices(tbl, spec)
+    entries = []
+    for k, (pval, part_tbl) in enumerate(slices):
+        suffix = f"-{k}" if len(slices) > 1 else ""
+        rel = f"data/{stem}{suffix}.parquet"
+        if reencode:
+            from nessie_spark.lakehouse import kernels as K
+
+            new_bytes, _mn = K.reencode_verify(
+                part_tbl.column("bytes").to_pylist(),
+                part_tbl.column("fmt").to_pylist(),
+            )
+            part_tbl = part_tbl.set_column(
+                part_tbl.schema.get_field_index("bytes"), "bytes",
+                pa.array(new_bytes, pa.binary()),
+            )
+        data_tbl = (
+            part_tbl if columns is None
+            else part_tbl.select([c for c in columns if c in part_tbl.schema.names])
+        )
+        size = write_table_file(data_tbl, os.path.join(table_root, rel))
+        entries.append(stats_entry_for(part_tbl, rel, size, partition=pval))
+    return entries
+
+
 def write_partition_files(
     df: DataFrame, table_root: str, job_id: str, phase: str,
     data_columns: list[str] | None = None,
@@ -138,55 +222,29 @@ def write_partition_files(
     """Write each partition of ``df`` as one data file; return stats DF.
 
     ``df`` must carry the images schema (optionally plus ``zkey``, which is
-    recorded in stats but dropped from the data file). ``data_columns``
-    overrides the written column set for evolved tables (columns absent
-    from ``df`` are simply not written; readers NULL-backfill).
-    ``reencode``: the north-star pixel path (decode → re-encode in the
-    stored format → PSNR-verify) applied per written slice — used by the
-    spec-alignment clustering rewrite, same kernel discipline as compact.
+    recorded in stats but dropped from the data file, and the stamped
+    hidden-partition value). ``data_columns`` overrides the written column
+    set for evolved tables (columns absent from ``df`` are simply not
+    written; readers NULL-backfill). ``reencode``: see ``write_slices`` —
+    used by the spec-alignment clustering rewrite, same kernel discipline
+    as compact.
     """
     cols = data_columns or DATA_COLUMNS
-    from nessie_spark.lakehouse.partition import PVAL_COL
 
     def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pid = TaskContext.get().partitionId()
         rows = list(batches)
         if not rows:
             return
-        tbl = pa.Table.from_batches(rows)
-        if tbl.num_rows == 0:
-            return
-        # hidden partitioning: a data file never spans partition values.
-        # The append shuffle range-partitions on (pval, id), so nearly
-        # every task holds ONE value and this split is a no-op; boundary
-        # tasks split into one file per value (deterministic order).
-        if PVAL_COL in tbl.schema.names:
-            groups = sorted(set(tbl.column(PVAL_COL).to_pylist()))
-            slices = [
-                (g, tbl.filter(pc.equal(tbl.column(PVAL_COL), g)))
-                for g in groups
-            ]
-        else:
-            slices = [("", tbl)]
-        for k, (pval, part_tbl) in enumerate(slices):
-            suffix = f"-{k}" if len(slices) > 1 else ""
-            rel = f"data/{job_id}-{phase}-p{pid:05d}{suffix}.parquet"
-            abs_path = os.path.join(table_root, rel)
-            if reencode:
-                from nessie_spark.lakehouse import kernels as K
-
-                new_bytes, _mn = K.reencode_verify(
-                    part_tbl.column("bytes").to_pylist(),
-                    part_tbl.column("fmt").to_pylist(),
-                )
-                part_tbl = part_tbl.set_column(
-                    part_tbl.schema.get_field_index("bytes"), "bytes",
-                    pa.array(new_bytes, pa.binary()),
-                )
-            data_tbl = part_tbl.select([c for c in cols if c in part_tbl.schema.names])
-            size = write_table_file(data_tbl, abs_path)
-            entry = stats_entry_for(part_tbl, rel, size, partition=pval)
-            yield pa.RecordBatch.from_pylist([entry], schema=FILE_ENTRY_SCHEMA)
+        # hidden partitioning: the append shuffle range-partitions on
+        # (pval, id), so nearly every task holds ONE value and the split
+        # is a no-op; boundary tasks split into one file per value
+        entries = write_slices(
+            pa.Table.from_batches(rows), table_root,
+            f"{job_id}-{phase}-p{pid:05d}", columns=cols, reencode=reencode,
+        )
+        if entries:
+            yield pa.RecordBatch.from_pylist(entries, schema=FILE_ENTRY_SCHEMA)
 
     return df.mapInArrow(_write, FILE_ENTRY_DDL)
 

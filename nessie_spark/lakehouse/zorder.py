@@ -446,15 +446,8 @@ def run_staged(
     # (plan-identical across widths — the clean-ratio property). Cost:
     # each pid task re-reads its group's shards with a pid filter; parquet
     # decode is a few percent of the pixel re-encode work on RAM/SSD.
-    # Object-store-IO-bound deployments set NESSIE_ZORDER_GATHER_UNIT=
-    # group to restore one-read-per-group tasks. Pinned in PLAN.json so a
-    # crash/resume never mixes unit-id namespaces.
-    gather_unit_mode = os.environ.get("NESSIE_ZORDER_GATHER_UNIT", "pid")
-    if gather_unit_mode not in ("pid", "group"):
-        raise ValueError(
-            f"NESSIE_ZORDER_GATHER_UNIT must be 'pid' or 'group' "
-            f"(got {gather_unit_mode!r})"
-        )
+    # Pinned in PLAN.json so a crash/resume never mixes unit-id namespaces.
+    gather_unit_mode = "pid"
 
     plan_path = os.path.join(stage_dir, "PLAN.json")
     if os.path.exists(plan_path):

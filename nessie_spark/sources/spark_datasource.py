@@ -27,15 +27,16 @@ engine's guarantees:
   small scans.
 - **Batch write** is an append-only sink speaking the manifest commit
   protocol: executors write parquet data files + per-file stats entries
-  (min/max/bloom — the same ``stats_entry_for`` every engine writer
-  uses), the driver folds the :class:`WriterCommitMessage` stats into ONE
+  (min/max/bloom) through the engine's one Arrow slice writer
+  (``lakehouse/writer.py::write_slices``, shared with ``jobs.append``),
+  the driver folds the :class:`WriterCommitMessage` stats into ONE
   atomic ``Table.commit`` — all-or-nothing snapshot visibility, and a
   crashed/aborted job leaves only unreferenced uniquely-named files for
   GC (no attempt can overwrite a committed file). An optional ``job_id``
   gives the engine's idempotent-rerun contract, checked BEFORE write
   tasks launch (a committed job_id re-run writes nothing). Tables with a
-  hidden partition spec keep their invariant: the write stamps partition
-  values and splits files per value exactly like ``jobs.append``.
+  hidden partition spec keep their invariant: the slice writer splits
+  files per partition value exactly as it does for ``jobs.append``.
   ``mode("overwrite")`` is refused: row-level change goes through
   MERGE / delete_where, not blind truncate.
 - **Streaming write** (``writeStream.format("nessie")``) is the
@@ -226,53 +227,22 @@ def _write_task(
     spec: list | None,
 ) -> _CommitMsg:
     """Shared executor write for the batch and streaming sinks: drain the
-    Arrow batches, align to the TABLE schema, honor the hidden partition
-    spec (one file per partition value — the engine invariant that a data
-    file never spans values, with ``partition`` stamped in its stats
-    entry), and write uniquely-named files so no attempt can ever
-    overwrite a committed file (replays/duplicates become GC orphans)."""
-    import pyarrow.compute as pc
-
+    Arrow batches, align to the TABLE schema, and write them through the
+    engine's slice writer (``writer.write_slices``: one file per hidden
+    partition value, ``partition`` stamped in its stats entry) under a
+    uniquely-named stem, so no attempt can ever overwrite a committed file
+    (replays/duplicates become GC orphans)."""
     from pyspark import TaskContext
 
-    from nessie_spark.lakehouse.partition import segment_name, transform_py
-    from nessie_spark.lakehouse.writer import (
-        align_to_schema,
-        stats_entry_for,
-        write_table_file,
-    )
+    from nessie_spark.lakehouse.writer import align_to_schema, write_slices
 
     batches = [b for b in iterator]
     if not batches:
         return _CommitMsg(entries=[])
-    tbl = pa.Table.from_batches(batches)
-    if tbl.num_rows == 0:
-        return _CommitMsg(entries=[])
-    tbl = align_to_schema(tbl, _arrow_schema(ddl))
-    if spec:
-        seg_cols = [
-            [
-                f"{segment_name(f)}={transform_py(f, v)}"
-                for v in tbl.column(f["source"]).to_pylist()
-            ]
-            for f in spec
-        ]
-        pvals = pa.array(["/".join(parts) for parts in zip(*seg_cols)])
-        slices = [
-            (g.as_py(), tbl.filter(pc.equal(pvals, g)))
-            for g in pc.unique(pvals)
-        ]
-        slices.sort(key=lambda kv: kv[0])
-    else:
-        slices = [("", tbl)]
+    tbl = align_to_schema(pa.Table.from_batches(batches), _arrow_schema(ddl))
     pid = TaskContext.get().partitionId()
-    entries = []
-    for k, (pval, part_tbl) in enumerate(slices):
-        suffix = f"-{k}" if len(slices) > 1 else ""
-        rel = f"data/{name_prefix}-{uuid.uuid4().hex[:8]}-p{pid:05d}{suffix}.parquet"
-        size = write_table_file(part_tbl, os.path.join(root, rel))
-        entries.append(stats_entry_for(part_tbl, rel, size, partition=pval))
-    return _CommitMsg(entries=entries)
+    stem = f"{name_prefix}-{uuid.uuid4().hex[:8]}-p{pid:05d}"
+    return _CommitMsg(entries=write_slices(tbl, root, stem, spec=spec))
 
 
 def _abort_task_files(root: str, messages) -> None:

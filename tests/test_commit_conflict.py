@@ -1,8 +1,17 @@
 """Optimistic-commit serialization: two writers holding the same base
-version must both land, in order, via the FileExistsError retry loop."""
+version must both land, in order, via the FileExistsError retry loop —
+unless one deletes a file the other already removed, which must raise
+CommitConflict rather than re-add rows the other commit replaced."""
 
+import pytest
+from pyspark.sql import functions as F
+
+from nessie_spark import synth
+from nessie_spark.lakehouse import jobs
+from nessie_spark.lakehouse.compact import compact
+from nessie_spark.lakehouse.merge import merge_into
 from nessie_spark.lakehouse.scan import scan
-from nessie_spark.lakehouse.table import Table
+from nessie_spark.lakehouse.table import CommitConflict, Table
 from tests.conftest import make_table
 
 
@@ -41,3 +50,54 @@ def test_stale_evolution_commit_serializes(spark, tmp_path):
     assert "a_col long" in ddl and "b_col string" in ddl
     df = scan(spark, t)
     assert {"a_col", "b_col"} <= set(df.columns)
+
+
+def _eight_file_table(spark, root):
+    """64 rows in 8 files of 8 rows each."""
+    t = jobs.create_images_table(root)
+    jobs.append(spark, t, synth.images_df(spark, 64, seed=42), job_id="ingest",
+                file_boundaries=list(range(8, 65, 8)))
+    return t.refresh()
+
+
+def _update_one(spark, t, image_id, caption, job_id):
+    src = scan(spark, t).filter(F.col("image_id") == image_id).withColumn(
+        "caption", F.lit(caption)
+    )
+    return merge_into(spark, t, src, job_id=job_id)
+
+
+def _captions(spark, root):
+    rows = scan(spark, Table.load(root)).select("image_id", "caption").collect()
+    return [(r.image_id, r.caption) for r in rows]
+
+
+def test_stale_compaction_after_merge_conflicts(spark, tmp_path):
+    """A compaction planned on a stale handle must not commit over a merge
+    that rewrote one of its input files: that would add back the file's
+    pre-merge rows beside the merge's update."""
+    root = str(tmp_path / "images")
+    _eight_file_table(spark, root)
+    stale = Table.load(root)
+    _update_one(spark, Table.load(root), "img_000000000005", "updated", "m1")
+    with pytest.raises(CommitConflict):
+        compact(spark, stale, target_bytes=1 << 20, job_id="c1")
+    rows = _captions(spark, root)
+    assert len(rows) == 64 and len({i for i, _ in rows}) == 64
+    assert dict(rows)["img_000000000005"] == "updated"
+
+
+def test_stale_merge_after_merge_conflicts(spark, tmp_path):
+    """Two merges that rewrite the same file: the one planned on the stale
+    handle raises, and the table keeps the first merge's row set."""
+    root = str(tmp_path / "images")
+    _eight_file_table(spark, root)
+    stale = Table.load(root)
+    _update_one(spark, Table.load(root), "img_000000000005", "first", "m1")
+    with pytest.raises(CommitConflict):
+        _update_one(spark, stale, "img_000000000006", "second", "m2")
+    rows = _captions(spark, root)
+    assert len(rows) == 64 and len({i for i, _ in rows}) == 64
+    got = dict(rows)
+    assert got["img_000000000005"] == "first"
+    assert got["img_000000000006"] != "second"

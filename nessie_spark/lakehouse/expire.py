@@ -412,9 +412,8 @@ def gc_orphans(
 
 def sweep_committed_stage_dirs(root: str) -> list[str]:
     """Remove ``_stage/{job_id}`` staging shards left behind by jobs whose
-    snapshot is already committed (crash between mark_committed and the
-    in-job cleanup, or a failed staged attempt retried as execution=
-    'shuffle'). Uncommitted stage dirs are kept — they may belong to a
+    snapshot is already committed (a crash between mark_committed and the
+    in-job cleanup). Uncommitted stage dirs are kept — they may belong to a
     resumable in-flight job."""
     import shutil
 

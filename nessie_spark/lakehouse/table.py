@@ -902,6 +902,12 @@ class Table:
         removed one (a merge or compaction rewrote the same file), the
         attempt raises CommitConflict instead of re-adding the rewrite's
         copy of rows the other commit replaced — the caller re-plans.
+        Whenever ``deleted_paths`` is non-empty, on every carry path, an
+        attempt whose parent carries a delete file (by ``file_path``) that
+        the parent at call time lacks also raises CommitConflict: the
+        rewrite read rows that delete removes, and its new files (new
+        paths, new ``added_snapshot_id``) are out of that delete's reach.
+        Appends delete nothing and still commit over concurrent deletes.
         ``carried_manifest_summaries``: pre-built manifest summaries (used by
         the manifest-rewrite job); default = parent's manifests, filtered.
         A commit that deletes nothing (an append) carries the parent's
@@ -953,10 +959,24 @@ class Table:
                 )
             return tt.snapshot(ref["snapshot_id"])
 
+        def _delete_paths(snap: dict | None) -> set[str]:
+            return {d["file_path"] for d in (snap or {}).get("delete_files") or []}
+
         base_parent = _parent_of(self)
+        base_deletes = _delete_paths(base_parent)
         for attempt in range(max_retries):
             t = self.refresh() if attempt else self
             parent = _parent_of(t)
+            if deleted_paths:
+                new_deletes = _delete_paths(parent) - base_deletes
+                if new_deletes:
+                    raise CommitConflict(
+                        f"{operation} rewrites files planned at snapshot "
+                        f"{(base_parent or {}).get('snapshot_id')} but "
+                        f"{len(new_deletes)} delete file(s) were added since "
+                        f"(e.g. {sorted(new_deletes)[0]}); re-plan against "
+                        "the current snapshot"
+                    )
             if (
                 attempt
                 and carried_manifest_summaries is not None

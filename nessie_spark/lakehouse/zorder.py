@@ -4,52 +4,38 @@ north_star (BASELINE.json:6): Z-order via 64-bit Morton interleaving of
 ``(phash, w*h)``, optional Hilbert variant, per-file min/max stats for data
 skipping.
 
-TWO physical executors for the same logical rewrite (proven equivalent in
-tests/test_table_lifecycle.py::test_zorder_staged_equals_shuffle_executor):
-
-- ``execution="staged"`` (default, the scale path): two-phase external sort
-  with parquet staging — scatter tasks pyarrow-read input files, compute
-  zkeys with the bit-identical numpy twins, and write per-gather-group
-  shards; gather tasks sort their group and write final bucket files with
-  stats. Image bytes never enter the JVM (the measured reason: JVM
-  columnar-read → UnsafeRow shuffle → sort → Arrow IPC of fat binary rows
-  inflates ~2× under many-core concurrency, capping 2→8 scaling at ~0.5,
-  while the Python-native compact path holds ~0.95). Fine-grained
-  per-bin/per-group lineage makes it resumable mid-either-phase.
-- ``execution="shuffle"``: the single-exchange Catalyst plan below — fewer
-  moving parts, used as the cross-checking twin and for clusters where a
-  managed shuffle service beats staging through storage.
-
-Physical plan of the shuffle executor (one full-data exchange):
+One executor, ``run_staged``, does every curve-order rewrite — ``cluster``
+(the whole table), ``cluster_incremental`` (the unclustered delta) and each
+partition group of a hidden-partitioned table — in two passes:
     pass 1 (cheap): scan(phash, w, h ONLY — parquet column pruning keeps
       image bytes on disk) → zkey → seeded-sample equi-depth cut points
       ("histogram equi-depth", SURVEY.md §2.5; the RangePartitioner recipe,
-      ~256 sampled keys per output file, manifest row count sizes the
+      ~64 sampled keys per output file, manifest row count sizes the
       fraction so no count() job runs)
-    pass 2: scan(all) → zkey → pid = searchsorted(boundaries)  [vectorized
-      pandas UDF over ints only] → repartition(n_files, pid) →
-      sortWithinPartitions(pid, zkey) → streaming mapInArrow writer: split
-      each Arrow batch on pid runs, append slices to one ParquetWriter per
-      bucket — exactly one file per bucket with zorder_lo/hi stats.
+    pass 2: a two-phase external sort with parquet staging (scatter by
+      bucket group, gather one sorted data file per bucket; see
+      ``run_staged``), image bytes Python-native from read to write.
+The one exception is ``_cluster_respec``, a one-pass JVM rewrite taken only
+after a partition-spec change.
 
 Why not ``repartitionByRange``: Spark's range partitioner runs a sampling
 job that materializes *full rows* (including the binary pixels) — measured
 as a ~15 s fixed cost at 196k images that does not parallelize. The
 explicit sample pass touches three int columns only.
 
-Why not ``groupBy(pid).applyInPandas``: converting binary columns to pandas
-boxes every image as a Python object and doubles peak memory; measured 3.4×
-slower at local[32] than the streaming Arrow writer (43 s → 12 s at 196k
-images). The bytes stay in Arrow buffers end-to-end here.
+Why not ``groupBy(pid).applyInPandas`` for the gather: converting binary
+columns to pandas boxes every image as a Python object and doubles peak
+memory; measured 3.4× slower at local[32] than a streaming Arrow writer
+(43 s → 12 s at 196k images). The bytes stay in Arrow buffers end-to-end
+here.
 
 The zkey never hits disk in data files — only its per-file lo/hi land in
 the manifest, which is exactly what scan-time data skipping consumes.
-Image bytes cross the shuffle once; no driver materialization, so
-throughput scales with executors (the BENCH scaling-efficiency job).
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import uuid
@@ -62,7 +48,11 @@ from nessie_spark.functions.core import hilbert_key_udf, morton32, order31
 from nessie_spark.lakehouse import lineage
 from nessie_spark.lakehouse.scan import scan
 from nessie_spark.lakehouse.table import Table
+
 DEFAULT_TARGET = 8 * 1024 * 1024
+# equi-depth sample: keys per planned output file, and the sample's seed
+SAMPLES_PER_FILE = 64
+SAMPLE_SEED = 42
 
 
 @dataclass
@@ -89,31 +79,7 @@ def zorder_key(strategy: str = "morton"):
     raise NotImplementedError(f"unknown clustering strategy {strategy!r}")
 
 
-def _bucket_udf(bounds: list[int]):
-    """Vectorized searchsorted over the broadcast boundary list (ints only —
-    the pixel bytes never enter this UDF's columns). merge._bucket_udf is
-    the object-dtype sibling for string keys; this one stays int64 because
-    it sits on the zkey hot path."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    b = np.asarray(bounds, dtype=np.int64)
-
-    def _assign(zkey):
-        import pandas as pd
-
-        return pd.Series(
-            np.searchsorted(b, zkey.to_numpy(dtype=np.int64), side="right").astype(
-                "int32"
-            )
-        )
-
-    return pandas_udf(_assign, "int")
-
-
-def equi_depth_bounds(
-    keys_df, n_files: int, total_rows: int, samples_per_file: int = 64, seed: int = 42
-) -> list[int]:
+def equi_depth_bounds(keys_df, n_files: int, total_rows: int) -> list[int]:
     """WEIGHTED equi-depth zkey cut points from a seeded sample — the
     RangePartitioner recipe (sample keys, sort on the driver, read off
     quantiles) with two engine twists:
@@ -123,12 +89,12 @@ def equi_depth_bounds(
       buckets are balanced in WORK and SIZE even when image dimensions are
       skewed (row-balanced cuts measured a 22% straggler tail at 8 cores).
     Sized from the manifest's row count so no count() job runs. Driver
-    memory: n_files × samples_per_file (int, int) pairs."""
+    memory: n_files × SAMPLES_PER_FILE (int, int) pairs."""
     if n_files <= 1 or total_rows == 0:
         return []
-    frac = min(1.0, (n_files * samples_per_file) / total_rows)
+    frac = min(1.0, (n_files * SAMPLES_PER_FILE) / total_rows)
     rows = (
-        keys_df.sample(withReplacement=False, fraction=frac, seed=seed)
+        keys_df.sample(withReplacement=False, fraction=frac, seed=SAMPLE_SEED)
         .select("zkey", "wh")
         .collect()
     )
@@ -151,174 +117,26 @@ def equi_depth_bounds(
     return bounds
 
 
-def write_zorder_buckets(
-    spark, df, root: str, job_id: str, phase: str, n_files: int,
-    reencode: bool = False, data_columns: list[str] | None = None,
-    rows_per_file: int | None = None,
-):
-    """One data file per zkey bucket, bytes JVM-side until the final write:
-    ``repartition(n_files, pid)`` co-locates each bucket in one task,
-    ``sortWithinPartitions(pid, zkey)`` makes buckets contiguous and
-    zkey-sorted, and a streaming ``mapInArrow`` writer splits batches on pid
-    runs and appends slices to one ParquetWriter per bucket — no pandas
-    materialization, no per-row boxing of the binary column, bounded memory
-    (one Arrow batch in flight). Exact file-per-bucket with disjoint
-    zorder_lo/hi ranges by construction, whatever the pid→task hashing.
+def _sample_bounds(df, strategy: str, n_files: int, total_rows: int) -> list[int]:
+    """Pass 1 over ``df``'s (phash, w, h): key each row and read the
+    equi-depth cut points off a seeded sample."""
+    key = zorder_key(strategy)
+    keys_df = (
+        df.select("phash", "w", "h")
+        .withColumn("zkey", key(F.col("phash"), F.col("w"), F.col("h")))
+        .withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
+    )
+    return equi_depth_bounds(keys_df, n_files, total_rows)
 
-    ``reencode``: the north-star pixel path (BASELINE.json:6 — "re-encode
-    during rewrite"): decode each image, re-encode in its stored format,
-    PSNR-verify (≥40 dB lossy, exact lossless), store the re-encoded bytes —
-    all inside the Arrow batch, same kernel discipline as compact."""
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-
-    from nessie_spark.lakehouse.table import FILE_ENTRY_DDL, FILE_ENTRY_SCHEMA
-    from nessie_spark.lakehouse.writer import DATA_COLUMNS
-
-    cols = data_columns or DATA_COLUMNS
-    # streaming fold: per-batch blooms must share one size (the final key
-    # count is unknown mid-fold), so size for the PLANNED rows per file —
-    # a fixed 10k budget saturates on big files (~300k rows/64MB) and
-    # silently disables point-lookup pruning on exactly the files Z-order
-    # clusters (r3 ADVICE). bloom_bits_for floors/caps the result, and
-    # returns None past filter capacity (key-dense files, ~52k+ keys): a
-    # saturated capped filter prunes nothing, so those entries honestly
-    # carry no bloom and readers fall back to range pruning.
-    from nessie_spark.lakehouse.bloom import bloom_bits_for
-
-    bloom_m = bloom_bits_for(rows_per_file or 10_000)
-
-    def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import os as _os
-        import uuid as _uuid
-
-        import numpy as np
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        state: dict = {"pid": None, "writer": None, "tmp": None, "st": None}
-        entries: list[dict] = []
-
-        def _close():
-            if state["writer"] is None:
-                return
-            state["writer"].close()
-            rel = f"data/{job_id}-{phase}-p{state['pid']:05d}.parquet"
-            abs_path = _os.path.join(root, rel)
-            _os.replace(state["tmp"], abs_path)
-            st = state["st"]
-            entries.append(
-                {
-                    "file_path": rel,
-                    "file_format": "parquet",
-                    "partition": "",
-                    "record_count": st["rows"],
-                    "file_size_bytes": _os.path.getsize(abs_path),
-                    "min_phash": st["min_phash"],
-                    "max_phash": st["max_phash"],
-                    "min_wh": st["min_wh"],
-                    "max_wh": st["max_wh"],
-                    "zorder_lo": st["zlo"],
-                    "zorder_hi": st["zhi"],
-                    "min_key": st["min_key"],
-                    "max_key": st["max_key"],
-                    "key_bloom": st["bloom"],
-                    "added_snapshot_id": -1,
-                }
-            )
-            state.update(pid=None, writer=None, tmp=None, st=None)
-
-        def _open(pid: int, schema: pa.Schema):
-            rel = f"data/{job_id}-{phase}-p{pid:05d}.parquet"
-            abs_path = _os.path.join(root, rel)
-            _os.makedirs(_os.path.dirname(abs_path), exist_ok=True)
-            tmp = abs_path + f".tmp-{_uuid.uuid4().hex[:8]}"
-            state.update(
-                pid=pid,
-                writer=pq.ParquetWriter(tmp, schema, compression="snappy"),
-                tmp=tmp,
-                st={
-                    "rows": 0,
-                    "min_phash": None, "max_phash": None,
-                    "min_wh": None, "max_wh": None,
-                    "zlo": None, "zhi": None,
-                    "min_key": None, "max_key": None,
-                    "bloom": None,
-                },
-            )
-
-        def _fold(st: dict, sl: pa.RecordBatch):
-            st["rows"] += sl.num_rows
-
-            def mn(k, v):
-                st[k] = v if st[k] is None else min(st[k], v)
-
-            def mx(k, v):
-                st[k] = v if st[k] is None else max(st[k], v)
-
-            mn("min_phash", pc.min(sl.column("phash")).as_py())
-            mx("max_phash", pc.max(sl.column("phash")).as_py())
-            mn("min_wh", pc.min(sl.column("wh")).as_py())
-            mx("max_wh", pc.max(sl.column("wh")).as_py())
-            mn("zlo", pc.min(sl.column("zkey")).as_py())
-            mx("zhi", pc.max(sl.column("zkey")).as_py())
-            mn("min_key", pc.min(sl.column("image_id")).as_py())
-            mx("max_key", pc.max(sl.column("image_id")).as_py())
-            if bloom_m is not None:
-                from nessie_spark.lakehouse.bloom import bloom_from_keys, bloom_or
-
-                st["bloom"] = bloom_or(
-                    st["bloom"],
-                    bloom_from_keys(sl.column("image_id").to_pylist(), m=bloom_m),
-                )
-
-        data_schema = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if data_schema is None:
-                idxs = [batch.schema.get_field_index(c) for c in cols]
-                data_schema = pa.schema([batch.schema.field(i) for i in idxs])
-            pids = batch.column("pid").to_numpy()
-            cuts = np.flatnonzero(np.diff(pids)) + 1
-            starts = [0, *cuts.tolist()]
-            ends = [*cuts.tolist(), len(pids)]
-            for s0, e0 in zip(starts, ends):
-                pid = int(pids[s0])
-                sl = batch.slice(s0, e0 - s0)
-                if pid != state["pid"]:
-                    _close()
-                    _open(pid, data_schema)
-                arrs = [sl.column(c) for c in cols]
-                if reencode:
-                    from nessie_spark.lakehouse import kernels as K
-
-                    bi = cols.index("bytes")
-                    new_bytes, _mn = K.reencode_verify(
-                        sl.column("bytes").to_pylist(), sl.column("fmt").to_pylist()
-                    )
-                    arrs[bi] = pa.array(new_bytes, pa.binary())
-                state["writer"].write_batch(
-                    pa.record_batch(arrs, schema=data_schema)
-                )
-                _fold(state["st"], sl)
-        _close()
-        if entries:
-            yield pa.RecordBatch.from_pylist(entries, schema=FILE_ENTRY_SCHEMA)
-
-    # Reduce-side parallelism: ~8 tasks per core (each task streams several
-    # pid buckets sequentially), never more tasks than buckets. 423 buckets
-    # at 8 MB through 423 one-bucket tasks measured 2× slower than 64 fat
-    # tasks — per-task shuffle-fetch and Python-worker setup dominates tiny
-    # tasks — while 2 tasks/core left a 22% last-wave straggler tail and
-    # 4/core still left ~13%; 8/core amortizes the last wave to ~2%. Hash
-    # on pid keeps each bucket whole inside one task.
-    n_tasks = max(1, min(n_files, 8 * spark.sparkContext.defaultParallelism))
-    if "wh" not in df.columns:
-        df = df.withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
-    shuffled = df.repartition(n_tasks, "pid").sortWithinPartitions("pid", "zkey")
-    return shuffled.mapInArrow(_write, FILE_ENTRY_DDL).toArrow()
+def _pinned_plan(root: str, job_id: str) -> dict | None:
+    """The PLAN.json an earlier attempt of ``job_id`` pinned, if any: a
+    resume replays it (bounds, n_files, gather groups, scatter bins)."""
+    path = os.path.join(root, "_stage", job_id, "PLAN.json")
+    if not os.path.exists(path):
+        return None
+    with open(path) as fh:
+        return json.load(fh)
 
 
 def _pack_scatter_bins(entries: list[dict], bin_bytes: int) -> list[list[str]]:
@@ -358,18 +176,20 @@ def run_staged(
     strategy: str,
     reencode: bool,
     entries: list[dict] | None = None,
+    pinned: dict | None = None,
 ):
-    """Staged two-phase Z-order rewrite — the engine's scale executor.
+    """Staged two-phase Z-order rewrite — the engine's one executor for
+    moving every row of ``entries`` (default: the live table) to its zkey
+    bucket, one sorted data file per bucket.
 
-    The shuffle executor (write_zorder_buckets) moves every image byte
-    through the JVM: vectorized parquet read of fat binary rows → UnsafeRow
-    shuffle write/read (lz4) → external sort → Arrow IPC to Python. Each is
-    linear, but measured together they inflate ~2× under 8-way concurrency
-    on fat-binary rows (memory-traffic stalls), capping the bench's 2→8
-    scaling at ~0.46 while the Python-native compaction path holds ~0.96.
-
-    This executor re-expresses the same exchange as a classic two-phase
-    external sort with parquet staging — the bytes never enter the JVM:
+    Why staged rather than a Spark exchange: a JVM shuffle moves every
+    image byte through vectorized parquet read of fat binary rows →
+    UnsafeRow shuffle write/read (lz4) → external sort → Arrow IPC to
+    Python. Each is linear, but measured together they inflate ~2× under
+    8-way concurrency on fat-binary rows (memory-traffic stalls), capping
+    the bench's 2→8 scaling at ~0.46 while the Python-native compaction
+    path holds ~0.96. This executor is a classic two-phase external sort
+    with parquet staging — the bytes never enter the JVM:
 
       scatter: one task per ~64 MB bin of input files (work units placed
         1:1 onto tasks via parallelize(units, len(units))): pyarrow-read
@@ -379,17 +199,22 @@ def run_staged(
         gather group = pid·G//n_files, append one row-group per (file,
         group) run to a per-group staging shard. Atomic tmp→rename; one
         lineage unit per bin (resume skips completed bins).
-      gather: one task per group: pyarrow-read the group's shards, one
-        vectorized sort_indices(pid, zkey, image_id), then per-pid
-        decode → re-encode → PSNR (the north-star pixel path) and one
-        final data file per pid with full min/max + zorder_lo/hi stats.
-        One lineage unit per group; resume re-derives stats for groups
-        finished before a crash.
+      gather: one task per output file (pid): pyarrow-read the pid's rows
+        from its group's shards, one vectorized sort_indices(zkey,
+        image_id), then decode → re-encode → PSNR (the north-star pixel
+        path) and one final data file with full min/max + zorder_lo/hi
+        stats. One lineage unit per pid (a pre-r5 plan resumes with one
+        task per group); resume re-derives stats for units finished
+        before a crash.
 
     On a multi-executor cluster the staging directory lives on the shared
     table store — the standard shuffle-via-storage pattern (external sort
     with managed intermediates); G is the knob that bounds per-task memory
     (group bytes = table_bytes / G).
+
+    ``pinned``: the PLAN.json of an earlier attempt of ``job_id``
+    (``_pinned_plan``), which the caller took ``bounds`` and ``n_files``
+    from; the resume replays its gather groups and scatter bins.
     """
     from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA
     from nessie_spark.lakehouse.writer import stats_entry_for, write_table_file
@@ -426,7 +251,6 @@ def run_staged(
         min(n_files, max(data_groups, spark.sparkContext.defaultParallelism)),
     )
     stage_dir = os.path.join(root, "_stage", job_id)
-    bounds_arr = list(bounds)
 
     # Pin the plan across attempts: a resume on a different core count must
     # keep the original (bounds, n_files, n_groups) or completed scatter
@@ -436,7 +260,6 @@ def run_staged(
     # never-scattered files (row loss) and re-scattering moved ones (row
     # duplication). (North-star resume contract: per-partition lineage
     # replays against the SAME plan.)
-    import json as _json
 
     # Gather granularity (r5): one task per OUTPUT FILE (pid) by default.
     # 64 MB shard-group tasks quantize into ragged waves on small tables —
@@ -449,16 +272,11 @@ def run_staged(
     # Pinned in PLAN.json so a crash/resume never mixes unit-id namespaces.
     gather_unit_mode = "pid"
 
-    plan_path = os.path.join(stage_dir, "PLAN.json")
-    if os.path.exists(plan_path):
-        with open(plan_path) as fh:
-            planned = _json.load(fh)
-        bounds_arr = [int(x) for x in planned["bounds"]]
-        n_files = int(planned["n_files"])
-        n_groups = int(planned["n_groups"])
-        sbins = [list(b) for b in planned["sbins"]]
+    if pinned is not None:
+        n_groups = int(pinned["n_groups"])
+        sbins = [list(b) for b in pinned["sbins"]]
         # pre-r5 plans pinned no gather granularity → resume group-wise
-        gather_unit_mode = planned.get("gather_unit", "group")
+        gather_unit_mode = pinned.get("gather_unit", "group")
         live = {e["file_path"] for e in live_entries}
         plan_set = {p for b in sbins for p in b}
         if subset:
@@ -501,15 +319,15 @@ def run_staged(
         )
         sbins = _pack_scatter_bins(entries, sbin_bytes)
         os.makedirs(stage_dir, exist_ok=True)
-        tmp = plan_path + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(
-                {"bounds": [int(x) for x in bounds_arr], "n_files": n_files,
+        plan_path = os.path.join(stage_dir, "PLAN.json")
+        with open(plan_path + ".tmp", "w") as fh:
+            json.dump(
+                {"bounds": [int(x) for x in bounds], "n_files": n_files,
                  "n_groups": n_groups, "sbins": sbins,
                  "gather_unit": gather_unit_mode},
                 fh,
             )
-        os.replace(tmp, plan_path)
+        os.replace(plan_path + ".tmp", plan_path)
 
     # --- scatter ----------------------------------------------------------
     done = lineage.completed_units(root, job_id, "scatter")
@@ -538,7 +356,7 @@ def run_staged(
         # append slices from any input file.
         aschema = arrow_schema_from_ddl(table_ddl)
         sbin, paths = int(unit[0]), list(unit[1])
-        b = np.asarray(bounds_arr, dtype=np.int64)
+        b = np.asarray(bounds, dtype=np.int64)
         # Bound concurrently-open shard writers: n_groups scales with table
         # bytes (1 TB → ~2k groups), and each open ParquetWriter holds column
         # buffers + an fd. LRU-close past the cap and reopen under a new
@@ -1001,8 +819,6 @@ def _cluster_partitioned(
     data-sized scatter/gather bins. The loop is sequential over groups but
     each group's rewrite uses the whole cluster.
     """
-    import json as _json
-
     import pyarrow as pa
 
     from nessie_spark.lakehouse.partition import parse_partition, segment_name, table_spec
@@ -1030,7 +846,7 @@ def _cluster_partitioned(
     gpath = os.path.join(stage_parent, "GROUPS.json")
     if os.path.exists(gpath):
         with open(gpath) as fh:
-            groups = _json.load(fh)["groups"]
+            groups = json.load(fh)["groups"]
         live = {
             e["file_path"]: e
             for e in table.file_entries(
@@ -1075,39 +891,32 @@ def _cluster_partitioned(
         os.makedirs(stage_parent, exist_ok=True)
         tmp = gpath + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as fh:
-            _json.dump(
+            json.dump(
                 {"groups": [{"pval": pv, "paths": ps} for pv, _g, ps in grouped]},
                 fh,
             )
         os.replace(tmp, gpath)
 
-    key = zorder_key(strategy)
     all_stats: list[pa.Table] = []
     stage_dirs: list = [stage_parent]
     deleted: set = set()
     n_planned = 0
     for i, (pval, g, gpaths) in enumerate(grouped):
         sub_id = f"{job_id}-part{i:04d}"
-        sub_plan = os.path.join(root, "_stage", sub_id, "PLAN.json")
-        if os.path.exists(sub_plan):
-            with open(sub_plan) as fh:
-                pinned = _json.load(fh)
+        pinned = _pinned_plan(root, sub_id)
+        if pinned is not None:
             bounds = [int(x) for x in pinned["bounds"]]
             n_g = int(pinned["n_files"])
         else:
             gbytes = sum(e["file_size_bytes"] for e in g)
             n_g = max(1, math.ceil(gbytes / target_bytes))
-            keys_df = (
-                spark.read.parquet(*[os.path.join(root, pp) for pp in gpaths])
-                .select("phash", "w", "h")
-                .withColumn("zkey", key(F.col("phash"), F.col("w"), F.col("h")))
-                .withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
-            )
-            bounds = equi_depth_bounds(
-                keys_df, n_g, sum(e["record_count"] for e in g)
+            bounds = _sample_bounds(
+                spark.read.parquet(*[os.path.join(root, pp) for pp in gpaths]),
+                strategy, n_g, sum(e["record_count"] for e in g),
             )
         stats_g, sd = run_staged(
-            spark, table, bounds, n_g, sub_id, strategy, reencode, entries=g
+            spark, table, bounds, n_g, sub_id, strategy, reencode, entries=g,
+            pinned=pinned,
         )
         if stats_g.num_rows:
             idx = stats_g.schema.get_field_index("partition")
@@ -1146,15 +955,15 @@ def cluster(
     table: Table,
     strategy: str = "morton",
     target_bytes: int = DEFAULT_TARGET,
-    n_files: int | None = None,
     job_id: str | None = None,
     reencode: bool = False,
-    execution: str = "staged",
 ) -> ClusterResult:
-    """Rewrite the whole live file set in space-filling-curve order.
+    """Rewrite the whole live file set in space-filling-curve order, one
+    data file of about ``target_bytes`` per zkey bucket (``run_staged``).
 
     ``reencode``: decode → re-encode → PSNR-verify every image during the
-    rewrite (north_star pixel path; see write_zorder_buckets)."""
+    rewrite (north_star pixel path; ``kernels.reencode_verify`` in the
+    gather of ``run_staged``)."""
     job_id = job_id or f"zorder-{uuid.uuid4().hex[:8]}"
     root = table.root
 
@@ -1174,99 +983,48 @@ def cluster(
         # (files must not span values or pruning dies) — including when
         # every file is still pre-spec ("" segments ≠ spec segments routes
         # through the respec rewrite, which is how set_partition_spec on an
-        # existing table gets materialized). n_files is derived per group
-        # from target_bytes and the executor is chosen internally, so
-        # explicit overrides can't be honored — refuse rather than ignore.
-        if n_files is not None:
-            raise ValueError(
-                "cluster(n_files=...) cannot be honored on a hidden-"
-                "partitioned table (file counts are derived per partition "
-                "group from target_bytes); size via target_bytes instead"
-            )
-        if execution != "staged":
-            raise ValueError(
-                f"cluster(execution={execution!r}) is not supported on a "
-                "hidden-partitioned table (per-group staged rewrites, or "
-                "the one-pass respec shuffle when the spec changed, are "
-                "chosen internally)"
-            )
+        # existing table gets materialized)
         return _cluster_partitioned(
             spark, table, entries, strategy, target_bytes, job_id, reencode,
             operation=strategy if strategy != "morton" else "zorder",
             carried_manifest_summaries=[],  # full rewrite: nothing carried
             summary_extra={}, incremental=False,
         )
-    total_bytes = sum(e["file_size_bytes"] for e in entries)
-    if n_files is None:
-        n_files = max(1, math.ceil(total_bytes / target_bytes))
 
-    key = zorder_key(strategy)
-
-    def keyed(df):
-        return df.withColumn(
-            "zkey", key(F.col("phash"), F.col("w"), F.col("h"))
-        ).withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
-
-    # The sample scan names its three int columns: a small table is read on
-    # the driver into a LocalRelation, which Catalyst does not column-prune,
-    # so a full-row scan would pull every image's bytes through the driver.
-
-    # pass 1: weighted equi-depth boundaries from a seeded sample of the
-    # pruned scan (ints only, no bytes); row count comes from the manifest,
-    # so this is one cheap job
-    import os as _os
     import sys as _sys
     import time as _time
 
-    prof = _os.environ.get("NESSIE_ZORDER_PROF") == "1"
+    prof = os.environ.get("NESSIE_ZORDER_PROF") == "1"
     t0 = _time.time()
     total_rows = sum(e["record_count"] for e in entries)
-    pinned = None
-    if execution == "staged":
-        plan_path = os.path.join(root, "_stage", job_id, "PLAN.json")
-        if os.path.exists(plan_path):
-            import json as _json
-
-            with open(plan_path) as fh:
-                pinned = _json.load(fh)
+    pinned = _pinned_plan(root, job_id)
     if pinned is not None:
-        # resume: run_staged replays the pinned plan anyway — re-running
-        # the sampling job here would only be discarded work
+        # resume: replay the pinned plan — re-running the sampling job here
+        # would only be discarded work
         bounds = [int(x) for x in pinned["bounds"]]
         n_files = int(pinned["n_files"])
     else:
-        bounds = equi_depth_bounds(
-            keyed(scan(spark, table, columns=["phash", "w", "h"])), n_files,
+        # pass 1 names its three int columns: a small table is read on the
+        # driver into a LocalRelation, which Catalyst does not column-prune,
+        # so a full-row scan would pull every image's bytes through the
+        # driver
+        n_files = max(
+            1, math.ceil(sum(e["file_size_bytes"] for e in entries) / target_bytes)
+        )
+        bounds = _sample_bounds(
+            scan(spark, table, columns=["phash", "w", "h"]), strategy, n_files,
             total_rows,
         )
     t1 = _time.time()
 
-    # pass 2: move every row to its zkey bucket — staged (two-phase
-    # Python-native external sort; see run_staged) or shuffle (JVM exchange;
-    # see write_zorder_buckets). Both produce one file per bucket.
-    stage_dir = None
-    if execution == "staged":
-        stats, stage_dir = run_staged(
-            spark, table, bounds, n_files, job_id, strategy, reencode
-        )
-    elif execution == "shuffle":
-        from nessie_spark.lakehouse.scan import IMAGES_DDL
-        from nessie_spark.lakehouse.writer import ddl_columns
-
-        df = keyed(scan(spark, table)).withColumn(
-            "pid", _bucket_udf(bounds)(F.col("zkey"))
-        )
-        stats = write_zorder_buckets(
-            spark, df, root, job_id, strategy, n_files, reencode=reencode,
-            data_columns=ddl_columns(table.meta.get("schema", IMAGES_DDL)),
-            rows_per_file=-(-total_rows // max(1, n_files)),
-        )
-    else:
-        raise NotImplementedError(f"unknown zorder execution {execution!r}")
+    # pass 2: move every row to its zkey bucket, one file per bucket
+    stats, stage_dir = run_staged(
+        spark, table, bounds, n_files, job_id, strategy, reencode, pinned=pinned
+    )
     if prof:
         print(
             f"[zorder-prof] sample={t1 - t0:.2f}s write={_time.time() - t1:.2f}s "
-            f"n_files={n_files} rows={total_rows} execution={execution}",
+            f"n_files={n_files} rows={total_rows}",
             file=_sys.stderr,
         )
     return _cluster_commit(
@@ -1356,13 +1114,7 @@ def cluster_incremental(
     # input set (and the commit's deleted set) — re-deriving "unclustered"
     # from a table that gained appends mid-crash would silently widen the
     # job past its plan.
-    pinned = None
-    plan_path = os.path.join(root, "_stage", job_id, "PLAN.json")
-    if os.path.exists(plan_path):
-        import json as _json
-
-        with open(plan_path) as fh:
-            pinned = _json.load(fh)
+    pinned = _pinned_plan(root, job_id)
     if pinned is not None:
         bounds = [int(x) for x in pinned["bounds"]]
         n_files = int(pinned["n_files"])
@@ -1376,19 +1128,14 @@ def cluster_incremental(
             return ClusterResult(None, job_id, strategy, 0, 0, 0)
         delta_bytes = sum(e["file_size_bytes"] for e in delta)
         n_files = max(1, math.ceil(delta_bytes / target_bytes))
-        key = zorder_key(strategy)
-        keys_df = (
-            spark.read.parquet(*[os.path.join(root, p) for p in delta_paths])
-            .select("phash", "w", "h")
-            .withColumn("zkey", key(F.col("phash"), F.col("w"), F.col("h")))
-            .withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
+        bounds = _sample_bounds(
+            spark.read.parquet(*[os.path.join(root, p) for p in delta_paths]),
+            strategy, n_files, sum(e["record_count"] for e in delta),
         )
-        total_rows = sum(e["record_count"] for e in delta)
-        bounds = equi_depth_bounds(keys_df, n_files, total_rows)
 
     stats, stage_dir = run_staged(
         spark, table, bounds, n_files, job_id, strategy, reencode,
-        entries=delta,
+        entries=delta, pinned=pinned,
     )
     return _cluster_commit(
         table, job_id, strategy, stats,

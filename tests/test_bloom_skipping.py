@@ -53,9 +53,7 @@ def test_bloom_survives_compact_and_staged_zorder(spark, tmp_path):
     compact.compact(spark, t, target_bytes=TARGET, job_id="cb")
     t = t.refresh()
     assert all(e["key_bloom"] is not None for e in t.file_entries().to_pylist())
-    zorder.cluster(
-        spark, t, target_bytes=TARGET, job_id="zs", execution="staged"
-    )
+    zorder.cluster(spark, t, target_bytes=TARGET, job_id="zs")
     t = t.refresh()
     entries = t.file_entries().to_pylist()
     assert all(e["key_bloom"] is not None for e in entries)

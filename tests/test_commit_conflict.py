@@ -1,7 +1,8 @@
 """Optimistic-commit serialization: two writers holding the same base
 version must both land, in order, via the FileExistsError retry loop —
-unless one deletes a file the other already removed, which must raise
-CommitConflict rather than re-add rows the other commit replaced."""
+unless one deletes a file the other already removed, or rewrites files
+while the other added a delete file, which must raise CommitConflict
+rather than re-add rows the other commit replaced or deleted."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,6 +10,11 @@ from pyspark.sql import functions as F
 from nessie_spark import synth
 from nessie_spark.lakehouse import jobs
 from nessie_spark.lakehouse.compact import compact
+from nessie_spark.lakehouse.deletes import (
+    delete_positions_where,
+    delete_where,
+    purge_deletes,
+)
 from nessie_spark.lakehouse.merge import merge_into
 from nessie_spark.lakehouse.scan import scan
 from nessie_spark.lakehouse.table import CommitConflict, Table
@@ -101,3 +107,59 @@ def test_stale_merge_after_merge_conflicts(spark, tmp_path):
     got = dict(rows)
     assert got["img_000000000005"] == "first"
     assert got["img_000000000006"] != "second"
+
+
+def _ids(spark, root):
+    return [r.image_id for r in scan(spark, Table.load(root)).select("image_id").collect()]
+
+
+def _assert_deleted(spark, root, n_rows, *gone):
+    ids = _ids(spark, root)
+    assert len(ids) == n_rows and len(set(ids)) == n_rows
+    assert not set(gone) & set(ids)
+
+
+DELETES = {"equality": delete_where, "positional": delete_positions_where}
+
+
+@pytest.mark.parametrize("kind", sorted(DELETES))
+def test_stale_compaction_after_delete_conflicts(spark, tmp_path, kind):
+    """A compaction planned before a delete must not commit over it: its
+    rewritten file has a new path and a new added_snapshot_id, so neither
+    a positional nor an equality delete would still apply to the row."""
+    root = str(tmp_path / "images")
+    _eight_file_table(spark, root)
+    stale = Table.load(root)
+    DELETES[kind](spark, Table.load(root), F.col("image_id") == "img_000000000005",
+                  job_id="d1")
+    with pytest.raises(CommitConflict):
+        compact(spark, stale, target_bytes=1 << 20, job_id="c1")
+    _assert_deleted(spark, root, 63, "img_000000000005")
+
+
+def test_stale_merge_after_delete_conflicts(spark, tmp_path):
+    """A merge that rewrites the file holding a concurrently deleted row
+    would copy the row into its new file, out of the delete's reach."""
+    root = str(tmp_path / "images")
+    _eight_file_table(spark, root)
+    stale = Table.load(root)
+    delete_positions_where(spark, Table.load(root),
+                           F.col("image_id") == "img_000000000005", job_id="d1")
+    with pytest.raises(CommitConflict):
+        _update_one(spark, stale, "img_000000000006", "updated", "m1")
+    _assert_deleted(spark, root, 63, "img_000000000005")
+    assert dict(_captions(spark, root))["img_000000000006"] != "updated"
+
+
+def test_stale_purge_after_delete_conflicts(spark, tmp_path):
+    """A purge folds the delete files it planned and drops them; one that
+    commits over a later delete file would drop that file unapplied."""
+    root = str(tmp_path / "images")
+    t = _eight_file_table(spark, root)
+    delete_where(spark, t, F.col("image_id") == "img_000000000003", job_id="d0")
+    stale = Table.load(root)
+    delete_where(spark, Table.load(root), F.col("image_id") == "img_000000000005",
+                 job_id="d1")
+    with pytest.raises(CommitConflict):
+        purge_deletes(spark, stale, job_id="p1")
+    _assert_deleted(spark, root, 62, "img_000000000003", "img_000000000005")

@@ -139,10 +139,9 @@ def test_audio_features_deterministic():
 
 def test_zorder_key_numpy_twins_match_catalyst(spark):
     """The staged executor computes zkeys with numpy (morton32_np /
-    order31_np / hilbert_np) while the sample pass and the shuffle executor
-    use the Catalyst expression / pandas UDF — the two MUST be
-    bit-identical or staged buckets would disagree with the sampled
-    boundaries."""
+    order31_np / hilbert_np) while the sample pass uses the Catalyst
+    expression / pandas UDF — the two MUST be bit-identical or staged
+    buckets would disagree with the sampled boundaries."""
     import numpy as np
     from pyspark.sql import functions as F
 

@@ -104,12 +104,9 @@ def test_compact_preserves_and_normalizes(spark, tmp_path):
     assert live_projection_maps(t) == {}
 
 
-@pytest.mark.parametrize("execution", ["staged", "shuffle"])
-def test_zorder_preserves_renamed_column(spark, tmp_path, execution):
+def test_zorder_preserves_renamed_column(spark, tmp_path):
     t, _, expected = _renamed_table(spark, str(tmp_path / "t"))
-    r = zorder.cluster(
-        spark, t, target_bytes=1 << 20, job_id=f"z1-{execution}", execution=execution
-    )
+    r = zorder.cluster(spark, t, target_bytes=1 << 20, job_id="z1")
     assert r.snapshot_id is not None
     t = t.refresh()
     assert _descriptions(spark, t) == expected

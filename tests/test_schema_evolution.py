@@ -67,12 +67,9 @@ def test_compact_preserves_evolved_column(spark, tmp_path):
     _assert_quality(spark, t.refresh(), expected)
 
 
-@pytest.mark.parametrize("execution", ["staged", "shuffle"])
-def test_zorder_preserves_evolved_column(spark, tmp_path, execution):
+def test_zorder_preserves_evolved_column(spark, tmp_path):
     t, _, expected = _evolved_table(spark, str(tmp_path / "images"))
-    zorder.cluster(
-        spark, t, target_bytes=1 << 20, job_id=f"qz-{execution}", execution=execution
-    )
+    zorder.cluster(spark, t, target_bytes=1 << 20, job_id="qz")
     _assert_quality(spark, t.refresh(), expected)
 
 

@@ -130,52 +130,73 @@ def test_unknown_strategy_raises(spark, table_small):
         zorder.cluster(spark, t, strategy="peano")
 
 
-def test_zorder_staged_equals_shuffle_executor(spark, tmp_path):
-    """Both executors are physical strategies for the SAME logical rewrite:
-    identical bucket boundaries (same seeded sample) → identical per-file
-    row sets and identical zorder_lo/hi stats."""
-    from nessie_spark.lakehouse.table import Table
+def test_zorder_matches_reference_sort(spark, tmp_path):
+    """The staged rewrite against a plain reference: every pre-cluster row,
+    keyed with the numpy twin of the Catalyst zkey and sorted by
+    (zkey, image_id), equals the output files read in p##### order. File p
+    holds exactly the rows of bucket p of the seeded equi-depth bounds, its
+    zorder_lo/hi are its rows' zkey range, and only the declared table
+    columns reach disk."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nessie_spark.lakehouse import jobs
+    from nessie_spark.lakehouse.writer import DATA_COLUMNS
     from tests.conftest import make_table
 
-    outs = {}
-    for ex in ("staged", "shuffle"):
-        root = str(tmp_path / ex / "images")
-        t, _ = make_table(spark, root)
-        zorder.cluster(spark, t, target_bytes=128 * 1024, job_id="zx", execution=ex)
-        t2 = Table.load(root)
-        entries = sorted(t2.file_entries().to_pylist(), key=lambda e: e["file_path"])
-        stats = [
-            (e["file_path"].split("/")[-1], e["record_count"], e["zorder_lo"], e["zorder_hi"])
-            for e in entries
-        ]
-        # per-file row sets via direct read
-        import pyarrow.parquet as pq
-        import os as _os
+    root = str(tmp_path / "images")
+    t, _ = make_table(spark, root)
+    # copies of some rows under ids sorting before and after "img_": their
+    # zkeys tie with the originals, so the order inside a file depends on
+    # the image_id tiebreak whatever order the inputs are read in
+    src = scan(spark, t).where(F.substring("image_id", -1, 1).isin("0", "5"))
+    dups = src.withColumn("image_id", F.concat(F.lit("a-"), "image_id")).unionByName(
+        src.withColumn("image_id", F.concat(F.lit("z-"), "image_id"))
+    )
+    jobs.append(spark, t, dups, job_id="dups")
+    t = t.refresh()
 
-        per_file = {
-            e["file_path"].split("/")[-1]: sorted(
-                pq.read_table(_os.path.join(root, e["file_path"]), columns=["image_id"])
-                .column("image_id").to_pylist()
-            )
-            for e in entries
-        }
-        # on-disk schema must be the declared IMAGES columns for BOTH
-        # executors — staging-only zkey/pid must never reach data files
-        # (r2 ADVICE: staged gather leaked them)
-        schemas = {
-            e["file_path"].split("/")[-1]: pq.read_schema(
-                _os.path.join(root, e["file_path"])
-            ).names
-            for e in entries
-        }
-        outs[ex] = (stats, per_file, schemas)
-    from nessie_spark.lakehouse.writer import DATA_COLUMNS
+    def zkeys(df):
+        wh = (df["w"].to_numpy().astype(np.int64) * df["h"].to_numpy().astype(np.int64)) & 0x7FFFFFFF
+        return zorder._np_zkey("morton", df["phash"].to_numpy(), wh)
 
-    for ex in ("staged", "shuffle"):
-        for names in outs[ex][2].values():
-            assert names == DATA_COLUMNS, (ex, names)
-    assert outs["staged"][0] == outs["shuffle"][0]
-    assert outs["staged"][1] == outs["shuffle"][1]
+    ref = scan(spark, t).toArrow().to_pandas()
+    ref["zkey"] = zkeys(ref)
+    assert ref["zkey"].duplicated().any()
+    ref = ref.sort_values(["zkey", "image_id"]).reset_index(drop=True)
+
+    # the bounds cluster() samples: same seeded sample over the same keyed
+    # column-subset scan of the same snapshot
+    entries = t.file_entries().to_pylist()
+    target = 128 * 1024
+    n_files = -(-sum(e["file_size_bytes"] for e in entries) // target)
+    key = zorder.zorder_key("morton")
+    keyed = scan(spark, t, columns=["phash", "w", "h"]).withColumn(
+        "zkey", key(F.col("phash"), F.col("w"), F.col("h"))
+    ).withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
+    bounds = zorder.equi_depth_bounds(keyed, n_files, sum(e["record_count"] for e in entries))
+    assert len(bounds) >= 2
+
+    zorder.cluster(spark, t, target_bytes=target, job_id="zx")
+    out = sorted(t.refresh().file_entries().to_pylist(), key=lambda e: e["file_path"])
+    assert 2 <= len(out) <= n_files
+    files = []
+    for e in out:
+        tbl = pq.read_table(os.path.join(root, e["file_path"]))
+        assert tbl.schema.names == DATA_COLUMNS, e["file_path"]
+        df = tbl.to_pandas()
+        z = zkeys(df)
+        assert (e["zorder_lo"], e["zorder_hi"]) == (int(z.min()), int(z.max()))
+        pid = int(e["file_path"].rsplit("-p", 1)[1].split(".")[0])
+        assert (np.searchsorted(np.asarray(bounds, np.int64), z, "right") == pid).all()
+        files.append(tbl)
+    for prev, nxt in zip(out, out[1:]):
+        assert prev["zorder_hi"] < nxt["zorder_lo"]
+    got = pa.concat_tables(files).to_pandas()
+    assert len(got) == len(ref)
+    for c in DATA_COLUMNS:
+        assert got[c].tolist() == ref[c].tolist(), c
 
 
 def test_time_travel_as_of_timestamp(spark, tmp_path):

@@ -1,7 +1,9 @@
 """Bin-packing small-file compaction (resumable, copy-on-write).
 
-Plan (driver, on file *stats* only): files below ``target_bytes`` →
-first-fit-decreasing bins (plans/ffd.py). Execute (distributed): one task
+Plan (on file *stats* only): files below ``target_bytes`` →
+first-fit-decreasing bins (plans/ffd.py), on the driver or, when
+``scan.on_driver`` refuses the manifest entry count, as executor-side
+sharded FFD (``ffd_pack_distributed``). Execute (distributed): one task
 per bin reads its input parquet files with pyarrow *inside the task*,
 concatenates Arrow tables (zero shuffle of image bytes — compaction is a
 file-local operation by design, which is why it scales linearly with
@@ -56,8 +58,6 @@ def compact(
     reencode: bool = False,
     min_input_files: int = 2,
     fail_after_bins: int | None = None,
-    planner: str = "auto",
-    planner_shard_rows: int = 200_000,
 ) -> CompactionResult:
     """Run one compaction job.
 
@@ -67,13 +67,13 @@ def compact(
     lossy, exact for lossless), store the re-encoded bytes. All inside the
     per-bin Arrow batch task.
     ``fail_after_bins`` injects a mid-job crash for resume tests.
-    ``planner``: "driver" (FFD over the stats list on the driver — exact,
-    fine to ~10^6 entries), "distributed" (executor-side sharded FFD,
-    plans/ffd.ffd_pack_distributed — the 10^12-image path where even the
-    stats list strains the driver), or "auto" (distributed once the
-    manifest-list TOTAL entry count exceeds ``planner_shard_rows`` — a
-    conservative trigger: the summaries don't break out small files, and
-    at that manifest size the driver list is the risk either way)."""
+
+    Planning runs where ``scan.on_driver`` puts the manifest list's total
+    entry count: FFD over the stats list on the driver, or executor-side
+    sharded FFD (plans/ffd.ffd_pack_distributed) — the 10^12-image path
+    where even the stats list strains the driver. The total counts every
+    file, not only the small ones; at that manifest size the driver list
+    is the risk either way."""
     job_id = job_id or f"compact-{uuid.uuid4().hex[:8]}"
     root = table.root
 
@@ -115,23 +115,15 @@ def compact(
     # The distributed planner must never materialize the stats list on the
     # driver — that driver strain is the very thing it exists to avoid — so
     # counting, the histogram, and the packing all stay Spark-side on that
-    # path. "auto" decides from a Spark-side count for the same reason.
+    # path, and the choice reads only the manifest LIST (one row per
+    # manifest; no Spark job, no entry).
     from pyspark.sql import functions as F
 
-    if planner not in ("auto", "driver", "distributed"):
-        raise ValueError(f"unknown planner {planner!r}; use auto|driver|distributed")
-    use_dist = planner == "distributed"
-    if planner == "auto":
-        # decide from the manifest-LIST summaries (one tiny parquet,
-        # O(#manifests) driver work — no Spark job and no entry
-        # materialization on the default path)
-        snap_meta = table.snapshot()
-        n_total = 0
-        if snap_meta is not None:
-            ml = pq.read_table(os.path.join(root, snap_meta["manifest_list"]))
-            n_total = int(sum(ml.column("n_entries").to_pylist() or [0]))
-        use_dist = n_total > planner_shard_rows
+    from nessie_spark.lakehouse.scan import on_driver
 
+    use_dist = not on_driver(
+        spark, entries=sum(m["n_entries"] or 0 for m in table.manifest_summaries())
+    )
     if use_dist:
         fdf = (
             table.files_df(spark)
@@ -167,10 +159,7 @@ def compact(
         for pval in pvals:
             sub = fdf.where(F.coalesce(F.col("partition"), F.lit("")) == pval)
             n_sub = n_small if len(pvals) == 1 else sub.count()
-            for p, _ in ffd_pack_distributed(
-                spark, sub, target_bytes, shard_rows=planner_shard_rows,
-                n_rows=n_sub,
-            ):
+            for p, _ in ffd_pack_distributed(spark, sub, target_bytes, n_rows=n_sub):
                 if len(p) >= 2:  # singleton bins are no-ops
                     bin_paths.append(p)
                     bin_parts.append(pval)
@@ -317,23 +306,12 @@ def _execute_bins(
             raise RuntimeError(
                 f"injected failure after {len(allowed)} bin(s)"
             )
-        import time as _time
-
-        _t0 = _time.time()
         fresh_stats = (
             spark.sparkContext.parallelize(todo, len(todo)).map(_rewrite_unit).collect()
         )
-        if os.environ.get("NESSIE_MAINT_PROF") == "1":
-            import sys as _sys
-
-            print(f"[compact-prof] rewrite_job={_time.time() - _t0:.2f}s "
-                  f"bins={len(todo)}", file=_sys.stderr)
     else:
         fresh_stats = None
 
-    import time as _time
-
-    _t1 = _time.time()
     # gather all units (including ones done before a crash) from lineage
     units = lineage.read_phase(root, job_id, "compact").to_pylist()
     deleted = {p for u in units for p in u["input_files"]}
@@ -362,7 +340,6 @@ def _execute_bins(
         )
     added = pa.Table.from_pylist(added_entries) if added_entries else None
 
-    _t2 = _time.time()
     snap = table.commit(
         "compact",
         added=added,
@@ -370,11 +347,6 @@ def _execute_bins(
         summary={"job_id": job_id, "bins": len(bin_paths)},
     )
     lineage.mark_committed(root, job_id, snap)
-    if os.environ.get("NESSIE_MAINT_PROF") == "1":
-        import sys as _sys
-
-        print(f"[compact-prof] lineage={_t2 - _t1:.2f}s "
-              f"commit={_time.time() - _t2:.2f}s", file=_sys.stderr)
     rows = sum(u["rows"] for u in units)
     return CompactionResult(
         snap, job_id, len(bin_paths), len(todo), len(deleted), len(out_paths), rows, hist

@@ -6,12 +6,12 @@ snapshot DAG with orphan-file GC".
 - The DAG walk runs on the driver: snapshots are metadata (thousands at
   most), never data.
 - File reachability (``_unreferenced``) is sized from the manifest lists'
-  ``n_entries`` before any manifest is read. Up to
-  ``scan.PLAN_DISTRIBUTED_ENTRIES`` entries it is a set difference on the
-  driver over pyarrow reads of the manifests' ``file_path`` column: a
-  Spark job would cost more than the work. Above it the manifests are
-  read by Spark and the delete-set is a LEFT ANTI join (SURVEY.md §2.6) —
-  at 10^12-image scale the file inventory is far too big for the driver.
+  ``n_entries`` before any manifest is read, and ``scan.on_driver`` picks
+  where it runs. On the driver it is a set difference over pyarrow reads
+  of the manifests' ``file_path`` column: a Spark job would cost more
+  than the work. Otherwise the manifests are read by Spark and the
+  delete-set is a LEFT ANTI join (SURVEY.md §2.6) — at 10^12-image scale
+  the file inventory is far too big for the driver.
 - ``dry_run`` reports without deleting (golden DAG fixtures, FIXTURES.md §3).
 """
 
@@ -76,8 +76,8 @@ def _unreferenced(
     ``lists`` maps snapshot id -> manifest-list rows. Every snapshot of
     ``table`` missing from it is read into it here, so each manifest list
     is read once per caller, who reuses ``lists`` for manifest-level
-    reachability. The manifests' ``n_entries`` total picks the driver or
-    the Spark path, as ``scan.plan_files`` does."""
+    reachability. ``scan.on_driver`` puts the manifests' ``n_entries``
+    total on the driver or the Spark path."""
     by_id = {s["snapshot_id"]: s for s in table.meta["snapshots"]}
     for sid, snap in by_id.items():
         if sid not in lists:
@@ -101,7 +101,7 @@ def _unreferenced(
         }
 
     keep_m, drop_m = manifests(keep_ids), manifests(drop_ids)
-    if sum({**drop_m, **keep_m}.values()) <= _scan.PLAN_DISTRIBUTED_ENTRIES:
+    if _scan.on_driver(spark, entries=sum({**drop_m, **keep_m}.values())):
         def files(mans) -> set[str]:
             out: set[str] = set()
             for m in mans:

@@ -5,7 +5,8 @@ An append writes its rows with the engine's one Arrow slice writer
 
 - **on the driver**, when ``df.isLocal()`` (a bare ``LocalRelation``: Arrow
   or pandas data that PySpark kept in the plan, up to
-  ``spark.sql.execution.arrow.localRelationThreshold``), no
+  ``spark.sql.execution.arrow.localRelationThreshold``, the byte limit of
+  the engine's one driver-or-Spark rule ``scan.on_driver``), no
   ``file_boundaries`` layout is asked for and no write sort order applies.
   The rows are already in the driver, ``collect()`` on them starts no
   Spark job, and the append writes one file per hidden-partition value.
@@ -68,8 +69,8 @@ def append(
     """Append ``df`` (images schema) as a new snapshot.
 
     Where the rows are written: a local ``df`` (``df.isLocal()`` — e.g.
-    ``createDataFrame`` of a pandas frame or Arrow table under the local
-    relation threshold, with no transformation on top) with no
+    ``createDataFrame`` of a pandas frame or Arrow table within
+    ``scan.on_driver``'s byte limit, with no transformation on top) with no
     ``file_boundaries`` and no sort order is written on the driver, one
     file per hidden-partition value, without a Spark job. Any other input
     is written by Spark tasks, one file per partition. Both take the same

@@ -4,12 +4,12 @@ north_star (BASELINE.json:6): "manifest rewrite as a treeAggregate over
 manifest-entry DataFrames". The entry count comes from the manifest list's
 ``n_entries``, so sizing the rewrite reads no manifest and starts no job.
 
-Up to ``scan.PLAN_DISTRIBUTED_ENTRIES`` entries (the threshold
-``plan_files`` uses) the rewrite runs on the driver: one pyarrow sort of
-the entries on the range key, split into ``n_out`` contiguous slices, each
-written by ``_write_manifest``. A Spark job would cost more than the work.
+When ``scan.on_driver`` accepts the entry count, the rewrite runs on the
+driver: one pyarrow sort of the entries on the range key, split into
+``n_out`` contiguous slices, each written by ``_write_manifest``. A Spark
+job would cost more than the work.
 
-Above it, the partial+final aggregation shape:
+Otherwise it runs as Spark jobs in the partial+final aggregation shape:
 
     entries → repartitionByRange(n_out, min_key)      [sampled range exchange]
             → mapInArrow writes one manifest per range bucket
@@ -109,7 +109,7 @@ def rewrite_manifests(
         if table_spec(table)
         else ["min_key", "file_path"]
     )
-    if n_entries <= _scan.PLAN_DISTRIBUTED_ENTRIES:
+    if _scan.on_driver(spark, entries=n_entries):
         # nulls first, as Spark's ascending range key orders them
         entries = table.file_entries(
             paths=[os.path.join(root, m["manifest_path"]) for m in before]

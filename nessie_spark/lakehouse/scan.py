@@ -8,14 +8,16 @@ Two pruning layers (SURVEY.md §4.2):
    DataFrame, so Parquet footer min/max prunes row groups and the scan shows
    ``PushedFilters`` in ``.explain``.
 
+``on_driver`` is the engine's one rule for whether work runs on the driver
+or as Spark jobs; planning, this reader and the maintenance jobs all ask it.
+
 Two readers serve the planned files. Small plans — planned data files
-totalling at most ``spark.sql.execution.arrow.localRelationThreshold``,
-without ``with_pos`` — are read on the driver with pyarrow
-(``_read_partition_table``, the same per-file reader the ``format("nessie")``
-source runs in its tasks) and handed to Spark as a ``LocalRelation``, so a
-point lookup's ``collect()`` starts no Spark job. Everything else is one
-Spark parquet scan (``_read_data_files``) with the delete subtraction as
-joins.
+whose total size ``on_driver`` accepts, without ``with_pos`` — are read on
+the driver with pyarrow (``_read_partition_table``, the same per-file
+reader the ``format("nessie")`` source runs in its tasks) and handed to
+Spark as a ``LocalRelation``, so a point lookup's ``collect()`` starts no
+Spark job. Everything else is one Spark parquet scan
+(``_read_data_files``) with the delete subtraction as joins.
 """
 
 from __future__ import annotations
@@ -35,10 +37,32 @@ IMAGES_DDL = (
 )
 
 
-# above this many surviving manifest entries, "auto" plans the scan as a
-# Spark job over the manifests instead of pulling every entry through the
-# driver (same switch point philosophy as compact's distributed FFD planner)
-PLAN_DISTRIBUTED_ENTRIES = 65_536
+DRIVER_MAX_ENTRIES = 65_536
+
+
+def on_driver(spark: SparkSession, *, entries: int = 0, nbytes: int = 0) -> bool:
+    """The one rule for where work runs: True when work over ``entries``
+    manifest entries and ``nbytes`` data-file bytes runs on the driver,
+    False when it runs as Spark jobs.
+
+    The work stays on the driver when it holds at most DRIVER_MAX_ENTRIES
+    entries and at most Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` bytes (48 MiB by
+    default). Below both limits a Spark job costs more than the work;
+    above either, at 10^12-image scale, the entry list or the data is too
+    big to cross the driver. Five jobs ask it: ``plan_files`` tier 2, the
+    ``scan`` reader, expiry and orphan GC (``expire._unreferenced``),
+    ``rewrite_manifests`` and compaction planning.
+
+    ``jobs.append`` asks ``df.isLocal()`` instead, because its rows either
+    are on the driver already or are not. The same conf decides that:
+    ``createDataFrame`` of an Arrow table or a pandas frame stays a local
+    relation only up to the byte limit. A conf of 0 with DRIVER_MAX_ENTRIES
+    at 0 sends all six to Spark."""
+    return (
+        entries <= DRIVER_MAX_ENTRIES
+        and nbytes <= spark._jconf.arrowLocalRelationThreshold()
+    )
 
 
 def prune_manifest_summaries(
@@ -84,7 +108,6 @@ def plan_files(
     key_eq: str | None = None,
     source_eq: dict | None = None,
     spark: SparkSession | None = None,
-    planner: str = "auto",
 ) -> list[dict]:
     """Return live file entries surviving stats pruning.
 
@@ -97,10 +120,9 @@ def plan_files(
 
     Tier 1 always runs on the driver: the manifest LIST's per-manifest key
     ranges drop whole manifests (prune_manifest_summaries). Tier 2 — the
-    per-file stats checks — runs driver-side for ordinary manifests, or as
-    a Spark job over the manifest parquet when the surviving entry count
-    passes PLAN_DISTRIBUTED_ENTRIES (``planner="auto"``; force with
-    ``"driver"`` / ``"distributed"``): at 10^12-image scale the entry list
+    per-file stats checks — runs on the driver, or as a Spark job over the
+    manifest parquet when ``spark`` is given and ``on_driver`` refuses the
+    surviving manifests' entry count: at 10^12-image scale the entry list
     itself is GBs, and only the SURVIVORS' paths should cross the driver.
 
     ``key_eq``: point lookup on image_id — prunes on BOTH the min/max key
@@ -111,8 +133,6 @@ def plan_files(
     from nessie_spark.lakehouse.bloom import bloom_might_contain
     from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA
 
-    if planner not in ("auto", "driver", "distributed"):
-        raise ValueError(f"unknown planner {planner!r}")
     expected = None
     if source_eq:
         from nessie_spark.lakehouse.partition import expected_segments, table_spec
@@ -127,11 +147,7 @@ def plan_files(
         return []
     man_paths = [os.path.join(table.root, m["manifest_path"]) for m in mans]
     n_entries = sum(m["n_entries"] or 0 for m in mans)
-    if planner == "distributed" or (
-        planner == "auto" and spark is not None and n_entries > PLAN_DISTRIBUTED_ENTRIES
-    ):
-        if spark is None:
-            raise ValueError("distributed planner needs a SparkSession")
+    if spark is not None and not on_driver(spark, entries=n_entries):
         return _plan_files_distributed(
             spark, man_paths,
             phash_range=phash_range, wh_range=wh_range, zkey_range=zkey_range,
@@ -693,22 +709,19 @@ def scan(
     ref: str | None = None,
     key_eq: str | None = None,
     source_eq: dict | None = None,
-    planner: str = "auto",
     with_pos: bool = False,
     file_paths: set | None = None,
 ) -> DataFrame:
     """Read a pinned snapshot as a DataFrame, pruning files on stats.
 
-    Reader: when the planned data files total at most Spark's
-    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by
-    default; set it to 0 to force the Spark read) and ``with_pos`` is
-    false, the files are read on the driver with pyarrow — field-id
-    projection, merge-on-read subtraction, the key/phash/partition
-    predicates as row filters, and with ``columns`` only the columns the
-    result and the predicates need — and the result is a ``LocalRelation``:
-    a lookup's ``collect()`` starts no Spark job. Otherwise one Spark
-    parquet scan reads them. The row-wise predicates and the ``columns``
-    select below apply on both paths.
+    Reader: when ``on_driver`` accepts the planned data files' total size
+    and ``with_pos`` is false, the files are read on the driver with
+    pyarrow — field-id projection, merge-on-read subtraction, the
+    key/phash/partition predicates as row filters, and with ``columns``
+    only the columns the result and the predicates need — and the result
+    is a ``LocalRelation``: a lookup's ``collect()`` starts no Spark job.
+    Otherwise one Spark parquet scan reads them. The row-wise predicates
+    and the ``columns`` select below apply on both paths.
 
     ``with_pos``: keep the row-provenance columns ``__fp`` (table-relative
     data-file path) and ``__pos`` (row position within it) on the result —
@@ -726,10 +739,6 @@ def scan(
     of other partitions are pruned via the spec (plan_files tier 0) AND the
     predicate is re-applied row-wise Spark-side, so pre-spec files and
     boundary cases never leak wrong rows (same contract as key_eq).
-
-    ``planner``: how tier-2 file pruning runs — ``"auto"`` (driver-side
-    until the surviving manifests hold > PLAN_DISTRIBUTED_ENTRIES entries,
-    then a Spark job), ``"driver"``, or ``"distributed"`` (see plan_files).
 
     ``key_eq``: point lookup — bloom + range pruning (see plan_files), then
     the equality predicate re-applied Spark-side (bloom false positives
@@ -751,8 +760,7 @@ def scan(
         snapshot_id = snap["snapshot_id"]
     entries = plan_files(
         table, snapshot_id, phash_range=phash_range, wh_range=wh_range,
-        key_range=key_range, key_eq=key_eq, source_eq=source_eq,
-        spark=spark, planner=planner,
+        key_range=key_range, key_eq=key_eq, source_eq=source_eq, spark=spark,
     )
     if file_paths is not None:
         entries = [e for e in entries if e["file_path"] in file_paths]
@@ -770,8 +778,8 @@ def scan(
         )
 
     dels = table.delete_files(snapshot_id)
-    if not with_pos and sum(e["file_size_bytes"] for e in entries) <= (
-        spark._jconf.arrowLocalRelationThreshold()
+    if not with_pos and on_driver(
+        spark, nbytes=sum(e["file_size_bytes"] for e in entries)
     ):
         # small plan: pyarrow on the driver. A column subset reads the
         # asked-for columns, the ones the row-wise predicates below need,

@@ -681,9 +681,6 @@ def _cluster_commit(
     """Shared cluster-job epilogue: lineage unit → atomic snapshot commit →
     committed marker → staging sweep. Crash-recovery contract lives HERE
     once for both the full and the incremental rewrite."""
-    import time as _time
-
-    _t0 = _time.time()
     out_paths = stats.column("file_path").to_pylist()
     rows = int(sum(stats.column("record_count").to_pylist() or [0]))
     lineage.write_unit(
@@ -692,7 +689,6 @@ def _cluster_commit(
         nbytes=int(sum(stats.column("file_size_bytes").to_pylist() or [0])),
         metrics=metrics,
     )
-    _t1 = _time.time()
     snap = table.commit(
         operation,
         added=stats,
@@ -701,18 +697,12 @@ def _cluster_commit(
         summary=summary,
     )
     lineage.mark_committed(table.root, job_id, snap)
-    _t2 = _time.time()
     if stage_dir:  # staging shards are dead once the snapshot is durable
         import shutil as _shutil
 
         dirs = stage_dir if isinstance(stage_dir, list) else [stage_dir]
         for d in dirs:
             _shutil.rmtree(d, ignore_errors=True)
-    if os.environ.get("NESSIE_MAINT_PROF") == "1":
-        import sys as _sys
-
-        print(f"[cluster-prof] lineage={_t1 - _t0:.2f}s commit={_t2 - _t1:.2f}s "
-              f"sweep={_time.time() - _t2:.2f}s", file=_sys.stderr)
     return ClusterResult(
         snap, job_id, strategy, len(deleted_paths), len(out_paths), rows
     )

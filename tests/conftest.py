@@ -12,7 +12,7 @@ from contextlib import contextmanager
 import pytest
 
 from nessie_spark import synth
-from nessie_spark.lakehouse import jobs
+from nessie_spark.lakehouse import jobs, scan
 from nessie_spark.session import get_spark
 
 SMOKE_N = 256
@@ -61,13 +61,17 @@ def spark_jobs(spark, group: str):
 
 
 @contextmanager
-def spark_read(spark):
-    """Send every ``scan()`` inside the block to the Spark parquet read: with
-    a local-relation threshold of 0 no plan is small enough for the driver
-    read."""
+def on_spark(spark):
+    """Send all work inside the block to Spark: with both limits of
+    ``scan.on_driver`` at 0, planning, reads, expiry, GC, manifest rewrite
+    and compaction planning run as Spark jobs, and a ``createDataFrame`` of
+    Arrow or pandas data made in the block is not local, so appending it
+    writes in tasks."""
     key = "spark.sql.execution.arrow.localRelationThreshold"
     spark.conf.set(key, "0")
+    entries, scan.DRIVER_MAX_ENTRIES = scan.DRIVER_MAX_ENTRIES, 0
     try:
         yield
     finally:
+        scan.DRIVER_MAX_ENTRIES = entries
         spark.conf.unset(key)

@@ -22,7 +22,7 @@ from nessie_spark.lakehouse.bloom import bloom_might_contain
 from nessie_spark.lakehouse.scan import scan
 from nessie_spark.lakehouse.table import Table
 from nessie_spark.lakehouse.writer import arrow_schema_from_ddl
-from tests.conftest import spark_jobs, spark_read
+from tests.conftest import on_spark, spark_jobs
 
 SPEC = [
     {"source": "fmt", "transform": "identity"},
@@ -125,7 +125,7 @@ def test_evolved_table_column_present_and_absent(spark, tmp_path):
     assert by_id[synth.row_for(7, 3)["image_id"]] == 1.5
     assert by_id[synth.row_for(7, 50)["image_id"]] is None
     # files without the column read the same on the Spark parquet read
-    with spark_read(spark):
+    with on_spark(spark):
         assert _rows(spark, pair[0]) == (rows, schema)
     for t in pair:
         _check_stats(t)

@@ -3,8 +3,9 @@ equivalence with the driver planner."""
 
 from nessie_spark.lakehouse import compact
 from nessie_spark.lakehouse.scan import scan
+from nessie_spark.plans import ffd
 from nessie_spark.plans.ffd import ffd_pack_distributed
-from tests.conftest import make_table
+from tests.conftest import make_table, on_spark
 
 
 def test_ffd_pack_distributed_invariants(spark):
@@ -32,18 +33,28 @@ def test_ffd_pack_distributed_invariants(spark):
     assert packed == again
 
 
-def test_compact_distributed_planner_matches_driver_rowset(spark, tmp_path):
+def test_compact_distributed_planner_matches_driver_rowset(
+    spark, tmp_path, monkeypatch
+):
     r1, r2 = str(tmp_path / "a" / "images"), str(tmp_path / "b" / "images")
     t1, _ = make_table(spark, r1, n=96, mean_rows=12)
     t2, _ = make_table(spark, r2, n=96, mean_rows=12)
-    res_d = compact.compact(spark, t1, target_bytes=1 << 20, job_id="cd", planner="driver")
-    res_x = compact.compact(
-        spark, t2, target_bytes=1 << 20, job_id="cx",
-        planner="distributed", planner_shard_rows=8,
-    )
+    packed_rows = []
+
+    def eight_row_shards(spark, files_df, target, n_rows=None):
+        packed_rows.append(n_rows)
+        return ffd_pack_distributed(spark, files_df, target, shard_rows=8, n_rows=n_rows)
+
+    monkeypatch.setattr(ffd, "ffd_pack_distributed", eight_row_shards)
+    res_d = compact.compact(spark, t1, target_bytes=1 << 20, job_id="cd")
+    assert packed_rows == [], "the driver plan ran the distributed packer"
+    with on_spark(spark):
+        res_x = compact.compact(spark, t2, target_bytes=1 << 20, job_id="cx")
     assert res_d.snapshot_id is not None and res_x.snapshot_id is not None
     ids1 = {r["image_id"] for r in scan(spark, t1.refresh()).select("image_id").collect()}
     ids2 = {r["image_id"] for r in scan(spark, t2.refresh()).select("image_id").collect()}
     assert ids1 == ids2 and len(ids1) == 96
-    # the distributed plan actually sharded (resume determinism relies on it)
+    # the distributed plan actually sharded (more than one 8-row shard;
+    # resume determinism relies on it)
+    assert len(packed_rows) == 1 and packed_rows[0] > 8
     assert res_x.bins_planned >= 1

@@ -1,14 +1,15 @@
 """Driver path vs Spark path of expiry, orphan GC and manifest rewrite.
 
-Small metadata (at most ``scan.PLAN_DISTRIBUTED_ENTRIES`` manifest entries)
-is handled on the driver; monkeypatching the threshold to 0 forces the
-Spark jobs. Both paths must report the same lists and leave the same files.
+Small metadata (manifest entries that ``scan.on_driver`` accepts) is
+handled on the driver; ``tests.conftest.on_spark`` forces the Spark jobs.
+Both paths must report the same lists and leave the same files.
 The table is built straight through ``Table.commit`` with empty data files:
 none of these jobs reads a data file, and the build then costs no Spark job.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -19,12 +20,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from nessie_spark.lakehouse import lineage, scan
+from nessie_spark.lakehouse import lineage
 from nessie_spark.lakehouse.expire import expire_snapshots, gc_orphans
 from nessie_spark.lakehouse.jobs import create_images_table
 from nessie_spark.lakehouse.manifest import rewrite_manifests
 from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA, Table
-from tests.conftest import spark_jobs
+from tests.conftest import on_spark, spark_jobs
 
 
 def _touch(root: str, rel: str) -> str:
@@ -94,18 +95,16 @@ def _files(root: str) -> set[str]:
     }
 
 
-def _run_both(spark, template, tmp_path, monkeypatch, name, op):
+def _run_both(spark, template, tmp_path, name, op):
     """Run ``op(table)`` on two copies of ``template``: driver path, then
-    the threshold forced to 0. Returns ((result, root, jobs), ...)."""
+    forced onto Spark. Returns ((result, root, jobs), ...)."""
     out = []
     for path in ("driver", "spark"):
         root = str(tmp_path / path)
         shutil.copytree(template, root)
-        with monkeypatch.context() as m:
-            if path == "spark":
-                m.setattr(scan, "PLAN_DISTRIBUTED_ENTRIES", 0)
-            with spark_jobs(spark, f"{name}-{path}-{id(tmp_path)}") as jobs:
-                res = op(Table.load(root))
+        force = on_spark(spark) if path == "spark" else contextlib.nullcontext()
+        with force, spark_jobs(spark, f"{name}-{path}-{id(tmp_path)}") as jobs:
+            res = op(Table.load(root))
         out.append((res, root, jobs))
     (_, _, drv_jobs), (_, _, spk_jobs) = out
     assert drv_jobs == [], "the driver path started a Spark job"
@@ -114,11 +113,9 @@ def _run_both(spark, template, tmp_path, monkeypatch, name, op):
 
 
 @pytest.mark.parametrize("retain_last", [None, 1])
-def test_expire_driver_path_equals_spark_path(
-    spark, template, tmp_path, monkeypatch, retain_last
-):
+def test_expire_driver_path_equals_spark_path(spark, template, tmp_path, retain_last):
     (drv, droot, _), (spk, sroot, _) = _run_both(
-        spark, template, tmp_path, monkeypatch, "expire",
+        spark, template, tmp_path, "expire",
         lambda t: expire_snapshots(spark, t, retain_last=retain_last),
     )
     assert drv == spk
@@ -134,9 +131,9 @@ def test_expire_driver_path_equals_spark_path(
     assert Table.load(droot).meta == Table.load(sroot).meta
 
 
-def test_gc_driver_path_equals_spark_path(spark, template, tmp_path, monkeypatch):
+def test_gc_driver_path_equals_spark_path(spark, template, tmp_path):
     (drv, droot, _), (spk, sroot, _) = _run_both(
-        spark, template, tmp_path, monkeypatch, "gc",
+        spark, template, tmp_path, "gc",
         lambda t: gc_orphans(spark, t),
     )
     assert drv == spk == ["data/orphan.parquet", "metadata/manifest-orphan.parquet"]
@@ -153,10 +150,10 @@ def _manifest_rows(root: str) -> list[list[dict]]:
 
 @pytest.mark.parametrize("target", [1, 4])
 def test_rewrite_manifests_driver_path_equals_spark_path(
-    spark, template, tmp_path, monkeypatch, target
+    spark, template, tmp_path, target
 ):
     (drv, droot, _), (spk, sroot, _) = _run_both(
-        spark, template, tmp_path, monkeypatch, "rewrite",
+        spark, template, tmp_path, "rewrite",
         lambda t: rewrite_manifests(spark, t, target_manifests=target),
     )
     assert (drv.manifests_before, drv.entries) == (spk.manifests_before, spk.entries)

@@ -13,7 +13,7 @@ import pytest
 from nessie_spark import synth
 from nessie_spark.lakehouse import compact, deletes, expire, jobs, merge, zorder
 from nessie_spark.lakehouse.scan import scan, scan_incremental
-from tests.conftest import make_table, spark_jobs, spark_read
+from tests.conftest import make_table, on_spark, spark_jobs
 
 
 def _ids(df):
@@ -40,7 +40,7 @@ def test_delete_where_is_metadata_only_and_scan_subtracts(spark, tmp_path):
     # force the Spark one
     rng = ("img_000000000100", "img_000000000200")
     buf = io.StringIO()
-    with spark_read(spark), contextlib.redirect_stdout(buf):
+    with on_spark(spark), contextlib.redirect_stdout(buf):
         scan(spark, t, key_range=rng).explain("formatted")
         spark_rows = sorted(scan(spark, t, key_range=rng).collect())
     assert "PushedFilters" in buf.getvalue()

@@ -21,6 +21,9 @@ from nessie_spark.lakehouse.partition import (
 )
 from nessie_spark.lakehouse.scan import plan_files, scan
 from nessie_spark.lakehouse.zorder import cluster, cluster_incremental
+from nessie_spark.plans import ffd
+from nessie_spark.plans.ffd import ffd_pack_distributed
+from tests.conftest import on_spark, spark_jobs
 
 FMT_SPEC = [{"source": "fmt", "transform": "identity"}]
 
@@ -72,12 +75,16 @@ def test_partitioned_append_files_never_span_values(spark, tmp_path):
 def test_partition_pruning_drops_files_and_keeps_rows(spark, tmp_path):
     t, df = _make(spark, str(tmp_path / "tb"), FMT_SPEC)
     all_ents = t.file_entries(columns=["file_path"]).num_rows
-    pruned = plan_files(t, source_eq={"fmt": "png"}, spark=spark)
-    assert 0 < len(pruned) < all_ents
+    group = f"part-plan-{id(tmp_path)}"
+    with spark_jobs(spark, f"{group}-drv") as drv_jobs:
+        pruned = plan_files(t, source_eq={"fmt": "png"}, spark=spark)
+    assert 0 < len(pruned) < all_ents and drv_jobs == []
     got = scan(spark, t, source_eq={"fmt": "png"}).count()
     assert got == df.where("fmt = 'png'").count()
     # distributed planner agrees file-for-file with the driver planner
-    dist = plan_files(t, source_eq={"fmt": "png"}, spark=spark, planner="distributed")
+    with on_spark(spark), spark_jobs(spark, f"{group}-dist") as dist_jobs:
+        dist = plan_files(t, source_eq={"fmt": "png"}, spark=spark)
+    assert dist_jobs
     assert sorted(e["file_path"] for e in dist) == sorted(
         e["file_path"] for e in pruned
     )
@@ -403,14 +410,23 @@ def test_streaming_ingest_into_partitioned_table(spark, tmp_path):
     assert scan(spark, t).count() == 60
 
 
-def test_compact_distributed_planner_respects_partitions(spark, tmp_path):
+def test_compact_distributed_planner_respects_partitions(
+    spark, tmp_path, monkeypatch
+):
     """The executor-side FFD planner packs per partition value too (one
     distributed pack per value; bins never mix values)."""
     t, _ = _make(spark, str(tmp_path / "tb"), FMT_SPEC, n=600, seed=71)
     before = scan(spark, t).count()
-    r = compact(
-        spark, t, target_bytes=1 << 22, job_id="cd1", planner="distributed"
-    )
+    packs = []
+
+    def counted(*args, **kw):
+        packs.append(kw.get("n_rows"))
+        return ffd_pack_distributed(*args, **kw)
+
+    monkeypatch.setattr(ffd, "ffd_pack_distributed", counted)
+    with on_spark(spark):
+        r = compact(spark, t, target_bytes=1 << 22, job_id="cd1")
+    assert len(packs) == 2, "not one distributed pack per partition value"
     assert r.output_files >= 2
     t = t.refresh()
     for e in t.file_entries(columns=["file_path", "partition"]).to_pylist():

@@ -14,7 +14,7 @@ from nessie_spark import synth
 from nessie_spark.lakehouse import deletes, expire, jobs, lineage, merge
 from nessie_spark.lakehouse.scan import scan
 from nessie_spark.lakehouse.table import Table
-from tests.conftest import make_table
+from tests.conftest import make_table, on_spark, spark_jobs
 
 
 def test_purge_resume_refuses_changed_delete_set(spark, tmp_path):
@@ -544,14 +544,18 @@ def test_distributed_planner_keeps_stamped_schema_id(spark, tmp_path):
     t = t.refresh()
     t.cherrypick_snapshot(staged)
     t = t.refresh()
-    drv = {
-        r.image_id: r.title
-        for r in scan(spark, t, planner="driver").select("image_id", "title").collect()
-    }
-    dist = {
-        r.image_id: r.title
-        for r in scan(spark, t, planner="distributed").select("image_id", "title").collect()
-    }
+    group = f"sidstamp-{id(tmp_path)}"
+    with spark_jobs(spark, f"{group}-drv") as drv_jobs:
+        drv = {
+            r.image_id: r.title
+            for r in scan(spark, t).select("image_id", "title").collect()
+        }
+    with on_spark(spark):
+        with spark_jobs(spark, f"{group}-dist") as plan_jobs:
+            df = scan(spark, t)
+        dist = {r.image_id: r.title for r in df.select("image_id", "title").collect()}
+    assert drv_jobs == [], "the driver plan and read started a Spark job"
+    assert plan_jobs, "the forced plan started no Spark job"
     assert dist == drv
     wap = {k: v for k, v in dist.items() if k.startswith("wap-")}
     assert len(wap) == 8 and all(v is not None for v in wap.values())

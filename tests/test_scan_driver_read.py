@@ -1,14 +1,15 @@
 """The driver read of ``scan()`` against its Spark read.
 
 Plans whose data files total at most
-``spark.sql.execution.arrow.localRelationThreshold`` are read with pyarrow
-on the driver and become a ``LocalRelation``; setting the threshold to 0
-(``tests.conftest.spark_read``) forces the Spark parquet read. Both must
-return the same rows under the same schema. One small table carries every
-read-side feature: an equality delete (and a key re-inserted after it), a
-positional delete, a rename and a drop-then-re-add (so pre-rename files
-store the old names), a tagged older snapshot and a hidden-partition spec
-set after the first files were written.
+``spark.sql.execution.arrow.localRelationThreshold`` (the byte limit of
+``scan.on_driver``) are read with pyarrow on the driver and become a
+``LocalRelation``; ``tests.conftest.on_spark`` sets both limits of the
+rule to 0 and so forces the distributed plan and the Spark parquet read.
+Both must return the same rows under the same schema. One small table
+carries every read-side feature: an equality delete (and a key re-inserted
+after it), a positional delete, a rename and a drop-then-re-add (so
+pre-rename files store the old names), a tagged older snapshot and a
+hidden-partition spec set after the first files were written.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from nessie_spark.lakehouse import deletes, evolve, jobs
 from nessie_spark.lakehouse.scan import scan
 from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA
 from nessie_spark.lakehouse.writer import arrow_schema_from_ddl, stats_entry_for
-from tests.conftest import make_table, spark_jobs, spark_read
+from tests.conftest import make_table, on_spark, spark_jobs
 
 
 def _renamed(df, label: str):
@@ -99,7 +100,7 @@ def _both(spark, t, kw, group: str):
         df = scan(spark, t, **kw)
         driver = (sorted(df.collect(), key=repr), [(f.name, f.dataType) for f in df.schema])
     assert job_ids == [], "the driver read started a Spark job"
-    with spark_read(spark):
+    with on_spark(spark):
         df = scan(spark, t, **kw)
         forced = (sorted(df.collect(), key=repr), [(f.name, f.dataType) for f in df.schema])
     return driver, forced
@@ -135,9 +136,15 @@ def test_driver_read_semantics(spark, fx):
 
 def test_forced_spark_read_starts_jobs(spark, fx):
     kw = CASES["key_eq_hit"](fx)
-    with spark_read(spark), spark_jobs(spark, f"drv-forced-{id(fx)}") as job_ids:
-        assert len(scan(spark, fx["table"], **kw).collect()) == 1
-    assert job_ids, "the forced Spark read started no Spark job"
+    group = f"drv-forced-{id(fx)}"
+    with on_spark(spark):
+        with spark_jobs(spark, f"{group}-plan") as plan_jobs:
+            df = scan(spark, fx["table"], **kw)
+        assert df.inputFiles(), "the forced read is not a parquet scan"
+        with spark_jobs(spark, f"{group}-read") as read_jobs:
+            assert len(df.collect()) == 1
+    assert plan_jobs, "the forced plan started no Spark job"
+    assert read_jobs, "the forced Spark read started no Spark job"
 
 
 def test_filter_emptying_a_row_group_keeps_later_rows(spark, tmp_path):

@@ -5,19 +5,22 @@ entries on min_key, so each rewritten manifest covers a narrow key slice
 and a point lookup / key-range scan drops whole manifests from the plan
 before any entry is read.
 
-Tier 2 — distributed file pruning: past PLAN_DISTRIBUTED_ENTRIES the
-per-file stats checks run as a Spark job over the manifest parquet and
-only the surviving paths collect; must return the same file set as the
-driver loop for every predicate shape.
+Tier 2 — distributed file pruning: when ``scan.on_driver`` refuses the
+entry count, the per-file stats checks run as a Spark job over the
+manifest parquet and only the surviving paths collect; must return the
+same file set as the driver loop for every predicate shape.
 """
+
+import pyarrow as pa
 
 from nessie_spark import synth
 from nessie_spark.lakehouse import jobs, zorder
+from nessie_spark.lakehouse import scan as scan_mod
 from nessie_spark.lakehouse.manifest import rewrite_manifests
 from nessie_spark.lakehouse.scan import (
-    plan_files, prune_manifest_summaries, scan,
+    on_driver, plan_files, prune_manifest_summaries, scan,
 )
-from tests.conftest import make_table
+from tests.conftest import make_table, on_spark, spark_jobs
 
 
 def _paths(entries):
@@ -78,28 +81,67 @@ def test_distributed_planner_matches_driver(spark, tmp_path):
         {"wh_range": (1, 10**9)},
         {"key_range": ("img_000000000100", "img_000000000200")},
     ]
-    for kw in cases:
-        drv = plan_files(t, planner="driver", **kw)
-        dist = plan_files(t, spark=spark, planner="distributed", **kw)
+    for i, kw in enumerate(cases):
+        group = f"plan-{i}-{id(tmp_path)}"
+        with spark_jobs(spark, f"{group}-drv") as drv_jobs:
+            drv = plan_files(t, spark=spark, **kw)
+        with on_spark(spark), spark_jobs(spark, f"{group}-dist") as dist_jobs:
+            dist = plan_files(t, spark=spark, **kw)
         assert _paths(drv) == _paths(dist), kw
+        # tier 1 may prune every manifest of a miss; then no tier 2 runs
+        assert drv_jobs == [] and (dist_jobs or not dist), kw
     # the point lookup actually pruned (bloom tier alive in both planners)
-    assert 1 <= len(plan_files(t, spark=spark, planner="distributed",
-                               key_eq="img_000000000123")) < len(entries)
+    with on_spark(spark):
+        hits = plan_files(t, spark=spark, key_eq="img_000000000123")
+    assert 1 <= len(hits) < len(entries)
 
 
-def test_scan_distributed_parity_with_mor_deletes(spark, tmp_path):
+def _ids(df) -> list[str]:
+    return sorted(r.image_id for r in df.select("image_id").collect())
+
+
+def test_scan_distributed_parity_with_mor_deletes(spark, tmp_path, monkeypatch):
     from nessie_spark.lakehouse.deletes import delete_where
 
     t, _ = make_table(spark, str(tmp_path / "tb"), n=300)
     delete_where(spark, t, "phash % 7 = 0", job_id="d1")
     t = t.refresh()
-    a = scan(spark, t, planner="driver").select("image_id")
-    b = scan(spark, t, planner="distributed").select("image_id")
-    rows_a = sorted(r.image_id for r in a.collect())
-    rows_b = sorted(r.image_id for r in b.collect())
-    assert rows_a == rows_b and len(rows_a) > 0
-    # predicate + planner compose
-    ka = scan(spark, t, key_range=("img_000000000050", "img_000000000150"),
-              planner="distributed").count()
-    kb = scan(spark, t, key_range=("img_000000000050", "img_000000000150")).count()
-    assert ka == kb
+    rng = ("img_000000000050", "img_000000000150")
+    want, want_rng = _ids(scan(spark, t)), _ids(scan(spark, t, key_range=rng))
+    assert want and want_rng
+    # distributed plan into the driver read: the planned entries carry no
+    # key range, so the driver read must keep every applicable equality
+    # delete
+    group = f"mor-plan-{id(tmp_path)}"
+    with monkeypatch.context() as m:
+        m.setattr(scan_mod, "DRIVER_MAX_ENTRIES", 0)
+        with spark_jobs(spark, f"{group}-plan") as plan_jobs:
+            dfs = scan(spark, t), scan(spark, t, key_range=rng)
+        with spark_jobs(spark, f"{group}-read") as read_jobs:
+            assert [_ids(df) for df in dfs] == [want, want_rng]
+    assert plan_jobs, "the distributed plan started no Spark job"
+    assert read_jobs == [], "the driver read started a Spark job"
+    # distributed plan into the Spark read
+    with on_spark(spark), spark_jobs(spark, f"{group}-spark") as forced_jobs:
+        assert _ids(scan(spark, t)) == want
+        assert _ids(scan(spark, t, key_range=rng)) == want_rng
+    assert forced_jobs
+
+
+def test_on_driver_rule(spark, tmp_path):
+    """The rule's two limits and its forcing fixture; starts no Spark job."""
+    tbl = pa.table({"x": [1, 2]})
+    with spark_jobs(spark, f"rule-{id(tmp_path)}") as job_ids:
+        limit = spark._jconf.arrowLocalRelationThreshold()
+        assert on_driver(spark, entries=65_536)
+        assert not on_driver(spark, entries=65_537)
+        assert on_driver(spark, nbytes=limit)
+        assert not on_driver(spark, nbytes=limit + 1)
+        assert spark.createDataFrame(tbl).isLocal()
+        with on_spark(spark):
+            assert not on_driver(spark, entries=1)
+            assert not on_driver(spark, nbytes=1)
+            # appends ask df.isLocal(): the same conf keeps Arrow data off
+            # the driver inside the fixture
+            assert not spark.createDataFrame(tbl).isLocal()
+    assert job_ids == []

@@ -3,13 +3,16 @@
 Plan (on file *stats* only): files below ``target_bytes`` →
 first-fit-decreasing bins (plans/ffd.py), on the driver or, when
 ``scan.on_driver`` refuses the manifest entry count, as executor-side
-sharded FFD (``ffd_pack_distributed``). Execute (distributed): one task
-per bin reads its input parquet files with pyarrow *inside the task*,
-concatenates Arrow tables (zero shuffle of image bytes — compaction is a
-file-local operation by design, which is why it scales linearly with
-executors), optionally re-encodes/verifies pixels via the batch kernels,
-writes one output file, and records its lineage unit. Commit swaps the
-packed inputs for the bin outputs in one atomic snapshot.
+sharded FFD (``ffd_pack_distributed``). Execute: one work unit per bin
+reads its input parquet files with pyarrow, concatenates Arrow tables
+(zero shuffle of image bytes — compaction is a file-local operation by
+design, which is why it scales linearly with executors), optionally
+re-encodes/verifies pixels via the batch kernels, writes one output file,
+and records its lineage unit. The units run where ``scan._map_units``
+puts them: in the driver process, one after another, when no pixel is
+touched and ``scan.on_driver`` accepts the input files; otherwise one
+Spark task per bin. Pixel work always runs as Spark tasks. Commit swaps
+the packed inputs for the bin outputs in one atomic snapshot.
 
 Resumability (FIXTURES.md §6): bins already present in the lineage phase
 dir are skipped; output names are deterministic per (job_id, bin), so a
@@ -66,7 +69,9 @@ def compact(
     the stored format, PSNR-verify against the original decode (>= 40 dB
     lossy, exact for lossless), store the re-encoded bytes. All inside the
     per-bin Arrow batch task.
-    ``fail_after_bins`` injects a mid-job crash for resume tests.
+    ``fail_after_bins`` injects a mid-job crash for resume tests: the
+    first ``fail_after_bins`` bins run to completion on the job's own
+    placement, then the driver raises.
 
     Planning runs where ``scan.on_driver`` puts the manifest list's total
     entry count: FFD over the stats list on the driver, or executor-side
@@ -96,10 +101,12 @@ def compact(
         bin_parts = [str(x) for x in planned.get("parts", [""] * len(bin_paths))]
         hist = {int(k): v for k, v in planned["hist"].items()}
         live = {
-            e["file_path"]
-            for e in table.file_entries(columns=["file_path"]).to_pylist()
+            e["file_path"]: e["file_size_bytes"]
+            for e in table.file_entries(
+                columns=["file_path", "file_size_bytes"]
+            ).to_pylist()
         }
-        gone = sorted({p for b in bin_paths for p in b} - live)
+        gone = sorted({p for b in bin_paths for p in b} - live.keys())
         if gone:
             raise ValueError(
                 f"compact {job_id!r} planned against {len(gone)} input "
@@ -109,7 +116,7 @@ def compact(
             )
         return _execute_bins(
             spark, table, job_id, bin_paths, bin_parts, hist, reencode,
-            verify_psnr, fail_after_bins,
+            verify_psnr, fail_after_bins, live,
         )
 
     # The distributed planner must never materialize the stats list on the
@@ -193,9 +200,15 @@ def compact(
         {"bins": bin_paths, "parts": bin_parts,
          "hist": {str(k): v for k, v in hist.items()}},
     )
+    # the distributed planner never brings the input sizes to the driver,
+    # so its bins run as Spark tasks
+    sizes = (
+        None if use_dist
+        else {e["file_path"]: e["file_size_bytes"] for e in small}
+    )
     return _execute_bins(
         spark, table, job_id, bin_paths, bin_parts, hist, reencode,
-        verify_psnr, fail_after_bins,
+        verify_psnr, fail_after_bins, sizes,
     )
 
 
@@ -209,12 +222,24 @@ def _execute_bins(
     reencode: bool,
     verify_psnr: bool,
     fail_after_bins: int | None,
+    sizes: dict[str, int] | None,
 ) -> CompactionResult:
     """Rewrite the planned bins (resume-safe: completed units skipped by
     index into the PINNED plan) and commit. ``bin_parts[i]`` is bin i's
     hidden-partition value, stamped onto its output entry ("" =
-    unpartitioned)."""
+    unpartitioned). ``sizes``: bytes per input file, for the placement
+    rule; None runs the bins as Spark tasks."""
+    from nessie_spark.lakehouse.scan import _map_units, on_driver
+
     root = table.root
+    inputs = [p for paths in bin_paths for p in paths]
+    driver = (
+        sizes is not None
+        and not (reencode or verify_psnr)
+        and on_driver(
+            spark, entries=len(inputs), nbytes=sum(sizes[p] for p in inputs)
+        )
+    )
     done = lineage.completed_units(root, job_id, "compact")
     todo = [
         (i, paths, bin_parts[i])
@@ -285,8 +310,8 @@ def _execute_bins(
             )
             return entry
 
-        # One bin per task, placed POSITIONALLY: parallelize(bins, len(bins))
-        # splits the unit list 1:1 onto partitions. The earlier
+        # On Spark, one bin per task, placed POSITIONALLY: parallelize(bins,
+        # len(bins)) splits the unit list 1:1 onto partitions. The earlier
         # groupBy(bin_id).applyInPandas shape hash-partitioned ~200 bin keys
         # into ~200 partitions, where birthday collisions stack 2-4 bins in
         # one task — a straggler tail that costs scaling efficiency exactly
@@ -294,21 +319,16 @@ def _execute_bins(
         # driver→task boundary; image bytes stay in pyarrow inside the task.
         if fail_after_bins is not None:
             # crash injection for resume tests: DETERMINISTIC — run exactly
-            # the allowed units to completion, then die on the driver. The
-            # previous in-task raise raced the sibling tasks (a concurrent
+            # the allowed units to completion, then die on the driver. An
+            # in-task raise would race the sibling tasks (a concurrent
             # failure cancels them mid-unit), so the set of completed units
-            # varied run to run.
+            # would vary run to run.
             allowed = [u for u in todo if u[0] < fail_after_bins]
-            if allowed:
-                spark.sparkContext.parallelize(allowed, len(allowed)).map(
-                    _rewrite_unit
-                ).collect()
+            _map_units(spark, _rewrite_unit, allowed, driver)
             raise RuntimeError(
                 f"injected failure after {len(allowed)} bin(s)"
             )
-        fresh_stats = (
-            spark.sparkContext.parallelize(todo, len(todo)).map(_rewrite_unit).collect()
-        )
+        fresh_stats = _map_units(spark, _rewrite_unit, todo, driver)
     else:
         fresh_stats = None
 

@@ -50,9 +50,13 @@ def on_driver(spark: SparkSession, *, entries: int = 0, nbytes: int = 0) -> bool
     ``spark.sql.execution.arrow.localRelationThreshold`` bytes (48 MiB by
     default). Below both limits a Spark job costs more than the work;
     above either, at 10^12-image scale, the entry list or the data is too
-    big to cross the driver. Five jobs ask it: ``plan_files`` tier 2, the
+    big to cross the driver. These jobs ask it: ``plan_files`` tier 2, the
     ``scan`` reader, expiry and orphan GC (``expire._unreferenced``),
-    ``rewrite_manifests`` and compaction planning.
+    ``rewrite_manifests``, compaction planning, and the rewrite units of
+    compaction and Z-order clustering (``_map_units``; ``entries`` and
+    ``nbytes`` count the job's input data files). Pixel work (decode,
+    re-encode, PSNR checks) never asks: it runs as Spark tasks at every
+    size, one task per unit.
 
     ``jobs.append`` asks ``df.isLocal()`` instead, because its rows either
     are on the driver already or are not. The same conf decides that:
@@ -63,6 +67,22 @@ def on_driver(spark: SparkSession, *, entries: int = 0, nbytes: int = 0) -> bool
         entries <= DRIVER_MAX_ENTRIES
         and nbytes <= spark._jconf.arrowLocalRelationThreshold()
     )
+
+
+def _map_units(spark: SparkSession, fn, units: list, driver: bool) -> list:
+    """Run a rewrite job's work units (compaction bins, Z-order scatter
+    bins and gather units) and return ``fn``'s results in unit order.
+    ``driver``: the job's placement, ``not pixels and on_driver(...)`` over
+    its input files; the units then run in this process one after another.
+    Otherwise each unit is one Spark task, placed positionally by
+    ``parallelize(units, len(units))``. Each unit records its own lineage
+    and names its outputs by unit id, so a job crashed on one placement
+    resumes on the other."""
+    if driver:
+        return [fn(u) for u in units]
+    if not units:
+        return []
+    return spark.sparkContext.parallelize(units, len(units)).map(fn).collect()
 
 
 def prune_manifest_summaries(

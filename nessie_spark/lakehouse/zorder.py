@@ -7,14 +7,21 @@ skipping.
 One executor, ``run_staged``, does every curve-order rewrite — ``cluster``
 (the whole table), ``cluster_incremental`` (the unclustered delta) and each
 partition group of a hidden-partitioned table — in two passes:
-    pass 1 (cheap): scan(phash, w, h ONLY — parquet column pruning keeps
-      image bytes on disk) → zkey → seeded-sample equi-depth cut points
-      ("histogram equi-depth", SURVEY.md §2.5; the RangePartitioner recipe,
-      ~64 sampled keys per output file, manifest row count sizes the
-      fraction so no count() job runs)
+    pass 1 (cheap): read (phash, w, h ONLY — parquet column pruning keeps
+      image bytes on disk) → zkey → weighted equi-depth cut points
+      ("histogram equi-depth", SURVEY.md §2.5; ``weighted_cuts``)
     pass 2: a two-phase external sort with parquet staging (scatter by
       bucket group, gather one sorted data file per bucket; see
       ``run_staged``), image bytes Python-native from read to write.
+Where the passes run follows the engine's one rule (``scan.on_driver``,
+asked with the job's input files). A job that re-encodes nothing and fits
+the rule runs on the driver: pass 1 reads every key with pyarrow and cuts
+them exactly (``exact_bounds``), and pass 2's units run in this process
+one after another. Any other job runs on Spark: pass 1 cuts a seeded
+sample (the RangePartitioner recipe, ~64 sampled keys per output file,
+manifest row count sizes the fraction so no count() job runs;
+``equi_depth_bounds``), and each pass-2 unit is one Spark task. Pixel work
+(``reencode``) always runs on Spark.
 The one exception is ``_cluster_respec``, a one-pass JVM rewrite taken only
 after a partition-spec change.
 
@@ -50,6 +57,12 @@ from nessie_spark.lakehouse.scan import scan
 from nessie_spark.lakehouse.table import Table
 
 DEFAULT_TARGET = 8 * 1024 * 1024
+# manifest columns of a rewrite's input entries: sizes for the plan, row
+# counts for the sample fraction, schema ids for the field-id projection
+ENTRY_COLUMNS = [
+    "file_path", "file_size_bytes", "record_count", "added_snapshot_id",
+    "schema_id",
+]
 # equi-depth sample: keys per planned output file, and the sample's seed
 SAMPLES_PER_FILE = 64
 SAMPLE_SEED = 42
@@ -79,28 +92,14 @@ def zorder_key(strategy: str = "morton"):
     raise NotImplementedError(f"unknown clustering strategy {strategy!r}")
 
 
-def equi_depth_bounds(keys_df, n_files: int, total_rows: int) -> list[int]:
-    """WEIGHTED equi-depth zkey cut points from a seeded sample — the
-    RangePartitioner recipe (sample keys, sort on the driver, read off
-    quantiles) with two engine twists:
-    - column-pruned int scan (zkey + w·h), never full rows;
-    - cut points split cumulative w·h, not row count: pixel area is
-      proportional to both output bytes and decode/re-encode CPU, so the
-      buckets are balanced in WORK and SIZE even when image dimensions are
-      skewed (row-balanced cuts measured a 22% straggler tail at 8 cores).
-    Sized from the manifest's row count so no count() job runs. Driver
-    memory: n_files × SAMPLES_PER_FILE (int, int) pairs."""
-    if n_files <= 1 or total_rows == 0:
-        return []
-    frac = min(1.0, (n_files * SAMPLES_PER_FILE) / total_rows)
-    rows = (
-        keys_df.sample(withReplacement=False, fraction=frac, seed=SAMPLE_SEED)
-        .select("zkey", "wh")
-        .collect()
-    )
-    if not rows:
-        return []
-    pairs = sorted((r.zkey, r.wh) for r in rows)
+def weighted_cuts(pairs, n_files: int) -> list[int]:
+    """WEIGHTED equi-depth zkey cut points over ``(zkey, wh)`` pairs: sort
+    them, then cut where cumulative w·h crosses each 1/n_files step. The
+    cuts split pixel area, not row count: pixel area is proportional to
+    both output bytes and decode/re-encode CPU, so the buckets are balanced
+    in WORK and SIZE even when image dimensions are skewed (row-balanced
+    cuts measured a 22% straggler tail at 8 cores)."""
+    pairs = sorted(pairs)
     total_w = sum(w for _, w in pairs)
     if total_w <= 0:
         return []
@@ -117,9 +116,60 @@ def equi_depth_bounds(keys_df, n_files: int, total_rows: int) -> list[int]:
     return bounds
 
 
+def equi_depth_bounds(keys_df, n_files: int, total_rows: int) -> list[int]:
+    """``weighted_cuts`` over a seeded sample — the RangePartitioner recipe
+    (sample keys, sort on the driver, read off quantiles) over a
+    column-pruned int scan (zkey + w·h), never full rows. Sized from the
+    manifest's row count so no count() job runs. Driver memory: n_files ×
+    SAMPLES_PER_FILE (int, int) pairs."""
+    if n_files <= 1 or total_rows == 0:
+        return []
+    frac = min(1.0, (n_files * SAMPLES_PER_FILE) / total_rows)
+    rows = (
+        keys_df.sample(withReplacement=False, fraction=frac, seed=SAMPLE_SEED)
+        .select("zkey", "wh")
+        .collect()
+    )
+    return weighted_cuts(((r.zkey, r.wh) for r in rows), n_files)
+
+
+def exact_bounds(
+    table: Table, entries: list[dict], strategy: str, n_files: int
+) -> list[int]:
+    """``weighted_cuts`` over EVERY key of ``entries``: pass 1 on the
+    driver. Reads (phash, w, h) with pyarrow through the field-id
+    projection (``scan._read_partition_table``) and keys the rows with
+    the numpy twin of the Catalyst key. Entries carry ``added_snapshot_id``
+    and ``schema_id`` so files from before a rename are read by field id."""
+    if n_files <= 1:
+        return []
+    import numpy as np
+    import pyarrow as pa
+
+    from nessie_spark.lakehouse.scan import (
+        IMAGES_DDL,
+        _partitions_for_entries,
+        _read_partition_table,
+    )
+
+    # no merge-on-read: clustering refuses a table with pending deletes,
+    # and the scatter reads the same files raw
+    parts = _partitions_for_entries(
+        table, entries, None, table.meta.get("schema", IMAGES_DDL),
+        mor=False, columns={"phash", "w", "h"},
+    )
+    keys = pa.concat_tables([_read_partition_table(p, mor=False) for p in parts])
+    wh = (
+        keys.column("w").to_numpy().astype(np.int64)
+        * keys.column("h").to_numpy().astype(np.int64)
+    )
+    zkey = _np_zkey(strategy, keys.column("phash").to_numpy(), wh & 0x7FFFFFFF)
+    return weighted_cuts(zip(zkey.tolist(), wh.tolist()), n_files)
+
+
 def _sample_bounds(df, strategy: str, n_files: int, total_rows: int) -> list[int]:
-    """Pass 1 over ``df``'s (phash, w, h): key each row and read the
-    equi-depth cut points off a seeded sample."""
+    """Pass 1 on Spark over ``df``'s (phash, w, h): key each row and read
+    the equi-depth cut points off a seeded sample."""
     key = zorder_key(strategy)
     keys_df = (
         df.select("phash", "w", "h")
@@ -170,17 +220,25 @@ def _np_zkey(strategy: str, phash, wh):
 def run_staged(
     spark: SparkSession,
     table: Table,
-    bounds: list[int],
-    n_files: int,
     job_id: str,
     strategy: str,
     reencode: bool,
+    target_bytes: int,
     entries: list[dict] | None = None,
-    pinned: dict | None = None,
 ):
     """Staged two-phase Z-order rewrite — the engine's one executor for
     moving every row of ``entries`` (default: the live table) to its zkey
-    bucket, one sorted data file per bucket.
+    bucket, one sorted data file of about ``target_bytes`` per bucket.
+    Returns (file entries of the outputs, staging dir, planned n_files).
+
+    Placement: the job's units run in the driver process, one after
+    another, when it re-encodes nothing and ``scan.on_driver`` accepts its
+    input files (``scan._map_units``); the cut points are then exact
+    (``exact_bounds``, over every key). Otherwise every unit is one Spark
+    task and the cut points come from a seeded sample
+    (``equi_depth_bounds``). Both placements run the same unit functions
+    against the same pinned plan, so a job crashed on one resumes on the
+    other.
 
     Why staged rather than a Spark exchange: a JVM shuffle moves every
     image byte through vectorized parquet read of fat binary rows →
@@ -191,20 +249,18 @@ def run_staged(
     path holds ~0.96. This executor is a classic two-phase external sort
     with parquet staging — the bytes never enter the JVM:
 
-      scatter: one task per ~64 MB bin of input files (work units placed
-        1:1 onto tasks via parallelize(units, len(units))): pyarrow-read
-        each file,
-        compute zkey (vectorized numpy twin of the Catalyst key, asserted
+      scatter: one unit per ~64 MB bin of input files: pyarrow-read each
+        file, compute zkey (vectorized numpy twin of the Catalyst key, asserted
         bit-identical in tests), pid = searchsorted(bounds), stable-sort by
         gather group = pid·G//n_files, append one row-group per (file,
         group) run to a per-group staging shard. Atomic tmp→rename; one
         lineage unit per bin (resume skips completed bins).
-      gather: one task per output file (pid): pyarrow-read the pid's rows
+      gather: one unit per output file (pid): pyarrow-read the pid's rows
         from its group's shards, one vectorized sort_indices(zkey,
         image_id), then decode → re-encode → PSNR (the north-star pixel
         path) and one final data file with full min/max + zorder_lo/hi
         stats. One lineage unit per pid (a pre-r5 plan resumes with one
-        task per group); resume re-derives stats for units finished
+        unit per group); resume re-derives stats for units finished
         before a crash.
 
     On a multi-executor cluster the staging directory lives on the shared
@@ -212,10 +268,11 @@ def run_staged(
     with managed intermediates); G is the knob that bounds per-task memory
     (group bytes = table_bytes / G).
 
-    ``pinned``: the PLAN.json of an earlier attempt of ``job_id``
-    (``_pinned_plan``), which the caller took ``bounds`` and ``n_files``
-    from; the resume replays its gather groups and scatter bins.
+    A resume replays the PLAN.json an earlier attempt of ``job_id``
+    pinned (``_pinned_plan``): its bounds, n_files, gather groups and
+    scatter bins.
     """
+    from nessie_spark.lakehouse.scan import _map_units, on_driver
     from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA
     from nessie_spark.lakehouse.writer import stats_entry_for, write_table_file
 
@@ -224,12 +281,18 @@ def run_staged(
     # INCREMENTAL rewrite (cluster_incremental) — the caller deletes exactly
     # these inputs and the commit carries the rest of the table forward.
     subset = entries is not None
-    live_entries = table.file_entries(
-        columns=["file_path", "file_size_bytes"]
-    ).to_pylist()
+    live_entries = table.file_entries(columns=ENTRY_COLUMNS).to_pylist()
     if entries is None:
         entries = live_entries
     total_bytes = sum(e["file_size_bytes"] for e in entries)
+    pinned = _pinned_plan(root, job_id)
+    n_files = (
+        int(pinned["n_files"]) if pinned is not None
+        else max(1, math.ceil(total_bytes / target_bytes))
+    )
+    driver = not reencode and on_driver(
+        spark, entries=len(entries), nbytes=total_bytes
+    )
     # Task granularity: scatter bins and gather groups are DATA-sized at
     # ~64 MB — more executors mean fewer task waves over the SAME plan —
     # with a MIN-PARALLELISM floor on the gather group count. Gather is
@@ -273,6 +336,7 @@ def run_staged(
     gather_unit_mode = "pid"
 
     if pinned is not None:
+        bounds = [int(x) for x in pinned["bounds"]]
         n_groups = int(pinned["n_groups"])
         sbins = [list(b) for b in pinned["sbins"]]
         # pre-r5 plans pinned no gather granularity → resume group-wise
@@ -304,6 +368,20 @@ def run_staged(
                 "— rerun with a NEW job_id"
             )
     else:
+        # pass 1: the cut points. On Spark, a full rewrite samples a
+        # column-subset scan: a small table is read on the driver into a
+        # LocalRelation, which Catalyst does not column-prune, so a
+        # full-row scan would pull every image's bytes through the driver.
+        if driver:
+            bounds = exact_bounds(table, entries, strategy, n_files)
+        else:
+            bounds = _sample_bounds(
+                scan(spark, table, columns=["phash", "w", "h"]) if not subset
+                else spark.read.parquet(
+                    *[os.path.join(root, e["file_path"]) for e in entries]
+                ),
+                strategy, n_files, sum(e["record_count"] for e in entries),
+            )
         # Scatter granularity: DATA-sized ~64 MB bins, with the same
         # min-parallelism floor as the gather groups — when the cluster is
         # wider than total_bytes/64 MB (a 1 GB table saw 16 scatter tasks
@@ -431,21 +509,14 @@ def run_staged(
         )
         return (sbin, len(outs), rows)
 
-    import sys as _sys
-    import time as _time
-
-    # One work unit per task, placed POSITIONALLY via parallelize(n_slices=
-    # len(units)) — groupBy(key).applyInPandas hash-partitions k keys into k
-    # partitions, where birthday collisions stack 2-3 heavy units in one
-    # task (measured: the straggler tail cost gather ~0.15 of 2→8 scaling
-    # efficiency; with 26 waves at 2 cores the tail amortizes, with 7 waves
-    # at 8 cores it does not). The imperative per-partition work is exactly
-    # what RDD.mapPartitions is for; pixel bytes stay in pyarrow/numpy
-    # batches inside the task.
-    _t0 = _time.time()
-    if todo:
-        spark.sparkContext.parallelize(todo, len(todo)).map(_scatter_unit).collect()
-    _t_scatter = _time.time()
+    # On Spark, one work unit per task, placed POSITIONALLY via
+    # parallelize(n_slices=len(units)) — groupBy(key).applyInPandas
+    # hash-partitions k keys into k partitions, where birthday collisions
+    # stack 2-3 heavy units in one task (measured: the straggler tail cost
+    # gather ~0.15 of 2→8 scaling efficiency; with 26 waves at 2 cores the
+    # tail amortizes, with 7 waves at 8 cores it does not). Pixel bytes
+    # stay in pyarrow/numpy batches inside the unit.
+    _map_units(spark, _scatter_unit, todo, driver)
 
     # --- gather -----------------------------------------------------------
     gdone = lineage.completed_units(root, job_id, "gather")
@@ -592,26 +663,7 @@ def run_staged(
         return out_entries
 
     _gfn = _gather_pid_unit if gather_unit_mode == "pid" else _gather_unit
-    fresh = (
-        [
-            e
-            for part in spark.sparkContext.parallelize(gtodo, len(gtodo))
-            .map(_gfn)
-            .collect()
-            for e in part
-        ]
-        if gtodo
-        else None
-    )
-
-    if os.environ.get("NESSIE_ZORDER_PROF") == "1":
-        print(
-            f"[staged-prof] scatter={_t_scatter - _t0:.2f}s "
-            f"gather={_time.time() - _t_scatter:.2f}s sbins={len(sbins)} "
-            f"groups={n_groups} unit={gather_unit_mode} "
-            f"gunits={len(gtodo)}",
-            file=_sys.stderr,
-        )
+    fresh = [e for part in _map_units(spark, _gfn, gtodo, driver) for e in part]
 
     # reassemble stats for ALL gather units (including pre-crash ones):
     # recompute zkey from (phash, w, h) with the numpy twin — the staged
@@ -620,7 +672,7 @@ def run_staged(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    added = list(fresh) if fresh is not None else []
+    added = fresh
     have = {e["file_path"] for e in added}
     units = lineage.read_phase(root, job_id, "gather").to_pylist()
     for u in units:
@@ -639,7 +691,7 @@ def run_staged(
             added.append(
                 stats_entry_for(t, p, os.path.getsize(os.path.join(root, p)))
             )
-    return pa.Table.from_pylist(added, schema=FILE_ENTRY_SCHEMA), stage_dir
+    return pa.Table.from_pylist(added, schema=FILE_ENTRY_SCHEMA), stage_dir, n_files
 
 
 def _cluster_short_circuit(
@@ -839,9 +891,7 @@ def _cluster_partitioned(
             groups = json.load(fh)["groups"]
         live = {
             e["file_path"]: e
-            for e in table.file_entries(
-                columns=["file_path", "file_size_bytes", "record_count"]
-            ).to_pylist()
+            for e in table.file_entries(columns=ENTRY_COLUMNS).to_pylist()
         }
         pinned_paths = {pp for g in groups for pp in g["paths"]}
         # same resume contract as the unpartitioned full rewrite: the
@@ -892,21 +942,9 @@ def _cluster_partitioned(
     deleted: set = set()
     n_planned = 0
     for i, (pval, g, gpaths) in enumerate(grouped):
-        sub_id = f"{job_id}-part{i:04d}"
-        pinned = _pinned_plan(root, sub_id)
-        if pinned is not None:
-            bounds = [int(x) for x in pinned["bounds"]]
-            n_g = int(pinned["n_files"])
-        else:
-            gbytes = sum(e["file_size_bytes"] for e in g)
-            n_g = max(1, math.ceil(gbytes / target_bytes))
-            bounds = _sample_bounds(
-                spark.read.parquet(*[os.path.join(root, pp) for pp in gpaths]),
-                strategy, n_g, sum(e["record_count"] for e in g),
-            )
-        stats_g, sd = run_staged(
-            spark, table, bounds, n_g, sub_id, strategy, reencode, entries=g,
-            pinned=pinned,
+        stats_g, sd, n_g = run_staged(
+            spark, table, f"{job_id}-part{i:04d}", strategy, reencode,
+            target_bytes, entries=g,
         )
         if stats_g.num_rows:
             idx = stats_g.schema.get_field_index("partition")
@@ -955,14 +993,13 @@ def cluster(
     rewrite (north_star pixel path; ``kernels.reencode_verify`` in the
     gather of ``run_staged``)."""
     job_id = job_id or f"zorder-{uuid.uuid4().hex[:8]}"
-    root = table.root
 
     done = _cluster_short_circuit(table, job_id, strategy, "zorder cluster")
     if done is not None:
         return done
 
     entries = table.file_entries(
-        columns=["file_path", "file_size_bytes", "record_count", "partition"]
+        columns=[*ENTRY_COLUMNS, "partition"]
     ).to_pylist()
     if not entries:
         return ClusterResult(None, job_id, strategy, 0, 0, 0)
@@ -981,42 +1018,10 @@ def cluster(
             summary_extra={}, incremental=False,
         )
 
-    import sys as _sys
-    import time as _time
-
-    prof = os.environ.get("NESSIE_ZORDER_PROF") == "1"
-    t0 = _time.time()
-    total_rows = sum(e["record_count"] for e in entries)
-    pinned = _pinned_plan(root, job_id)
-    if pinned is not None:
-        # resume: replay the pinned plan — re-running the sampling job here
-        # would only be discarded work
-        bounds = [int(x) for x in pinned["bounds"]]
-        n_files = int(pinned["n_files"])
-    else:
-        # pass 1 names its three int columns: a small table is read on the
-        # driver into a LocalRelation, which Catalyst does not column-prune,
-        # so a full-row scan would pull every image's bytes through the
-        # driver
-        n_files = max(
-            1, math.ceil(sum(e["file_size_bytes"] for e in entries) / target_bytes)
-        )
-        bounds = _sample_bounds(
-            scan(spark, table, columns=["phash", "w", "h"]), strategy, n_files,
-            total_rows,
-        )
-    t1 = _time.time()
-
-    # pass 2: move every row to its zkey bucket, one file per bucket
-    stats, stage_dir = run_staged(
-        spark, table, bounds, n_files, job_id, strategy, reencode, pinned=pinned
+    # move every row to its zkey bucket, one file per bucket
+    stats, stage_dir, n_files = run_staged(
+        spark, table, job_id, strategy, reencode, target_bytes
     )
-    if prof:
-        print(
-            f"[zorder-prof] sample={t1 - t0:.2f}s write={_time.time() - t1:.2f}s "
-            f"n_files={n_files} rows={total_rows}",
-            file=_sys.stderr,
-        )
     return _cluster_commit(
         table, job_id, strategy, stats,
         deleted_paths={e["file_path"] for e in entries},
@@ -1073,10 +1078,7 @@ def cluster_incremental(
     live = {
         e["file_path"]: e
         for e in table.file_entries(
-            columns=[
-                "file_path", "file_size_bytes", "record_count", "zorder_lo",
-                "partition",
-            ]
+            columns=[*ENTRY_COLUMNS, "zorder_lo", "partition"]
         ).to_pylist()
     }
     from nessie_spark.lakehouse.partition import table_spec
@@ -1106,8 +1108,6 @@ def cluster_incremental(
     # job past its plan.
     pinned = _pinned_plan(root, job_id)
     if pinned is not None:
-        bounds = [int(x) for x in pinned["bounds"]]
-        n_files = int(pinned["n_files"])
         delta_paths = [p for b in pinned["sbins"] for p in b]
         delta = [live[p] for p in delta_paths if p in live]  # run_staged
         # raises on any missing planned input before work starts
@@ -1116,16 +1116,9 @@ def cluster_incremental(
         delta_paths = [e["file_path"] for e in delta]
         if not delta:
             return ClusterResult(None, job_id, strategy, 0, 0, 0)
-        delta_bytes = sum(e["file_size_bytes"] for e in delta)
-        n_files = max(1, math.ceil(delta_bytes / target_bytes))
-        bounds = _sample_bounds(
-            spark.read.parquet(*[os.path.join(root, p) for p in delta_paths]),
-            strategy, n_files, sum(e["record_count"] for e in delta),
-        )
 
-    stats, stage_dir = run_staged(
-        spark, table, bounds, n_files, job_id, strategy, reencode,
-        entries=delta, pinned=pinned,
+    stats, stage_dir, n_files = run_staged(
+        spark, table, job_id, strategy, reencode, target_bytes, entries=delta
     )
     return _cluster_commit(
         table, job_id, strategy, stats,

@@ -1,6 +1,7 @@
 """Table format: append/scan/stats/snapshot isolation + compaction +
 Z-order goldens (SURVEY.md §5 engine tiers)."""
 
+import contextlib
 import os
 
 import pyspark.sql.functions as F
@@ -134,19 +135,26 @@ def test_zorder_matches_reference_sort(spark, tmp_path):
     """The staged rewrite against a plain reference: every pre-cluster row,
     keyed with the numpy twin of the Catalyst zkey and sorted by
     (zkey, image_id), equals the output files read in p##### order. File p
-    holds exactly the rows of bucket p of the seeded equi-depth bounds, its
+    holds exactly the rows of bucket p of the reference bounds, its
     zorder_lo/hi are its rows' zkey range, and only the declared table
-    columns reach disk."""
+    columns reach disk. The reference bounds follow the placement: exact
+    cuts over every key on the driver, the seeded sample on Spark. At
+    128 KiB the sample is the whole table; at 512 KiB the table holds more
+    than SAMPLES_PER_FILE rows per planned file, so the sample is a true
+    subset and the two references differ."""
+    import shutil
+
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from nessie_spark.lakehouse import jobs
+    from nessie_spark.lakehouse.table import Table
     from nessie_spark.lakehouse.writer import DATA_COLUMNS
-    from tests.conftest import make_table
+    from tests.conftest import make_table, on_spark
 
-    root = str(tmp_path / "images")
-    t, _ = make_table(spark, root)
+    base = str(tmp_path / "images")
+    t, _ = make_table(spark, base)
     # copies of some rows under ids sorting before and after "img_": their
     # zkeys tie with the originals, so the order inside a file depends on
     # the image_id tiebreak whatever order the inputs are read in
@@ -165,38 +173,49 @@ def test_zorder_matches_reference_sort(spark, tmp_path):
     ref["zkey"] = zkeys(ref)
     assert ref["zkey"].duplicated().any()
     ref = ref.sort_values(["zkey", "image_id"]).reset_index(drop=True)
-
-    # the bounds cluster() samples: same seeded sample over the same keyed
-    # column-subset scan of the same snapshot
     entries = t.file_entries().to_pylist()
-    target = 128 * 1024
-    n_files = -(-sum(e["file_size_bytes"] for e in entries) // target)
+    total_bytes = sum(e["file_size_bytes"] for e in entries)
     key = zorder.zorder_key("morton")
-    keyed = scan(spark, t, columns=["phash", "w", "h"]).withColumn(
-        "zkey", key(F.col("phash"), F.col("w"), F.col("h"))
-    ).withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
-    bounds = zorder.equi_depth_bounds(keyed, n_files, sum(e["record_count"] for e in entries))
-    assert len(bounds) >= 2
 
-    zorder.cluster(spark, t, target_bytes=target, job_id="zx")
-    out = sorted(t.refresh().file_entries().to_pylist(), key=lambda e: e["file_path"])
-    assert 2 <= len(out) <= n_files
-    files = []
-    for e in out:
-        tbl = pq.read_table(os.path.join(root, e["file_path"]))
-        assert tbl.schema.names == DATA_COLUMNS, e["file_path"]
-        df = tbl.to_pandas()
-        z = zkeys(df)
-        assert (e["zorder_lo"], e["zorder_hi"]) == (int(z.min()), int(z.max()))
-        pid = int(e["file_path"].rsplit("-p", 1)[1].split(".")[0])
-        assert (np.searchsorted(np.asarray(bounds, np.int64), z, "right") == pid).all()
-        files.append(tbl)
-    for prev, nxt in zip(out, out[1:]):
-        assert prev["zorder_hi"] < nxt["zorder_lo"]
-    got = pa.concat_tables(files).to_pandas()
-    assert len(got) == len(ref)
-    for c in DATA_COLUMNS:
-        assert got[c].tolist() == ref[c].tolist(), c
+    for target in (128 * 1024, 512 * 1024):
+        n_files = -(-total_bytes // target)
+        exact = zorder.weighted_cuts(
+            zip(ref["zkey"].tolist(), (ref["w"] * ref["h"]).tolist()), n_files
+        )
+        with on_spark(spark):
+            # the bounds cluster() samples on Spark: same seeded sample over
+            # the same keyed column-subset scan of the same snapshot
+            keyed = scan(spark, t, columns=["phash", "w", "h"]).withColumn(
+                "zkey", key(F.col("phash"), F.col("w"), F.col("h"))
+            ).withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
+            sampled = zorder.equi_depth_bounds(keyed, n_files, len(ref))
+        assert len(exact) >= 2 and len(sampled) >= 2
+        if len(ref) > zorder.SAMPLES_PER_FILE * n_files:
+            assert exact != sampled
+        for forced, bounds in ((False, exact), (True, sampled)):
+            root = str(tmp_path / f"c{target}-{forced}")
+            shutil.copytree(base, root)
+            c = Table.load(root)
+            with on_spark(spark) if forced else contextlib.nullcontext():
+                zorder.cluster(spark, c, target_bytes=target, job_id="zx")
+            out = sorted(c.refresh().file_entries().to_pylist(), key=lambda e: e["file_path"])
+            assert 2 <= len(out) <= n_files
+            files = []
+            for e in out:
+                tbl = pq.read_table(os.path.join(root, e["file_path"]))
+                assert tbl.schema.names == DATA_COLUMNS, e["file_path"]
+                df = tbl.to_pandas()
+                z = zkeys(df)
+                assert (e["zorder_lo"], e["zorder_hi"]) == (int(z.min()), int(z.max()))
+                pid = int(e["file_path"].rsplit("-p", 1)[1].split(".")[0])
+                assert (np.searchsorted(np.asarray(bounds, np.int64), z, "right") == pid).all()
+                files.append(tbl)
+            for prev, nxt in zip(out, out[1:]):
+                assert prev["zorder_hi"] < nxt["zorder_lo"]
+            got = pa.concat_tables(files).to_pandas()
+            assert len(got) == len(ref)
+            for col in DATA_COLUMNS:
+                assert got[col].tolist() == ref[col].tolist(), (target, forced, col)
 
 
 def test_time_travel_as_of_timestamp(spark, tmp_path):

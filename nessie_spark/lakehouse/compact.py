@@ -60,7 +60,6 @@ def compact(
     verify_psnr: bool = False,
     reencode: bool = False,
     min_input_files: int = 2,
-    fail_after_bins: int | None = None,
 ) -> CompactionResult:
     """Run one compaction job.
 
@@ -69,9 +68,6 @@ def compact(
     the stored format, PSNR-verify against the original decode (>= 40 dB
     lossy, exact for lossless), store the re-encoded bytes. All inside the
     per-bin Arrow batch task.
-    ``fail_after_bins`` injects a mid-job crash for resume tests: the
-    first ``fail_after_bins`` bins run to completion on the job's own
-    placement, then the driver raises.
 
     Planning runs where ``scan.on_driver`` puts the manifest list's total
     entry count: FFD over the stats list on the driver, or executor-side
@@ -116,7 +112,7 @@ def compact(
             )
         return _execute_bins(
             spark, table, job_id, bin_paths, bin_parts, hist, reencode,
-            verify_psnr, fail_after_bins, live,
+            verify_psnr, live,
         )
 
     # The distributed planner must never materialize the stats list on the
@@ -208,7 +204,7 @@ def compact(
     )
     return _execute_bins(
         spark, table, job_id, bin_paths, bin_parts, hist, reencode,
-        verify_psnr, fail_after_bins, sizes,
+        verify_psnr, sizes,
     )
 
 
@@ -221,7 +217,6 @@ def _execute_bins(
     hist: dict,
     reencode: bool,
     verify_psnr: bool,
-    fail_after_bins: int | None,
     sizes: dict[str, int] | None,
 ) -> CompactionResult:
     """Rewrite the planned bins (resume-safe: completed units skipped by
@@ -317,17 +312,6 @@ def _execute_bins(
         # one task — a straggler tail that costs scaling efficiency exactly
         # when waves are few (4N-core runs). Only tiny plan tuples cross the
         # driver→task boundary; image bytes stay in pyarrow inside the task.
-        if fail_after_bins is not None:
-            # crash injection for resume tests: DETERMINISTIC — run exactly
-            # the allowed units to completion, then die on the driver. An
-            # in-task raise would race the sibling tasks (a concurrent
-            # failure cancels them mid-unit), so the set of completed units
-            # would vary run to run.
-            allowed = [u for u in todo if u[0] < fail_after_bins]
-            _map_units(spark, _rewrite_unit, allowed, driver)
-            raise RuntimeError(
-                f"injected failure after {len(allowed)} bin(s)"
-            )
         fresh_stats = _map_units(spark, _rewrite_unit, todo, driver)
     else:
         fresh_stats = None

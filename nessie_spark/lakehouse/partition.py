@@ -24,10 +24,10 @@ rather than a JVM-only hash so both forms exist by construction.
 
 Pre-spec files (``partition == ""``) are never pruned — adding a spec to
 a table with history is safe, old files just don't benefit until the next
-CLUSTERING rewrite regroups them (zorder's respec pass re-derives values
-from data; compaction preserves whatever value a bin already has — "" bins
-stay "", by design: bins never span values, and regrouping is the
-clusterer's job).
+CLUSTERING rewrite regroups them (every Z-order rewrite re-derives each
+row's value from data with ``row_values`` and buckets rows per value;
+compaction preserves whatever value a bin already has — "" bins stay "",
+by design: bins never span values, and regrouping is the clusterer's job).
 
 Source-type rule: partition sources must be string or integer columns —
 the two families whose Spark ``cast("string")`` and Python ``str()``
@@ -47,6 +47,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -156,6 +157,21 @@ def transform_py(field: dict, value) -> str:
     if t == "bucket":
         return str(_h60(str(value)) % field["n"])  # digits — nothing to escape
     return _escape_py(str(value)[: field["width"]])
+
+
+def row_values(tbl, spec: list[dict]):
+    """Each row's serialized partition value (``k=v/k2=v2``) as an Arrow
+    string array, through the driver-side twin ``transform_py``: the value
+    the Spark write path's ``partition_value_col`` stamps. ``tbl`` is a
+    pyarrow table holding every source column of ``spec``."""
+    seg_cols = [
+        [
+            f"{segment_name(f)}={transform_py(f, v)}"
+            for v in tbl.column(f["source"]).to_pylist()
+        ]
+        for f in spec
+    ]
+    return pa.array(["/".join(parts) for parts in zip(*seg_cols)], pa.string())
 
 
 def transform_col(field: dict) -> Column:

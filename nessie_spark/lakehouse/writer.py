@@ -35,7 +35,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from nessie_spark.lakehouse.bloom import bloom_from_keys
-from nessie_spark.lakehouse.partition import PVAL_COL, segment_name, transform_py
+from nessie_spark.lakehouse.partition import PVAL_COL, row_values
 from nessie_spark.lakehouse import kernels as _kernels_preload  # noqa: F401
 # Module-level so the per-worker writer preload (bench warm-up) also pulls
 # in the image codec stack (kernels -> jpegvec LUTs) outside any timed task.
@@ -145,8 +145,8 @@ def _partition_slices(
     partition value, in value order: a data file never spans values.
 
     The value comes from the staged ``PVAL_COL`` when the Spark write
-    stamped one (``partition.stamp_pval``), else from ``spec`` through the
-    driver-side transform twin (``partition.transform_py``); with neither
+    stamped one (``partition.stamp_pval``), else from ``spec`` through
+    ``partition.row_values`` (the driver-side transform twin); with neither
     the whole table is one unpartitioned ("") slice. An empty table has no
     slices."""
     if tbl.num_rows == 0:
@@ -154,14 +154,7 @@ def _partition_slices(
     if PVAL_COL in tbl.schema.names:
         pvals = tbl.column(PVAL_COL)
     elif spec:
-        seg_cols = [
-            [
-                f"{segment_name(f)}={transform_py(f, v)}"
-                for v in tbl.column(f["source"]).to_pylist()
-            ]
-            for f in spec
-        ]
-        pvals = pa.array(["/".join(parts) for parts in zip(*seg_cols)])
+        pvals = row_values(tbl, spec)
     else:
         return [("", tbl)]
     return [
@@ -176,7 +169,6 @@ def write_slices(
     stem: str,
     spec: list | None = None,
     columns: list[str] | None = None,
-    reencode: bool = False,
 ) -> list[dict]:
     """Write one Arrow table as data files and return their manifest-entry
     stats: one file per hidden-partition slice (``_partition_slices``),
@@ -186,25 +178,12 @@ def write_slices(
 
     ``columns``: the written column set (those absent from ``tbl`` are
     not written; readers NULL-backfill); None writes every column.
-    Staging columns (``zkey``, the partition value) feed the stats only.
-    ``reencode``: the north-star pixel path (decode → re-encode in the
-    stored format → PSNR-verify) applied per slice."""
+    Staging columns (``zkey``, the partition value) feed the stats only."""
     slices = _partition_slices(tbl, spec)
     entries = []
     for k, (pval, part_tbl) in enumerate(slices):
         suffix = f"-{k}" if len(slices) > 1 else ""
         rel = f"data/{stem}{suffix}.parquet"
-        if reencode:
-            from nessie_spark.lakehouse import kernels as K
-
-            new_bytes, _mn = K.reencode_verify(
-                part_tbl.column("bytes").to_pylist(),
-                part_tbl.column("fmt").to_pylist(),
-            )
-            part_tbl = part_tbl.set_column(
-                part_tbl.schema.get_field_index("bytes"), "bytes",
-                pa.array(new_bytes, pa.binary()),
-            )
         data_tbl = (
             part_tbl if columns is None
             else part_tbl.select([c for c in columns if c in part_tbl.schema.names])
@@ -217,7 +196,6 @@ def write_slices(
 def write_partition_files(
     df: DataFrame, table_root: str, job_id: str, phase: str,
     data_columns: list[str] | None = None,
-    reencode: bool = False,
 ) -> DataFrame:
     """Write each partition of ``df`` as one data file; return stats DF.
 
@@ -225,9 +203,9 @@ def write_partition_files(
     recorded in stats but dropped from the data file, and the stamped
     hidden-partition value). ``data_columns`` overrides the written column
     set for evolved tables (columns absent from ``df`` are simply not
-    written; readers NULL-backfill). ``reencode``: see ``write_slices`` —
-    used by the spec-alignment clustering rewrite, same kernel discipline
-    as compact.
+    written; readers NULL-backfill). The appends and MERGE INTO that write
+    through here move rows as they are; pixel work happens in the rewrite
+    units of compaction and Z-order clustering.
     """
     cols = data_columns or DATA_COLUMNS
 
@@ -241,7 +219,7 @@ def write_partition_files(
         # is a no-op; boundary tasks split into one file per value
         entries = write_slices(
             pa.Table.from_batches(rows), table_root,
-            f"{job_id}-{phase}-p{pid:05d}", columns=cols, reencode=reencode,
+            f"{job_id}-{phase}-p{pid:05d}", columns=cols,
         )
         if entries:
             yield pa.RecordBatch.from_pylist(entries, schema=FILE_ENTRY_SCHEMA)

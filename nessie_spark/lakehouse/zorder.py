@@ -5,11 +5,14 @@ north_star (BASELINE.json:6): Z-order via 64-bit Morton interleaving of
 skipping.
 
 One executor, ``run_staged``, does every curve-order rewrite — ``cluster``
-(the whole table), ``cluster_incremental`` (the unclustered delta) and each
-partition group of a hidden-partitioned table — in two passes:
+(the whole table) and ``cluster_incremental`` (the unclustered delta), on
+unpartitioned, hidden-partitioned and re-specced tables alike — with one
+plan, one lineage namespace (``job_id``) and one commit, in two passes:
     pass 1 (cheap): read (phash, w, h ONLY — parquet column pruning keeps
       image bytes on disk) → zkey → weighted equi-depth cut points
-      ("histogram equi-depth", SURVEY.md §2.5; ``weighted_cuts``)
+      ("histogram equi-depth", SURVEY.md §2.5; ``weighted_cuts``), cut
+      within each partition value when the table has a spec (a layout
+      cell is a (value, curve range) pair)
     pass 2: a two-phase external sort with parquet staging (scatter by
       bucket group, gather one sorted data file per bucket; see
       ``run_staged``), image bytes Python-native from read to write.
@@ -22,8 +25,6 @@ sample (the RangePartitioner recipe, ~64 sampled keys per output file,
 manifest row count sizes the fraction so no count() job runs;
 ``equi_depth_bounds``), and each pass-2 unit is one Spark task. Pixel work
 (``reencode``) always runs on Spark.
-The one exception is ``_cluster_respec``, a one-pass JVM rewrite taken only
-after a partition-spec change.
 
 Why not ``repartitionByRange``: Spark's range partitioner runs a sampling
 job that materializes *full rows* (including the binary pixels) — measured
@@ -134,18 +135,25 @@ def equi_depth_bounds(keys_df, n_files: int, total_rows: int) -> list[int]:
 
 
 def exact_bounds(
-    table: Table, entries: list[dict], strategy: str, n_files: int
-) -> list[int]:
-    """``weighted_cuts`` over EVERY key of ``entries``: pass 1 on the
-    driver. Reads (phash, w, h) with pyarrow through the field-id
-    projection (``scan._read_partition_table``) and keys the rows with
-    the numpy twin of the Catalyst key. Entries carry ``added_snapshot_id``
-    and ``schema_id`` so files from before a rename are read by field id."""
-    if n_files <= 1:
-        return []
+    table: Table, entries: list[dict], strategy: str, target_bytes: int,
+    spec: list[dict] | None = None,
+) -> dict:
+    """Pass 1 on the driver: the plan's cut points (``weighted_cuts``) over
+    EVERY key of ``entries``. Reads (phash, w, h) and the spec's source
+    columns with pyarrow through the field-id projection
+    (``scan._read_partition_table``) and keys the rows with the numpy twin
+    of the Catalyst key. Entries carry ``added_snapshot_id`` and
+    ``schema_id`` so files from before a rename are read by field id.
+    Returns ``{"bounds", "n_files"}``, or with a spec the per-value plan
+    of ``_value_cuts``, each value cut exactly."""
+    total_bytes = sum(e["file_size_bytes"] for e in entries)
+    n_files = max(1, math.ceil(total_bytes / target_bytes))
+    if spec is None and n_files <= 1:
+        return {"bounds": [], "n_files": n_files}
     import numpy as np
     import pyarrow as pa
 
+    from nessie_spark.lakehouse.partition import row_values
     from nessie_spark.lakehouse.scan import (
         IMAGES_DDL,
         _partitions_for_entries,
@@ -156,7 +164,7 @@ def exact_bounds(
     # and the scatter reads the same files raw
     parts = _partitions_for_entries(
         table, entries, None, table.meta.get("schema", IMAGES_DDL),
-        mor=False, columns={"phash", "w", "h"},
+        mor=False, columns={"phash", "w", "h", *(f["source"] for f in spec or [])},
     )
     keys = pa.concat_tables([_read_partition_table(p, mor=False) for p in parts])
     wh = (
@@ -164,19 +172,98 @@ def exact_bounds(
         * keys.column("h").to_numpy().astype(np.int64)
     )
     zkey = _np_zkey(strategy, keys.column("phash").to_numpy(), wh & 0x7FFFFFFF)
-    return weighted_cuts(zip(zkey.tolist(), wh.tolist()), n_files)
+    if spec is None:
+        return {
+            "bounds": weighted_cuts(zip(zkey.tolist(), wh.tolist()), n_files),
+            "n_files": n_files,
+        }
+    pairs: dict[str, list] = {}
+    for v, z, w in zip(row_values(keys, spec).to_pylist(), zkey.tolist(), wh.tolist()):
+        pairs.setdefault(v, []).append((z, w))
+    files = _files_per_value(
+        {v: sum(w for _, w in ps) for v, ps in pairs.items()},
+        total_bytes, target_bytes,
+    )
+    return _value_cuts(spec, files, pairs)
 
 
-def _sample_bounds(df, strategy: str, n_files: int, total_rows: int) -> list[int]:
-    """Pass 1 on Spark over ``df``'s (phash, w, h): key each row and read
-    the equi-depth cut points off a seeded sample."""
+def _sample_bounds(
+    spark: SparkSession, table: Table, entries: list[dict], subset: bool,
+    strategy: str, target_bytes: int, spec: list[dict] | None = None,
+) -> dict:
+    """Pass 1 on Spark, the twin of ``exact_bounds``: key each input row
+    and read the cut points off a seeded sample (``equi_depth_bounds``).
+    A full rewrite samples a column-subset scan: a small table is read on
+    the driver into a LocalRelation, which Catalyst does not column-prune,
+    so a full-row scan would pull every image's bytes through the driver.
+    With a spec, one aggregate gives the exact value list and each value's
+    w·h (a value the sample misses still gets its file), and the sample
+    carries each row's value (``partition.partition_value_col``)."""
+    from nessie_spark.lakehouse.partition import partition_value_col
+    from nessie_spark.lakehouse.scan import IMAGES_DDL, _read_data_files, _target_fields
+
+    root = table.root
+    total_bytes = sum(e["file_size_bytes"] for e in entries)
+    total_rows = sum(e["record_count"] for e in entries)
     key = zorder_key(strategy)
+    if spec is None:
+        n_files = max(1, math.ceil(total_bytes / target_bytes))
+        df = (
+            scan(spark, table, columns=["phash", "w", "h"]) if not subset
+            else spark.read.parquet(*[os.path.join(root, e["file_path"]) for e in entries])
+        )
+    else:
+        # field-id projection: a source column renamed since a file was
+        # written is read under its current name
+        ddl = table.meta.get("schema", IMAGES_DDL)
+        df = _read_data_files(spark, table, entries, ddl, _target_fields(table, None, ddl))
+    sources = [f["source"] for f in spec or [] if f["source"] not in ("phash", "w", "h")]
     keys_df = (
-        df.select("phash", "w", "h")
+        df.select("phash", "w", "h", *sources)
         .withColumn("zkey", key(F.col("phash"), F.col("w"), F.col("h")))
         .withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
     )
-    return equi_depth_bounds(keys_df, n_files, total_rows)
+    if spec is None:
+        return {"bounds": equi_depth_bounds(keys_df, n_files, total_rows), "n_files": n_files}
+    keys_df = keys_df.select(partition_value_col(spec).alias("pval"), "zkey", "wh")
+    files = _files_per_value(
+        {r.pval: int(r.wh or 0) for r in keys_df.groupBy("pval").agg(F.sum("wh").alias("wh")).collect()},
+        total_bytes, target_bytes,
+    )
+    pairs: dict[str, list] = {}
+    n_files = sum(files.values())
+    if n_files > len(files) and total_rows:
+        frac = min(1.0, (n_files * SAMPLES_PER_FILE) / total_rows)
+        for r in keys_df.sample(withReplacement=False, fraction=frac, seed=SAMPLE_SEED).collect():
+            pairs.setdefault(r.pval, []).append((r.zkey, r.wh))
+    return _value_cuts(spec, files, pairs)
+
+
+def _files_per_value(
+    wh_by_value: dict[str, int], total_bytes: int, target_bytes: int
+) -> dict[str, int]:
+    """Output files per partition value: max(1, ceil(input bytes × the
+    value's share of w·h / target_bytes)), in exact integer arithmetic so
+    both placements plan the same counts."""
+    total_wh = sum(wh_by_value.values())
+    return {
+        v: max(1, -(-total_bytes * w // (total_wh * target_bytes))) if total_wh > 0 else 1
+        for v, w in wh_by_value.items()
+    }
+
+
+def _value_cuts(spec: list[dict], files: dict[str, int], pairs: dict[str, list]) -> dict:
+    """The cut part of a partitioned plan: values in sorted order, each
+    owning ``files[value]`` output files numbered from its offset and cut
+    by ``weighted_cuts`` over its own ``(zkey, wh)`` pairs. A layout cell
+    is a (value, curve range) pair, so one plan cuts every value."""
+    values = sorted(files)
+    offsets = [sum(files[v] for v in values[:i]) for i in range(len(values))]
+    return {
+        "spec": spec, "values": values,
+        "cuts": [weighted_cuts(pairs.get(v, []), files[v]) for v in values],
+        "offsets": offsets, "n_files": sum(files.values()),
+    }
 
 
 def _pinned_plan(root: str, job_id: str) -> dict | None:
@@ -217,6 +304,21 @@ def _np_zkey(strategy: str, phash, wh):
     raise NotImplementedError(f"unknown clustering strategy {strategy!r}")
 
 
+def _bucket(zkey, cuts: list, offsets: list[int], vidx=None):
+    """Each row's output file (pid): ``offsets[v] + searchsorted(cuts[v],
+    zkey, "right")`` for the row's value index ``v``. ``vidx`` None: the
+    table has no spec, one value, and the pid is the bucket itself."""
+    import numpy as np
+
+    if vidx is None:
+        return np.searchsorted(cuts[0], zkey, side="right").astype(np.int64)
+    pid = np.empty(len(zkey), np.int64)
+    for i, (c, off) in enumerate(zip(cuts, offsets)):
+        m = vidx == i
+        pid[m] = off + np.searchsorted(c, zkey[m], side="right")
+    return pid
+
+
 def run_staged(
     spark: SparkSession,
     table: Table,
@@ -231,12 +333,24 @@ def run_staged(
     bucket, one sorted data file of about ``target_bytes`` per bucket.
     Returns (file entries of the outputs, staging dir, planned n_files).
 
+    The plan (``_stage/{job_id}/PLAN.json``) holds the cut points, the
+    output file count ``n_files``, the gather group count ``n_groups``,
+    the scatter bins ``sbins`` and ``gather_unit`` ("pid"). Without a
+    partition spec the cut points are one ``bounds`` list and a row's
+    bucket is ``searchsorted(bounds, zkey)``. With a spec the plan also
+    holds the ``spec``, the sorted partition ``values``, one ``cuts`` list
+    per value and each value's first bucket (``offsets``): a row's bucket
+    is ``offsets[v] + searchsorted(cuts[v], zkey)`` for the value ``v``
+    its data maps to under the spec, so a file never spans values and a
+    re-specced table regroups in the same job. Each output entry is
+    stamped with the value that owns its bucket.
+
     Placement: the job's units run in the driver process, one after
     another, when it re-encodes nothing and ``scan.on_driver`` accepts its
     input files (``scan._map_units``); the cut points are then exact
     (``exact_bounds``, over every key). Otherwise every unit is one Spark
     task and the cut points come from a seeded sample
-    (``equi_depth_bounds``). Both placements run the same unit functions
+    (``_sample_bounds``). Both placements run the same unit functions
     against the same pinned plan, so a job crashed on one resumes on the
     other.
 
@@ -251,7 +365,8 @@ def run_staged(
 
       scatter: one unit per ~64 MB bin of input files: pyarrow-read each
         file, compute zkey (vectorized numpy twin of the Catalyst key, asserted
-        bit-identical in tests), pid = searchsorted(bounds), stable-sort by
+        bit-identical in tests) and, with a spec, each row's partition
+        value (``partition.row_values``), pid = ``_bucket``, stable-sort by
         gather group = pid·G//n_files, append one row-group per (file,
         group) run to a per-group staging shard. Atomic tmp→rename; one
         lineage unit per bin (resume skips completed bins).
@@ -259,9 +374,8 @@ def run_staged(
         from its group's shards, one vectorized sort_indices(zkey,
         image_id), then decode → re-encode → PSNR (the north-star pixel
         path) and one final data file with full min/max + zorder_lo/hi
-        stats. One lineage unit per pid (a pre-r5 plan resumes with one
-        unit per group); resume re-derives stats for units finished
-        before a crash.
+        stats. One lineage unit per pid; resume re-derives stats for units
+        finished before a crash.
 
     On a multi-executor cluster the staging directory lives on the shared
     table store — the standard shuffle-via-storage pattern (external sort
@@ -269,9 +383,12 @@ def run_staged(
     (group bytes = table_bytes / G).
 
     A resume replays the PLAN.json an earlier attempt of ``job_id``
-    pinned (``_pinned_plan``): its bounds, n_files, gather groups and
-    scatter bins.
+    pinned (``_pinned_plan``). A plan from before per-pid gather units
+    (no ``gather_unit``) is refused: rerun with a new job_id.
     """
+    import bisect
+
+    from nessie_spark.lakehouse.partition import table_spec
     from nessie_spark.lakehouse.scan import _map_units, on_driver
     from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA
     from nessie_spark.lakehouse.writer import stats_entry_for, write_table_file
@@ -285,64 +402,23 @@ def run_staged(
     if entries is None:
         entries = live_entries
     total_bytes = sum(e["file_size_bytes"] for e in entries)
-    pinned = _pinned_plan(root, job_id)
-    n_files = (
-        int(pinned["n_files"]) if pinned is not None
-        else max(1, math.ceil(total_bytes / target_bytes))
-    )
+    plan = _pinned_plan(root, job_id)
     driver = not reencode and on_driver(
         spark, entries=len(entries), nbytes=total_bytes
-    )
-    # Task granularity: scatter bins and gather groups are DATA-sized at
-    # ~64 MB — more executors mean fewer task waves over the SAME plan —
-    # with a MIN-PARALLELISM floor on the gather group count. Gather is
-    # the CPU-dominant phase (decode → re-encode → PSNR): 64 MB groups
-    # left a 900 MB table with ~14 gather tasks, idling most of a 32-core
-    # run; but uniformly finer groups (16 MB) multiplied the scatter-shard
-    # count 4× and measured ~1.7× slower wall at 2 and 8 cores (many ~1 MB
-    # parquet shards). The floor lifts the group count only when the
-    # cluster is wider than the data would occupy, so shard size stays
-    # coarse in the scaling pair (2 vs 8 cores both run the identical
-    # data-dominated plan — the clean-ratio property). Caveat: on tables
-    # smaller than cores×64 MB the floor engages and the two levels plan
-    # DIFFERENT group counts. PLAN.json records n_groups and sbins, so a
-    # scaling measurement can tell plan-shape effects from wave-count
-    # scaling.
-    data_groups = -(-total_bytes // (8 * DEFAULT_TARGET))
-    n_groups = max(
-        1,
-        min(n_files, max(data_groups, spark.sparkContext.defaultParallelism)),
     )
     stage_dir = os.path.join(root, "_stage", job_id)
 
     # Pin the plan across attempts: a resume on a different core count must
-    # keep the original (bounds, n_files, n_groups) or completed scatter
+    # keep the original (cuts, n_files, n_groups) or completed scatter
     # units' shards would land in inconsistent groups — and it must keep
     # the SCATTER-BIN COMPOSITION, or a table mutated between crash and
     # resume would re-bin the inputs under the same unit indexes, skipping
     # never-scattered files (row loss) and re-scattering moved ones (row
     # duplication). (North-star resume contract: per-partition lineage
     # replays against the SAME plan.)
-
-    # Gather granularity (r5): one task per OUTPUT FILE (pid) by default.
-    # 64 MB shard-group tasks quantize into ragged waves on small tables —
-    # 18 group-tasks at 8 cores ran as 3 waves with the last 25% occupied
-    # and cost ~0.2 of the 2→8 scaling ratio — while pid units give
-    # n_files-way parallelism at EVERY width over the SAME scatter shards
-    # (plan-identical across widths — the clean-ratio property). Cost:
-    # each pid task re-reads its group's shards with a pid filter; parquet
-    # decode is a few percent of the pixel re-encode work on RAM/SSD.
-    # Pinned in PLAN.json so a crash/resume never mixes unit-id namespaces.
-    gather_unit_mode = "pid"
-
-    if pinned is not None:
-        bounds = [int(x) for x in pinned["bounds"]]
-        n_groups = int(pinned["n_groups"])
-        sbins = [list(b) for b in pinned["sbins"]]
-        # pre-r5 plans pinned no gather granularity → resume group-wise
-        gather_unit_mode = pinned.get("gather_unit", "group")
+    if plan is not None:
         live = {e["file_path"] for e in live_entries}
-        plan_set = {p for b in sbins for p in b}
+        plan_set = {p for b in plan["sbins"] for p in b}
         if subset:
             # an incremental cluster rewrites a SUBSET: every planned input
             # must still be live (a rewritten-away input can no longer be
@@ -367,21 +443,42 @@ def run_staged(
                 f"{diff[0]}); the table changed since the crashed attempt "
                 "— rerun with a NEW job_id"
             )
-    else:
-        # pass 1: the cut points. On Spark, a full rewrite samples a
-        # column-subset scan: a small table is read on the driver into a
-        # LocalRelation, which Catalyst does not column-prune, so a
-        # full-row scan would pull every image's bytes through the driver.
-        if driver:
-            bounds = exact_bounds(table, entries, strategy, n_files)
-        else:
-            bounds = _sample_bounds(
-                scan(spark, table, columns=["phash", "w", "h"]) if not subset
-                else spark.read.parquet(
-                    *[os.path.join(root, e["file_path"]) for e in entries]
-                ),
-                strategy, n_files, sum(e["record_count"] for e in entries),
+        if plan.get("gather_unit") != "pid":
+            raise ValueError(
+                f"staged zorder {job_id!r} pinned a plan with gather units "
+                "per shard group, which this engine no longer runs — rerun "
+                "with a NEW job_id"
             )
+    else:
+        # pass 1: the cut points, exact on the driver, sampled on Spark
+        spec = table_spec(table)
+        plan = (
+            exact_bounds(table, entries, strategy, target_bytes, spec) if driver
+            else _sample_bounds(
+                spark, table, entries, subset, strategy, target_bytes, spec
+            )
+        )
+        n_files = plan["n_files"]
+        # Task granularity: scatter bins and gather groups are DATA-sized
+        # at ~64 MB — more executors mean fewer task waves over the SAME
+        # plan — with a MIN-PARALLELISM floor on the gather group count.
+        # Gather is the CPU-dominant phase (decode → re-encode → PSNR):
+        # 64 MB groups left a 900 MB table with ~14 gather tasks, idling
+        # most of a 32-core run; but uniformly finer groups (16 MB)
+        # multiplied the scatter-shard count 4× and measured ~1.7× slower
+        # wall at 2 and 8 cores (many ~1 MB parquet shards). The floor
+        # lifts the group count only when the cluster is wider than the
+        # data would occupy, so shard size stays coarse in the scaling pair
+        # (2 vs 8 cores both run the identical data-dominated plan — the
+        # clean-ratio property). Caveat: on tables smaller than cores×64 MB
+        # the floor engages and the two levels plan DIFFERENT group counts.
+        # PLAN.json records n_groups and sbins, so a scaling measurement
+        # can tell plan-shape effects from wave-count scaling.
+        data_groups = -(-total_bytes // (8 * DEFAULT_TARGET))
+        n_groups = max(
+            1,
+            min(n_files, max(data_groups, spark.sparkContext.defaultParallelism)),
+        )
         # Scatter granularity: DATA-sized ~64 MB bins, with the same
         # min-parallelism floor as the gather groups — when the cluster is
         # wider than total_bytes/64 MB (a 1 GB table saw 16 scatter tasks
@@ -395,17 +492,34 @@ def run_staged(
             2 * DEFAULT_TARGET,
             min(8 * DEFAULT_TARGET, total_bytes // par),
         )
-        sbins = _pack_scatter_bins(entries, sbin_bytes)
+        # Gather granularity (r5): one task per OUTPUT FILE (pid). 64 MB
+        # shard-group tasks quantized into ragged waves on small tables —
+        # 18 group-tasks at 8 cores ran as 3 waves with the last 25%
+        # occupied and cost ~0.2 of the 2→8 scaling ratio — while pid
+        # units give n_files-way parallelism at EVERY width over the SAME
+        # scatter shards. Cost: each pid task re-reads its group's shards
+        # with a pid filter; parquet decode is a few percent of the pixel
+        # re-encode work on RAM/SSD.
+        plan.update(
+            n_groups=n_groups, sbins=_pack_scatter_bins(entries, sbin_bytes),
+            gather_unit="pid",
+        )
         os.makedirs(stage_dir, exist_ok=True)
         plan_path = os.path.join(stage_dir, "PLAN.json")
         with open(plan_path + ".tmp", "w") as fh:
-            json.dump(
-                {"bounds": [int(x) for x in bounds], "n_files": n_files,
-                 "n_groups": n_groups, "sbins": sbins,
-                 "gather_unit": gather_unit_mode},
-                fh,
-            )
+            json.dump(plan, fh)
         os.replace(plan_path + ".tmp", plan_path)
+
+    n_files, n_groups = int(plan["n_files"]), int(plan["n_groups"])
+    sbins = [list(b) for b in plan["sbins"]]
+    spec = plan.get("spec")
+    values = plan["values"] if spec else [""]
+    cuts = plan["cuts"] if spec else [plan["bounds"]]
+    offsets = plan["offsets"] if spec else [0]
+
+    def _value_of(pid: int) -> str:
+        """The partition value that owns output file ``pid``."""
+        return values[bisect.bisect_right(offsets, pid) - 1]
 
     # --- scatter ----------------------------------------------------------
     done = lineage.completed_units(root, job_id, "scatter")
@@ -424,8 +538,10 @@ def run_staged(
     def _scatter_unit(unit: tuple) -> tuple:
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        from nessie_spark.lakehouse.partition import row_values
         from nessie_spark.lakehouse.writer import align_to_schema, arrow_schema_from_ddl
 
         # Uniform shard schema across mixed pre-/post-evolution inputs:
@@ -434,7 +550,7 @@ def run_staged(
         # append slices from any input file.
         aschema = arrow_schema_from_ddl(table_ddl)
         sbin, paths = int(unit[0]), list(unit[1])
-        b = np.asarray(bounds, dtype=np.int64)
+        cut_arrs = [np.asarray(c, dtype=np.int64) for c in cuts]
         # Bound concurrently-open shard writers: n_groups scales with table
         # bytes (1 TB → ~2k groups), and each open ParquetWriter holds column
         # buffers + an fd. LRU-close past the cap and reopen under a new
@@ -484,7 +600,18 @@ def run_staged(
                 * tbl.column("h").to_numpy().astype(np.int64)
             ) & 0x7FFFFFFF
             zkey = _np_zkey(strategy, tbl.column("phash").to_numpy(), wh)
-            pid = np.searchsorted(b, zkey, side="right").astype(np.int64)
+            vidx = None
+            if spec:
+                vidx = pc.index_in(
+                    row_values(tbl, spec), value_set=pa.array(values, pa.string())
+                )
+                if vidx.null_count:
+                    raise ValueError(
+                        f"staged zorder {job_id!r}: {p} holds a partition "
+                        "value outside the pinned plan"
+                    )
+                vidx = vidx.to_numpy()
+            pid = _bucket(zkey, cut_arrs, offsets, vidx)
             grp = (pid * n_groups // n_files).astype(np.int32)
             tbl = tbl.append_column("zkey", pa.array(zkey, pa.int64())).append_column(
                 "pid", pa.array(pid.astype(np.int32), pa.int32())
@@ -492,9 +619,9 @@ def run_staged(
             order = np.argsort(grp, kind="stable")
             tbl = tbl.take(pa.array(order))
             g_sorted = grp[order]
-            cuts = np.flatnonzero(np.diff(g_sorted)) + 1
-            starts = [0, *cuts.tolist()]
-            ends = [*cuts.tolist(), len(g_sorted)]
+            cuts_g = np.flatnonzero(np.diff(g_sorted)) + 1
+            starts = [0, *cuts_g.tolist()]
+            ends = [*cuts_g.tolist(), len(g_sorted)]
             for s0, e0 in zip(starts, ends):
                 g = int(g_sorted[s0])
                 sl = tbl.slice(s0, e0 - s0)
@@ -520,16 +647,12 @@ def run_staged(
 
     # --- gather -----------------------------------------------------------
     gdone = lineage.completed_units(root, job_id, "gather")
-    if gather_unit_mode == "pid":
-        gtodo = [pd for pd in range(n_files) if pd not in gdone]
-    else:
-        gtodo = [g for g in range(n_groups) if g not in gdone]
+    gtodo = [pd for pd in range(n_files) if pd not in gdone]
 
     def _gather_pid_unit(pid: int) -> list[dict]:
         """One gather task per output file: read the owning group's shards
         with a pid filter, sort, re-encode, write data/...-p{pid}.parquet.
-        Unit id = pid (globally unique; lineage namespace pinned by
-        PLAN.json's gather_unit)."""
+        Unit id = pid."""
         import re
 
         import pyarrow as pa
@@ -579,10 +702,14 @@ def run_staged(
         rel = f"data/{job_id}-{strategy}-p{pid:05d}.parquet"
         from nessie_spark.lakehouse.writer import ddl_columns
 
+        # Stats come from the full table (zkey → zorder_lo/hi), but the
+        # data file carries ONLY the declared table columns — the
+        # staging-only zkey/pid must never reach the final table files
+        # (they'd break schema-uniform compaction over mixed file sets).
         size = write_table_file(
             tbl.select(ddl_columns(table_ddl)), os.path.join(root, rel)
         )
-        entry = stats_entry_for(tbl, rel, size)
+        entry = stats_entry_for(tbl, rel, size, partition=_value_of(pid))
         lineage.write_unit(
             root, job_id, "gather", pid,
             input_files=[os.path.join(f"g{grp:04d}", s) for s in shards],
@@ -591,79 +718,7 @@ def run_staged(
         )
         return [entry]
 
-    def _gather_unit(grp: int) -> list[dict]:
-        import re
-
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        grp = int(grp)
-        gdir = os.path.join(stage_dir, f"g{grp:04d}")
-        shard_re = re.compile(r"s\d{5}(_\d+)?\.parquet$")
-        shards = (
-            sorted(f for f in os.listdir(gdir) if shard_re.fullmatch(f))
-            if os.path.isdir(gdir)
-            else []
-        )
-        if not shards:
-            lineage.write_unit(
-                root, job_id, "gather", grp,
-                input_files=[], output_files=[], rows=0, nbytes=0,
-            )
-            return []
-        tbl = pa.concat_tables([pq.read_table(os.path.join(gdir, s)) for s in shards])
-        idx = pc.sort_indices(
-            tbl,
-            sort_keys=[("pid", "ascending"), ("zkey", "ascending"), ("image_id", "ascending")],
-        )
-        tbl = tbl.take(idx)
-        pids = tbl.column("pid").to_numpy()
-        cuts = np.flatnonzero(np.diff(pids)) + 1
-        starts = [0, *cuts.tolist()]
-        ends = [*cuts.tolist(), len(pids)]
-        out_entries = []
-        out_paths = []
-        mn_psnr = 99.0
-        for s0, e0 in zip(starts, ends):
-            pid = int(pids[s0])
-            sl = tbl.slice(s0, e0 - s0)
-            if reencode:
-                from nessie_spark.lakehouse import kernels as K
-
-                new_bytes, _mn = K.reencode_verify(
-                    sl.column("bytes").to_pylist(), sl.column("fmt").to_pylist()
-                )
-                mn_psnr = min(mn_psnr, _mn)
-                sl = sl.set_column(
-                    sl.schema.get_field_index("bytes"), "bytes",
-                    pa.array(new_bytes, pa.binary()),
-                )
-            rel = f"data/{job_id}-{strategy}-p{pid:05d}.parquet"
-            # Stats come from the full slice (zkey → zorder_lo/hi), but the
-            # data file carries ONLY the declared table columns — the
-            # staging-only zkey/pid must never reach the final table files
-            # (they'd break schema-uniform compaction over mixed file sets).
-            from nessie_spark.lakehouse.writer import ddl_columns
-
-            size = write_table_file(
-                sl.select(ddl_columns(table_ddl)), os.path.join(root, rel)
-            )
-            out_entries.append(stats_entry_for(sl, rel, size))
-            out_paths.append(rel)
-        lineage.write_unit(
-            root, job_id, "gather", grp,
-            input_files=[os.path.join(f"g{grp:04d}", s) for s in shards],
-            output_files=out_paths,
-            rows=tbl.num_rows,
-            nbytes=int(sum(e["file_size_bytes"] for e in out_entries)),
-            metrics={"min_psnr": mn_psnr} if reencode else None,
-        )
-        return out_entries
-
-    _gfn = _gather_pid_unit if gather_unit_mode == "pid" else _gather_unit
-    fresh = [e for part in _map_units(spark, _gfn, gtodo, driver) for e in part]
+    fresh = [e for part in _map_units(spark, _gather_pid_unit, gtodo, driver) for e in part]
 
     # reassemble stats for ALL gather units (including pre-crash ones):
     # recompute zkey from (phash, w, h) with the numpy twin — the staged
@@ -689,7 +744,10 @@ def run_staged(
             zk = _np_zkey(strategy, t.column("phash").to_numpy(), wh)
             t = t.append_column("zkey", pa.array(zk, pa.int64()))
             added.append(
-                stats_entry_for(t, p, os.path.getsize(os.path.join(root, p)))
+                stats_entry_for(
+                    t, p, os.path.getsize(os.path.join(root, p)),
+                    partition=_value_of(u["partition_id"]),
+                )
             )
     return pa.Table.from_pylist(added, schema=FILE_ENTRY_SCHEMA), stage_dir, n_files
 
@@ -702,15 +760,11 @@ def _cluster_short_circuit(
     its dead staging shards) + the pending-MoR-delete CoW guard."""
     prev = lineage.committed_snapshot(table.root, job_id)
     if prev is not None:
-        import glob as _glob
         import shutil as _shutil
 
         _shutil.rmtree(
             os.path.join(table.root, "_stage", job_id), ignore_errors=True
         )
-        # partitioned clustering stages per-group sub-jobs at {job_id}-part*
-        for d in _glob.glob(os.path.join(table.root, "_stage", f"{job_id}-part*")):
-            _shutil.rmtree(d, ignore_errors=True)
         return ClusterResult(prev, job_id, strategy, 0, 0, 0)
     from nessie_spark.lakehouse.deletes import require_no_pending_deletes
 
@@ -727,7 +781,7 @@ def _cluster_commit(
     operation: str,
     summary: dict,
     metrics: dict,
-    stage_dir: str | list | None,
+    stage_dir: str,
     carried_manifest_summaries: list | None,
 ) -> ClusterResult:
     """Shared cluster-job epilogue: lineage unit → atomic snapshot commit →
@@ -749,232 +803,12 @@ def _cluster_commit(
         summary=summary,
     )
     lineage.mark_committed(table.root, job_id, snap)
-    if stage_dir:  # staging shards are dead once the snapshot is durable
-        import shutil as _shutil
+    # staging shards are dead once the snapshot is durable
+    import shutil as _shutil
 
-        dirs = stage_dir if isinstance(stage_dir, list) else [stage_dir]
-        for d in dirs:
-            _shutil.rmtree(d, ignore_errors=True)
+    _shutil.rmtree(stage_dir, ignore_errors=True)
     return ClusterResult(
         snap, job_id, strategy, len(deleted_paths), len(out_paths), rows
-    )
-
-
-def _cluster_respec(
-    spark: SparkSession,
-    table: Table,
-    entries: list[dict],
-    strategy: str,
-    target_bytes: int,
-    job_id: str,
-    reencode: bool,
-    operation: str,
-    carried_manifest_summaries: list | None,
-    summary_extra: dict,
-    incremental: bool,
-) -> ClusterResult:
-    """Spec-alignment clustering: one-pass shuffle rewrite used whenever
-    some input file's recorded partition segments don't match the CURRENT
-    spec (partition-spec evolution, pre-spec history). Rows re-derive
-    their partition value from data, the global sort key is (pval, zkey)
-    so the writer's per-value split yields partition-pure, zkey-disjoint
-    files — exactly one sorted run per value in a single exchange.
-
-    Scale note: this is the JVM-shuffle executor (fat binary rows through
-    the exchange, the ~2x memory-traffic tax run_staged exists to avoid)
-    — acceptable because spec evolution is a rare administrative event;
-    steady-state partitioned clustering takes the per-value staged loop."""
-    from nessie_spark.lakehouse.partition import PVAL_COL, stamp_pval, table_spec
-    from nessie_spark.lakehouse.scan import IMAGES_DDL
-    from nessie_spark.lakehouse.writer import ddl_columns, write_partition_files
-
-    root = table.root
-    spec = table_spec(table)
-    paths = [e["file_path"] for e in entries]
-    total_bytes = sum(e["file_size_bytes"] for e in entries)
-    n_files = max(1, math.ceil(total_bytes / target_bytes))
-    key = zorder_key(strategy)
-    ddl = table.meta.get("schema", IMAGES_DDL)
-    # field-id-aware read: inputs written before a rename/drop project onto
-    # the current names (scan._read_data_files; identity fast path when the
-    # table has no such history)
-    from nessie_spark.lakehouse.scan import _read_data_files, _target_fields
-
-    df = _read_data_files(
-        spark, table, entries, ddl, _target_fields(table, None, ddl)
-    ).withColumn("zkey", key(F.col("phash"), F.col("w"), F.col("h")))
-    df = (
-        stamp_pval(df, spec)
-        .repartitionByRange(n_files, F.col(PVAL_COL), F.col("zkey"))
-        .sortWithinPartitions(PVAL_COL, "zkey")
-    )
-    from nessie_spark.session import no_coalesce
-
-    with no_coalesce(spark):
-        stats = write_partition_files(
-            df, root, job_id, "respec", data_columns=ddl_columns(ddl),
-            reencode=reencode,
-        ).toArrow()
-    return _cluster_commit(
-        table, job_id, strategy, stats,
-        deleted_paths=set(paths),
-        operation=operation,
-        summary=dict(
-            {"job_id": job_id, "strategy": strategy, "respec": True},
-            **summary_extra,
-        ),
-        metrics={"n_files_planned": float(n_files), "respec": 1.0,
-                 "incremental": float(incremental)},
-        stage_dir=None,
-        carried_manifest_summaries=carried_manifest_summaries,
-    )
-
-
-def _cluster_partitioned(
-    spark: SparkSession,
-    table: Table,
-    entries: list[dict],
-    strategy: str,
-    target_bytes: int,
-    job_id: str,
-    reencode: bool,
-    operation: str,
-    carried_manifest_summaries: list | None,
-    summary_extra: dict,
-    incremental: bool,
-) -> ClusterResult:
-    """Per-partition clustering loop for hidden-partitioned tables
-    (lakehouse/partition.py): data files never span partition values, so
-    the curve order is built WITHIN each value — one equi-depth plan and
-    one staged rewrite per partition group, all committed as a single
-    atomic snapshot stamping each output entry with its group's value.
-
-    Resume contract: the group list (paths + value per group) is pinned to
-    ``_stage/{job_id}/GROUPS.json`` before any work — a rerun after a crash
-    replays the SAME groups (each sub-run resumes from its own pinned
-    PLAN.json); re-deriving groups from a table that gained appends
-    mid-crash would widen the job past its plan. Planned inputs no longer
-    live raise inside run_staged, same as the unpartitioned path.
-
-    Scale: partition count is the table's layout knob (bounded); bytes per
-    partition is what actually grows, and that stays inside run_staged's
-    data-sized scatter/gather bins. The loop is sequential over groups but
-    each group's rewrite uses the whole cluster.
-    """
-    import pyarrow as pa
-
-    from nessie_spark.lakehouse.partition import parse_partition, segment_name, table_spec
-    from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA
-
-    # spec-alignment check: a file written under an older spec (or before
-    # any spec) carries different segment names — its rows may map to
-    # SEVERAL current values, so whole-file grouping can't regroup it.
-    # Any misalignment routes the ENTIRE job through the one-pass shuffle
-    # respec rewrite (rows re-derive values from data); resume of an
-    # in-flight grouped run (GROUPS.json present) keeps its pinned plan.
-    spec_now = table_spec(table)
-    seg_names = {segment_name(f) for f in (spec_now or [])}
-    groups_pinned_path = os.path.join(table.root, "_stage", job_id, "GROUPS.json")
-    if not os.path.exists(groups_pinned_path) and any(
-        set(parse_partition(e.get("partition") or "")) != seg_names for e in entries
-    ):
-        return _cluster_respec(
-            spark, table, entries, strategy, target_bytes, job_id, reencode,
-            operation, carried_manifest_summaries, summary_extra, incremental,
-        )
-
-    root = table.root
-    stage_parent = os.path.join(root, "_stage", job_id)
-    gpath = os.path.join(stage_parent, "GROUPS.json")
-    if os.path.exists(gpath):
-        with open(gpath) as fh:
-            groups = json.load(fh)["groups"]
-        live = {
-            e["file_path"]: e
-            for e in table.file_entries(columns=ENTRY_COLUMNS).to_pylist()
-        }
-        pinned_paths = {pp for g in groups for pp in g["paths"]}
-        # same resume contract as the unpartitioned full rewrite: the
-        # PINNED plan must still describe the table. An input that is no
-        # longer live was rewritten by another job (replaying would
-        # resurrect/duplicate its rows); for a FULL rewrite (carried=[])
-        # a live file OUTSIDE the plan — appended after the crash — would
-        # silently vanish from the committed snapshot.
-        gone = sorted(pinned_paths - set(live))
-        if gone:
-            raise ValueError(
-                f"partitioned cluster {job_id!r} planned against "
-                f"{len(gone)} input file(s) no longer live (e.g. "
-                f"{gone[0]}); the table changed since the crashed attempt "
-                "— rerun with a NEW job_id"
-            )
-        if not incremental:
-            extra = sorted(set(live) - pinned_paths)
-            if extra:
-                raise ValueError(
-                    f"partitioned cluster {job_id!r} pinned a full-rewrite "
-                    f"plan that misses {len(extra)} live file(s) appended "
-                    f"since the crash (e.g. {extra[0]}); committing it "
-                    "would drop their rows — rerun with a NEW job_id"
-                )
-        grouped = [
-            (g["pval"], [live[pp] for pp in g["paths"]], g["paths"])
-            for g in groups
-        ]
-    else:
-        by: dict[str, list[dict]] = {}
-        for e in entries:
-            by.setdefault(e.get("partition") or "", []).append(e)
-        grouped = [
-            (pv, by[pv], [e["file_path"] for e in by[pv]]) for pv in sorted(by)
-        ]
-        os.makedirs(stage_parent, exist_ok=True)
-        tmp = gpath + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"groups": [{"pval": pv, "paths": ps} for pv, _g, ps in grouped]},
-                fh,
-            )
-        os.replace(tmp, gpath)
-
-    all_stats: list[pa.Table] = []
-    stage_dirs: list = [stage_parent]
-    deleted: set = set()
-    n_planned = 0
-    for i, (pval, g, gpaths) in enumerate(grouped):
-        stats_g, sd, n_g = run_staged(
-            spark, table, f"{job_id}-part{i:04d}", strategy, reencode,
-            target_bytes, entries=g,
-        )
-        if stats_g.num_rows:
-            idx = stats_g.schema.get_field_index("partition")
-            stats_g = stats_g.set_column(
-                idx, "partition", pa.array([pval] * stats_g.num_rows, pa.string())
-            )
-        all_stats.append(stats_g)
-        stage_dirs.append(sd)
-        deleted |= set(gpaths)
-        n_planned += n_g
-
-    nonempty = [s_ for s_ in all_stats if s_.num_rows]
-    stats = (
-        pa.concat_tables(nonempty) if nonempty else FILE_ENTRY_SCHEMA.empty_table()
-    )
-    return _cluster_commit(
-        table, job_id, strategy, stats,
-        deleted_paths=deleted,
-        operation=operation,
-        summary=dict(
-            {"job_id": job_id, "strategy": strategy, "partitions": len(grouped)},
-            **summary_extra,
-        ),
-        metrics={
-            "n_files_planned": float(n_planned),
-            "partition_groups": float(len(grouped)),
-            "incremental": float(incremental),
-        },
-        stage_dir=stage_dirs,
-        carried_manifest_summaries=carried_manifest_summaries,
     )
 
 
@@ -988,6 +822,9 @@ def cluster(
 ) -> ClusterResult:
     """Rewrite the whole live file set in space-filling-curve order, one
     data file of about ``target_bytes`` per zkey bucket (``run_staged``).
+    On a hidden-partitioned table the buckets are cut within each
+    partition value of the current spec, so every file holds one value —
+    also when the files were written under an older spec or none.
 
     ``reencode``: decode → re-encode → PSNR-verify every image during the
     rewrite (north_star pixel path; ``kernels.reencode_verify`` in the
@@ -998,25 +835,9 @@ def cluster(
     if done is not None:
         return done
 
-    entries = table.file_entries(
-        columns=[*ENTRY_COLUMNS, "partition"]
-    ).to_pylist()
+    entries = table.file_entries(columns=["file_path"]).to_pylist()
     if not entries:
         return ClusterResult(None, job_id, strategy, 0, 0, 0)
-    from nessie_spark.lakehouse.partition import table_spec
-
-    if table_spec(table):
-        # hidden-partitioned table: curve-order WITHIN each partition value
-        # (files must not span values or pruning dies) — including when
-        # every file is still pre-spec ("" segments ≠ spec segments routes
-        # through the respec rewrite, which is how set_partition_spec on an
-        # existing table gets materialized)
-        return _cluster_partitioned(
-            spark, table, entries, strategy, target_bytes, job_id, reencode,
-            operation=strategy if strategy != "morton" else "zorder",
-            carried_manifest_summaries=[],  # full rewrite: nothing carried
-            summary_extra={}, incremental=False,
-        )
 
     # move every row to its zkey bucket, one file per bucket
     stats, stage_dir, n_files = run_staged(
@@ -1061,9 +882,10 @@ def cluster_incremental(
 
     Same staged two-phase executor, resume contract (pinned plan; planned
     inputs must all still be live — files appended after a crash stay
-    outside the job), idempotent commit marker, and pixel path
-    (``reencode``) as ``cluster``. Reference parity: no analog (the
-    reference is a single-node library); this is Iceberg's
+    outside the job), idempotent commit marker, per-value buckets on a
+    hidden-partitioned table, and pixel path (``reencode``) as
+    ``cluster``. Reference parity: no analog (the reference is a
+    single-node library); this is Iceberg's
     ``rewrite_data_files(strategy => 'sort', where => <new files>)`` role.
     """
     job_id = job_id or f"zdelta-{uuid.uuid4().hex[:8]}"
@@ -1078,30 +900,9 @@ def cluster_incremental(
     live = {
         e["file_path"]: e
         for e in table.file_entries(
-            columns=[*ENTRY_COLUMNS, "zorder_lo", "partition"]
+            columns=[*ENTRY_COLUMNS, "zorder_lo"]
         ).to_pylist()
     }
-    from nessie_spark.lakehouse.partition import table_spec
-
-    if table_spec(table):
-        groups_pinned = os.path.exists(
-            os.path.join(root, "_stage", job_id, "GROUPS.json")
-        )
-        delta = [e for e in live.values() if e["zorder_lo"] is None]
-        if groups_pinned or delta:
-            # hidden-partitioned delta: per-partition sorted runs (same
-            # group pinning / resume contract as the full partitioned
-            # rewrite; carried=None keeps the untouched base runs). A
-            # delta written under an older/absent spec routes through the
-            # respec rewrite inside, regrouping it under the current spec.
-            return _cluster_partitioned(
-                spark, table, delta, strategy, target_bytes, job_id, reencode,
-                operation="zorder-delta",
-                carried_manifest_summaries=None,
-                summary_extra={"delta_files": len(delta)},
-                incremental=True,
-            )
-
     # Resume replays the PINNED delta: the plan's scatter bins define the
     # input set (and the commit's deleted set) — re-deriving "unclustered"
     # from a table that gained appends mid-crash would silently widen the

@@ -78,7 +78,7 @@ def ffd_pack_distributed(
         F.pmod(F.xxhash64("file_path"), F.lit(n_shards)).cast("int").alias("_shard"),
     )
 
-    def _pack(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def _pack(key, pdf):
         pdf = pdf.sort_values(
             ["file_size_bytes", "file_path"], ascending=[False, True]
         ).reset_index(drop=True)

@@ -75,3 +75,32 @@ def on_spark(spark):
     finally:
         scan.DRIVER_MAX_ENTRIES = entries
         spark.conf.unset(key)
+
+
+@contextmanager
+def crash_after(k: int):
+    """Crash the rewrite job run inside the block after ``k`` work units.
+
+    Wraps ``scan._map_units``, the one place compaction bins and Z-order
+    scatter and gather units run, and counts units across all of the job's
+    calls, so the crash can land in either Z-order phase. The first ``k``
+    units run to completion on the job's own placement; then the driver
+    raises ``RuntimeError("injected ...")``. Raising on the driver, not in
+    a task, keeps the set of completed units the same on every run."""
+    real = scan._map_units
+    left = k
+
+    def _map_units(spark, fn, units, driver):
+        nonlocal left
+        allowed = units[:left]
+        left -= len(allowed)
+        out = real(spark, fn, allowed, driver)
+        if len(allowed) < len(units):
+            raise RuntimeError(f"injected failure after {k} unit(s)")
+        return out
+
+    scan._map_units = _map_units
+    try:
+        yield
+    finally:
+        scan._map_units = real

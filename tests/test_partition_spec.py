@@ -23,7 +23,7 @@ from nessie_spark.lakehouse.scan import plan_files, scan
 from nessie_spark.lakehouse.zorder import cluster, cluster_incremental
 from nessie_spark.plans import ffd
 from nessie_spark.plans.ffd import ffd_pack_distributed
-from tests.conftest import on_spark, spark_jobs
+from tests.conftest import crash_after, on_spark, spark_jobs
 
 FMT_SPEC = [{"source": "fmt", "transform": "identity"}]
 
@@ -336,21 +336,11 @@ def test_partitioned_cluster_resume_guards_plan_drift(spark, tmp_path):
     """A pinned partitioned full-rewrite plan must refuse to commit when
     the live set changed (review fix: an append after the crash would have
     silently vanished from the carried=[] commit)."""
-    import json
-
     t, _ = _make(spark, str(tmp_path / "tb"), FMT_SPEC, n=200, seed=33)
-    ents = t.file_entries(columns=["file_path", "partition"]).to_pylist()
-    by = {}
-    for e in ents:
-        by.setdefault(e["partition"], []).append(e["file_path"])
-    stage = os.path.join(t.root, "_stage", "zcrash")
-    os.makedirs(stage, exist_ok=True)
-    with open(os.path.join(stage, "GROUPS.json"), "w") as fh:
-        json.dump(
-            {"groups": [{"pval": pv, "paths": ps} for pv, ps in sorted(by.items())]},
-            fh,
-        )
-    # a file lands after the "crash" — full-rewrite resume must refuse
+    # a real crash: the plan is pinned and the scatter unit has run
+    with crash_after(1), pytest.raises(RuntimeError, match="injected"):
+        cluster(spark, t, job_id="zcrash", target_bytes=1 << 20)
+    # a file lands after the crash — full-rewrite resume must refuse
     jobs.append(spark, t, synth.images_df(spark, 40, seed=34), job_id="late")
     t = t.refresh()
     with pytest.raises(ValueError, match="NEW job_id"):

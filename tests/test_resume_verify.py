@@ -8,7 +8,7 @@ from nessie_spark import synth
 from nessie_spark.lakehouse import compact, lineage, verify, zorder
 from nessie_spark.lakehouse import kernels as K
 from nessie_spark.lakehouse.scan import scan
-from tests.conftest import make_table
+from tests.conftest import crash_after, make_table
 
 
 def test_compact_kill_and_resume_identical(spark, tmp_path):
@@ -20,8 +20,8 @@ def test_compact_kill_and_resume_identical(spark, tmp_path):
     tB, _ = make_table(spark, rootB, n=256)
 
     # A: crash after 3 bins
-    with pytest.raises(Exception):
-        compact.compact(spark, tA, target_bytes=256 * 1024, job_id="cj", fail_after_bins=3)
+    with crash_after(3), pytest.raises(RuntimeError, match="injected"):
+        compact.compact(spark, tA, target_bytes=256 * 1024, job_id="cj")
     done = lineage.completed_units(rootA + "", "cj", "compact")
     assert 0 < len(done)
     assert lineage.committed_snapshot(rootA, "cj") is None

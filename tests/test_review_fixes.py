@@ -14,7 +14,7 @@ from nessie_spark import synth
 from nessie_spark.lakehouse import deletes, expire, jobs, lineage, merge
 from nessie_spark.lakehouse.scan import scan
 from nessie_spark.lakehouse.table import Table
-from tests.conftest import make_table, on_spark, spark_jobs
+from tests.conftest import crash_after, make_table, on_spark, spark_jobs
 
 
 def test_purge_resume_refuses_changed_delete_set(spark, tmp_path):
@@ -160,9 +160,8 @@ def test_compact_resume_refuses_changed_table(spark, tmp_path):
     from nessie_spark.lakehouse import compact, zorder
 
     t, _ = make_table(spark, str(tmp_path / "tb"), n=96, mean_rows=8)
-    with pytest.raises(RuntimeError, match="injected"):
-        compact.compact(spark, t, target_bytes=256 * 1024, job_id="cr",
-                        fail_after_bins=1)
+    with crash_after(1), pytest.raises(RuntimeError, match="injected"):
+        compact.compact(spark, t, target_bytes=256 * 1024, job_id="cr")
     assert lineage.completed_units(t.root, "cr", "compact") == {0}
     # another job rewrites the table before the resume
     zorder.cluster(spark, t, target_bytes=256 * 1024, job_id="cr-z")

@@ -13,6 +13,7 @@ other. Every table here is a copy of one small template.
 from __future__ import annotations
 
 import contextlib
+import glob
 import hashlib
 import itertools
 import os
@@ -26,10 +27,12 @@ import pytest
 from nessie_spark import synth
 from nessie_spark.lakehouse import jobs, lineage, maintain
 from nessie_spark.lakehouse.compact import compact
+from nessie_spark.lakehouse.evolve import set_partition_spec
+from nessie_spark.lakehouse.expire import gc_orphans
 from nessie_spark.lakehouse.partition import parse_partition, segment_name, transform_py
 from nessie_spark.lakehouse.table import Table
 from nessie_spark.lakehouse.zorder import cluster, cluster_incremental
-from tests.conftest import make_table, on_spark, spark_jobs
+from tests.conftest import crash_after, make_table, on_spark, spark_jobs
 
 KiB = 1024
 # the template's files are 16-100 KiB: several compaction bins and several
@@ -69,7 +72,13 @@ def templates(spark, tmp_path_factory):
     t = jobs.create_images_table(parted, properties={"partition-spec": SPEC})
     for k in range(4):
         jobs.append(spark, t.refresh(), _local_df(spark, 24 * k, 24), job_id=f"p{k}")
-    return {"plain": plain, "delta": delta, "parted": parted}
+    # the same appends written without a spec, which is set afterwards
+    respec = str(base / "respec")
+    t = jobs.create_images_table(respec)
+    for k in range(4):
+        jobs.append(spark, t.refresh(), _local_df(spark, 24 * k, 24), job_id=f"p{k}")
+    set_partition_spec(t.refresh(), SPEC)
+    return {"plain": plain, "delta": delta, "parted": parted, "respec": respec}
 
 
 def _copy(templates, kind: str, tmp_path, name: str) -> Table:
@@ -172,24 +181,117 @@ def _partition_of(row: dict) -> str:
     return "/".join(f"{segment_name(f)}={transform_py(f, row[f['source']])}" for f in SPEC)
 
 
+def _assert_one_value_per_file(t: Table) -> list[str]:
+    """Every live file holds the rows of one partition value, the one its
+    entry names; returns the entries' values in file order."""
+    values = []
+    for e in _live(t):
+        assert set(parse_partition(e["partition"])) == {"fmt", "phash_bucket"}
+        tbl = pq.read_table(os.path.join(t.root, e["file_path"]), columns=["fmt", "phash"])
+        assert {_partition_of(r) for r in tbl.to_pylist()} == {e["partition"]}
+        values.append(e["partition"])
+    return values
+
+
+def _job_namespaces(t: Table) -> list[str]:
+    """The lineage namespaces a job with id ``z`` may have left."""
+    return sorted(n for n in os.listdir(os.path.join(t.root, "_lineage")) if n.startswith("z"))
+
+
+@contextlib.contextmanager
+def _keep_stage_dirs():
+    """Make ``shutil.rmtree`` a no-op: the window between a job's commit
+    and its staging sweep, held open."""
+    real, shutil.rmtree = shutil.rmtree, lambda *a, **k: None
+    try:
+        yield
+    finally:
+        shutil.rmtree = real
+
+
 def test_partitioned_cluster_keeps_one_value_per_file(spark, templates, tmp_path):
     """identity + bucket spec: on both placements every file clustering
     writes holds the rows of one partition value, the one its entry names.
-    (Compaction packs each value's files apart before any unit runs.)"""
+    The job keeps one plan and one lineage namespace, and on the driver it
+    starts no Spark job. (Compaction packs each value's files apart before
+    any unit runs.)"""
     for forced in (False, True):
         t = _copy(templates, "parted", tmp_path, f"p{forced}")
         before = _rows(t)
-        _, ids = _run(spark, forced, cluster, t, target_bytes=CLUSTER_TARGET, job_id="z")
+        with _keep_stage_dirs():
+            _, ids = _run(spark, forced, cluster, t, target_bytes=CLUSTER_TARGET, job_id="z")
         assert bool(ids) == forced
         assert _rows(t) == before
-        entries = _live(t)
-        assert len({e["partition"] for e in entries}) >= 3
-        for e in entries:
-            # one staged rewrite per partition value, not the respec rewrite
-            assert e["file_path"].startswith("data/z-part"), e["file_path"]
-            assert set(parse_partition(e["partition"])) == {"fmt", "phash_bucket"}
-            tbl = pq.read_table(os.path.join(t.root, e["file_path"]), columns=["fmt", "phash"])
-            assert {_partition_of(r) for r in tbl.to_pylist()} == {e["partition"]}
+        assert len(set(_assert_one_value_per_file(t))) >= 3
+        assert glob.glob(os.path.join(t.root, "_stage", "*", "PLAN.json")) == [
+            os.path.join(t.root, "_stage", "z", "PLAN.json")
+        ]
+        assert _job_namespaces(t) == ["z"]
+
+
+@pytest.mark.parametrize("incremental", [False, True], ids=["full", "incremental"])
+def test_respec_cluster_runs_on_the_driver(spark, templates, tmp_path, incremental):
+    """A table written without a spec, then given one: clustering regroups
+    every row under the spec in the driver process, and leaves the same
+    rows, planned file count and per-file values as on Spark."""
+    fn = cluster_incremental if incremental else cluster
+    d = _copy(templates, "respec", tmp_path, "d")
+    s = _copy(templates, "respec", tmp_path, "s")
+    before = _rows(d)
+    rd, jd = _run(spark, False, fn, d, target_bytes=CLUSTER_TARGET, job_id="z")
+    rs, js = _run(spark, True, fn, s, target_bytes=CLUSTER_TARGET, job_id="z")
+    assert jd == [] and js
+    assert _rows(d) == _rows(s) == before
+    assert rd.input_files == rs.input_files == 4
+    planned = [
+        dict(_units(t, "z", "morton")[0]["metrics"])["n_files_planned"] for t in (d, s)
+    ]
+    assert planned[0] == planned[1] >= 4
+    values = [_assert_one_value_per_file(t) for t in (d, s)]
+    assert set(values[0]) == set(values[1]) and len(set(values[0])) >= 3
+
+
+def test_respec_cluster_resumes_across_placements(spark, templates, tmp_path):
+    """A re-spec cluster crashed in scatter (k=0: the plan is pinned, no
+    unit ran) or in gather (k=3: the scatter unit and two gather units
+    ran) resumes on the other placement into the same files as an
+    uninterrupted run, in one commit."""
+    ref = _copy(templates, "respec", tmp_path, "ref")
+    cluster(spark, ref, target_bytes=CLUSTER_TARGET, job_id="z")
+    want = [(e["file_path"], e["partition"]) for e in _live(ref)]
+    snaps = len(ref.refresh().meta["snapshots"])
+    for k, crash_forced in ((0, False), (3, True)):
+        t = _copy(templates, "respec", tmp_path, f"r{k}")
+        with on_spark(spark) if crash_forced else contextlib.nullcontext():
+            with crash_after(k), pytest.raises(RuntimeError, match="injected"):
+                cluster(spark, t, target_bytes=CLUSTER_TARGET, job_id="z")
+        assert lineage.completed_units(t.root, "z", "scatter") == set(range(min(k, 1)))
+        assert len(lineage.completed_units(t.root, "z", "gather")) == max(k - 1, 0)
+        assert lineage.committed_snapshot(t.root, "z") is None
+        _, ids = _run(spark, not crash_forced, cluster, t, target_bytes=CLUSTER_TARGET, job_id="z")
+        assert bool(ids) == (not crash_forced)
+        assert [(e["file_path"], e["partition"]) for e in _live(t)] == want
+        assert _rows(t) == _rows(ref)
+        assert len(t.refresh().meta["snapshots"]) == snaps
+        _assert_one_value_per_file(t)
+        # a rerun with the committed job_id writes nothing
+        data = sorted(os.listdir(os.path.join(t.root, "data")))
+        snap = t.refresh().current_snapshot_id
+        again = cluster(spark, t.refresh(), target_bytes=CLUSTER_TARGET, job_id="z")
+        assert again.snapshot_id == snap and again.output_files == 0
+        assert sorted(os.listdir(os.path.join(t.root, "data"))) == data
+
+
+def test_partitioned_cluster_leaves_nothing_for_gc(spark, templates, tmp_path):
+    """A crash between a partitioned cluster's commit and its staging
+    sweep leaves debris that orphan GC can recognize: every lineage
+    namespace is the committed job's, and GC sweeps every stage dir."""
+    t = _copy(templates, "parted", tmp_path, "g")
+    with _keep_stage_dirs():
+        cluster(spark, t, target_bytes=CLUSTER_TARGET, job_id="z")
+    gc_orphans(spark, t.refresh())
+    assert _job_namespaces(t) == ["z"]
+    assert os.listdir(os.path.join(t.root, "_stage")) == []
 
 
 def test_maintain_sweep_starts_no_job_on_the_driver(spark, templates, tmp_path):
@@ -218,9 +320,8 @@ def test_pixel_rewrites_run_on_spark_at_any_size(spark, templates, tmp_path, job
 def _crash_then_resume(spark, t: Table, crash_forced: bool) -> None:
     with on_spark(spark) if crash_forced else contextlib.nullcontext():
         with spark_jobs(spark, f"rewrite-{next(_GROUPS)}") as ids:
-            with pytest.raises(RuntimeError, match="injected"):
-                compact(spark, t, target_bytes=COMPACT_TARGET, job_id="cj",
-                        fail_after_bins=1)
+            with crash_after(1), pytest.raises(RuntimeError, match="injected"):
+                compact(spark, t, target_bytes=COMPACT_TARGET, job_id="cj")
     assert bool(ids) == crash_forced  # the crash ran its unit on its placement
     assert lineage.completed_units(t.root, "cj", "compact") == {0}
     assert lineage.committed_snapshot(t.root, "cj") is None

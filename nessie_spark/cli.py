@@ -129,27 +129,7 @@ def main(argv: list[str] | None = None) -> int:
                     "table"
                 )
             t = Table.load(args.table)
-            if args.small_files:
-                from nessie_spark.lakehouse.partition import table_spec
-
-                if table_spec(t):
-                    raise SystemExit(
-                        "--small-files cannot append to a hidden-partitioned "
-                        "table (the fixture layout ignores the spec and "
-                        "writes value-spanning files); append without "
-                        "--small-files"
-                    )
         else:
-            if args.partition_by and args.small_files:
-                # the lognormal fixture writes through file_boundaries,
-                # which ignores the spec — the user would get a "partitioned"
-                # table whose files span values and never prune
-                raise SystemExit(
-                    "--partition-by cannot be combined with --small-files "
-                    "(the small-file fixture layout is deliberately "
-                    "unpartitioned); create the table partitioned and "
-                    "append without --small-files"
-                )
             props: dict = {}
             if args.sort_order:
                 props["write.sort-order"] = args.sort_order

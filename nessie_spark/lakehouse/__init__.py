@@ -3,7 +3,7 @@
 Modules:
 - ``kernels``  vectorized pixel codecs/metrics (decode, encode, phash, PSNR)
 - ``table``    table metadata: snapshots, manifests, atomic commits
-- ``writer``   distributed data-file writer (mapInArrow / applyInPandas)
+- ``writer``   the one Arrow slice writer (driver, mapInArrow, applyInArrow)
 - ``scan``     snapshot-pinned scan with manifest-stats file pruning
 - ``compact``  FFD bin-packing small-file compaction (resumable)
 - ``zorder``   Z-order (Morton) / Hilbert clustering rewrite

@@ -10,9 +10,13 @@ An append writes its rows with the engine's one Arrow slice writer
   ``file_boundaries`` layout is asked for and no write sort order applies.
   The rows are already in the driver, ``collect()`` on them starts no
   Spark job, and the append writes one file per hidden-partition value.
-- **in Spark tasks** otherwise: one file per Spark partition, and only
-  the per-file stats rows (manifest entries) travel to the driver for the
+- **in Spark tasks** otherwise: one file per Spark partition, or, under
+  ``file_boundaries``, one ``applyInArrow`` group per file id. Only the
+  per-file stats rows (manifest entries) travel to the driver for the
   atomic commit — O(#files), never O(#rows).
+
+Every path splits its rows by the table's partition spec, so no data file
+spans partition values, and every path writes the table's evolved columns.
 """
 
 from __future__ import annotations
@@ -29,15 +33,9 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from nessie_spark.lakehouse import lineage
 from nessie_spark.lakehouse.partition import PVAL_COL, stamp_pval, table_spec
 from nessie_spark.lakehouse.scan import IMAGES_DDL
-from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA, Table
-from nessie_spark.lakehouse.writer import (
-    DATA_COLUMNS,
-    collect_grouped_stats,
-    ddl_columns,
-    write_grouped_files,
-    write_partition_files,
-    write_slices,
-)
+from nessie_spark.lakehouse.table import FILE_ENTRY_DDL, FILE_ENTRY_SCHEMA, Table
+from nessie_spark.lakehouse.writer import ddl_columns, write_partition_files, write_slices
+from nessie_spark.session import no_coalesce
 
 
 def create_images_table(root: str, properties: dict | None = None) -> Table:
@@ -61,7 +59,6 @@ def append(
     df: DataFrame,
     job_id: str | None = None,
     file_boundaries: list[int] | None = None,
-    id_col: str = "image_id",
     sort_order: str | None = None,
     stage_only: bool = False,
     to_ref: str | None = None,
@@ -73,9 +70,9 @@ def append(
     ``scan.on_driver``'s byte limit, with no transformation on top) with no
     ``file_boundaries`` and no sort order is written on the driver, one
     file per hidden-partition value, without a Spark job. Any other input
-    is written by Spark tasks, one file per partition. Both take the same
-    guards, stats, commit and lineage unit; ``.repartition(n)`` on a local
-    frame asks for the Spark layout explicitly.
+    is written by Spark tasks, one file per partition. All paths take the
+    same guards, stats, commit and lineage unit; ``.repartition(n)`` on a
+    local frame asks for the Spark layout explicitly.
 
     ``stage_only``: write-audit-publish staging — the appended files and
     snapshot are durable but the current pointer does not move until
@@ -84,7 +81,10 @@ def append(
     ``file_boundaries``: optional cumulative row-index boundaries producing an
     exact many-small-files layout (compaction fixture). Row → file assignment
     is a vectorized searchsorted over the numeric suffix of ``image_id`` —
-    deterministic, shuffle = one hash partitioning by file_id.
+    deterministic, shuffle = one hash partitioning by file_id. Each file id
+    is one ``applyInArrow`` group, written by ``write_slices`` in its task as
+    ``data/{job_id}-append-gNNNNN.parquet``; on a partitioned table a group
+    that spans k values becomes k files, ``...-gNNNNN-0`` to ``-{k-1}``.
 
     ``sort_order`` (or the table property ``write.sort-order``, values
     ``zorder``/``morton``/``hilbert``): Iceberg's write-time sort order —
@@ -112,15 +112,6 @@ def append(
     spec = table_spec(table)
     order = sort_order or (table.meta.get("properties") or {}).get("write.sort-order")
     if file_boundaries is not None:
-        evolved_in_df = [c for c in df.columns if c in table_cols and c not in DATA_COLUMNS]
-        if evolved_in_df:
-            # write_grouped_files is the fixed-layout fixture writer (base
-            # Arrow schema); silently dropping evolved columns would be the
-            # exact data loss the merge guard forbids
-            raise ValueError(
-                f"file_boundaries layout does not support evolved columns "
-                f"{evolved_in_df}; append without boundaries"
-            )
         import numpy as np
 
         bounds = np.asarray(file_boundaries, dtype=np.int64)
@@ -130,9 +121,26 @@ def append(
             idx = image_id.str.slice(4).astype("int64").to_numpy()
             return pd.Series(np.searchsorted(bounds, idx, side="right").astype("int32"))
 
-        dfg = df.withColumn("file_id", file_id_of(df[id_col]))
-        stats = write_grouped_files(dfg, table.root, job_id, "append")
-        entries = collect_grouped_stats(spark, stats)
+        root = table.root
+
+        # no type hints: applyInArrow infers its eval type from them, and a
+        # partial hint fails that inference (as in plans/ffd._pack)
+        def _write_group(key, tbl):
+            return pa.Table.from_pylist(
+                write_slices(
+                    tbl, root, f"{job_id}-append-g{key[0].as_py():05d}",
+                    spec=spec, columns=table_cols,
+                ),
+                schema=FILE_ENTRY_SCHEMA,
+            )
+
+        with no_coalesce(spark):
+            entries = (
+                df.withColumn("file_id", file_id_of(df["image_id"]))
+                .groupBy("file_id")
+                .applyInArrow(_write_group, FILE_ENTRY_DDL)
+                .toArrow()
+            )
     elif not order and df.isLocal():
         entries = pa.Table.from_pylist(
             write_slices(
@@ -165,7 +173,7 @@ def append(
             # while spreading big values over many tasks; the writer splits
             # the few boundary tasks per value.
             df = stamp_pval(df, spec)
-            range_cols = [F.col(PVAL_COL)] + (range_cols or [F.col(id_col)])
+            range_cols = [F.col(PVAL_COL)] + (range_cols or [F.col("image_id")])
         if range_cols:
             df = df.repartitionByRange(n_parts, *range_cols).sortWithinPartitions(
                 *range_cols

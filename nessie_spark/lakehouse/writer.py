@@ -3,7 +3,7 @@ driver.
 
 ``write_slices`` writes an Arrow table as parquet data files with pyarrow,
 one file per hidden-partition value, and returns one manifest-entry stats
-row per file. It has three callers:
+row per file. It has four callers:
 
 - ``write_partition_files``: one file per Spark partition, written *inside*
   the task (``mapInArrow`` — Arrow batches end-to-end, no row-at-a-time
@@ -11,11 +11,13 @@ row per file. It has three callers:
 - the ``format("nessie")`` sink's task writer (sources/spark_datasource.py).
 - ``jobs.append`` for a local DataFrame (``df.isLocal()``): the rows are
   already on the driver, so the driver writes them and no Spark job runs.
+- ``jobs.append`` with ``file_boundaries`` (the small-file fixture): one
+  ``applyInArrow`` group per file id, written inside the task.
 
 Determinism/resumability: the engine's file names are pure functions of
-``(job_id, phase, partition_id)`` and writes go to a temp name + atomic
-``os.replace`` — task retries and job re-runs land byte-stable on the same
-paths (pairs with lineage.py skip logic).
+``(job_id, phase, partition or group id)`` and writes go to a temp name +
+atomic ``os.replace`` — task retries and job re-runs land byte-stable on
+the same paths (pairs with lineage.py skip logic).
 
 Scale note: on a real cluster ``table_root`` is an object-store URI and the
 ``os``-level rename swaps for a conditional PUT; the Spark topology
@@ -36,24 +38,11 @@ from pyspark.sql import DataFrame
 
 from nessie_spark.lakehouse.bloom import bloom_from_keys
 from nessie_spark.lakehouse.partition import PVAL_COL, row_values
+from nessie_spark.lakehouse.scan import IMAGES_DDL
 from nessie_spark.lakehouse import kernels as _kernels_preload  # noqa: F401
 # Module-level so the per-worker writer preload (bench warm-up) also pulls
 # in the image codec stack (kernels -> jpegvec LUTs) outside any timed task.
 from nessie_spark.lakehouse.table import FILE_ENTRY_DDL, FILE_ENTRY_SCHEMA
-
-DATA_COLUMNS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
-
-IMAGES_ARROW = pa.schema(
-    [
-        ("image_id", pa.string()),
-        ("bytes", pa.binary()),
-        ("w", pa.int32()),
-        ("h", pa.int32()),
-        ("fmt", pa.string()),
-        ("caption", pa.string()),
-        ("phash", pa.int64()),
-    ]
-)
 
 # Spark-DDL ↔ Arrow type map for the evolvable column types (schema
 # evolution is add-column-only; see lakehouse/evolve.py)
@@ -82,6 +71,10 @@ def arrow_schema_from_ddl(ddl: str) -> pa.Schema:
             raise ValueError(f"unsupported column type {typ!r} in table DDL")
         fields.append((name, _DDL_ARROW[typ.lower()]))
     return pa.schema(fields)
+
+
+IMAGES_ARROW = arrow_schema_from_ddl(IMAGES_DDL)
+DATA_COLUMNS = ddl_columns(IMAGES_DDL)
 
 
 def align_to_schema(tbl: pa.Table, schema: pa.Schema) -> pa.Table:
@@ -195,20 +188,18 @@ def write_slices(
 
 def write_partition_files(
     df: DataFrame, table_root: str, job_id: str, phase: str,
-    data_columns: list[str] | None = None,
+    data_columns: list[str],
 ) -> DataFrame:
     """Write each partition of ``df`` as one data file; return stats DF.
 
     ``df`` must carry the images schema (optionally plus ``zkey``, which is
     recorded in stats but dropped from the data file, and the stamped
-    hidden-partition value). ``data_columns`` overrides the written column
-    set for evolved tables (columns absent from ``df`` are simply not
-    written; readers NULL-backfill). The appends and MERGE INTO that write
-    through here move rows as they are; pixel work happens in the rewrite
-    units of compaction and Z-order clustering.
+    hidden-partition value). ``data_columns`` is the table's written column
+    set (columns absent from ``df`` are simply not written; readers
+    NULL-backfill). The appends and MERGE INTO that write through here move
+    rows as they are; pixel work happens in the rewrite units of compaction
+    and Z-order clustering.
     """
-    cols = data_columns or DATA_COLUMNS
-
     def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pid = TaskContext.get().partitionId()
         rows = list(batches)
@@ -219,43 +210,9 @@ def write_partition_files(
         # is a no-op; boundary tasks split into one file per value
         entries = write_slices(
             pa.Table.from_batches(rows), table_root,
-            f"{job_id}-{phase}-p{pid:05d}", columns=cols,
+            f"{job_id}-{phase}-p{pid:05d}", columns=data_columns,
         )
         if entries:
             yield pa.RecordBatch.from_pylist(entries, schema=FILE_ENTRY_SCHEMA)
 
     return df.mapInArrow(_write, FILE_ENTRY_DDL)
-
-
-def write_grouped_files(
-    df: DataFrame, table_root: str, job_id: str, phase: str, group_col: str = "file_id"
-) -> DataFrame:
-    """Write exactly one data file per distinct ``group_col`` value.
-
-    Used for controlled physical layouts (the deliberately-small-file
-    fixture, FIXTURES.md §1.1) where file↔rows assignment must be exact —
-    ``groupBy().applyInPandas`` guarantees one group per file regardless of
-    hash collisions. Group size is bounded by the layout (≤ target file
-    size), so the pandas materialization is safe.
-    """
-    import pandas as pd
-
-    def _write(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        gid = int(key[0])
-        tbl = pa.Table.from_pandas(
-            pdf[DATA_COLUMNS], schema=IMAGES_ARROW, preserve_index=False
-        )
-        rel = f"data/{job_id}-{phase}-g{gid:05d}.parquet"
-        size = write_table_file(tbl, os.path.join(table_root, rel))
-        return pd.DataFrame([stats_entry_for(tbl, rel, size)])
-
-    return df.groupBy(group_col).applyInPandas(_write, FILE_ENTRY_DDL)
-
-
-def collect_grouped_stats(spark, grouped_writer_df: DataFrame):
-    """Run a grouped writer with AQE coalescing pinned off (tiny shuffle
-    rows, heavy per-group work — see session.no_coalesce)."""
-    from nessie_spark.session import no_coalesce
-
-    with no_coalesce(spark):
-        return grouped_writer_df.toArrow()

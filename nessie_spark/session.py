@@ -89,11 +89,12 @@ import contextlib
 def no_coalesce(spark: SparkSession):
     """Disable AQE shuffle-partition coalescing for the enclosed action.
 
-    Grouped-map maintenance jobs (one applyInPandas group per file/bin) carry
-    tiny *plan* rows through the shuffle while the real work (reading/writing
-    image bytes) happens inside the task. AQE sizes partitions by shuffle
-    bytes, sees a few KB, and coalesces the whole stage into one task —
-    serializing the job. Around these actions we pin the partitioning.
+    Jobs whose tasks do heavy work per shuffle partition (the small-file
+    fixture append, one ``applyInArrow`` group per data file; the manifest
+    rewrite, one ``mapInArrow`` task per manifest) would lose their
+    parallelism to AQE: it merges shuffle partitions up to its advisory
+    size (64 MB by default), so a stage of a few MB becomes one task and
+    the job runs serially. Around these actions we pin the partitioning.
     """
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     old = spark.conf.get(key)

@@ -5,7 +5,8 @@
 with no Spark job; ``.repartition(2)`` on the same frame makes it
 non-local and sends it through the ``mapInArrow`` task writer. Both must
 commit the same rows under the same schema, with stats that bound each
-file's rows. Also here: the append commit that opens no manifest.
+file's rows. Also here: the ``file_boundaries`` (small-file fixture)
+append, and the append commit that opens no manifest.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from nessie_spark.lakehouse.bloom import bloom_might_contain
 from nessie_spark.lakehouse.scan import scan
 from nessie_spark.lakehouse.table import Table
 from nessie_spark.lakehouse.writer import arrow_schema_from_ddl
-from tests.conftest import on_spark, spark_jobs
+from tests.conftest import SMOKE_N, on_spark, spark_jobs
 
 SPEC = [
     {"source": "fmt", "transform": "identity"},
@@ -129,6 +130,46 @@ def test_evolved_table_column_present_and_absent(spark, tmp_path):
         assert _rows(spark, pair[0]) == (rows, schema)
     for t in pair:
         _check_stats(t)
+
+
+def test_file_boundaries_append_writes_evolved_columns(spark, tmp_path):
+    """The small-file layout writes the table's evolved columns and reads
+    back the same rows as the driver append of the same frame."""
+    pair = _pair(tmp_path, score=True)
+    df = _batch(spark, 0, 20, score=True)
+    jobs.append(spark, pair[0], df, job_id="a")
+    jobs.append(spark, pair[1], df, job_id="a", file_boundaries=[5, 12, 20])
+    rows, schema = _rows(spark, pair[1])
+    assert (rows, schema) == _rows(spark, pair[0])
+    assert {r[0]: r[-1] for r in rows}[synth.row_for(7, 3)["image_id"]] == 1.5
+    assert sorted(_data_files(pair[1])) == [
+        f"a-append-g{k:05d}.parquet" for k in range(3)
+    ]
+    for f in _data_files(pair[1]):
+        tbl = pq.read_table(os.path.join(pair[1].root, "data", f))
+        assert tbl.schema.names[-1] == "score"
+    _check_stats(pair[1])
+
+
+def test_small_file_fixture_layout_golden(table_small):
+    """``conftest.make_table``: file gNNNNN holds exactly the rows
+    ``[bounds[k-1], bounds[k])`` of ``synth.lognormal_file_boundaries``."""
+    t, snap = table_small
+    bounds = synth.lognormal_file_boundaries(SMOKE_N, seed=42, mean_rows=24)
+    want = {
+        f"data/ingest-append-g{k:05d}.parquet": [
+            synth.row_for(42, i)["image_id"] for i in range(lo, hi)
+        ]
+        for k, (lo, hi) in enumerate(zip([0] + bounds[:-1], bounds))
+    }
+    got = {}
+    for e in t.file_entries(snapshot_id=snap).to_pylist():
+        got[e["file_path"]] = sorted(
+            pq.read_table(os.path.join(t.root, e["file_path"]), columns=["image_id"])
+            .column("image_id").to_pylist()
+        )
+        assert e["partition"] == ""
+    assert got == want
 
 
 def test_partition_spec_one_file_per_value(spark, tmp_path):

@@ -90,6 +90,30 @@ def test_partition_pruning_drops_files_and_keeps_rows(spark, tmp_path):
     )
 
 
+def test_file_boundaries_append_keeps_the_spec(spark, tmp_path):
+    """The small-file fixture layout on a spec'd table: a group of rows
+    that spans values is one file per value, every entry names its value,
+    and ``source_eq`` plans only the matching files."""
+    t = jobs.create_images_table(
+        str(tmp_path / "tb"), properties={"partition-spec": FMT_SPEC}
+    )
+    df = synth.images_df(spark, 120, seed=7)
+    jobs.append(spark, t, df, job_id="ingest", file_boundaries=list(range(12, 121, 12)))
+    t = t.refresh()
+    ents = t.file_entries(columns=["file_path", "partition"]).to_pylist()
+    assert len(ents) > 10  # some of the 10 groups held both formats
+    for e in ents:
+        assert e["partition"] in ("fmt=png", "fmt=jpeg")
+        assert _file_fmts(t, e["file_path"]) == {e["partition"][len("fmt="):]}
+    png = sorted(e["file_path"] for e in ents if e["partition"] == "fmt=png")
+    pruned = plan_files(t, source_eq={"fmt": "png"}, spark=spark)
+    assert sorted(e["file_path"] for e in pruned) == png
+    assert 0 < len(png) < len(ents)
+    assert scan(spark, t).count() == 120
+    got = scan(spark, t, source_eq={"fmt": "png"}).count()
+    assert got == df.where("fmt = 'png'").count()
+
+
 def test_bucket_transform_spark_python_twins_agree(spark, tmp_path):
     spec = [{"source": "phash", "transform": "bucket", "n": 8}]
     t, df = _make(spark, str(tmp_path / "tb"), spec)

@@ -4,15 +4,17 @@ Plan (on file *stats* only): files below ``target_bytes`` →
 first-fit-decreasing bins (plans/ffd.py), on the driver or, when
 ``scan.on_driver`` refuses the manifest entry count, as executor-side
 sharded FFD (``ffd_pack_distributed``). Execute: one work unit per bin
-reads its input parquet files with pyarrow, concatenates Arrow tables
-(zero shuffle of image bytes — compaction is a file-local operation by
-design, which is why it scales linearly with executors), optionally
-re-encodes/verifies pixels via the batch kernels, writes one output file,
-and records its lineage unit. The units run where ``scan._map_units``
-puts them: in the driver process, one after another, when no pixel is
-touched and ``scan.on_driver`` accepts the input files; otherwise one
-Spark task per bin. Pixel work always runs as Spark tasks. Commit swaps
-the packed inputs for the bin outputs in one atomic snapshot.
+reads its input files with the scan's pyarrow reader
+(``scan._read_partition_table``, by field id onto the current schema),
+concatenates Arrow tables (zero shuffle of image bytes — compaction is a
+file-local operation by design, which is why it scales linearly with
+executors), optionally re-encodes/verifies pixels via the batch kernels,
+writes one output file, and records its lineage unit. The units run
+where ``scan._map_units`` puts them: in the driver process, one after
+another, when no pixel is touched and ``scan.on_driver`` accepts the
+input files; otherwise one Spark task per bin. Pixel work always runs as
+Spark tasks. Commit swaps the packed inputs for the bin outputs in one
+atomic snapshot.
 
 Resumability (FIXTURES.md §6): bins already present in the lineage phase
 dir are skipped; output names are deterministic per (job_id, bin), so a
@@ -27,7 +29,6 @@ import uuid
 from dataclasses import dataclass
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 
 from pyspark.sql import SparkSession
 
@@ -38,6 +39,9 @@ from nessie_spark.lakehouse.writer import stats_entry_for, write_table_file
 from nessie_spark.plans.ffd import ffd_histogram, ffd_pack
 
 DEFAULT_TARGET = 8 * 1024 * 1024
+# manifest columns of a bin's input entries: sizes for the placement rule,
+# snapshot and schema ids for the field-id projection of the read
+INPUT_COLUMNS = ["file_path", "file_size_bytes", "added_snapshot_id", "schema_id"]
 
 
 @dataclass
@@ -97,10 +101,8 @@ def compact(
         bin_parts = [str(x) for x in planned.get("parts", [""] * len(bin_paths))]
         hist = {int(k): v for k, v in planned["hist"].items()}
         live = {
-            e["file_path"]: e["file_size_bytes"]
-            for e in table.file_entries(
-                columns=["file_path", "file_size_bytes"]
-            ).to_pylist()
+            e["file_path"]: e
+            for e in table.file_entries(columns=INPUT_COLUMNS).to_pylist()
         }
         gone = sorted({p for b in bin_paths for p in b} - live.keys())
         if gone:
@@ -168,9 +170,7 @@ def compact(
                     bin_parts.append(pval)
         fdf.unpersist()
     else:
-        entries = table.file_entries(
-            columns=["file_path", "file_size_bytes", "partition"]
-        ).to_pylist()
+        entries = table.file_entries(columns=[*INPUT_COLUMNS, "partition"]).to_pylist()
         small = [e for e in entries if e["file_size_bytes"] < target_bytes]
         hist = ffd_histogram([e["file_size_bytes"] for e in small], target_bytes)
         if len(small) < min_input_files:
@@ -196,15 +196,17 @@ def compact(
         {"bins": bin_paths, "parts": bin_parts,
          "hist": {str(k): v for k, v in hist.items()}},
     )
-    # the distributed planner never brings the input sizes to the driver,
-    # so its bins run as Spark tasks
-    sizes = (
-        None if use_dist
-        else {e["file_path"]: e["file_size_bytes"] for e in small}
-    )
+    if use_dist:
+        # the bins' inputs, for the reader's field-id projection: one
+        # column-pruned read, no larger than the plan's own path list
+        inputs = {p for b in bin_paths for p in b}
+        small = [
+            e for e in table.file_entries(columns=INPUT_COLUMNS).to_pylist()
+            if e["file_path"] in inputs
+        ]
     return _execute_bins(
         spark, table, job_id, bin_paths, bin_parts, hist, reencode,
-        verify_psnr, sizes,
+        verify_psnr, {e["file_path"]: e for e in small},
     )
 
 
@@ -217,141 +219,91 @@ def _execute_bins(
     hist: dict,
     reencode: bool,
     verify_psnr: bool,
-    sizes: dict[str, int] | None,
+    by_path: dict[str, dict],
 ) -> CompactionResult:
     """Rewrite the planned bins (resume-safe: completed units skipped by
     index into the PINNED plan) and commit. ``bin_parts[i]`` is bin i's
     hidden-partition value, stamped onto its output entry ("" =
-    unpartitioned). ``sizes``: bytes per input file, for the placement
-    rule; None runs the bins as Spark tasks."""
-    from nessie_spark.lakehouse.scan import _map_units, on_driver
+    unpartitioned). ``by_path``: the inputs' manifest entries
+    (INPUT_COLUMNS), for the placement rule and the reader."""
+    from nessie_spark.lakehouse.scan import (
+        _map_units,
+        _read_partition_table,
+        _unit_inputs,
+        on_driver,
+    )
 
     root = table.root
     inputs = [p for paths in bin_paths for p in paths]
-    driver = (
-        sizes is not None
-        and not (reencode or verify_psnr)
-        and on_driver(
-            spark, entries=len(inputs), nbytes=sum(sizes[p] for p in inputs)
-        )
+    driver = not (reencode or verify_psnr) and on_driver(
+        spark, entries=len(inputs),
+        nbytes=sum(by_path[p]["file_size_bytes"] for p in inputs),
     )
     done = lineage.completed_units(root, job_id, "compact")
-    todo = [
-        (i, paths, bin_parts[i])
-        for i, paths in enumerate(bin_paths)
-        if i not in done
-    ]
+    todo_ids = [i for i in range(len(bin_paths)) if i not in done]
+    # every input is read by field id onto the CURRENT schema before the
+    # concat: files from before an add-column are NULL-padded and files
+    # from before a rename/drop are read under the current names, so
+    # compaction normalizes old files and amortizes evolution debt to zero
+    todo = list(zip(
+        todo_ids,
+        _unit_inputs(table, by_path, [bin_paths[i] for i in todo_ids]),
+        [bin_parts[i] for i in todo_ids],
+    ))
 
-    if todo:
-        from nessie_spark.lakehouse.scan import IMAGES_DDL
-        from nessie_spark.lakehouse.writer import (
-            _DDL_ARROW,
-            align_to_schema,
-            arrow_schema_from_ddl,
-        )
-
-        # Align every input to the CURRENT table schema before concat:
-        # pre-evolution files are NULL-padded, so bins mixing files written
-        # under different schema versions stay well-formed (add-column
-        # evolution is metadata-only; this is where readers reconcile).
-        # Files written before a RENAME/DROP first remap by field id
-        # (fields.live_projection_maps — {} unless evolution history makes
-        # a name-read unsafe); compaction thereby NORMALIZES old files to
-        # the current names, amortizing evolution debt to zero.
-        from nessie_spark.lakehouse.fields import live_projection_maps, remap_arrow
-
-        aschema = arrow_schema_from_ddl(table.meta.get("schema", IMAGES_DDL))
-        remaps = live_projection_maps(
-            table, paths=[p for _, paths, _ in todo for p in paths]
-        )
-
-        def _rewrite_unit(unit: tuple) -> dict:
-            bin_id = int(unit[0])
-            paths = list(unit[1])
-
-            def _read(p: str) -> pa.Table:
-                t = pq.read_table(os.path.join(root, p))
-                rm = remaps.get(p)
-                return remap_arrow(t, rm, _DDL_ARROW) if rm else t
-
-            tbl = pa.concat_tables(
-                [align_to_schema(_read(p), aschema) for p in paths]
+    def _rewrite_unit(unit: tuple) -> dict:
+        bin_id, parts = int(unit[0]), list(unit[1])
+        paths = [p.rel_path for p in parts]
+        tbl = pa.concat_tables([_read_partition_table(p, mor=False) for p in parts])
+        metrics: dict[str, float] = {"input_files": float(len(paths))}
+        if reencode:
+            new_bytes, mn = K.reencode_verify(
+                tbl.column("bytes").to_pylist(), tbl.column("fmt").to_pylist()
             )
-            metrics: dict[str, float] = {"input_files": float(len(paths))}
-            if reencode:
-                new_bytes, mn = K.reencode_verify(
-                    tbl.column("bytes").to_pylist(), tbl.column("fmt").to_pylist()
-                )
-                tbl = tbl.set_column(
-                    tbl.schema.get_field_index("bytes"), "bytes",
-                    pa.array(new_bytes, pa.binary()),
-                )
-                metrics["min_psnr"] = mn
-            elif verify_psnr:
-                mn = 99.0
-                fmts = tbl.column("fmt").to_pylist()
-                for data, fmt in zip(tbl.column("bytes").to_pylist(), fmts):
-                    px = K.decode(bytes(data), fmt)
-                    if fmt == "jpeg":
-                        mn = min(mn, K.psnr(px, K.decode(K.encode(px, fmt), fmt)))
-                metrics["min_psnr"] = mn
-            rel = f"data/{job_id}-compact-b{bin_id:05d}.parquet"
-            size = write_table_file(tbl, os.path.join(root, rel))
-            entry = stats_entry_for(tbl, rel, size, partition=str(unit[2]))
-            lineage.write_unit(
-                root, job_id, "compact", bin_id,
-                input_files=paths, output_files=[rel],
-                rows=tbl.num_rows, nbytes=size, metrics=metrics,
+            tbl = tbl.set_column(
+                tbl.schema.get_field_index("bytes"), "bytes",
+                pa.array(new_bytes, pa.binary()),
             )
-            return entry
-
-        # On Spark, one bin per task, placed POSITIONALLY: parallelize(bins,
-        # len(bins)) splits the unit list 1:1 onto partitions. The earlier
-        # groupBy(bin_id).applyInPandas shape hash-partitioned ~200 bin keys
-        # into ~200 partitions, where birthday collisions stack 2-4 bins in
-        # one task — a straggler tail that costs scaling efficiency exactly
-        # when waves are few (4N-core runs). Only tiny plan tuples cross the
-        # driver→task boundary; image bytes stay in pyarrow inside the task.
-        fresh_stats = _map_units(spark, _rewrite_unit, todo, driver)
-    else:
-        fresh_stats = None
-
-    # gather all units (including ones done before a crash) from lineage
-    units = lineage.read_phase(root, job_id, "compact").to_pylist()
-    deleted = {p for u in units for p in u["input_files"]}
-    out_paths = [p for u in units for p in u["output_files"]]
-    part_of = {
-        p: bin_parts[u["partition_id"]] if u["partition_id"] < len(bin_parts) else ""
-        for u in units
-        for p in u["output_files"]
-    }
-    # manifest entries: reuse the stats returned by the rewrite tasks; only
-    # units completed before a crash (resume path) are re-read — with column
-    # pruning, so pixel bytes never reach the driver
-    added_entries = list(fresh_stats) if fresh_stats is not None else []
-    have = {e["file_path"] for e in added_entries}
-    for p in out_paths:
-        if p in have:
-            continue
-        tbl = pq.read_table(
-            os.path.join(root, p), columns=["image_id", "w", "h", "phash"]
+            metrics["min_psnr"] = mn
+        elif verify_psnr:
+            mn = 99.0
+            fmts = tbl.column("fmt").to_pylist()
+            for data, fmt in zip(tbl.column("bytes").to_pylist(), fmts):
+                px = K.decode(bytes(data), fmt)
+                if fmt == "jpeg":
+                    mn = min(mn, K.psnr(px, K.decode(K.encode(px, fmt), fmt)))
+            metrics["min_psnr"] = mn
+        rel = f"data/{job_id}-compact-b{bin_id:05d}.parquet"
+        size = write_table_file(tbl, os.path.join(root, rel))
+        entry = stats_entry_for(tbl, rel, size, partition=str(unit[2]))
+        lineage.write_unit(
+            root, job_id, "compact", bin_id,
+            input_files=paths, output_files=[rel],
+            rows=tbl.num_rows, nbytes=size, metrics=metrics,
         )
-        added_entries.append(
-            stats_entry_for(
-                tbl, p, os.path.getsize(os.path.join(root, p)),
-                partition=part_of.get(p, ""),
-            )
-        )
-    added = pa.Table.from_pylist(added_entries) if added_entries else None
+        return entry
 
+    # On Spark, one bin per task, placed POSITIONALLY: parallelize(bins,
+    # len(bins)) splits the unit list 1:1 onto partitions. The earlier
+    # groupBy(bin_id).applyInPandas shape hash-partitioned ~200 bin keys
+    # into ~200 partitions, where birthday collisions stack 2-4 bins in
+    # one task — a straggler tail that costs scaling efficiency exactly
+    # when waves are few (4N-core runs). Only tiny plan tuples cross the
+    # driver→task boundary; image bytes stay in pyarrow inside the task.
+    fresh = _map_units(spark, _rewrite_unit, todo, driver)
+    # all units' outputs, including ones done before a crash
+    added = lineage.output_entries(
+        root, job_id, "compact", fresh, lambda i: bin_parts[i]
+    )
     snap = table.commit(
         "compact",
         added=added,
-        deleted_paths=deleted,
+        deleted_paths=set(inputs),
         summary={"job_id": job_id, "bins": len(bin_paths)},
     )
     lineage.mark_committed(root, job_id, snap)
-    rows = sum(u["rows"] for u in units)
+    rows = sum(added.column("record_count").to_pylist())
     return CompactionResult(
-        snap, job_id, len(bin_paths), len(todo), len(deleted), len(out_paths), rows, hist
+        snap, job_id, len(bin_paths), len(todo), len(set(inputs)), added.num_rows,
+        rows, hist,
     )

@@ -11,7 +11,11 @@ over a 100 TB table costs O(matched keys), not O(matched bytes).
 ``rewrite_data_files``-with-deletes): a copy-on-write rewrite of ONLY the
 files that can contain a deleted key (stats-pruned via the same
 range-bucketed interval join MERGE uses), after which the table carries no
-delete files and every maintenance rewrite runs unencumbered.
+delete files and every maintenance rewrite runs unencumbered. Each
+candidate file is one rewrite unit: it is read by the scan's own pyarrow
+merge-on-read reader (``scan._read_partition_table``), and the units run
+on the driver or as Spark tasks by the engine's one placement rule
+(``scan._map_units``), like compaction bins.
 
 Applicability rule (Iceberg sequence-number semantics, expressed with
 snapshot ids — this table allocates ids monotonically along any chain): a
@@ -36,7 +40,6 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +53,17 @@ DELETE_KEY_DDL = "image_id string"
 POS_DELETE_DDL = "file_path string, pos long"
 # keys per delete file: 4M string keys ≈ 60-120 MB parquet — one task each
 KEYS_PER_FILE = 4_000_000
+# the manifest fields of one delete file (plus ``kind="pos"`` on a
+# position delete); for a position delete min/max_key bound target paths
+DELETE_FILE_DDL = (
+    "file_path string, n_keys long, min_key string, max_key string, "
+    "file_size_bytes long"
+)
+DELETE_FILE_SCHEMA = pa.schema([
+    ("file_path", pa.string()), ("n_keys", pa.int64()),
+    ("min_key", pa.string()), ("max_key", pa.string()),
+    ("file_size_bytes", pa.int64()),
+])
 # scan-side anti-join broadcasts the key set below this total (metadata sum)
 BROADCAST_KEYS_MAX = 4_000_000
 
@@ -153,7 +167,7 @@ def delete_where(
     # once — keys here are exactly the rows a reader of the parent snapshot
     # would see matching the predicate
     keys = scan(spark, table).where(cond).select("image_id").distinct()
-    return _commit_delete_keys(spark, table, keys, job_id, keys_per_file)
+    return _commit_delete_files(table, keys, job_id, keys_per_file, pos=False)
 
 
 def delete_keys(
@@ -183,74 +197,74 @@ def delete_keys(
     keys = (
         keys.select("image_id").distinct().join(visible, "image_id", "left_semi")
     )
-    return _commit_delete_keys(spark, table, keys, job_id, keys_per_file)
+    return _commit_delete_files(table, keys, job_id, keys_per_file, pos=False)
 
 
-def _commit_delete_keys(
-    spark: SparkSession,
-    table: Table,
-    keys: DataFrame,
-    job_id: str,
-    keys_per_file: int,
+def _commit_delete_files(
+    table: Table, rows: DataFrame, job_id: str, rows_per_file: int, pos: bool
 ) -> DeleteResult:
+    """Write ``rows`` as merge-on-read delete files and commit them in one
+    ``delete`` snapshot: equality deletes (``image_id`` keys) or, with
+    ``pos``, position deletes (``file_path``, ``pos`` pairs). Rows are
+    range-partitioned and sorted on those columns, so each file's
+    min_key/max_key — over the key, or over the TARGET data-file path of
+    a position delete, which readers and purge prune on — bound it
+    exactly. One task writes each file."""
     root = table.root
-    n_keys = keys.count()
-    if n_keys == 0:
+    n_rows = rows.count()
+    if n_rows == 0:
         return DeleteResult(None, job_id, 0, 0)
-    n_files = max(1, -(-n_keys // keys_per_file))
+    n_files = max(1, -(-n_rows // rows_per_file))
+    tag, cols = ("posdel", ["file_path", "pos"]) if pos else ("eqdel", ["image_id"])
 
     def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        rows = [b for b in batches]
-        if not rows:
+        got = list(batches)
+        if not got:
             return
-        tbl = pa.Table.from_batches(rows)
+        tbl = pa.Table.from_batches(got)
         if tbl.num_rows == 0:
             return
-        rel = f"data/{job_id}-eqdel-p{pid:05d}.parquet"
+        rel = f"data/{job_id}-{tag}-p{pid:05d}.parquet"
         size = write_table_file(tbl, os.path.join(root, rel))
         yield pa.RecordBatch.from_pylist(
             [{
                 "file_path": rel,
                 "n_keys": tbl.num_rows,
-                "min_key": pc.min(tbl.column("image_id")).as_py(),
-                "max_key": pc.max(tbl.column("image_id")).as_py(),
+                "min_key": pc.min(tbl.column(cols[0])).as_py(),
+                "max_key": pc.max(tbl.column(cols[0])).as_py(),
                 "file_size_bytes": size,
             }],
-            schema=pa.schema([
-                ("file_path", pa.string()), ("n_keys", pa.int64()),
-                ("min_key", pa.string()), ("max_key", pa.string()),
-                ("file_size_bytes", pa.int64()),
-            ]),
+            schema=DELETE_FILE_SCHEMA,
         )
 
     stats = (
-        keys.repartitionByRange(n_files, "image_id")
-        .sortWithinPartitions("image_id")
-        .mapInArrow(
-            _write,
-            "file_path string, n_keys long, min_key string, max_key string, "
-            "file_size_bytes long",
-        )
+        rows.repartitionByRange(n_files, *cols)
+        .sortWithinPartitions(*cols)
+        .mapInArrow(_write, DELETE_FILE_DDL)
         .collect()
     )
-    new_entries = [r.asDict() for r in stats]
-
+    new_entries = [
+        dict(r.asDict(), kind="pos") if pos else r.asDict() for r in stats
+    ]
     lineage.write_unit(
         root, job_id, "delete", 0,
         input_files=[], output_files=[e["file_path"] for e in new_entries],
-        rows=n_keys,
+        rows=n_rows,
         nbytes=int(sum(e["file_size_bytes"] for e in new_entries)),
     )
     snap = table.commit(
         "delete",
-        summary={"job_id": job_id, "deleted_keys": n_keys},
+        summary={
+            "job_id": job_id,
+            ("deleted_positions" if pos else "deleted_keys"): n_rows,
+        },
         new_delete_entries=new_entries,
     )
     lineage.mark_committed(root, job_id, snap)
-    return DeleteResult(snap, job_id, n_keys, len(new_entries))
+    return DeleteResult(snap, job_id, n_rows, len(new_entries))
 
 
 def pos_delete_pairs_df(
@@ -294,8 +308,7 @@ def delete_positions_where(
     anti-join and the purge-side per-file lookup prune on footer stats.
     """
     job_id = job_id or f"posdel-{uuid.uuid4().hex[:8]}"
-    root = table.root
-    prev = lineage.committed_snapshot(root, job_id)
+    prev = lineage.committed_snapshot(table.root, job_id)
     if prev is not None:
         return DeleteResult(prev, job_id, 0, 0)
 
@@ -309,63 +322,7 @@ def delete_positions_where(
         .where(cond)
         .select(F.col("__fp").alias("file_path"), F.col("__pos").alias("pos"))
     )
-    n_pairs = pairs.count()
-    if n_pairs == 0:
-        return DeleteResult(None, job_id, 0, 0)
-    n_files = max(1, -(-n_pairs // rows_per_file))
-
-    def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        rows = [b for b in batches]
-        if not rows:
-            return
-        tbl = pa.Table.from_batches(rows)
-        if tbl.num_rows == 0:
-            return
-        rel = f"data/{job_id}-posdel-p{pid:05d}.parquet"
-        size = write_table_file(tbl, os.path.join(root, rel))
-        yield pa.RecordBatch.from_pylist(
-            [{
-                "file_path": rel,
-                "n_keys": tbl.num_rows,
-                # min/max over the TARGET path: purge prunes per-file reads
-                "min_key": pc.min(tbl.column("file_path")).as_py(),
-                "max_key": pc.max(tbl.column("file_path")).as_py(),
-                "file_size_bytes": size,
-            }],
-            schema=pa.schema([
-                ("file_path", pa.string()), ("n_keys", pa.int64()),
-                ("min_key", pa.string()), ("max_key", pa.string()),
-                ("file_size_bytes", pa.int64()),
-            ]),
-        )
-
-    stats = (
-        pairs.repartitionByRange(n_files, "file_path", "pos")
-        .sortWithinPartitions("file_path", "pos")
-        .mapInArrow(
-            _write,
-            "file_path string, n_keys long, min_key string, max_key string, "
-            "file_size_bytes long",
-        )
-        .collect()
-    )
-    new_entries = [dict(r.asDict(), kind="pos") for r in stats]
-    lineage.write_unit(
-        root, job_id, "delete", 0,
-        input_files=[], output_files=[e["file_path"] for e in new_entries],
-        rows=n_pairs,
-        nbytes=int(sum(e["file_size_bytes"] for e in new_entries)),
-    )
-    snap = table.commit(
-        "delete",
-        summary={"job_id": job_id, "deleted_positions": n_pairs},
-        new_delete_entries=new_entries,
-    )
-    lineage.mark_committed(root, job_id, snap)
-    return DeleteResult(snap, job_id, n_pairs, len(new_entries))
+    return _commit_delete_files(table, pairs, job_id, rows_per_file, pos=True)
 
 
 def purge_deletes(
@@ -376,13 +333,18 @@ def purge_deletes(
     """Copy-on-write purge: rewrite every data file that can contain a
     pending deleted key (stats-pruned), then drop all delete files from the
     table metadata. The post-purge scan is row-identical to the pre-purge
-    merge-on-read scan (tested); maintenance rewrites are unblocked.
+    merge-on-read scan: each candidate is read by the scan's own pyarrow
+    reader with its delete subtraction (``scan._read_partition_table``,
+    ``mor=True``), so both run the same code.
 
     Scale shape: candidates come from the same range-bucketed
     keys × file-stats interval join MERGE uses (merge.matched_files_df) —
-    never all files; each candidate is one task that reads ONLY its key
-    range of each applicable delete file (parquet row-group pruning on the
-    sorted delete files). Resumable per candidate file via lineage units.
+    never all files. Each candidate is one work unit that reads ONLY its
+    key range of each applicable delete file (parquet row-group pruning on
+    the sorted delete files). The units run where ``scan._map_units`` puts
+    them — on the driver when ``scan.on_driver`` accepts the candidates,
+    else one Spark task each (a purge touches no pixel). Resumable per
+    candidate file via lineage units, on either placement.
     """
     job_id = job_id or f"purge-{uuid.uuid4().hex[:8]}"
     root = table.root
@@ -394,11 +356,16 @@ def purge_deletes(
         return PurgeResult(None, job_id, 0, 0, 0)
 
     from nessie_spark.lakehouse.merge import matched_files_df
-    from nessie_spark.lakehouse.scan import IMAGES_DDL
-    from nessie_spark.lakehouse.writer import align_to_schema, arrow_schema_from_ddl
+    from nessie_spark.lakehouse.scan import (
+        _map_units,
+        _read_partition_table,
+        _unit_inputs,
+        on_driver,
+    )
 
     entries = table.file_entries(
-        columns=["file_path", "min_key", "max_key", "added_snapshot_id", "partition"]
+        columns=["file_path", "min_key", "max_key", "added_snapshot_id",
+                 "schema_id", "partition", "record_count", "file_size_bytes"]
     ).to_pylist()
     by_path = {e["file_path"]: e for e in entries}
 
@@ -420,9 +387,6 @@ def purge_deletes(
                 "started); its keys were not folded into the completed "
                 "units — rerun purge_deletes with a NEW job_id"
             )
-        dels = [d for d in dels if d["file_path"] in set(del_paths_rel)]
-        eq_dels, pos_dels = split_delete_kinds(dels)
-        sids = [d["snapshot_id"] for d in eq_dels]
     else:
         eq_dels, pos_dels = split_delete_kinds(dels)
         sids = [d["snapshot_id"] for d in eq_dels]
@@ -466,75 +430,28 @@ def purge_deletes(
             input_files=cand, output_files=del_paths_rel, rows=0, nbytes=0,
         )
 
-    table_ddl = table.meta.get("schema", IMAGES_DDL)
+    driver = on_driver(
+        spark, entries=len(cand),
+        nbytes=sum(by_path[p]["file_size_bytes"] for p in cand),
+    )
     done = lineage.completed_units(root, job_id, "purge")
-    todo = [
-        (
-            i, p, bisect_right(sids, by_path[p]["added_snapshot_id"]),
-            by_path[p].get("partition") or "",
-        )
-        for i, p in enumerate(cand)
-        if i not in done
-    ]
-    # field-id remaps for inputs written before a rename/drop ({} unless
-    # evolution history makes a name-read unsafe)
-    from nessie_spark.lakehouse.fields import live_projection_maps, remap_arrow
-    from nessie_spark.lakehouse.writer import _DDL_ARROW
+    todo_ids = [i for i in range(len(cand)) if i not in done]
+    # the current snapshot's delete files are the plan's (checked above)
+    parts = _unit_inputs(table, by_path, [[cand[i]] for i in todo_ids], mor=True)
 
-    remaps = live_projection_maps(table, paths=[p for _, p, _, _ in todo])
-
-    eq_paths_rel = [d["file_path"] for d in eq_dels]
-    pos_paths_rel = [d["file_path"] for d in pos_dels]
-
-    def _purge_unit(unit: tuple) -> list[dict]:
+    def _partition_of(i: int) -> str:
         # the rewrite is 1:1 per input file, so the output inherits the
         # input's hidden-partition value (stays prunable on spec'd tables)
-        i, path, suffix, pval = (
-            int(unit[0]), str(unit[1]), int(unit[2]), str(unit[3]),
-        )
-        aschema = arrow_schema_from_ddl(table_ddl)
-        tbl = pq.read_table(os.path.join(root, path))
-        rm = remaps.get(path)
-        if rm:
-            tbl = remap_arrow(tbl, rm, _DDL_ARROW)
-        tbl = align_to_schema(tbl, aschema)
-        out = tbl
-        # positional deletes FIRST: positions index the original file's
-        # row order, which remap/align preserve and the equality filter
-        # below would destroy. Each pos file is sorted by file_path, so
-        # the == filter prunes on footer stats.
-        pos_list: list[int] = []
-        for dp in pos_paths_rel:
-            ptb = pq.read_table(
-                os.path.join(root, dp),
-                filters=[("file_path", "==", path)],
-                columns=["pos"],
-            )
-            if ptb.num_rows:
-                pos_list.extend(ptb.column("pos").to_pylist())
-        if pos_list:
-            import numpy as np
+        return by_path.get(cand[i], {}).get("partition") or ""
 
-            keep = np.ones(out.num_rows, dtype=bool)
-            keep[np.asarray(pos_list, dtype=np.int64)] = False
-            out = out.filter(pa.array(keep))
-        mn = pc.min(tbl.column("image_id")).as_py()
-        mx = pc.max(tbl.column("image_id")).as_py()
-        key_chunks = []
-        for dp in eq_paths_rel[suffix:]:
-            kt = pq.read_table(
-                os.path.join(root, dp),
-                filters=[("image_id", ">=", mn), ("image_id", "<=", mx)],
-            )
-            if kt.num_rows:
-                key_chunks.append(kt.column("image_id").combine_chunks())
-        if key_chunks:
-            keys = pa.concat_arrays(
-                [c.chunk(0) if isinstance(c, pa.ChunkedArray) else c for c in key_chunks]
-            )
-            out = out.filter(
-                pc.invert(pc.is_in(out.column("image_id"), value_set=keys))
-            )
+    todo = [
+        (i, ps[0], _partition_of(i), by_path[cand[i]]["record_count"])
+        for i, ps in zip(todo_ids, parts)
+    ]
+
+    def _purge_unit(unit: tuple) -> list[dict]:
+        i, part, pval, n_in = int(unit[0]), unit[1], str(unit[2]), int(unit[3])
+        out = _read_partition_table(part, mor=True)
         outs: list[dict] = []
         rel = f"data/{job_id}-purge-f{i:05d}.parquet"
         if out.num_rows:
@@ -542,49 +459,15 @@ def purge_deletes(
             outs.append(stats_entry_for(out, rel, size, partition=pval))
         lineage.write_unit(
             root, job_id, "purge", i,
-            input_files=[path], output_files=[e["file_path"] for e in outs],
+            input_files=[part.rel_path], output_files=[e["file_path"] for e in outs],
             rows=out.num_rows,
             nbytes=int(sum(e["file_size_bytes"] for e in outs)),
-            metrics={"dropped_rows": float(tbl.num_rows - out.num_rows)},
+            metrics={"dropped_rows": float(n_in - out.num_rows)},
         )
         return outs
 
-    fresh = (
-        [
-            e
-            for part in spark.sparkContext.parallelize(todo, len(todo))
-            .map(_purge_unit)
-            .collect()
-            for e in part
-        ]
-        if todo
-        else []
-    )
-    # resume path: stats for units completed before a crash (column-pruned)
-    units = lineage.read_phase(root, job_id, "purge").to_pylist()
-    have = {e["file_path"] for e in fresh}
-    added_entries = list(fresh)
-    for u in units:
-        in_pval = next(
-            (
-                by_path[ip].get("partition") or ""
-                for ip in u["input_files"]
-                if ip in by_path
-            ),
-            "",
-        )
-        for p in u["output_files"]:
-            if p in have:
-                continue
-            t = pq.read_table(
-                os.path.join(root, p), columns=["image_id", "w", "h", "phash"]
-            )
-            added_entries.append(
-                stats_entry_for(
-                    t, p, os.path.getsize(os.path.join(root, p)), partition=in_pval
-                )
-            )
-    added = pa.Table.from_pylist(added_entries) if added_entries else None
+    fresh = [e for outs in _map_units(spark, _purge_unit, todo, driver) for e in outs]
+    added = lineage.output_entries(root, job_id, "purge", fresh, _partition_of)
 
     # keep (never wipe) any delete file the plan did not fold — the resume
     # guard above makes this empty in practice, but the override must stay
@@ -601,4 +484,4 @@ def purge_deletes(
         delete_files_override=leftover,
     )
     lineage.mark_committed(root, job_id, snap)
-    return PurgeResult(snap, job_id, len(cand), len(added_entries), len(dels))
+    return PurgeResult(snap, job_id, len(cand), added.num_rows, len(dels))

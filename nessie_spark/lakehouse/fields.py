@@ -154,9 +154,10 @@ def live_projection_maps(table, paths: list[str] | None = None) -> dict:
     """{file_path: projection} for live files whose raw read needs a
     field-id remap onto the CURRENT schema — {} when the table has never
     seen a rename/drop (the common case: zero extra I/O beyond a metadata
-    key check). Used by maintenance rewrites (compact / zorder / merge),
-    which read data files directly and would otherwise align by NAME —
-    silently nulling a renamed column.
+    key check). ``operators/maintenance.py`` counts these maps to show
+    that a rewrite pays the evolution debt off; the rewrites themselves
+    (compaction, Z-order, purge) read through ``scan._read_partition_table``,
+    which projects every file by field id.
 
     ``paths``: restrict to these file_paths (the planned inputs).
 

@@ -33,13 +33,6 @@ from nessie_spark.lakehouse import jpegvec as _jpegvec_preload  # noqa: F401
 # `nessie_spark.lakehouse.writer`) also pays the batch codec's import and
 # encoder-LUT construction once, outside any timed task.
 
-try:  # pragma: no cover - not present in this container
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _NJPG_MAGIC = b"NJPG"
 _NJPG_QSTEP = 4  # uniform quantization step; MSE ~ q^2/12 -> PSNR ~ 47 dB
@@ -192,9 +185,9 @@ def reencode_verify(datas, fmts) -> tuple[list[bytes], float]:
     """Decode → re-encode → PSNR-gate a batch of images (the north-star
     rewrite pixel path). Returns (re-encoded bytes, min PSNR seen).
     Raises if any image fails the per-row invariant (>= 40 dB lossy,
-    exact for lossless). The ONE copy of this loop — compact bins, the
-    zorder shuffle writer, and the staged gather all call it, so the gate
-    cannot silently diverge between rewrite paths.
+    exact for lossless). The ONE copy of this loop — compact bins and the
+    staged Z-order gather both call it, so the gate cannot silently
+    diverge between rewrite paths.
 
     jpeg streams run through the BATCH codec (jpegvec.py): decode of
     restart-interval streams is a lockstep numpy kernel across every MCU
@@ -206,18 +199,7 @@ def reencode_verify(datas, fmts) -> tuple[list[bytes], float]:
     scalar reference decoder, and each must match the reconstruction
     exactly, so a writer regression still fails the rewrite itself, not
     just the test suite."""
-
-    import os as _os, time as _time
-    _t0 = _time.perf_counter()
-    _r = _reencode_verify_impl(datas, fmts)
-    if _os.environ.get("NESSIE_KERNEL_LOG"):
-        with open(_os.environ["NESSIE_KERNEL_LOG"], "a") as _fh:
-            _fh.write(f"{len(datas)},{sum(1 for f in fmts if f=='jpeg')},{(_time.perf_counter()-_t0)*1000:.1f}\n")
-    return _r
-
-
-def _reencode_verify_impl(datas, fmts):
-    from nessie_spark.lakehouse import jpegvec  # module-level preloaded below
+    from nessie_spark.lakehouse import jpegvec  # preloaded at module level
     from nessie_spark.lakehouse.jpegcodec import decode_jpeg_real
 
     mn = 99.0

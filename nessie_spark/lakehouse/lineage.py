@@ -92,6 +92,35 @@ def completed_units(root: str, job_id: str, phase: str) -> set[int]:
     return set(read_phase(root, job_id, phase).column("partition_id").to_pylist())
 
 
+def output_entries(
+    root: str, job_id: str, phase: str, fresh: list[dict], partition_of, zkey=None
+) -> pa.Table:
+    """Manifest entries of every output file of ``phase``'s units, as one
+    FILE_ENTRY_SCHEMA table: the stats the units returned in this run
+    (``fresh``), then stats re-derived for the outputs of units completed
+    before a crash, from a column-pruned re-read (no pixel byte reaches
+    the driver). ``partition_of(unit_id)``: the hidden-partition value of
+    that unit's outputs. ``zkey(tbl)``: each row's curve key, so a resumed
+    Z-order output keeps its zorder_lo/hi."""
+    from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA
+    from nessie_spark.lakehouse.writer import stats_entry_for
+
+    entries = list(fresh)
+    have = {e["file_path"] for e in entries}
+    for u in read_phase(root, job_id, phase).to_pylist():
+        for p in u["output_files"]:
+            if p in have:
+                continue
+            path = os.path.join(root, p)
+            t = pq.read_table(path, columns=["image_id", "w", "h", "phash"])
+            if zkey is not None:
+                t = t.append_column("zkey", pa.array(zkey(t), pa.int64()))
+            entries.append(stats_entry_for(
+                t, p, os.path.getsize(path), partition=partition_of(u["partition_id"])
+            ))
+    return pa.Table.from_pylist(entries, schema=FILE_ENTRY_SCHEMA)
+
+
 def write_plan(root: str, job_id: str, plan: dict) -> None:
     """Pin a job's PLAN (bin/group composition, bounds, input set) before
     any work unit runs. Resume unit ids are positional indexes into the

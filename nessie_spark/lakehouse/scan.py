@@ -53,10 +53,10 @@ def on_driver(spark: SparkSession, *, entries: int = 0, nbytes: int = 0) -> bool
     big to cross the driver. These jobs ask it: ``plan_files`` tier 2, the
     ``scan`` reader, expiry and orphan GC (``expire._unreferenced``),
     ``rewrite_manifests``, compaction planning, and the rewrite units of
-    compaction and Z-order clustering (``_map_units``; ``entries`` and
-    ``nbytes`` count the job's input data files). Pixel work (decode,
-    re-encode, PSNR checks) never asks: it runs as Spark tasks at every
-    size, one task per unit.
+    compaction, Z-order clustering and ``purge_deletes`` (``_map_units``;
+    ``entries`` and ``nbytes`` count the job's input data files). Pixel
+    work (decode, re-encode, PSNR checks) never asks: it runs as Spark
+    tasks at every size, one task per unit.
 
     ``jobs.append`` asks ``df.isLocal()`` instead, because its rows either
     are on the driver already or are not. The same conf decides that:
@@ -71,7 +71,8 @@ def on_driver(spark: SparkSession, *, entries: int = 0, nbytes: int = 0) -> bool
 
 def _map_units(spark: SparkSession, fn, units: list, driver: bool) -> list:
     """Run a rewrite job's work units (compaction bins, Z-order scatter
-    bins and gather units) and return ``fn``'s results in unit order.
+    bins and gather units, purge candidates) and return ``fn``'s results
+    in unit order.
     ``driver``: the job's placement, ``not pixels and on_driver(...)`` over
     its input files; the units then run in this process one after another.
     Otherwise each unit is one Spark task, placed positionally by
@@ -437,7 +438,11 @@ class FilePartition(InputPartition):
 def _read_partition_table(p: FilePartition, mor: bool = True) -> pa.Table:
     """Read one data file projected onto the target schema by field id,
     with merge-on-read delete subtraction (the pyarrow twin of the joins
-    in scan() and of deletes._purge_unit's read path)."""
+    in scan()). The one pyarrow reader of data files: the driver scan, the
+    ``format("nessie")`` source, ``zorder.exact_bounds`` and every rewrite
+    unit (``_unit_inputs``) read through here — compaction bins and the
+    Z-order scatter with ``mor=False``, ``purge_deletes`` with
+    ``mor=True``, so a purge writes exactly the rows the scan shows."""
     import numpy as np
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -566,6 +571,23 @@ def _partitions_for_entries(
             )
         )
     return parts
+
+
+def _unit_inputs(
+    table: Table, by_path: dict[str, dict], unit_paths: list[list[str]],
+    mor: bool = False,
+) -> list[list[FilePartition]]:
+    """The input ``FilePartition``s of each rewrite unit, one list per
+    entry of ``unit_paths``, projected onto the table's current schema:
+    files written before an add, rename or drop are read by field id, so
+    a rewrite normalizes them to the current names. ``by_path``: manifest
+    entries (``file_path``, ``added_snapshot_id``, ``schema_id``; with
+    ``mor``, ``min_key``/``max_key`` too) by path."""
+    parts = iter(_partitions_for_entries(
+        table, [by_path[p] for ps in unit_paths for p in ps], None,
+        table.meta.get("schema", IMAGES_DDL), mor=mor,
+    ))
+    return [[next(parts) for _ in ps] for ps in unit_paths]
 
 
 def _read_on_driver(

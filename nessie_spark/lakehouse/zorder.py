@@ -304,6 +304,18 @@ def _np_zkey(strategy: str, phash, wh):
     raise NotImplementedError(f"unknown clustering strategy {strategy!r}")
 
 
+def _table_zkey(strategy: str, tbl):
+    """Each row's curve key from an Arrow table's (phash, w, h) — the
+    numpy twin of ``zorder_key``."""
+    import numpy as np
+
+    wh = (
+        tbl.column("w").to_numpy().astype(np.int64)
+        * tbl.column("h").to_numpy().astype(np.int64)
+    ) & 0x7FFFFFFF
+    return _np_zkey(strategy, tbl.column("phash").to_numpy(), wh)
+
+
 def _bucket(zkey, cuts: list, offsets: list[int], vidx=None):
     """Each row's output file (pid): ``offsets[v] + searchsorted(cuts[v],
     zkey, "right")`` for the row's value index ``v``. ``vidx`` None: the
@@ -363,9 +375,11 @@ def run_staged(
     path holds ~0.96. This executor is a classic two-phase external sort
     with parquet staging — the bytes never enter the JVM:
 
-      scatter: one unit per ~64 MB bin of input files: pyarrow-read each
-        file, compute zkey (vectorized numpy twin of the Catalyst key, asserted
-        bit-identical in tests) and, with a spec, each row's partition
+      scatter: one unit per ~64 MB bin of input files: read each file
+        with the scan's pyarrow reader (``scan._read_partition_table``, by
+        field id onto the current schema), compute zkey (vectorized numpy
+        twin of the Catalyst key, asserted bit-identical in tests,
+        ``_table_zkey``) and, with a spec, each row's partition
         value (``partition.row_values``), pid = ``_bucket``, stable-sort by
         gather group = pid·G//n_files, append one row-group per (file,
         group) run to a per-group staging shard. Atomic tmp→rename; one
@@ -389,8 +403,13 @@ def run_staged(
     import bisect
 
     from nessie_spark.lakehouse.partition import table_spec
-    from nessie_spark.lakehouse.scan import _map_units, on_driver
-    from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA
+    from nessie_spark.lakehouse.scan import (
+        IMAGES_DDL,
+        _map_units,
+        _read_partition_table,
+        _unit_inputs,
+        on_driver,
+    )
     from nessie_spark.lakehouse.writer import stats_entry_for, write_table_file
 
     root = table.root
@@ -523,17 +542,16 @@ def run_staged(
 
     # --- scatter ----------------------------------------------------------
     done = lineage.completed_units(root, job_id, "scatter")
-    todo = [(i, paths) for i, paths in enumerate(sbins) if i not in done]
-    from nessie_spark.lakehouse.fields import live_projection_maps
-    from nessie_spark.lakehouse.scan import IMAGES_DDL
-
+    todo_ids = [i for i in range(len(sbins)) if i not in done]
+    # Uniform shard schema across mixed pre-/post-evolution inputs: every
+    # file is read by field id onto the current table schema (NULL-padded,
+    # renamed) before zkey/pid are appended, so one ParquetWriter per group
+    # can append slices from any input file
+    todo = list(zip(todo_ids, _unit_inputs(
+        table, {e["file_path"]: e for e in live_entries},
+        [sbins[i] for i in todo_ids],
+    )))
     table_ddl = table.meta.get("schema", IMAGES_DDL)
-    # field-id remaps for inputs written before a rename/drop ({} unless
-    # evolution history makes a name-read unsafe); the rewrite normalizes
-    # them to current names
-    remaps = live_projection_maps(
-        table, paths=[p for _, paths in todo for p in paths]
-    )
 
     def _scatter_unit(unit: tuple) -> tuple:
         import numpy as np
@@ -542,14 +560,8 @@ def run_staged(
         import pyarrow.parquet as pq
 
         from nessie_spark.lakehouse.partition import row_values
-        from nessie_spark.lakehouse.writer import align_to_schema, arrow_schema_from_ddl
 
-        # Uniform shard schema across mixed pre-/post-evolution inputs:
-        # every file is aligned (NULL-padded) to the current table schema
-        # before zkey/pid are appended, so one ParquetWriter per group can
-        # append slices from any input file.
-        aschema = arrow_schema_from_ddl(table_ddl)
-        sbin, paths = int(unit[0]), list(unit[1])
+        sbin, parts = int(unit[0]), list(unit[1])
         cut_arrs = [np.asarray(c, dtype=np.int64) for c in cuts]
         # Bound concurrently-open shard writers: n_groups scales with table
         # bytes (1 TB → ~2k groups), and each open ParquetWriter holds column
@@ -586,20 +598,9 @@ def run_staged(
             return writers[g][0]
 
         rows = 0
-        for p in paths:
-            tbl = pq.read_table(os.path.join(root, p))
-            rm = remaps.get(p)
-            if rm:
-                from nessie_spark.lakehouse.fields import remap_arrow
-                from nessie_spark.lakehouse.writer import _DDL_ARROW
-
-                tbl = remap_arrow(tbl, rm, _DDL_ARROW)
-            tbl = align_to_schema(tbl, aschema)
-            wh = (
-                tbl.column("w").to_numpy().astype(np.int64)
-                * tbl.column("h").to_numpy().astype(np.int64)
-            ) & 0x7FFFFFFF
-            zkey = _np_zkey(strategy, tbl.column("phash").to_numpy(), wh)
+        for p in parts:
+            tbl = _read_partition_table(p, mor=False)
+            zkey = _table_zkey(strategy, tbl)
             vidx = None
             if spec:
                 vidx = pc.index_in(
@@ -607,7 +608,7 @@ def run_staged(
                 )
                 if vidx.null_count:
                     raise ValueError(
-                        f"staged zorder {job_id!r}: {p} holds a partition "
+                        f"staged zorder {job_id!r}: {p.rel_path} holds a partition "
                         "value outside the pinned plan"
                     )
                 vidx = vidx.to_numpy()
@@ -631,7 +632,8 @@ def run_staged(
             _close_grp(g)
         lineage.write_unit(
             root, job_id, "scatter", sbin,
-            input_files=paths, output_files=sorted(outs), rows=rows,
+            input_files=[p.rel_path for p in parts], output_files=sorted(outs),
+            rows=rows,
             nbytes=0, metrics={"n_groups": float(len(outs))},
         )
         return (sbin, len(outs), rows)
@@ -719,37 +721,13 @@ def run_staged(
         return [entry]
 
     fresh = [e for part in _map_units(spark, _gather_pid_unit, gtodo, driver) for e in part]
-
-    # reassemble stats for ALL gather units (including pre-crash ones):
-    # recompute zkey from (phash, w, h) with the numpy twin — the staged
-    # stats must carry zorder_lo/hi even on resume
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    added = fresh
-    have = {e["file_path"] for e in added}
-    units = lineage.read_phase(root, job_id, "gather").to_pylist()
-    for u in units:
-        for p in u["output_files"]:
-            if p in have:
-                continue
-            t = pq.read_table(
-                os.path.join(root, p), columns=["image_id", "w", "h", "phash"]
-            )
-            wh = (
-                t.column("w").to_numpy().astype(np.int64)
-                * t.column("h").to_numpy().astype(np.int64)
-            ) & 0x7FFFFFFF
-            zk = _np_zkey(strategy, t.column("phash").to_numpy(), wh)
-            t = t.append_column("zkey", pa.array(zk, pa.int64()))
-            added.append(
-                stats_entry_for(
-                    t, p, os.path.getsize(os.path.join(root, p)),
-                    partition=_value_of(u["partition_id"]),
-                )
-            )
-    return pa.Table.from_pylist(added, schema=FILE_ENTRY_SCHEMA), stage_dir, n_files
+    # stats for ALL gather units, pre-crash ones included: the zkey is
+    # recomputed from (phash, w, h), so they keep zorder_lo/hi on resume
+    added = lineage.output_entries(
+        root, job_id, "gather", fresh, _value_of,
+        zkey=lambda t: _table_zkey(strategy, t),
+    )
+    return added, stage_dir, n_files
 
 
 def _cluster_short_circuit(

@@ -6,8 +6,10 @@ Mirrors the reference's fixture discipline (seed 42, smoke scales;
 
 from __future__ import annotations
 
+import hashlib
+import os
 import shutil
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 import pytest
 
@@ -16,6 +18,9 @@ from nessie_spark.lakehouse import jobs, scan
 from nessie_spark.session import get_spark
 
 SMOKE_N = 256
+# where a rewrite's units run: the placement rule's choice (the driver, for
+# the tiny tables here) or forced to Spark by ``on_spark``
+PLACEMENTS = ["driver", "spark"]
 
 
 @pytest.fixture(scope="session")
@@ -77,13 +82,36 @@ def on_spark(spark):
         spark.conf.unset(key)
 
 
+def placed(spark, placement: str):
+    """The block on ``placement``, one of PLACEMENTS."""
+    return on_spark(spark) if placement == "spark" else nullcontext()
+
+
+_LIVE_FILES: dict[str, list] = {}
+
+
+def assert_same_on_every_placement(key: str, t) -> None:
+    """Check that each placement of one parametrized test leaves the same
+    live files: the first placement to run records every live manifest
+    entry (name, stats, partition value) with its file's sha256 under
+    ``key``, and each later one must match that record exactly. pytest
+    runs a test's parameters one after another in one session."""
+    got = []
+    entries = t.refresh().file_entries().to_pylist()
+    for e in sorted(entries, key=lambda e: e["file_path"]):
+        with open(os.path.join(t.root, e["file_path"]), "rb") as fh:
+            got.append((e, hashlib.sha256(fh.read()).hexdigest()))
+    assert _LIVE_FILES.setdefault(key, got) == got
+
+
 @contextmanager
 def crash_after(k: int):
     """Crash the rewrite job run inside the block after ``k`` work units.
 
-    Wraps ``scan._map_units``, the one place compaction bins and Z-order
-    scatter and gather units run, and counts units across all of the job's
-    calls, so the crash can land in either Z-order phase. The first ``k``
+    Wraps ``scan._map_units``, the one place compaction bins, Z-order
+    scatter and gather units and ``purge_deletes`` candidates run, and
+    counts units across all of the job's calls, so the crash can land in
+    either Z-order phase. The first ``k``
     units run to completion on the job's own placement; then the driver
     raises ``RuntimeError("injected ...")``. Raising on the driver, not in
     a task, keeps the set of completed units the same on every run."""

@@ -23,7 +23,14 @@ from nessie_spark.lakehouse.scan import plan_files, scan
 from nessie_spark.lakehouse.zorder import cluster, cluster_incremental
 from nessie_spark.plans import ffd
 from nessie_spark.plans.ffd import ffd_pack_distributed
-from tests.conftest import crash_after, on_spark, spark_jobs
+from tests.conftest import (
+    PLACEMENTS,
+    assert_same_on_every_placement,
+    crash_after,
+    on_spark,
+    placed,
+    spark_jobs,
+)
 
 FMT_SPEC = [{"source": "fmt", "transform": "identity"}]
 
@@ -208,7 +215,8 @@ def test_cluster_full_and_incremental_respect_partitions(spark, tmp_path):
     assert 0 < len(pruned) < len(ents2)
 
 
-def test_merge_and_purge_preserve_partitions(spark, tmp_path):
+@pytest.mark.parametrize("placement", PLACEMENTS)
+def test_merge_and_purge_preserve_partitions(spark, tmp_path, placement):
     """MERGE INTO re-derives partition values for rewritten rows;
     purge_deletes' 1:1 rewrites inherit the input file's value — a
     partitioned table stays fully prunable through its DML lifecycle."""
@@ -234,7 +242,8 @@ def test_merge_and_purge_preserve_partitions(spark, tmp_path):
     ids = ", ".join(f"'{r.image_id}'" for r in victim)
     delete_where(spark, t, f"image_id IN ({ids})", job_id="d1")
     t = t.refresh()
-    purge_deletes(spark, t, job_id="p1")
+    with placed(spark, placement):
+        purge_deletes(spark, t, job_id="p1")
     t = t.refresh()
     ents2 = t.file_entries(columns=["file_path", "partition"]).to_pylist()
     assert all(e["partition"].startswith("fmt=") for e in ents2)
@@ -242,6 +251,7 @@ def test_merge_and_purge_preserve_partitions(spark, tmp_path):
         fmts = _file_fmts(t, e["file_path"])
         assert len(fmts) == 1 and e["partition"] == f"fmt={next(iter(fmts))}"
     assert scan(spark, t).count() == 300 - 3
+    assert_same_on_every_placement("partitioned-purge", t)
 
 
 def test_health_signals_are_per_partition(spark, tmp_path):

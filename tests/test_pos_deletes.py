@@ -9,7 +9,7 @@ import pytest
 from nessie_spark import synth
 from nessie_spark.lakehouse import changelog, compact, deletes, jobs
 from nessie_spark.lakehouse.scan import scan
-from tests.conftest import make_table
+from tests.conftest import PLACEMENTS, assert_same_on_every_placement, make_table, placed
 
 
 def _ids(df):
@@ -71,7 +71,8 @@ def test_pos_delete_targets_single_copy_of_duplicate_key(spark, tmp_path):
     assert left.collect()[0].caption != "the duplicate copy"
 
 
-def test_purge_folds_positional_deletes(spark, tmp_path):
+@pytest.mark.parametrize("placement", PLACEMENTS)
+def test_purge_folds_positional_deletes(spark, tmp_path, placement):
     t, _ = make_table(spark, str(tmp_path / "tb"))
     deletes.delete_positions_where(
         spark, t, F.col("image_id").between("img_000000000010", "img_000000000029"),
@@ -79,10 +80,12 @@ def test_purge_folds_positional_deletes(spark, tmp_path):
     )
     t = t.refresh()
     before = _ids(scan(spark, t))
-    res = deletes.purge_deletes(spark, t, job_id="purge4")
+    with placed(spark, placement):
+        res = deletes.purge_deletes(spark, t, job_id="purge4")
     t = t.refresh()
     assert res.dropped_delete_files >= 1 and t.delete_files() == []
     assert _ids(scan(spark, t)) == before
+    assert_same_on_every_placement("pos-purge", t)
     # maintenance unblocked after purge
     compact.compact(spark, t, target_bytes=256 * 1024, job_id="c4")
     t = t.refresh()

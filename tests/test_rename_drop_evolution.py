@@ -17,7 +17,7 @@ from nessie_spark.lakehouse.deletes import delete_where, purge_deletes
 from nessie_spark.lakehouse.changelog import scan_changelog
 from nessie_spark.lakehouse.fields import live_projection_maps
 from nessie_spark.lakehouse.scan import scan, scan_incremental
-from tests.conftest import make_table
+from tests.conftest import PLACEMENTS, assert_same_on_every_placement, make_table, placed
 
 
 def _renamed_table(spark, root, n=96):
@@ -131,18 +131,21 @@ def test_merge_after_rename(spark, tmp_path):
         assert got[k] == expected[k]
 
 
-def test_purge_deletes_after_rename(spark, tmp_path):
+@pytest.mark.parametrize("placement", PLACEMENTS)
+def test_purge_deletes_after_rename(spark, tmp_path, placement):
     t, _, expected = _renamed_table(spark, str(tmp_path / "t"))
     victims = sorted(expected)[:6]
     delete_where(spark, t, F.col("image_id").isin(victims), job_id="d1")
     t = t.refresh()
-    r = purge_deletes(spark, t, job_id="p1")
+    with placed(spark, placement):
+        r = purge_deletes(spark, t, job_id="p1")
     assert r.snapshot_id is not None
     t = t.refresh()
     got = _descriptions(spark, t)
     assert set(got) == set(expected) - set(victims)
     for k, v in got.items():
         assert v == expected[k]
+    assert_same_on_every_placement("rename-purge", t)
 
 
 def test_changelog_and_incremental_across_rename(spark, tmp_path):

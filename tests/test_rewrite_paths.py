@@ -7,7 +7,8 @@ the same pinned plan. Compaction must leave the same files and lineage on
 both. Clustering must leave the same rows in disjoint, increasing zkey
 ranges; its cut points are exact on the driver and sampled on Spark, so the
 files themselves may differ. A job crashed on one placement resumes on the
-other. Every table here is a copy of one small template.
+other; so does a ``purge_deletes`` of pending equality and position deletes.
+Every table here is a copy of one small template.
 """
 
 from __future__ import annotations
@@ -17,16 +18,23 @@ import glob
 import hashlib
 import itertools
 import os
+import re
 import shutil
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from nessie_spark import synth
 from nessie_spark.lakehouse import jobs, lineage, maintain
 from nessie_spark.lakehouse.compact import compact
+from nessie_spark.lakehouse.deletes import (
+    delete_positions_where,
+    delete_where,
+    purge_deletes,
+)
 from nessie_spark.lakehouse.evolve import set_partition_spec
 from nessie_spark.lakehouse.expire import gc_orphans
 from nessie_spark.lakehouse.partition import parse_partition, segment_name, transform_py
@@ -344,5 +352,45 @@ def test_compact_resumes_across_placements(spark, templates, tmp_path):
         snap = t.refresh().current_snapshot_id
         again = compact(spark, t.refresh(), target_bytes=COMPACT_TARGET, job_id="cj")
         assert again.snapshot_id == snap and again.bins_executed == 0
+        assert sorted(os.listdir(os.path.join(t.root, "data"))) == data
+        assert t.refresh().current_snapshot_id == snap
+
+
+def test_purge_resumes_across_placements(spark, templates, tmp_path):
+    """A purge crashed after its first candidate file, on the driver or on
+    Spark, resumes on the other placement into the same files, stats and
+    rows as an uninterrupted purge, in one ``purge-deletes`` commit."""
+    src = _copy(templates, "plain", tmp_path, "mor")
+    delete_where(spark, src, F.col("image_id") < "img_000000000012", job_id="eq")
+    delete_positions_where(
+        spark, src.refresh(),
+        F.col("image_id").between("img_000000000040", "img_000000000060"), job_id="pos",
+    )
+    kept = {e["file_path"] for e in _live(src)}
+    ref = _copy({"mor": src.root}, "mor", tmp_path, "ref")
+    purge_deletes(spark, ref, job_id="pj")
+    plan = lineage.read_phase(ref.root, "pj", "plan").to_pylist()[0]
+    assert len(plan["input_files"]) >= 3  # candidate files
+    want = _live(ref)
+    outs = [e["file_path"] for e in want if e["file_path"] not in kept]
+    assert outs and all(re.fullmatch(r"data/pj-purge-f\d{5}\.parquet", p) for p in outs)
+    for crash_forced in (False, True):
+        t = _copy({"mor": src.root}, "mor", tmp_path, f"r{crash_forced}")
+        with on_spark(spark) if crash_forced else contextlib.nullcontext():
+            with crash_after(1), pytest.raises(RuntimeError, match="injected"):
+                purge_deletes(spark, t, job_id="pj")
+        assert lineage.completed_units(t.root, "pj", "purge") == {0}
+        assert lineage.committed_snapshot(t.root, "pj") is None
+        _, ids = _run(spark, not crash_forced, purge_deletes, t.refresh(), job_id="pj")
+        assert bool(ids) == (not crash_forced)  # the resume ran on the other placement
+        assert _live(t) == want
+        assert _rows(t) == _rows(ref)
+        ops = [s["operation"] for s in t.refresh().meta["snapshots"]]
+        assert ops.count("purge-deletes") == 1 and t.refresh().delete_files() == []
+        # a rerun with the committed job_id writes nothing
+        data = sorted(os.listdir(os.path.join(t.root, "data")))
+        snap = t.refresh().current_snapshot_id
+        again = purge_deletes(spark, t.refresh(), job_id="pj")
+        assert again.snapshot_id == snap and again.output_files == 0
         assert sorted(os.listdir(os.path.join(t.root, "data"))) == data
         assert t.refresh().current_snapshot_id == snap

@@ -16,7 +16,9 @@ An append writes its rows with the engine's one Arrow slice writer
   atomic commit — O(#files), never O(#rows).
 
 Every path splits its rows by the table's partition spec, so no data file
-spans partition values, and every path writes the table's evolved columns.
+spans partition values, and every path writes the table's evolved columns
+at their table types. Every append, the ``format("nessie")`` sinks' too,
+commits through ``commit_append``.
 """
 
 from __future__ import annotations
@@ -34,7 +36,9 @@ from nessie_spark.lakehouse import lineage
 from nessie_spark.lakehouse.partition import PVAL_COL, stamp_pval, table_spec
 from nessie_spark.lakehouse.scan import IMAGES_DDL
 from nessie_spark.lakehouse.table import FILE_ENTRY_DDL, FILE_ENTRY_SCHEMA, Table
-from nessie_spark.lakehouse.writer import ddl_columns, write_partition_files, write_slices
+from nessie_spark.lakehouse.writer import (
+    arrow_schema_from_ddl, write_partition_files, write_slices,
+)
 from nessie_spark.session import no_coalesce
 
 
@@ -102,8 +106,8 @@ def append(
     prior = lineage.committed_snapshot(table.root, job_id)
     if prior is not None:
         return prior
-    table_cols = ddl_columns(table.meta.get("schema", IMAGES_DDL))
-    extra = [c for c in df.columns if c not in table_cols and c != "zkey"]
+    schema = arrow_schema_from_ddl(table.meta.get("schema", IMAGES_DDL))
+    extra = [c for c in df.columns if c not in schema.names and c != "zkey"]
     if extra:
         raise ValueError(
             f"append columns {extra} not in table schema; evolve first "
@@ -129,7 +133,7 @@ def append(
             return pa.Table.from_pylist(
                 write_slices(
                     tbl, root, f"{job_id}-append-g{key[0].as_py():05d}",
-                    spec=spec, columns=table_cols,
+                    spec=spec, schema=schema,
                 ),
                 schema=FILE_ENTRY_SCHEMA,
             )
@@ -145,7 +149,7 @@ def append(
         entries = pa.Table.from_pylist(
             write_slices(
                 _local_arrow(df), table.root, f"{job_id}-append-p00000",
-                spec=spec, columns=table_cols,
+                spec=spec, schema=schema,
             ),
             schema=FILE_ENTRY_SCHEMA,
         )
@@ -178,19 +182,37 @@ def append(
             df = df.repartitionByRange(n_parts, *range_cols).sortWithinPartitions(
                 *range_cols
             )
-        stats = write_partition_files(
-            df, table.root, job_id, "append", data_columns=table_cols
-        )
+        stats = write_partition_files(df, table.root, job_id, "append", schema)
         entries = stats.toArrow()
-    rows = int(sum(entries.column("record_count").to_pylist() or [0]))
+    return commit_append(
+        table, job_id, entries, stage_only=stage_only, to_ref=to_ref
+    )
+
+
+def commit_append(
+    table: Table,
+    job_id: str,
+    entries: pa.Table,
+    summary: dict | None = None,
+    stage_only: bool = False,
+    to_ref: str | None = None,
+) -> int:
+    """Commit written data files as one ``append`` snapshot: the commit,
+    then the job's lineage unit, then its committed marker, which makes a
+    rerun of ``job_id`` a no-op. ``entries``: the files' manifest entries
+    (FILE_ENTRY_SCHEMA). ``summary`` adds to the snapshot summary's
+    ``job_id``. ``jobs.append`` and both ``format("nessie")`` sinks commit
+    through here; each checks its committed ``job_id`` and an empty write
+    itself."""
     snap_id = table.commit(
-        "append", added=entries, summary={"job_id": job_id},
+        "append", added=entries, summary={"job_id": job_id, **(summary or {})},
         stage_only=stage_only, to_ref=to_ref,
     )
     lineage.write_unit(
         table.root, job_id, "append", 0,
         input_files=[], output_files=entries.column("file_path").to_pylist(),
-        rows=rows, nbytes=int(sum(entries.column("file_size_bytes").to_pylist() or [0])),
+        rows=int(sum(entries.column("record_count").to_pylist() or [0])),
+        nbytes=int(sum(entries.column("file_size_bytes").to_pylist() or [0])),
     )
     lineage.mark_committed(table.root, job_id, snap_id)
     return snap_id

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from nessie_spark.lakehouse import lineage
 from nessie_spark.lakehouse.scan import IMAGES_DDL
 from nessie_spark.lakehouse.table import Table
-from nessie_spark.lakehouse.writer import write_partition_files
+from nessie_spark.lakehouse.writer import arrow_schema_from_ddl, write_partition_files
 
 DEFAULT_TARGET = 8 * 1024 * 1024
 
@@ -386,7 +386,7 @@ def merge_into(
         new_rows = new_rows.repartition(n_files, "image_id")
 
     stats = write_partition_files(
-        new_rows, root, job_id, "merge", data_columns=data_cols
+        new_rows, root, job_id, "merge", arrow_schema_from_ddl(table_ddl)
     ).toArrow()
     total_written = int(sum(stats.column("record_count").to_pylist() or [0]))
 

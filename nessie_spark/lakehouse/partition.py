@@ -39,8 +39,9 @@ as the literal segment value ``null`` (Iceberg's convention) on both
 sides.
 
 Scale: the partition column rides the manifests the planner already
-reads; segment matching is string equality on the driver or a Spark
-filter on the distributed-planner path — no extra I/O at any table size.
+reads; ``entry_matches`` runs once per distinct value of a manifest and
+an Arrow ``is_in`` keeps the matching entries, on the driver or in the
+planner's Spark tasks — no extra I/O at any table size.
 """
 
 from __future__ import annotations

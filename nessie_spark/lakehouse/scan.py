@@ -10,6 +10,9 @@ Two pruning layers (SURVEY.md §4.2):
 
 ``on_driver`` is the engine's one rule for whether work runs on the driver
 or as Spark jobs; planning, this reader and the maintenance jobs all ask it.
+``_map_units`` is the one runner of the units it places: tier-2 planning
+(one unit per manifest), Z-order pass 1 and every rewrite run the same
+Arrow code in this process or as one Spark task per unit.
 
 Two readers serve the planned files. Small plans — planned data files
 whose total size ``on_driver`` accepts, without ``with_pos`` — are read on
@@ -30,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import InputPartition
 
-from nessie_spark.lakehouse.table import Table
+from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA, Table
 
 IMAGES_DDL = (
     "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
@@ -50,13 +53,16 @@ def on_driver(spark: SparkSession, *, entries: int = 0, nbytes: int = 0) -> bool
     ``spark.sql.execution.arrow.localRelationThreshold`` bytes (48 MiB by
     default). Below both limits a Spark job costs more than the work;
     above either, at 10^12-image scale, the entry list or the data is too
-    big to cross the driver. These jobs ask it: ``plan_files`` tier 2, the
-    ``scan`` reader, expiry and orphan GC (``expire._unreferenced``),
-    ``rewrite_manifests``, compaction planning, and the rewrite units of
-    compaction, Z-order clustering and ``purge_deletes`` (``_map_units``;
-    ``entries`` and ``nbytes`` count the job's input data files). Pixel
+    big to cross the driver. These jobs ask it: ``plan_files`` tier 2
+    (``entries`` counts the surviving manifests' entries), the ``scan``
+    reader, expiry and orphan GC (``expire._unreferenced``),
+    ``rewrite_manifests``, compaction planning, Z-order pass 1, and the
+    rewrite units of compaction, Z-order clustering and ``purge_deletes``
+    (``entries`` and ``nbytes`` count the job's input data files). Pixel
     work (decode, re-encode, PSNR checks) never asks: it runs as Spark
-    tasks at every size, one task per unit.
+    tasks at every size, one task per unit. Z-order pass 1 asks without
+    that clause even for a re-encoding job, because it reads only three
+    int columns and no pixel: a small job cuts exactly on the driver.
 
     ``jobs.append`` asks ``df.isLocal()`` instead, because its rows either
     are on the driver already or are not. The same conf decides that:
@@ -70,15 +76,17 @@ def on_driver(spark: SparkSession, *, entries: int = 0, nbytes: int = 0) -> bool
 
 
 def _map_units(spark: SparkSession, fn, units: list, driver: bool) -> list:
-    """Run a rewrite job's work units (compaction bins, Z-order scatter
-    bins and gather units, purge candidates) and return ``fn``'s results
-    in unit order.
-    ``driver``: the job's placement, ``not pixels and on_driver(...)`` over
-    its input files; the units then run in this process one after another.
-    Otherwise each unit is one Spark task, placed positionally by
-    ``parallelize(units, len(units))``. Each unit records its own lineage
-    and names its outputs by unit id, so a job crashed on one placement
-    resumes on the other."""
+    """Run a job's work units and return ``fn``'s results in unit order:
+    planning units (``plan_files`` tier 2, one per manifest; Z-order
+    pass 1, one per scatter bin) and rewrite units (compaction bins,
+    Z-order scatter bins and gather units, purge candidates).
+    ``driver``: the job's placement, ``on_driver(...)`` over its input
+    (for a rewrite, ``not pixels and on_driver(...)``); the units then run
+    in this process one after another. Otherwise each unit is one Spark
+    task, placed positionally by ``parallelize(units, len(units))``.
+    Planning units write nothing. Each rewrite unit records its own
+    lineage and names its outputs by unit id, so a job crashed on one
+    placement resumes on the other."""
     if driver:
         return [fn(u) for u in units]
     if not units:
@@ -130,7 +138,8 @@ def plan_files(
     source_eq: dict | None = None,
     spark: SparkSession | None = None,
 ) -> list[dict]:
-    """Return live file entries surviving stats pruning.
+    """Return live file entries surviving stats pruning: every column but
+    ``key_bloom``, plus ``key_bloom`` for a ``key_eq`` lookup.
 
     ``source_eq``: hidden-partition pruning — equality predicates on
     partition SOURCE columns (e.g. ``{"fmt": "png"}``), mapped through the
@@ -141,19 +150,17 @@ def plan_files(
 
     Tier 1 always runs on the driver: the manifest LIST's per-manifest key
     ranges drop whole manifests (prune_manifest_summaries). Tier 2 — the
-    per-file stats checks — runs on the driver, or as a Spark job over the
-    manifest parquet when ``spark`` is given and ``on_driver`` refuses the
-    surviving manifests' entry count: at 10^12-image scale the entry list
-    itself is GBs, and only the SURVIVORS' paths should cross the driver.
+    per-file partition and stats checks — is ``_prune_manifest``, one unit
+    per surviving manifest, run by ``_map_units``: on the driver, or as
+    one Spark task per manifest when ``spark`` is given and ``on_driver``
+    refuses the surviving manifests' entry count. At 10^12-image scale the
+    entry list itself is GBs, and only the SURVIVORS cross the driver.
 
     ``key_eq``: point lookup on image_id — prunes on BOTH the min/max key
     range and the per-file key bloom (lakehouse/bloom.py). After a Z-order
     rewrite every file's key range is wide (rows are curve-ordered, not
     id-ordered), so the bloom is what keeps a single-image fetch from
     listing the whole table."""
-    from nessie_spark.lakehouse.bloom import bloom_might_contain
-    from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA
-
     expected = None
     if source_eq:
         from nessie_spark.lakehouse.partition import expected_segments, table_spec
@@ -166,127 +173,68 @@ def plan_files(
     )
     if not mans:
         return []
-    man_paths = [os.path.join(table.root, m["manifest_path"]) for m in mans]
     n_entries = sum(m["n_entries"] or 0 for m in mans)
-    if spark is not None and not on_driver(spark, entries=n_entries):
-        return _plan_files_distributed(
-            spark, man_paths,
-            phash_range=phash_range, wh_range=wh_range, zkey_range=zkey_range,
-            key_range=key_range, key_eq=key_eq, expected_partition=expected,
+    units = [
+        (
+            os.path.join(table.root, m["manifest_path"]),
+            phash_range, wh_range, zkey_range, key_range, key_eq, expected,
         )
+        for m in mans
+    ]
+    driver = spark is None or on_driver(spark, entries=n_entries)
+    return pa.concat_tables(_map_units(spark, _prune_manifest, units, driver)).to_pylist()
 
-    # blooms are most of an entry's bytes — only pull them off the
-    # manifests when this is actually a point lookup
-    cols = (
-        None
-        if key_eq is not None
-        else [f.name for f in FILE_ENTRY_SCHEMA if f.name != "key_bloom"]
-    )
-    entries = table.file_entries(columns=cols, paths=man_paths).to_pylist()
+
+def _prune_manifest(unit: tuple) -> pa.Table:
+    """Tier-2 pruning of one manifest, the one implementation on both
+    placements of ``plan_files``. ``unit``: (manifest path, phash_range,
+    wh_range, zkey_range, key_range, key_eq, expected partition segments).
+
+    Vectorized Arrow masks drop an entry whose [min, max] misses a range;
+    a NULL stat is unknown and keeps the entry (an unclustered file has a
+    NULL ``zorder_lo``). The partition check runs ``entry_matches`` once
+    per distinct ``partition`` value and keeps the matching ones with
+    ``is_in``. The key bloom is probed only for the survivors of the range
+    masks, and read only for a ``key_eq`` lookup."""
+    import functools
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from nessie_spark.lakehouse.bloom import bloom_might_contain
     from nessie_spark.lakehouse.partition import entry_matches
 
-    out = []
-    for e in entries:
-        if expected and not entry_matches(e["partition"], expected):
-            continue
-        if key_eq is not None and (
-            e["min_key"] > key_eq
-            or e["max_key"] < key_eq
-            or not bloom_might_contain(e["key_bloom"], key_eq)
-        ):
-            continue
-        if phash_range and (e["max_phash"] < phash_range[0] or e["min_phash"] > phash_range[1]):
-            continue
-        if wh_range and (e["max_wh"] < wh_range[0] or e["min_wh"] > wh_range[1]):
-            continue
-        if (
-            zkey_range
-            and e["zorder_lo"] is not None
-            and (e["zorder_hi"] < zkey_range[0] or e["zorder_lo"] > zkey_range[1])
-        ):
-            continue
-        if key_range and (e["max_key"] < key_range[0] or e["min_key"] > key_range[1]):
-            continue
-        out.append(e)
-    return out
-
-
-def _plan_files_distributed(
-    spark: SparkSession,
-    manifest_paths: list[str],
-    phash_range: tuple[int, int] | None = None,
-    wh_range: tuple[int, int] | None = None,
-    zkey_range: tuple[int, int] | None = None,
-    key_range: tuple[str, str] | None = None,
-    key_eq: str | None = None,
-    expected_partition: dict | None = None,
-) -> list[dict]:
-    """Tier-2 pruning as a Spark job: the same stats checks as the driver
-    loop, expressed as Catalyst predicates over the manifest parquet, so
-    executors read/filter the entries and only the SURVIVORS (file_path +
-    the columns scan() needs) collect. The bloom probe is an Arrow-batched
-    pandas UDF — it only ever sees rows that already passed the key-range
-    check, and column pruning keeps the 256 B/entry bloom bytes out of the
-    scan entirely unless this is a point lookup."""
-    from nessie_spark.lakehouse.table import FILE_ENTRY_DDL
-
-    df = spark.read.schema(FILE_ENTRY_DDL).parquet(*manifest_paths)
-    if expected_partition:
-        # tier-0 hidden-partition prune: keep pre-spec files ("" — no
-        # segments) and files whose segments don't contradict a pinned one
-        m = F.str_to_map(F.col("partition"), F.lit("/"), F.lit("="))
-        cond = F.lit(True)
-        for k, v in sorted(expected_partition.items()):
-            cond = cond & (
-                F.coalesce(F.element_at(m, F.lit(k)), F.lit(v)) == F.lit(v)
-            )
-        df = df.where((F.col("partition") == "") | cond)
+    path, phash_range, wh_range, zkey_range, key_range, key_eq, expected = unit
+    # blooms are most of an entry's bytes: read them only for a lookup
+    cols = None if key_eq is not None else [
+        f.name for f in FILE_ENTRY_SCHEMA if f.name != "key_bloom"
+    ]
+    ents = pq.read_table(path, schema=FILE_ENTRY_SCHEMA, columns=cols)
+    drop = []
+    if expected:
+        part = ents.column("partition")
+        ok = [v for v in pc.unique(part).to_pylist() if entry_matches(v, expected)]
+        drop.append(pc.invert(pc.is_in(part, value_set=pa.array(ok, pa.string()))))
+    for lo, hi, rng in (
+        ("min_phash", "max_phash", phash_range),
+        ("min_wh", "max_wh", wh_range),
+        ("zorder_lo", "zorder_hi", zkey_range),
+        ("min_key", "max_key", key_range),
+        ("min_key", "max_key", None if key_eq is None else (key_eq, key_eq)),
+    ):
+        if rng:
+            # an int past int64 has no Arrow scalar: clamp it to int64's ends
+            a, b = (min(max(v, -(2**63)), 2**63 - 1) if isinstance(v, int) else v for v in rng)
+            drop.append(pc.or_kleene(pc.less(ents.column(hi), a), pc.greater(ents.column(lo), b)))
+    if drop:
+        ents = ents.filter(pc.invert(pc.fill_null(functools.reduce(pc.or_kleene, drop), False)))
     if key_eq is not None:
-        df = df.where(
-            (F.col("min_key") <= F.lit(key_eq)) & (F.col("max_key") >= F.lit(key_eq))
-        )
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("boolean")
-        def _bloom_hit(blooms):  # pd.Series[bytes|None] -> pd.Series[bool]
-            from nessie_spark.lakehouse.bloom import bloom_might_contain
-
-            return blooms.map(lambda b: bloom_might_contain(b, key_eq))
-
-        df = df.where(_bloom_hit(F.col("key_bloom")))
-    if phash_range:
-        df = df.where(
-            (F.col("max_phash") >= F.lit(phash_range[0]))
-            & (F.col("min_phash") <= F.lit(phash_range[1]))
-        )
-    if wh_range:
-        df = df.where(
-            (F.col("max_wh") >= F.lit(wh_range[0]))
-            & (F.col("min_wh") <= F.lit(wh_range[1]))
-        )
-    if zkey_range:
-        df = df.where(
-            F.col("zorder_lo").isNull()
-            | (
-                (F.col("zorder_hi") >= F.lit(zkey_range[0]))
-                & (F.col("zorder_lo") <= F.lit(zkey_range[1]))
-            )
-        )
-    if key_range:
-        df = df.where(
-            (F.col("max_key") >= F.lit(key_range[0]))
-            & (F.col("min_key") <= F.lit(key_range[1]))
-        )
-    rows = df.select(
-        # schema_id must survive: _read_data_files resolves each file's
-        # field-id projection from the STAMPED id when present (cherry-
-        # picked/replicated entries keep their original stamp even though
-        # added_snapshot_id points at the replaying snapshot); dropping it
-        # here would silently fall back to the snapshot's schema.
-        "file_path", "added_snapshot_id", "schema_id",
-        "record_count", "file_size_bytes",
-    ).collect()
-    return [r.asDict() for r in rows]
+        hits = [bloom_might_contain(b, key_eq) for b in ents.column("key_bloom").to_pylist()]
+        ents = ents.filter(pa.array(hits, pa.bool_()))
+    # one chunk: each chunk of a parquet read pickles the whole buffer it
+    # shares with the others, so a Spark task returning 10^6 entries in 8
+    # chunks sent 1.4 GB instead of 0.17 GB
+    return ents.combine_chunks()
 
 
 # Snapshot operations that only REWRITE existing rows (same logical data,
@@ -439,10 +387,11 @@ def _read_partition_table(p: FilePartition, mor: bool = True) -> pa.Table:
     """Read one data file projected onto the target schema by field id,
     with merge-on-read delete subtraction (the pyarrow twin of the joins
     in scan()). The one pyarrow reader of data files: the driver scan, the
-    ``format("nessie")`` source, ``zorder.exact_bounds`` and every rewrite
-    unit (``_unit_inputs``) read through here — compaction bins and the
-    Z-order scatter with ``mor=False``, ``purge_deletes`` with
-    ``mor=True``, so a purge writes exactly the rows the scan shows."""
+    ``format("nessie")`` source, Z-order pass 1 (``zorder._key_unit``) and
+    every rewrite unit (``_unit_inputs``) read through here — pass 1,
+    compaction bins and the Z-order scatter with ``mor=False``,
+    ``purge_deletes`` with ``mor=True``, so a purge writes exactly the
+    rows the scan shows."""
     import numpy as np
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -453,25 +402,30 @@ def _read_partition_table(p: FilePartition, mor: bool = True) -> pa.Table:
     path = os.path.join(p.root, p.rel_path)
     # a file written from a frame that lacked an added column does not
     # store it although its schema version has it: read what the file
-    # holds, and remap_arrow NULL-fills the rest
-    stored = set(pq.read_schema(path).names)
-    phys_cols = [ph for ph, _s, _c, _t in p.proj if ph in stored]
-    read_filters = None
-    if p.arrow_filters and not p.pos_dels:
-        # translate pushed predicates to the file's PHYSICAL names; a
-        # comparison on a field this file does not store can never hold
-        # (the column reads as NULL) — skip the file outright
-        phys_of = {cur: ph for ph, _s, cur, _t in p.proj}
-        read_filters = []
-        for cur, op, val in p.arrow_filters:
-            if cur not in phys_of:
-                continue  # not a projected column; re-applied row-wise anyway
-            ph = phys_of[cur]
-            if ph not in stored:
-                return FM.remap_arrow(pa.table({}), p.proj, _DDL_ARROW)
-            read_filters.append((ph, op, val))
-        read_filters = read_filters or None
-    tbl = pq.read_table(path, columns=phys_cols, filters=read_filters)
+    # holds, and remap_arrow NULL-fills the rest. The file is opened once
+    # unless a filter is pushed into the read
+    with pq.ParquetFile(path) as pf:
+        stored = set(pf.schema_arrow.names)
+        phys_cols = [ph for ph, _s, _c, _t in p.proj if ph in stored]
+        read_filters = None
+        if p.arrow_filters and not p.pos_dels:
+            # translate pushed predicates to the file's PHYSICAL names; a
+            # comparison on a field this file does not store can never hold
+            # (the column reads as NULL) — skip the file outright
+            phys_of = {cur: ph for ph, _s, cur, _t in p.proj}
+            read_filters = []
+            for cur, op, val in p.arrow_filters:
+                if cur not in phys_of:
+                    continue  # not a projected column; re-applied row-wise anyway
+                ph = phys_of[cur]
+                if ph not in stored:
+                    return FM.remap_arrow(pa.table({}), p.proj, _DDL_ARROW)
+                read_filters.append((ph, op, val))
+            read_filters = read_filters or None
+        tbl = (
+            pf.read(columns=phys_cols) if read_filters is None
+            else pq.read_table(path, columns=phys_cols, filters=read_filters)
+        )
     # field-id projection: rename/NULL-fill/widen — the ONE shared
     # implementation (fields.remap_arrow), so rename/drop safety rules
     # never drift between the Spark read and this reader
@@ -575,17 +529,18 @@ def _partitions_for_entries(
 
 def _unit_inputs(
     table: Table, by_path: dict[str, dict], unit_paths: list[list[str]],
-    mor: bool = False,
+    mor: bool = False, columns: set | None = None,
 ) -> list[list[FilePartition]]:
-    """The input ``FilePartition``s of each rewrite unit, one list per
-    entry of ``unit_paths``, projected onto the table's current schema:
-    files written before an add, rename or drop are read by field id, so
-    a rewrite normalizes them to the current names. ``by_path``: manifest
-    entries (``file_path``, ``added_snapshot_id``, ``schema_id``; with
-    ``mor``, ``min_key``/``max_key`` too) by path."""
+    """The input ``FilePartition``s of each rewrite or Z-order pass-1
+    unit, one list per entry of ``unit_paths``, projected onto the table's
+    current schema: files written before an add, rename or drop are read
+    by field id, so a rewrite normalizes them to the current names.
+    ``by_path``: manifest entries (``file_path``, ``added_snapshot_id``,
+    ``schema_id``; with ``mor``, ``min_key``/``max_key`` too) by path.
+    ``columns``: read only these current names."""
     parts = iter(_partitions_for_entries(
         table, [by_path[p] for ps in unit_paths for p in ps], None,
-        table.meta.get("schema", IMAGES_DDL), mor=mor,
+        table.meta.get("schema", IMAGES_DDL), mor=mor, columns=columns,
     ))
     return [[next(parts) for _ in ps] for ps in unit_paths]
 

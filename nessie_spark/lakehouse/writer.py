@@ -77,19 +77,6 @@ IMAGES_ARROW = arrow_schema_from_ddl(IMAGES_DDL)
 DATA_COLUMNS = ddl_columns(IMAGES_DDL)
 
 
-def align_to_schema(tbl: pa.Table, schema: pa.Schema) -> pa.Table:
-    """Project ``tbl`` onto ``schema``: reorder, cast, and NULL-pad columns
-    the file predates (Iceberg add-column semantics — old data files are
-    immutable; readers backfill). Extra staging columns are dropped."""
-    arrays = []
-    for f in schema:
-        if f.name in tbl.schema.names:
-            arrays.append(tbl.column(f.name).cast(f.type))
-        else:
-            arrays.append(pa.chunked_array([pa.nulls(tbl.num_rows, f.type)]))
-    return pa.Table.from_arrays(arrays, schema=schema)
-
-
 def stats_entry_for(
     tbl: pa.Table, path: str, size_bytes: int, partition: str = ""
 ) -> dict:
@@ -161,25 +148,36 @@ def write_slices(
     table_root: str,
     stem: str,
     spec: list | None = None,
-    columns: list[str] | None = None,
+    schema: pa.Schema | None = None,
 ) -> list[dict]:
     """Write one Arrow table as data files and return their manifest-entry
     stats: one file per hidden-partition slice (``_partition_slices``),
     named ``data/{stem}[-k].parquet``. The Spark task writer, the
-    ``format("nessie")`` sink and the driver-side append all write
+    ``format("nessie")`` sinks and the driver-side append all write
     through here.
 
-    ``columns``: the written column set (those absent from ``tbl`` are
-    not written; readers NULL-backfill); None writes every column.
-    Staging columns (``zkey``, the partition value) feed the stats only."""
+    ``schema``: the table's Arrow schema. The files store the table
+    columns ``tbl`` holds, in table order, each cast to its table type: a
+    frame whose ``w`` Spark inferred as bigint still writes int32, and a
+    value out of range raises before any file is written. Columns ``tbl``
+    lacks are not written (readers NULL-backfill). None writes every
+    column as it is. Staging columns (``zkey``, the partition value) feed
+    the stats only."""
+    if schema is not None:
+        for f in schema:
+            i = tbl.schema.get_field_index(f.name)
+            if i >= 0 and tbl.schema.field(i).type != f.type:
+                tbl = tbl.set_column(
+                    i, tbl.schema.field(i).with_type(f.type), tbl.column(i).cast(f.type)
+                )
     slices = _partition_slices(tbl, spec)
     entries = []
     for k, (pval, part_tbl) in enumerate(slices):
         suffix = f"-{k}" if len(slices) > 1 else ""
         rel = f"data/{stem}{suffix}.parquet"
         data_tbl = (
-            part_tbl if columns is None
-            else part_tbl.select([c for c in columns if c in part_tbl.schema.names])
+            part_tbl if schema is None
+            else part_tbl.select([n for n in schema.names if n in part_tbl.schema.names])
         )
         size = write_table_file(data_tbl, os.path.join(table_root, rel))
         entries.append(stats_entry_for(part_tbl, rel, size, partition=pval))
@@ -187,18 +185,17 @@ def write_slices(
 
 
 def write_partition_files(
-    df: DataFrame, table_root: str, job_id: str, phase: str,
-    data_columns: list[str],
+    df: DataFrame, table_root: str, job_id: str, phase: str, schema: pa.Schema,
 ) -> DataFrame:
     """Write each partition of ``df`` as one data file; return stats DF.
 
     ``df`` must carry the images schema (optionally plus ``zkey``, which is
     recorded in stats but dropped from the data file, and the stamped
-    hidden-partition value). ``data_columns`` is the table's written column
-    set (columns absent from ``df`` are simply not written; readers
-    NULL-backfill). The appends and MERGE INTO that write through here move
-    rows as they are; pixel work happens in the rewrite units of compaction
-    and Z-order clustering.
+    hidden-partition value). ``schema`` is the table's Arrow schema: the
+    files store ``df``'s table columns at their table types
+    (``write_slices``). The appends and MERGE INTO that write through here
+    move rows as they are; pixel work happens in the rewrite units of
+    compaction and Z-order clustering.
     """
     def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pid = TaskContext.get().partitionId()
@@ -210,7 +207,7 @@ def write_partition_files(
         # is a no-op; boundary tasks split into one file per value
         entries = write_slices(
             pa.Table.from_batches(rows), table_root,
-            f"{job_id}-{phase}-p{pid:05d}", columns=data_columns,
+            f"{job_id}-{phase}-p{pid:05d}", schema=schema,
         )
         if entries:
             yield pa.RecordBatch.from_pylist(entries, schema=FILE_ENTRY_SCHEMA)

@@ -8,23 +8,24 @@ One executor, ``run_staged``, does every curve-order rewrite — ``cluster``
 (the whole table) and ``cluster_incremental`` (the unclustered delta), on
 unpartitioned, hidden-partitioned and re-specced tables alike — with one
 plan, one lineage namespace (``job_id``) and one commit, in two passes:
-    pass 1 (cheap): read (phash, w, h ONLY — parquet column pruning keeps
-      image bytes on disk) → zkey → weighted equi-depth cut points
-      ("histogram equi-depth", SURVEY.md §2.5; ``weighted_cuts``), cut
-      within each partition value when the table has a spec (a layout
-      cell is a (value, curve range) pair)
+    pass 1 (cheap): one key unit per scatter bin (``_key_unit``) reads
+      (phash, w, h) and the spec's source columns ONLY — parquet column
+      pruning keeps image bytes on disk — keys the rows and returns
+      (value, zkey, w·h) triples; the driver reads weighted equi-depth cut
+      points off them ("histogram equi-depth", SURVEY.md §2.5;
+      ``weighted_cuts``), cut within each partition value when the table
+      has a spec (a layout cell is a (value, curve range) pair)
     pass 2: a two-phase external sort with parquet staging (scatter by
       bucket group, gather one sorted data file per bucket; see
       ``run_staged``), image bytes Python-native from read to write.
-Where the passes run follows the engine's one rule (``scan.on_driver``,
-asked with the job's input files). A job that re-encodes nothing and fits
-the rule runs on the driver: pass 1 reads every key with pyarrow and cuts
-them exactly (``exact_bounds``), and pass 2's units run in this process
-one after another. Any other job runs on Spark: pass 1 cuts a seeded
-sample (the RangePartitioner recipe, ~64 sampled keys per output file,
-manifest row count sizes the fraction so no count() job runs;
-``equi_depth_bounds``), and each pass-2 unit is one Spark task. Pixel work
-(``reencode``) always runs on Spark.
+Both passes run their units through ``scan._map_units``, placed by the
+engine's one rule (``scan.on_driver``, asked with the job's input files).
+Pass 1 reads no pixel, so it asks the rule alone: on the driver its units
+return every key and the cuts are exact; on Spark each unit is one task
+returning a seeded sample (the RangePartitioner recipe, ~64 sampled keys
+per output file; the manifest's row counts size the fraction, so no
+count() job runs). Pass 2 runs on the driver only when the job also
+re-encodes nothing; pixel work (``reencode``) always runs as Spark tasks.
 
 Why not ``repartitionByRange``: Spark's range partitioner runs a sampling
 job that materializes *full rows* (including the binary pixels) — measured
@@ -54,7 +55,6 @@ from pyspark.sql import functions as F
 
 from nessie_spark.functions.core import hilbert_key_udf, morton32, order31
 from nessie_spark.lakehouse import lineage
-from nessie_spark.lakehouse.scan import scan
 from nessie_spark.lakehouse.table import Table
 
 DEFAULT_TARGET = 8 * 1024 * 1024
@@ -80,7 +80,10 @@ class ClusterResult:
 
 
 def zorder_key(strategy: str = "morton"):
-    """Column builder: (phash, w, h) -> space-filling-curve key."""
+    """Column builder: (phash, w, h) -> space-filling-curve key, the
+    Catalyst form of ``_table_zkey``. It serves ``jobs.append``'s write
+    sort order, whose files' zorder_lo/hi must agree with the numpy keys
+    the rewrites compute."""
     if strategy == "morton":
         return lambda phash, w, h: morton32(
             order31(phash), (w.cast("long") * h.cast("long")).bitwiseAND(F.lit(0x7FFFFFFF))
@@ -117,126 +120,76 @@ def weighted_cuts(pairs, n_files: int) -> list[int]:
     return bounds
 
 
-def equi_depth_bounds(keys_df, n_files: int, total_rows: int) -> list[int]:
-    """``weighted_cuts`` over a seeded sample — the RangePartitioner recipe
-    (sample keys, sort on the driver, read off quantiles) over a
-    column-pruned int scan (zkey + w·h), never full rows. Sized from the
-    manifest's row count so no count() job runs. Driver memory: n_files ×
-    SAMPLES_PER_FILE (int, int) pairs."""
-    if n_files <= 1 or total_rows == 0:
-        return []
-    frac = min(1.0, (n_files * SAMPLES_PER_FILE) / total_rows)
-    rows = (
-        keys_df.sample(withReplacement=False, fraction=frac, seed=SAMPLE_SEED)
-        .select("zkey", "wh")
-        .collect()
-    )
-    return weighted_cuts(((r.zkey, r.wh) for r in rows), n_files)
-
-
-def exact_bounds(
-    table: Table, entries: list[dict], strategy: str, target_bytes: int,
-    spec: list[dict] | None = None,
+def _cut_plan(
+    spark: SparkSession, table: Table, entries: list[dict], sbins: list[list[str]],
+    strategy: str, target_bytes: int, spec: list[dict] | None, driver: bool,
 ) -> dict:
-    """Pass 1 on the driver: the plan's cut points (``weighted_cuts``) over
-    EVERY key of ``entries``. Reads (phash, w, h) and the spec's source
-    columns with pyarrow through the field-id projection
-    (``scan._read_partition_table``) and keys the rows with the numpy twin
-    of the Catalyst key. Entries carry ``added_snapshot_id`` and
-    ``schema_id`` so files from before a rename are read by field id.
-    Returns ``{"bounds", "n_files"}``, or with a spec the per-value plan
-    of ``_value_cuts``, each value cut exactly."""
+    """Pass 1: the plan's cut points over the keys of ``entries``, one
+    ``_key_unit`` per scatter bin of ``sbins``, run by ``scan._map_units``
+    on ``driver``'s placement. On the driver every unit returns every key,
+    so the cuts are exact. On Spark each returns a seeded Bernoulli sample
+    at ``frac`` = ceil(total_bytes/target_bytes) × SAMPLES_PER_FILE /
+    total_rows (at most 1; the manifest's row counts size it, so no
+    count() runs). The driver merges the units' results and cuts with
+    ``weighted_cuts``. Returns ``{"bounds", "n_files"}``, or with a spec
+    the per-value plan of ``_value_cuts``: every value gets its files from
+    its exact w·h, a value the sample misses included."""
+    from nessie_spark.lakehouse.scan import _map_units, _unit_inputs
+
     total_bytes = sum(e["file_size_bytes"] for e in entries)
     n_files = max(1, math.ceil(total_bytes / target_bytes))
     if spec is None and n_files <= 1:
         return {"bounds": [], "n_files": n_files}
+    total_rows = sum(e["record_count"] for e in entries)
+    frac = 1.0 if driver or not total_rows else min(1.0, n_files * SAMPLES_PER_FILE / total_rows)
+    parts = _unit_inputs(
+        table, {e["file_path"]: e for e in entries}, sbins,
+        columns={"phash", "w", "h", *(f["source"] for f in spec or [])},
+    )
+    wh_by_value: dict[str, int] = {}
+    pairs: dict[str, list] = {}
+    units = [(i, ps, strategy, spec, frac) for i, ps in enumerate(parts)]
+    for whs, triples in _map_units(spark, _key_unit, units, driver):
+        for v, w in whs.items():
+            wh_by_value[v] = wh_by_value.get(v, 0) + w
+        for v, z, w in triples:
+            pairs.setdefault(v, []).append((z, w))
+    if spec is None:
+        return {"bounds": weighted_cuts(pairs.get("", []), n_files), "n_files": n_files}
+    return _value_cuts(spec, _files_per_value(wh_by_value, total_bytes, target_bytes), pairs)
+
+
+def _key_unit(unit: tuple) -> tuple:
+    """One pass-1 unit, the same on both placements. ``unit``: (scatter
+    bin index, its input ``FilePartition``s, strategy, spec, frac). Reads
+    (phash, w, h) and the spec's source columns by field id
+    (``scan._read_partition_table``), keys the rows (``_table_zkey``) and
+    derives each row's partition value (``partition.row_values``; "" with
+    no spec). Returns ({value: w·h} over every row, [(value, zkey, wh)]):
+    every row at ``frac`` 1, else a Bernoulli sample at ``frac`` seeded by
+    (SAMPLE_SEED, bin index)."""
     import numpy as np
     import pyarrow as pa
 
     from nessie_spark.lakehouse.partition import row_values
-    from nessie_spark.lakehouse.scan import (
-        IMAGES_DDL,
-        _partitions_for_entries,
-        _read_partition_table,
-    )
+    from nessie_spark.lakehouse.scan import _read_partition_table
 
-    # no merge-on-read: clustering refuses a table with pending deletes,
-    # and the scatter reads the same files raw
-    parts = _partitions_for_entries(
-        table, entries, None, table.meta.get("schema", IMAGES_DDL),
-        mor=False, columns={"phash", "w", "h", *(f["source"] for f in spec or [])},
-    )
-    keys = pa.concat_tables([_read_partition_table(p, mor=False) for p in parts])
+    sbin, parts, strategy, spec, frac = unit
+    tbl = pa.concat_tables([_read_partition_table(p, mor=False) for p in parts])
+    zkey = _table_zkey(strategy, tbl)
     wh = (
-        keys.column("w").to_numpy().astype(np.int64)
-        * keys.column("h").to_numpy().astype(np.int64)
+        tbl.column("w").to_numpy().astype(np.int64)
+        * tbl.column("h").to_numpy().astype(np.int64)
     )
-    zkey = _np_zkey(strategy, keys.column("phash").to_numpy(), wh & 0x7FFFFFFF)
-    if spec is None:
-        return {
-            "bounds": weighted_cuts(zip(zkey.tolist(), wh.tolist()), n_files),
-            "n_files": n_files,
-        }
-    pairs: dict[str, list] = {}
-    for v, z, w in zip(row_values(keys, spec).to_pylist(), zkey.tolist(), wh.tolist()):
-        pairs.setdefault(v, []).append((z, w))
-    files = _files_per_value(
-        {v: sum(w for _, w in ps) for v, ps in pairs.items()},
-        total_bytes, target_bytes,
-    )
-    return _value_cuts(spec, files, pairs)
-
-
-def _sample_bounds(
-    spark: SparkSession, table: Table, entries: list[dict], subset: bool,
-    strategy: str, target_bytes: int, spec: list[dict] | None = None,
-) -> dict:
-    """Pass 1 on Spark, the twin of ``exact_bounds``: key each input row
-    and read the cut points off a seeded sample (``equi_depth_bounds``).
-    A full rewrite samples a column-subset scan: a small table is read on
-    the driver into a LocalRelation, which Catalyst does not column-prune,
-    so a full-row scan would pull every image's bytes through the driver.
-    With a spec, one aggregate gives the exact value list and each value's
-    w·h (a value the sample misses still gets its file), and the sample
-    carries each row's value (``partition.partition_value_col``)."""
-    from nessie_spark.lakehouse.partition import partition_value_col
-    from nessie_spark.lakehouse.scan import IMAGES_DDL, _read_data_files, _target_fields
-
-    root = table.root
-    total_bytes = sum(e["file_size_bytes"] for e in entries)
-    total_rows = sum(e["record_count"] for e in entries)
-    key = zorder_key(strategy)
-    if spec is None:
-        n_files = max(1, math.ceil(total_bytes / target_bytes))
-        df = (
-            scan(spark, table, columns=["phash", "w", "h"]) if not subset
-            else spark.read.parquet(*[os.path.join(root, e["file_path"]) for e in entries])
-        )
-    else:
-        # field-id projection: a source column renamed since a file was
-        # written is read under its current name
-        ddl = table.meta.get("schema", IMAGES_DDL)
-        df = _read_data_files(spark, table, entries, ddl, _target_fields(table, None, ddl))
-    sources = [f["source"] for f in spec or [] if f["source"] not in ("phash", "w", "h")]
-    keys_df = (
-        df.select("phash", "w", "h", *sources)
-        .withColumn("zkey", key(F.col("phash"), F.col("w"), F.col("h")))
-        .withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
-    )
-    if spec is None:
-        return {"bounds": equi_depth_bounds(keys_df, n_files, total_rows), "n_files": n_files}
-    keys_df = keys_df.select(partition_value_col(spec).alias("pval"), "zkey", "wh")
-    files = _files_per_value(
-        {r.pval: int(r.wh or 0) for r in keys_df.groupBy("pval").agg(F.sum("wh").alias("wh")).collect()},
-        total_bytes, target_bytes,
-    )
-    pairs: dict[str, list] = {}
-    n_files = sum(files.values())
-    if n_files > len(files) and total_rows:
-        frac = min(1.0, (n_files * SAMPLES_PER_FILE) / total_rows)
-        for r in keys_df.sample(withReplacement=False, fraction=frac, seed=SAMPLE_SEED).collect():
-            pairs.setdefault(r.pval, []).append((r.zkey, r.wh))
-    return _value_cuts(spec, files, pairs)
+    values = row_values(tbl, spec).to_pylist() if spec else [""] * tbl.num_rows
+    whs: dict[str, int] = {}
+    for v, w in zip(values, wh.tolist()):
+        whs[v] = whs.get(v, 0) + w
+    if frac < 1:
+        keep = np.random.default_rng([SAMPLE_SEED, sbin]).random(tbl.num_rows) < frac
+        values = [v for v, k in zip(values, keep) if k]
+        zkey, wh = zkey[keep], wh[keep]
+    return whs, list(zip(values, zkey.tolist(), wh.tolist()))
 
 
 def _files_per_value(
@@ -357,12 +310,13 @@ def run_staged(
     re-specced table regroups in the same job. Each output entry is
     stamped with the value that owns its bucket.
 
-    Placement: the job's units run in the driver process, one after
-    another, when it re-encodes nothing and ``scan.on_driver`` accepts its
-    input files (``scan._map_units``); the cut points are then exact
-    (``exact_bounds``, over every key). Otherwise every unit is one Spark
-    task and the cut points come from a seeded sample
-    (``_sample_bounds``). Both placements run the same unit functions
+    Placement (``scan._map_units``): pass 1 (``_cut_plan``) packs the
+    scatter bins first and runs one key unit per bin; its units run in the
+    driver process when ``scan.on_driver`` accepts the input files, and
+    the cut points are then exact, over every key. Otherwise each is one
+    Spark task returning a seeded sample. Pass 2's units run in the driver
+    process when, in addition, the job re-encodes nothing; otherwise every
+    unit is one Spark task. Both placements run the same unit functions
     against the same pinned plan, so a job crashed on one resumes on the
     other.
 
@@ -422,9 +376,9 @@ def run_staged(
         entries = live_entries
     total_bytes = sum(e["file_size_bytes"] for e in entries)
     plan = _pinned_plan(root, job_id)
-    driver = not reencode and on_driver(
-        spark, entries=len(entries), nbytes=total_bytes
-    )
+    # pass 1 reads no pixel: only pass 2 asks whether the job re-encodes
+    keys_on_driver = on_driver(spark, entries=len(entries), nbytes=total_bytes)
+    driver = not reencode and keys_on_driver
     stage_dir = os.path.join(root, "_stage", job_id)
 
     # Pin the plan across attempts: a resume on a different core count must
@@ -469,13 +423,25 @@ def run_staged(
                 "with a NEW job_id"
             )
     else:
-        # pass 1: the cut points, exact on the driver, sampled on Spark
-        spec = table_spec(table)
-        plan = (
-            exact_bounds(table, entries, strategy, target_bytes, spec) if driver
-            else _sample_bounds(
-                spark, table, entries, subset, strategy, target_bytes, spec
-            )
+        # Scatter granularity: DATA-sized ~64 MB bins, with the same
+        # min-parallelism floor as the gather groups (below) — when the cluster is
+        # wider than total_bytes/64 MB (a 1 GB table saw 16 scatter tasks
+        # idle half of a 32-core run), shrink bins toward total/width but
+        # never below 16 MB (shard-count blowup: each bin opens up to
+        # n_groups shard writers). The 2- and 8-core scaling-gate runs on
+        # bench-sized tables stay above the floor and keep the identical
+        # 64 MB plan (clean-ratio property); only wider runs re-plan.
+        par = max(1, spark.sparkContext.defaultParallelism)
+        sbin_bytes = max(
+            2 * DEFAULT_TARGET,
+            min(8 * DEFAULT_TARGET, total_bytes // par),
+        )
+        sbins = _pack_scatter_bins(entries, sbin_bytes)
+        # pass 1: the cut points, one key unit per scatter bin — exact on
+        # the driver, sampled on Spark
+        plan = _cut_plan(
+            spark, table, entries, sbins, strategy, target_bytes,
+            table_spec(table), keys_on_driver,
         )
         n_files = plan["n_files"]
         # Task granularity: scatter bins and gather groups are DATA-sized
@@ -498,19 +464,6 @@ def run_staged(
             1,
             min(n_files, max(data_groups, spark.sparkContext.defaultParallelism)),
         )
-        # Scatter granularity: DATA-sized ~64 MB bins, with the same
-        # min-parallelism floor as the gather groups — when the cluster is
-        # wider than total_bytes/64 MB (a 1 GB table saw 16 scatter tasks
-        # idle half of a 32-core run), shrink bins toward total/width but
-        # never below 16 MB (shard-count blowup: each bin opens up to
-        # n_groups shard writers). The 2- and 8-core scaling-gate runs on
-        # bench-sized tables stay above the floor and keep the identical
-        # 64 MB plan (clean-ratio property); only wider runs re-plan.
-        par = max(1, spark.sparkContext.defaultParallelism)
-        sbin_bytes = max(
-            2 * DEFAULT_TARGET,
-            min(8 * DEFAULT_TARGET, total_bytes // par),
-        )
         # Gather granularity (r5): one task per OUTPUT FILE (pid). 64 MB
         # shard-group tasks quantized into ragged waves on small tables —
         # 18 group-tasks at 8 cores ran as 3 waves with the last 25%
@@ -519,10 +472,7 @@ def run_staged(
         # scatter shards. Cost: each pid task re-reads its group's shards
         # with a pid filter; parquet decode is a few percent of the pixel
         # re-encode work on RAM/SSD.
-        plan.update(
-            n_groups=n_groups, sbins=_pack_scatter_bins(entries, sbin_bytes),
-            gather_unit="pid",
-        )
+        plan.update(n_groups=n_groups, sbins=sbins, gather_unit="pid")
         os.makedirs(stage_dir, exist_ok=True)
         plan_path = os.path.join(stage_dir, "PLAN.json")
         with open(plan_path + ".tmp", "w") as fh:

@@ -121,12 +121,6 @@ class _CommitMsg(WriterCommitMessage):
     entries: list  # stats_entry_for dicts
 
 
-def _arrow_schema(ddl: str) -> pa.Schema:
-    from nessie_spark.lakehouse.writer import arrow_schema_from_ddl
-
-    return arrow_schema_from_ddl(ddl)
-
-
 class NessieBatchReader(DataSourceReader):
     def __init__(self, options: dict):
         self.root = _opt(options, "path")
@@ -227,22 +221,24 @@ def _write_task(
     spec: list | None,
 ) -> _CommitMsg:
     """Shared executor write for the batch and streaming sinks: drain the
-    Arrow batches, align to the TABLE schema, and write them through the
-    engine's slice writer (``writer.write_slices``: one file per hidden
-    partition value, ``partition`` stamped in its stats entry) under a
-    uniquely-named stem, so no attempt can ever overwrite a committed file
-    (replays/duplicates become GC orphans)."""
+    Arrow batches and write them through the engine's slice writer
+    (``writer.write_slices``: one file per hidden partition value,
+    ``partition`` stamped in its stats entry, the table's column types)
+    under a uniquely-named stem, so no attempt can ever overwrite a
+    committed file (replays/duplicates become GC orphans)."""
     from pyspark import TaskContext
 
-    from nessie_spark.lakehouse.writer import align_to_schema, write_slices
+    from nessie_spark.lakehouse.writer import arrow_schema_from_ddl, write_slices
 
     batches = [b for b in iterator]
     if not batches:
         return _CommitMsg(entries=[])
-    tbl = align_to_schema(pa.Table.from_batches(batches), _arrow_schema(ddl))
     pid = TaskContext.get().partitionId()
     stem = f"{name_prefix}-{uuid.uuid4().hex[:8]}-p{pid:05d}"
-    return _CommitMsg(entries=write_slices(tbl, root, stem, spec=spec))
+    return _CommitMsg(entries=write_slices(
+        pa.Table.from_batches(batches), root, stem, spec=spec,
+        schema=arrow_schema_from_ddl(ddl),
+    ))
 
 
 def _abort_task_files(root: str, messages) -> None:
@@ -286,6 +282,7 @@ class NessieArrowWriter(DataSourceArrowWriter):
 
     def commit(self, messages) -> None:
         from nessie_spark.lakehouse import lineage
+        from nessie_spark.lakehouse.jobs import commit_append
         from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA, Table
 
         if self.already_committed:
@@ -300,15 +297,7 @@ class NessieArrowWriter(DataSourceArrowWriter):
             return
         if not entries:
             return
-        added = pa.Table.from_pylist(entries, schema=FILE_ENTRY_SCHEMA)
-        snap_id = t.commit("append", added=added, summary={"job_id": self.job_id})
-        lineage.write_unit(
-            t.root, self.job_id, "append", 0,
-            input_files=[], output_files=[e["file_path"] for e in entries],
-            rows=int(sum(e["record_count"] for e in entries)),
-            nbytes=int(sum(e["file_size_bytes"] for e in entries)),
-        )
-        lineage.mark_committed(t.root, self.job_id, snap_id)
+        commit_append(t, self.job_id, pa.Table.from_pylist(entries, schema=FILE_ENTRY_SCHEMA))
 
     def abort(self, messages) -> None:
         _abort_task_files(self.root, messages)
@@ -354,6 +343,7 @@ class NessieStreamArrowWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int) -> None:
         from nessie_spark.lakehouse import lineage
+        from nessie_spark.lakehouse.jobs import commit_append
         from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA, Table
 
         job_id = f"{self.prefix}-b{batchId}"
@@ -369,17 +359,10 @@ class NessieStreamArrowWriter(DataSourceStreamArrowWriter):
             # short-circuit instead of re-running executor writes
             lineage.mark_committed(t.root, job_id, t.current_snapshot_id or 0)
             return
-        added = pa.Table.from_pylist(entries, schema=FILE_ENTRY_SCHEMA)
-        snap_id = t.commit(
-            "append", added=added, summary={"job_id": job_id, "batch_id": batchId}
+        commit_append(
+            t, job_id, pa.Table.from_pylist(entries, schema=FILE_ENTRY_SCHEMA),
+            summary={"batch_id": batchId},
         )
-        lineage.write_unit(
-            t.root, job_id, "append", 0,
-            input_files=[], output_files=[e["file_path"] for e in entries],
-            rows=int(sum(e["record_count"] for e in entries)),
-            nbytes=int(sum(e["file_size_bytes"] for e in entries)),
-        )
-        lineage.mark_committed(t.root, job_id, snap_id)
 
     def abort(self, messages, batchId: int) -> None:
         _abort_task_files(self.root, messages)
@@ -532,8 +515,8 @@ class NessieDataSource(DataSource):
         committed = bool(
             job_id and lineage.committed_snapshot(t.root, job_id) is not None
         )
-        # align/commit against the TABLE's schema (jobs.append contract);
-        # columns the frame lacks are NULL-backfilled by align_to_schema
+        # write and commit against the TABLE's schema (jobs.append
+        # contract): table types, and columns the frame lacks stay unwritten
         return NessieArrowWriter(
             dict(self.options), table_ddl, table_spec(t),
             already_committed=committed,

@@ -138,10 +138,11 @@ def test_audio_features_deterministic():
 
 
 def test_zorder_key_numpy_twins_match_catalyst(spark):
-    """The staged executor computes zkeys with numpy (morton32_np /
-    order31_np / hilbert_np) while the sample pass uses the Catalyst
-    expression / pandas UDF — the two MUST be bit-identical or staged
-    buckets would disagree with the sampled boundaries."""
+    """The rewrites compute zkeys with numpy (morton32_np / order31_np /
+    hilbert_np); the Catalyst expression / pandas UDF now serves only
+    ``jobs.append``'s write sort order. The two MUST be bit-identical, or
+    the zorder_lo/zorder_hi an append records would disagree with the
+    numpy keys that clustering and pruning use."""
     import numpy as np
     from pyspark.sql import functions as F
 

@@ -5,18 +5,20 @@ entries on min_key, so each rewritten manifest covers a narrow key slice
 and a point lookup / key-range scan drops whole manifests from the plan
 before any entry is read.
 
-Tier 2 — distributed file pruning: when ``scan.on_driver`` refuses the
-entry count, the per-file stats checks run as a Spark job over the
-manifest parquet and only the surviving paths collect; must return the
-same file set as the driver loop for every predicate shape.
+Tier 2 — per-file pruning: one Arrow unit per manifest
+(``scan._prune_manifest``), run on the driver or, when ``scan.on_driver``
+refuses the entry count, as one Spark task per manifest; both placements
+must return the same entries for every planning argument.
 """
 
 import pyarrow as pa
 
 from nessie_spark import synth
-from nessie_spark.lakehouse import jobs, zorder
+from nessie_spark.lakehouse import evolve, jobs, zorder
 from nessie_spark.lakehouse import scan as scan_mod
+from nessie_spark.lakehouse.bloom import bloom_might_contain
 from nessie_spark.lakehouse.manifest import rewrite_manifests
+from nessie_spark.lakehouse.partition import entry_matches, expected_segments, table_spec
 from nessie_spark.lakehouse.scan import (
     on_driver, plan_files, prune_manifest_summaries, scan,
 )
@@ -25,6 +27,32 @@ from tests.conftest import make_table, on_spark, spark_jobs
 
 def _paths(entries):
     return sorted(e["file_path"] for e in entries)
+
+
+def _reference_plan(t, phash_range=None, wh_range=None, zkey_range=None,
+                    key_range=None, key_eq=None, source_eq=None):
+    """Tier 2 as a plain loop over every live entry: a range misses when
+    [lo, hi] lies outside it, a NULL stat keeps the entry, the partition
+    check is ``entry_matches``, and a lookup also probes the bloom."""
+    spec = table_spec(t)
+    expected = expected_segments(spec, source_eq) if source_eq and spec else None
+    out = []
+    for e in t.file_entries().to_pylist():
+        if expected and not entry_matches(e["partition"], expected):
+            continue
+        checks = [("min_phash", "max_phash", phash_range), ("min_wh", "max_wh", wh_range),
+                  ("zorder_lo", "zorder_hi", zkey_range), ("min_key", "max_key", key_range),
+                  ("min_key", "max_key", key_eq and (key_eq, key_eq))]
+        if any(
+            rng and e[lo] is not None and e[hi] is not None
+            and (e[hi] < rng[0] or e[lo] > rng[1])
+            for lo, hi, rng in checks
+        ):
+            continue
+        if key_eq is not None and not bloom_might_contain(e["key_bloom"], key_eq):
+            continue
+        out.append(e["file_path"])
+    return sorted(out)
 
 
 def test_rewrite_manifests_key_clusters_and_prunes(spark, tmp_path):
@@ -71,29 +99,46 @@ def test_distributed_planner_matches_driver(spark, tmp_path):
     )
     jobs.append(spark, t, fresh, job_id="a2")
     t = t.refresh()
-    entries = t.file_entries(columns=["file_path", "min_phash", "max_phash"]).to_pylist()
+    entries = t.file_entries(
+        columns=["file_path", "min_phash", "max_phash", "zorder_lo", "zorder_hi"]
+    ).to_pylist()
     mid_phash = sorted(e["min_phash"] for e in entries)[len(entries) // 2]
+    zlo = sorted(e["zorder_lo"] for e in entries if e["zorder_lo"] is not None)
+    key_range = ("img_000000000100", "img_000000000200")
+    # a spec'd table that still holds pre-spec ("") files
+    parted, _ = make_table(spark, str(tmp_path / "parted"), n=96)
+    evolve.set_partition_spec(parted, [{"source": "fmt", "transform": "identity"}])
+    jobs.append(spark, parted.refresh(), synth.images_df(spark, 96, seed=11).withColumn(
+        "image_id", F.concat(F.lit("p-"), F.col("image_id"))
+    ), job_id="a3")
+    parted = parted.refresh()
+    # (table, planning arguments, whether the plan must keep some files
+    # and drop others)
     cases = [
-        {},
-        {"key_eq": "img_000000000123"},
-        {"key_eq": "img_nonexistent_zz"},
-        {"phash_range": (mid_phash, mid_phash + 2**59)},
-        {"wh_range": (1, 10**9)},
-        {"key_range": ("img_000000000100", "img_000000000200")},
+        (t, {}, False),
+        (t, {"key_eq": "img_000000000123"}, True),
+        (t, {"key_eq": "img_nonexistent_zz"}, False),
+        (t, {"phash_range": (mid_phash, mid_phash + 2**59)}, False),
+        (t, {"wh_range": (1, 10**9)}, False),
+        (t, {"key_range": key_range}, False),
+        (t, {"zkey_range": (zlo[1], zlo[len(zlo) // 2])}, True),
+        (t, {"phash_range": (mid_phash, mid_phash + 2**61), "key_range": key_range}, True),
+        (parted, {"source_eq": {"fmt": "png"}}, True),
     ]
-    for i, kw in enumerate(cases):
+    for i, (tb, kw, prunes) in enumerate(cases):
         group = f"plan-{i}-{id(tmp_path)}"
         with spark_jobs(spark, f"{group}-drv") as drv_jobs:
-            drv = plan_files(t, spark=spark, **kw)
+            drv = plan_files(tb, spark=spark, **kw)
         with on_spark(spark), spark_jobs(spark, f"{group}-dist") as dist_jobs:
-            dist = plan_files(t, spark=spark, **kw)
-        assert _paths(drv) == _paths(dist), kw
+            dist = plan_files(tb, spark=spark, **kw)
+        assert drv == dist, kw
+        assert _paths(drv) == _reference_plan(tb, **kw), kw
+        assert not prunes or 0 < len(drv) < tb.file_entries(columns=["file_path"]).num_rows, kw
         # tier 1 may prune every manifest of a miss; then no tier 2 runs
         assert drv_jobs == [] and (dist_jobs or not dist), kw
-    # the point lookup actually pruned (bloom tier alive in both planners)
-    with on_spark(spark):
-        hits = plan_files(t, spark=spark, key_eq="img_000000000123")
-    assert 1 <= len(hits) < len(entries)
+    # the spec'd plan keeps the pre-spec files and drops the other value
+    kept = {e["partition"] for e in plan_files(parted, source_eq={"fmt": "png"})}
+    assert kept == {"", "fmt=png"}
 
 
 def _ids(df) -> list[str]:

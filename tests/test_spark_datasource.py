@@ -211,14 +211,12 @@ def test_stream_sink_commit_replay_short_circuits(registered, tmp_path):
         {"path": td.root, "job_id": "s1"}, td.meta["schema"], None
     )
     tbl = synth.images_df(spark, 6, seed=3).toArrow()
-    from nessie_spark.lakehouse.writer import align_to_schema, stats_entry_for, write_table_file
-    from nessie_spark.sources.spark_datasource import _CommitMsg, _arrow_schema
-    import os as _os
+    from nessie_spark.lakehouse.writer import arrow_schema_from_ddl, write_slices
+    from nessie_spark.sources.spark_datasource import _CommitMsg
 
-    aligned = align_to_schema(tbl, _arrow_schema(td.meta["schema"]))
-    rel = "data/s1-sw-test-p00000.parquet"
-    size = write_table_file(aligned, _os.path.join(td.root, rel))
-    msg = _CommitMsg(entries=[stats_entry_for(aligned, rel, size)])
+    msg = _CommitMsg(entries=write_slices(
+        tbl, td.root, "s1-sw-test-p00000", schema=arrow_schema_from_ddl(td.meta["schema"])
+    ))
     w.commit([msg], 0)
     assert scan(spark, td.refresh()).count() == 6
     w.commit([msg], 0)  # replay

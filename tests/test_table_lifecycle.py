@@ -131,17 +131,21 @@ def test_unknown_strategy_raises(spark, table_small):
         zorder.cluster(spark, t, strategy="peano")
 
 
-def test_zorder_matches_reference_sort(spark, tmp_path):
+def test_zorder_matches_reference_sort(spark, tmp_path, monkeypatch):
     """The staged rewrite against a plain reference: every pre-cluster row,
     keyed with the numpy twin of the Catalyst zkey and sorted by
     (zkey, image_id), equals the output files read in p##### order. File p
-    holds exactly the rows of bucket p of the reference bounds, its
+    holds exactly the rows of bucket p of the pinned bounds, its
     zorder_lo/hi are its rows' zkey range, and only the declared table
-    columns reach disk. The reference bounds follow the placement: exact
-    cuts over every key on the driver, the seeded sample on Spark. At
-    128 KiB the sample is the whole table; at 512 KiB the table holds more
-    than SAMPLES_PER_FILE rows per planned file, so the sample is a true
-    subset and the two references differ."""
+    columns reach disk. The bounds pinned in PLAN.json (the stage sweep
+    held off) follow pass 1's placement: on the driver they are
+    ``weighted_cuts`` over every key, also for a re-encoding cluster,
+    whose pass 1 reads no pixel; on Spark they are ``weighted_cuts`` over
+    the per-bin seeded sample, reproduced here over the plan's scatter
+    bins. At 128 KiB the sample is the whole table; at 512 KiB the table
+    holds more than SAMPLES_PER_FILE rows per planned file, so the sample
+    is a true subset and the sampled bounds differ from the exact ones."""
+    import json
     import shutil
 
     import numpy as np
@@ -169,35 +173,49 @@ def test_zorder_matches_reference_sort(spark, tmp_path):
         wh = (df["w"].to_numpy().astype(np.int64) * df["h"].to_numpy().astype(np.int64)) & 0x7FFFFFFF
         return zorder._np_zkey("morton", df["phash"].to_numpy(), wh)
 
+    def pairs(df):
+        wh = df["w"].to_numpy().astype(np.int64) * df["h"].to_numpy().astype(np.int64)
+        return list(zip(zkeys(df).tolist(), wh.tolist()))
+
     ref = scan(spark, t).toArrow().to_pandas()
     ref["zkey"] = zkeys(ref)
     assert ref["zkey"].duplicated().any()
     ref = ref.sort_values(["zkey", "image_id"]).reset_index(drop=True)
     entries = t.file_entries().to_pylist()
     total_bytes = sum(e["file_size_bytes"] for e in entries)
-    key = zorder.zorder_key("morton")
+
+    def sampled(root, plan, n_files):
+        """The cuts of pass 1 on Spark: each scatter bin's rows in file
+        order, kept by a Bernoulli draw seeded by (SAMPLE_SEED, bin)."""
+        frac = min(1.0, n_files * zorder.SAMPLES_PER_FILE / len(ref))
+        kept = []
+        for i, sbin in enumerate(plan["sbins"]):
+            df = pa.concat_tables(
+                [pq.read_table(os.path.join(root, p), columns=["phash", "w", "h"]) for p in sbin]
+            ).to_pandas()
+            keep = np.random.default_rng([zorder.SAMPLE_SEED, i]).random(len(df)) < frac
+            kept += pairs(df[keep])
+        return zorder.weighted_cuts(kept, n_files)
 
     for target in (128 * 1024, 512 * 1024):
         n_files = -(-total_bytes // target)
-        exact = zorder.weighted_cuts(
-            zip(ref["zkey"].tolist(), (ref["w"] * ref["h"]).tolist()), n_files
-        )
-        with on_spark(spark):
-            # the bounds cluster() samples on Spark: same seeded sample over
-            # the same keyed column-subset scan of the same snapshot
-            keyed = scan(spark, t, columns=["phash", "w", "h"]).withColumn(
-                "zkey", key(F.col("phash"), F.col("w"), F.col("h"))
-            ).withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
-            sampled = zorder.equi_depth_bounds(keyed, n_files, len(ref))
-        assert len(exact) >= 2 and len(sampled) >= 2
-        if len(ref) > zorder.SAMPLES_PER_FILE * n_files:
-            assert exact != sampled
-        for forced, bounds in ((False, exact), (True, sampled)):
-            root = str(tmp_path / f"c{target}-{forced}")
+        exact = zorder.weighted_cuts(pairs(ref), n_files)
+        assert len(exact) >= 2
+        for forced, reencode in ((False, False), (True, False), (False, True)):
+            root = str(tmp_path / f"c{target}-{forced}-{reencode}")
             shutil.copytree(base, root)
             c = Table.load(root)
-            with on_spark(spark) if forced else contextlib.nullcontext():
-                zorder.cluster(spark, c, target_bytes=target, job_id="zx")
+            with monkeypatch.context() as m:
+                m.setattr(shutil, "rmtree", lambda *a, **k: None)
+                with on_spark(spark) if forced else contextlib.nullcontext():
+                    zorder.cluster(spark, c, target_bytes=target, job_id="zx", reencode=reencode)
+            with open(os.path.join(root, "_stage", "zx", "PLAN.json")) as fh:
+                plan = json.load(fh)
+            bounds = plan["bounds"]
+            assert plan["n_files"] == n_files
+            assert bounds == (sampled(root, plan, n_files) if forced else exact)
+            if forced and len(ref) > zorder.SAMPLES_PER_FILE * n_files:
+                assert bounds != exact
             out = sorted(c.refresh().file_entries().to_pylist(), key=lambda e: e["file_path"])
             assert 2 <= len(out) <= n_files
             files = []
@@ -214,7 +232,8 @@ def test_zorder_matches_reference_sort(spark, tmp_path):
                 assert prev["zorder_hi"] < nxt["zorder_lo"]
             got = pa.concat_tables(files).to_pandas()
             assert len(got) == len(ref)
-            for col in DATA_COLUMNS:
+            # a re-encoding cluster rewrites the image bytes
+            for col in [x for x in DATA_COLUMNS if not (reencode and x == "bytes")]:
                 assert got[col].tolist() == ref[col].tolist(), (target, forced, col)
 
 

@@ -77,6 +77,10 @@ IMAGES_ARROW = arrow_schema_from_ddl(IMAGES_DDL)
 DATA_COLUMNS = ddl_columns(IMAGES_DDL)
 
 
+# the columns stats_entry_for reads: every written frame must hold them
+STATS_COLUMNS = ("image_id", "phash", "w", "h")
+
+
 def stats_entry_for(
     tbl: pa.Table, path: str, size_bytes: int, partition: str = ""
 ) -> dict:
@@ -147,8 +151,8 @@ def write_slices(
     tbl: pa.Table,
     table_root: str,
     stem: str,
+    schema: pa.Schema,
     spec: list | None = None,
-    schema: pa.Schema | None = None,
 ) -> list[dict]:
     """Write one Arrow table as data files and return their manifest-entry
     stats: one file per hidden-partition slice (``_partition_slices``),
@@ -160,25 +164,20 @@ def write_slices(
     columns ``tbl`` holds, in table order, each cast to its table type: a
     frame whose ``w`` Spark inferred as bigint still writes int32, and a
     value out of range raises before any file is written. Columns ``tbl``
-    lacks are not written (readers NULL-backfill). None writes every
-    column as it is. Staging columns (``zkey``, the partition value) feed
-    the stats only."""
-    if schema is not None:
-        for f in schema:
-            i = tbl.schema.get_field_index(f.name)
-            if i >= 0 and tbl.schema.field(i).type != f.type:
-                tbl = tbl.set_column(
-                    i, tbl.schema.field(i).with_type(f.type), tbl.column(i).cast(f.type)
-                )
+    lacks are not written (readers NULL-backfill). Staging columns
+    (``zkey``, the partition value) feed the stats only."""
+    for f in schema:
+        i = tbl.schema.get_field_index(f.name)
+        if i >= 0 and tbl.schema.field(i).type != f.type:
+            tbl = tbl.set_column(
+                i, tbl.schema.field(i).with_type(f.type), tbl.column(i).cast(f.type)
+            )
     slices = _partition_slices(tbl, spec)
     entries = []
     for k, (pval, part_tbl) in enumerate(slices):
         suffix = f"-{k}" if len(slices) > 1 else ""
         rel = f"data/{stem}{suffix}.parquet"
-        data_tbl = (
-            part_tbl if schema is None
-            else part_tbl.select([n for n in schema.names if n in part_tbl.schema.names])
-        )
+        data_tbl = part_tbl.select([n for n in schema.names if n in part_tbl.schema.names])
         size = write_table_file(data_tbl, os.path.join(table_root, rel))
         entries.append(stats_entry_for(part_tbl, rel, size, partition=pval))
     return entries

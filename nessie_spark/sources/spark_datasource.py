@@ -495,18 +495,10 @@ class NessieDataSource(DataSource):
         from nessie_spark.lakehouse import lineage
         from nessie_spark.lakehouse.partition import table_spec
         from nessie_spark.lakehouse.table import Table
-        from nessie_spark.lakehouse.writer import ddl_columns
 
         t = Table.load(self._root())
         table_ddl = t.meta["schema"]
-        extra = [
-            f.name for f in schema.fields if f.name not in ddl_columns(table_ddl)
-        ]
-        if extra:
-            raise ValueError(
-                f"write columns {extra} not in table schema; evolve first "
-                "(lakehouse.evolve.add_column)"
-            )
+        _check_write_columns(schema, t)
         # pre-write idempotency (the jobs.append contract): a committed
         # job_id re-run must not even launch file writes — writing first
         # and skipping only the commit would still burn IO, and with
@@ -531,8 +523,31 @@ class NessieDataSource(DataSource):
         from nessie_spark.lakehouse.table import Table
 
         t = Table.load(self._root())
+        _check_write_columns(schema, t)
         return NessieStreamArrowWriter(
             dict(self.options), t.meta["schema"], table_spec(t)
+        )
+
+
+def _check_write_columns(schema, t) -> None:
+    """Refuse a sink's frame before any task starts: a column the table
+    lacks (evolve first), or a missing column that the stats entry
+    (``writer.STATS_COLUMNS``) or the partition spec reads."""
+    from nessie_spark.lakehouse.partition import table_spec
+    from nessie_spark.lakehouse.writer import STATS_COLUMNS, ddl_columns
+
+    names = schema.fieldNames()
+    extra = [n for n in names if n not in ddl_columns(t.meta["schema"])]
+    if extra:
+        raise ValueError(
+            f"write columns {extra} not in table schema; evolve first "
+            "(lakehouse.evolve.add_column)"
+        )
+    needed = [*STATS_COLUMNS, *(f["source"] for f in table_spec(t) or [])]
+    missing = sorted({c for c in needed if c not in names})
+    if missing:
+        raise ValueError(
+            f"write lacks columns {missing} that the file stats or partition spec read"
         )
 
 

@@ -301,7 +301,7 @@ def test_slice_writer_names_and_stats(tmp_path, spec):
     tbl = pa.Table.from_pylist(
         [dict(r, bytes=bytes(r["bytes"])) for r in rows], schema=IMAGES_ARROW
     )
-    entries = write_slices(tbl, str(tmp_path), "j-append-p00000", spec=spec)
+    entries = write_slices(tbl, str(tmp_path), "j-append-p00000", IMAGES_ARROW, spec=spec)
     assert sum(e["record_count"] for e in entries) == 12
     if spec is None:
         assert [e["file_path"] for e in entries] == ["data/j-append-p00000.parquet"]
@@ -312,4 +312,4 @@ def test_slice_writer_names_and_stats(tmp_path, spec):
         assert [e["file_path"] for e in entries] == [
             f"data/j-append-p00000-{k}.parquet" for k in range(len(entries))
         ]
-    assert write_slices(tbl.slice(0, 0), str(tmp_path), "empty", spec=spec) == []
+    assert write_slices(tbl.slice(0, 0), str(tmp_path), "empty", IMAGES_ARROW, spec=spec) == []

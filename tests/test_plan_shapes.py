@@ -115,7 +115,7 @@ def test_zorder_scan_prunes_files(spark, tmp_path):
     t = t.refresh()
 
     all_files = scan_mod.plan_files(t)
-    lo = min(f["min_phash"] for f in all_files)
+    lo = min(t.file_entries(columns=["min_phash"]).column("min_phash").to_pylist())
     pruned = scan_mod.plan_files(t, phash_range=(lo, lo))
     assert len(all_files) > 1
     assert len(pruned) < len(all_files)

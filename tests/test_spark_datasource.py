@@ -4,6 +4,8 @@ append-only write through the manifest commit protocol, and the
 snapshot-log streaming source (exactly-once, rewrite-skip, change-commit
 guard)."""
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -108,6 +110,22 @@ def test_write_rejects_overwrite_and_unknown_columns(registered, tmp_path):
             "append"
         ).save(t.root)
     assert scan(spark, t.refresh()).count() == 256
+
+
+def test_write_rejects_frame_missing_stats_or_spec_columns(registered, tmp_path):
+    """A frame without a column the file stats or the partition spec read
+    is refused before any task writes a file."""
+    spark = registered
+    t = jobs.create_images_table(
+        str(tmp_path / "tb" / "images"),
+        properties={"partition-spec": [{"source": "fmt", "transform": "identity"}]},
+    )
+    df = synth.images_df(spark, 8, seed=9)
+    for col in ("phash", "fmt"):
+        with pytest.raises(Exception, match=rf"lacks columns \['{col}'\]"):
+            df.drop(col).write.format("nessie").mode("append").save(t.root)
+    data = os.path.join(t.root, "data")
+    assert not os.path.isdir(data) or os.listdir(data) == []
 
 
 def _drain(spark, root, out, ckpt, **opts):

@@ -242,7 +242,14 @@ def _prune_manifest(unit: tuple) -> pa.Table:
     # and a stat only for a range that checks it
     bloom = ["key_bloom"] if key_eq is not None else []
     cols = dict.fromkeys([*PLAN_COLUMNS, *(c for lo, hi, _ in ranges for c in (lo, hi)), *bloom])
-    ents = pq.read_table(path, schema=FILE_ENTRY_SCHEMA, columns=list(cols))
+    with pq.ParquetFile(path) as pf:
+        stored = set(pf.schema_arrow.names)
+        ents = pf.read(columns=[c for c in cols if c in stored])
+    # a manifest written before a column existed reads it as NULL
+    for c in cols:
+        if c not in stored:
+            f = FILE_ENTRY_SCHEMA.field(c)
+            ents = ents.append_column(f, pa.nulls(ents.num_rows, f.type))
     drop = []
     if expected:
         part = ents.column("partition")
